@@ -96,7 +96,7 @@ def _archive(classpath, digest):
         os.remove(ARCHIVE)
     with tempfile.TemporaryDirectory(dir=OUT) as work:
         with open(os.path.join(work, "inputs.json"), "w") as fh:
-            fh.write('{"setup_reps": 1}')
+            fh.write("{}")
         cmd = (["java"] + JAVA_OPTS + [f"-XX:ArchiveClassesAtExit={ARCHIVE}",
                f"-Djava.io.tmpdir={work}", "-cp", classpath, "graft.perfbench.Main", "setup",
                work, "0", "0", "0", str(os.cpu_count())])

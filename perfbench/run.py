@@ -9,10 +9,12 @@ the metrics. The last stdout line is one JSON object with `correct`,
 `attempted`, `failed` and `metrics`: the end-to-end metrics with
 `--trace 0`, the per-layer metrics with `--trace 1`. A traced run reports
 the per-layer metrics of a traced JVM plus the tracing overhead against
-the untraced runs of the same engine source recorded in this checkout,
+the untraced runs of the same engine and benchmark sources recorded here,
 running one untraced JVM first when there are none.
 """
 import argparse
+import glob
+import hashlib
 import json
 import os
 import shutil
@@ -33,16 +35,15 @@ import report  # noqa: E402
 
 # Workload sizes. The seed never changes these, only the data.
 PARAMS = {
-    "permit_chain": {"sf": 0.08, "batches": 4, "min_ops": 4},
-    "analyst_session": {"sf": 0.01, "min_passes": 3},
-    "index_lifecycle": {"sf": 0.1, "min_cycles": 2, "initial_frac": 0.7, "append_ids": 40,
-                        "delete_ids": 20, "probe_ids": 40, "compact_every": 2},
+    "permit_chain": {"sf": 0.1, "batches": 5},
+    "analyst_session": {"sf": 0.01, "min_passes": 4},
+    "index_lifecycle": {"sf": 0.1},
 }
 # Tiny sizes for the self-test: every code path, a fraction of the time.
 TINY = {
-    "permit_chain": {"sf": 0.01, "batches": 2, "min_ops": 2},
-    "analyst_session": {"sf": 0.001, "min_passes": 2},
-    "index_lifecycle": {"sf": 0.01, "min_cycles": 2},
+    "permit_chain": {"sf": 0.01, "batches": 2},
+    "analyst_session": {"sf": 0.001, "min_passes": 3},
+    "index_lifecycle": {"sf": 0.01},
 }
 JVM_TIMEOUT_S = 150
 RECORDS = os.path.join(ROOT, ".bench_build", "results.jsonl")
@@ -50,9 +51,7 @@ RECORDS = os.path.join(ROOT, ".bench_build", "results.jsonl")
 
 def prepare(workload, inputs_dir, seed, plant, tiny):
     """Generate the workload's inputs; return the JVM's inputs.json."""
-    p = dict(PARAMS[workload], setup_reps=5, plant_drop_row=plant)
-    if tiny:
-        p.update(TINY[workload])
+    p = dict(TINY[workload] if tiny else PARAMS[workload], plant_drop_row=plant)
     if workload == "permit_chain":
         p.update(gen.permit_batches(inputs_dir, seed, p["sf"], p["batches"]))
     elif workload == "analyst_session":
@@ -173,6 +172,17 @@ def records():
         return [json.loads(line) for line in f if line.strip()]
 
 
+def bench_digest():
+    """Digest of the benchmark's own sources: in a checkout that has run
+    another version of the benchmark, that version's runs are no baseline."""
+    h = hashlib.sha256()
+    for f in sorted(glob.glob(os.path.join(HERE, "**", "*.py"), recursive=True)
+                    + glob.glob(os.path.join(HERE, "**", "*.scala"), recursive=True)):
+        with open(f, "rb") as fh:
+            h.update(os.path.relpath(f, HERE).encode() + fh.read())
+    return h.hexdigest()
+
+
 def host_marker(seed, engine_digest):
     def jvms():
         n = 0
@@ -190,7 +200,8 @@ def host_marker(seed, engine_digest):
     except OSError:
         head = ""
     return {"nproc": os.cpu_count(), "loadavg_1m": os.getloadavg()[0], "live_jvms": jvms(),
-            "seed": seed, "git_head": head or None, "engine_src_sha256": engine_digest}
+            "seed": seed, "git_head": head or None, "engine_src_sha256": engine_digest,
+            "bench_src_sha256": bench_digest()}
 
 
 def main():
@@ -220,12 +231,14 @@ def main():
         inputs = prepare(a.workload, os.path.join(work, "in"), a.seed, a.plant_drop_row, a.tiny)
         phase("inputs_s", t0)
         # the traced run's overhead is measured against untraced runs of the
-        # same engine source in this checkout, or against one made now
+        # same engine and benchmark sources in this checkout, or against one
+        # made now
         baseline = [] if not a.trace else [
             r["end_to_end"]["warm_p50_s"][0] for r in records()
             if r["workload"] == a.workload and r["trace"] == 0 and r["failed"] == 0
             and "end_to_end" in r and r.get("tiny") == a.tiny and not r.get("plant")
-            and r["host"]["engine_src_sha256"] == engine_digest]
+            and r["host"]["engine_src_sha256"] == engine_digest
+            and r["host"].get("bench_src_sha256") == host["bench_src_sha256"]]
         modes = [1] if baseline else [0, 1] if a.trace else [0]
         results = {}
         for m in modes:

@@ -8,13 +8,21 @@ import graft.sources.Sources
 
 /** Persisted-index maintenance interleaved with reads, for two index
   * families: the MinHash-LSH text index over `documents` and the IVF-PQ
-  * vector index over `embeddings`. After both initial builds, each cycle
-  * appends new ids, deletes live ids, probes and takes a census, per
-  * family; every `compact_every`-th cycle also compacts. The seed picks
-  * the initial, appended, deleted and probing ids.
+  * vector index over `embeddings`. After both initial builds over 70 %
+  * of the ids, each cycle appends 40 new ids, deletes 20 live ids, probes
+  * with 40 ids and takes a census, per family; every second cycle also
+  * compacts. At least two cycles run, then cycles continue until they have
+  * run for `seconds`. The seed picks the initial, appended, deleted and
+  * probing ids.
   */
 object IndexLifecycle {
   private val Buckets = 8
+  private val InitialFrac = 0.7
+  private val AppendN = 40
+  private val DeleteN = 20
+  private val ProbeN = 40
+  private val CompactEvery = 2
+  private val MinCycles = 2
 
   /** One index family behind a uniform write/read surface. */
   private abstract class Family(val name: String, val table: String, val idCol: String) {
@@ -66,24 +74,16 @@ object IndexLifecycle {
 
   def run(ctx: Main.Ctx): Map[String, Any] = {
     import ctx.{spark, tracer}
-    val in = ctx.inputs
-    val fixtures = in.path("fixtures").asText()
     val pid = ProcessHandle.current().pid()
     val families = Seq(
-      lsh(spark, spark.read.parquet(s"$fixtures/documents.parquet"), s"pb_lsh_$pid"),
-      ann(spark, spark.read.parquet(s"$fixtures/embeddings.parquet"), s"pb_ann_$pid"))
+      lsh(spark, spark.table("documents"), s"pb_lsh_$pid"),
+      ann(spark, spark.table("embeddings"), s"pb_ann_$pid"))
     val rng = new scala.util.Random(ctx.seed)
-    val initialFrac = in.path("initial_frac").asDouble(0.7)
-    val appendN = in.path("append_ids").asInt(40)
-    val deleteN = in.path("delete_ids").asInt(20)
-    val probeN = in.path("probe_ids").asInt(40)
-    val compactEvery = in.path("compact_every").asInt(3)
-    val minCycles = in.path("min_cycles").asInt(3)
 
     final class State(f: Family) {
       val ids: Vector[Long] =
         f.all.select(col(f.idCol)).collect().map(_.getLong(0)).toVector.sorted
-      val (liveInit, reserveInit) = rng.shuffle(ids).splitAt((ids.length * initialFrac).toInt)
+      val (liveInit, reserveInit) = rng.shuffle(ids).splitAt((ids.length * InitialFrac).toInt)
       var live: Set[Long] = liveInit.toSet
       var pool: List[Long] = reserveInit.toList // never-live ids, then deleted ones
       var lastProbe: Seq[Long] = Nil
@@ -111,17 +111,17 @@ object IndexLifecycle {
     }
     val t0 = System.nanoTime()
     var cycle = 0
-    while (cycle < minCycles || Main.since(t0) < ctx.seconds) {
+    while (cycle < MinCycles || Main.since(t0) < ctx.seconds) {
       families.foreach { f =>
         val st = states(f)
-        val (add, rest) = st.pool.splitAt(appendN)
+        val (add, rest) = st.pool.splitAt(AppendN)
         op(f, "append", cycle, add.size)(f.append(add))
         st.live ++= add
-        val del = rng.shuffle(st.live.toVector.sorted).take(deleteN)
+        val del = rng.shuffle(st.live.toVector.sorted).take(DeleteN)
         op(f, "delete", cycle, del.size)(f.delete(del))
         st.live --= del
         st.pool = rest ++ del
-        val q = rng.shuffle(st.ids).take(probeN).sorted
+        val q = rng.shuffle(st.ids).take(ProbeN).sorted
         var res: Array[Row] = Array.empty
         op(f, "probe", cycle, q.size) { res = f.probe(q, f.table) }
         st.lastProbe = q
@@ -133,7 +133,7 @@ object IndexLifecycle {
           "files_per_bucket" -> Maintenance.filesPerBucket(spark, f.table, Buckets),
           "index_docs" -> c.getAs[Long]("index_docs"),
           "tomb_entries" -> c.getAs[Long]("tomb_entries"))
-        if (cycle % compactEvery == compactEvery - 1)
+        if (cycle % CompactEvery == CompactEvery - 1)
           op(f, "compact", cycle, 0)(f.compact())
       }
       cycle += 1
@@ -147,7 +147,7 @@ object IndexLifecycle {
       f.persist(st.live.toSeq.sorted, fresh)
       val want = f.probe(st.lastProbe, fresh).map(_.toString).sorted.toSeq
       val got = st.lastResult.map(_.toString).sorted.toSeq
-      val plant = in.path("plant_drop_row").asBoolean(false)
+      val plant = Main.req(ctx.inputs, "plant_drop_row").asBoolean()
       val gotChecked = if (plant) got.drop(1) else got
       Map("family" -> f.name, "rows" -> want.size, "ok" -> (gotChecked == want), "live" -> st.live.size)
     }

@@ -3,9 +3,14 @@ package graft.perfbench
 import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.SparkSession
+
+import graft.queries.Fixtures
+import graft.sources.Sources
 
 /** One benchmark run of one workload in one JVM, driven by `run.py`.
   *
@@ -29,7 +34,7 @@ object Main {
     val Array(workload, work, trace, seconds, seed, cpus) = args
     val inputs = json.readTree(Files.readString(Paths.get(work, "inputs.json")))
     val tracer = new Tracer(trace == "1", s"$workload-$seed-${ProcessHandle.current().pid()}")
-    val (spark, setups) = setUp(cpus.toInt, inputs.path("setup_reps").asInt(3))
+    val (spark, setupWall, setupCpu) = setUp(cpus.toInt, workload, inputs)
     tracer.attach(spark.sparkContext)
     val ctx = Ctx(spark, tracer, work, inputs, seconds.toDouble, seed.toLong)
     val jit0 = Jvm.jitS
@@ -39,11 +44,10 @@ object Main {
       case "analyst_session" => AnalystSession.run(ctx)
       case "index_lifecycle" => IndexLifecycle.run(ctx)
       case "setup"           => Map.empty // session start only: the build records its classes
-      case other             => throw new IllegalArgumentException(s"unknown workload $other")
     }
     val result = body ++ Map(
-      "setup_wall_s" -> setups.map(_._1),
-      "setup_cpu_s" -> setups.map(_._2),
+      "setup_wall_s" -> setupWall,
+      "setup_cpu_s" -> setupCpu,
       "jvm" -> Map("jit_s" -> (Jvm.jitS - jit0), "gc_s" -> (Jvm.gcS - gc0)),
       "peak_rss_mb" -> Jvm.peakRssMb)
     if (tracer.enabled)
@@ -54,32 +58,46 @@ object Main {
     spark.stop()
   }
 
-  /** Start the local session `reps` times and return the last one with
-    * each start's (wall, process CPU) seconds: the first from JVM start,
-    * the others from a stop of the previous session. "Ready" means the
-    * first job has run.
+  /** Start the local session, run its first job and register the
+    * workload's inputs as temporary views, opened with the engine's own
+    * readers. Returns the session with the wall seconds since JVM start
+    * and the CPU seconds the process (every thread) has used since then.
     */
-  private def setUp(cpus: Int, reps: Int): (SparkSession, Seq[(Double, Double)]) = {
-    val sinceJvmStart =
-      System.currentTimeMillis() / 1e3 - ManagementFactory.getRuntimeMXBean.getStartTime / 1e3
-    var spark: SparkSession = null
-    val times = (0 until reps).map { i =>
-      val c0 = if (i == 0) 0L else os.getProcessCpuTime
-      val t0 = System.nanoTime()
-      if (spark != null) spark.stop()
-      spark = graft.EngineIO.configure(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus.toString)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.extensions", "graft.GraftExtensions"))
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      spark.range(1).count()
-      (since(t0) + (if (i == 0) sinceJvmStart else 0.0), (os.getProcessCpuTime - c0) / 1e9)
+  private def setUp(cpus: Int, workload: String, in: JsonNode): (SparkSession, Double, Double) = {
+    val spark = graft.EngineIO.configure(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.GraftExtensions"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark.range(1).count()
+    // Fixtures.t, not Fixtures.events: the latter changes a session setting
+    // that the analyst session's first events query is meant to change
+    def fixtures(names: String*): Unit =
+      names.foreach(n => Fixtures.t(spark, str(in, "fixtures"), n).createOrReplaceTempView(n))
+    workload match {
+      case "permit_chain" =>
+        Sources.readPinUniverseCsv(spark, str(in, "universe")).createOrReplaceTempView("universe")
+        req(in, "batches").elements().asScala.zipWithIndex.foreach { case (b, i) =>
+          Sources.readPermitsJson(spark, str(b, "json")).createOrReplaceTempView(s"permits_$i")
+        }
+      case "analyst_session" => fixtures("customer", "orders", "documents", "events")
+      case "index_lifecycle" => fixtures("documents", "embeddings")
+      case "setup"           =>
+      case other             => throw new IllegalArgumentException(s"unknown workload $other")
     }
-    (spark, times)
+    val wall =
+      System.currentTimeMillis() / 1e3 - ManagementFactory.getRuntimeMXBean.getStartTime / 1e3
+    (spark, wall, os.getProcessCpuTime / 1e9)
   }
+
+  /** The value of `key` in `n`; fails when it is missing. */
+  def req(n: JsonNode, key: String): JsonNode =
+    Option(n.get(key)).getOrElse(throw new IllegalArgumentException(s"inputs.json: no '$key'"))
+
+  def str(n: JsonNode, key: String): String = req(n, key).asText()
 
   /** Seconds since `t0` (a `System.nanoTime`). */
   def since(t0: Long): Double = (System.nanoTime() - t0) / 1e9
@@ -95,10 +113,5 @@ object Main {
     val t0 = System.nanoTime()
     val r = body
     (r, since(t0), (os.getProcessCpuTime - c0) / 1e9)
-  }
-
-  def stringsOf(n: JsonNode): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    n.elements().asScala.map(_.asText()).toSeq
   }
 }
