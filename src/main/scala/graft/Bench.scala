@@ -3,14 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = EngineIO.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineIO.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // Per-query scale observability: total shuffle bytes written and disk
     // spill, from task-end metrics. A plan silently degrading (broadcast →
     // sort-merge, a new exchange, a spilling aggregate) shows up as a

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** I/O placement for the engine's LOCAL entry points (Bench / Verify /
-  * Smoke / BenchOne / Time / Explain and the test harness): where the
+  * Smoke / Time / Explain and the test harness): where the
   * catalog warehouse, Spark's local dirs (shuffle/broadcast/blockmgr
   * spill), and the engine's scratch roots live.
   *
@@ -83,5 +83,22 @@ object EngineIO {
       .config("spark.sql.warehouse.dir", warehouseDir)
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
     localDir.fold(base)(d => base.config("spark.local.dir", d))
+  }
+
+  /** The engine's one LOCAL session factory, used by every entry point
+    * and the test harness: `local[cpus]` with `cpus` shuffle partitions,
+    * UTC session time, UI off, [[GraftExtensions]] registered, the I/O
+    * placement above ([[configure]]) and WARN logging.
+    */
+  def localSession(cpus: Int): SparkSession = {
+    val s = configure(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.GraftExtensions"))
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
   }
 }

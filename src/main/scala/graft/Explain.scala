@@ -1,12 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = EngineIO.configure(SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineIO.localSession(4)
     args.foreach { name =>
       println(s"==== $name ====")
       SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").explain("formatted")

@@ -1,21 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** t1 smoke twin: run SparkEntry.entry exactly as the driver does and print
   * the row count (must be > 0).
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = EngineIO.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineIO.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     val n = SparkEntry.entry(spark).count()
     println(s"[smoke] entry rows = $n")
     spark.stop()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Local timing harness: run named queries against a sf dir with the bench
   * noop sink and print per-query seconds (first run + warm rerun). Usage:
@@ -8,13 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Time {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = EngineIO.configure(SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineIO.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // job/stage counters: cheap attribution for "is this query driver-paced"
     // (many tiny jobs) vs "one big job" — the profiling signal the r21/r22
     // maintenance-loop work keys on

@@ -459,12 +459,19 @@ object Dedup {
       maxBucket
     ).select(col("band"), col("bh"), col("id").as("corpus_id"))
 
+  /** The LSH family's [[BucketedIndex.Layout]]: rows
+    * (band, bh, corpus_id, seq) bucketed by (band, bh).
+    */
+  private[graft] val LshLayout = BucketedIndex.Layout("corpus_id", Seq("band", "bh"))
+
   /** LAYOUT TIME — paid once per corpus refresh: persist the LSH index as
     * a parquet table bucketed+sorted on (band, bh), the probe join's key.
     * Every subsequent batch probe then reads the corpus side EXCHANGE-FREE
     * (the bucketed scan already satisfies the join's clustering); only the
     * batch's own (small) band frame shuffles. At 100 TB this turns per-batch
-    * cost from O(corpus signatures + corpus shuffle) into O(batch).
+    * cost from O(corpus signatures + corpus shuffle) into O(batch). The
+    * lifecycle (eras, tombstones, compaction, versions, quarantine sweep)
+    * is [[BucketedIndex]]'s.
     */
   def persistLshIndex(
       corpus: DataFrame,
@@ -477,26 +484,15 @@ object Dedup {
       bands: Int = 4,
       maxBucket: Int = 0,
       era: Long = 0L
-  ): Unit = {
-    // fresh build ⇒ fresh retraction history (a stale tomb table under the
-    // same name would silently over-delete the new content) AND fresh
-    // version history (published __v<N> would outrank the new bare table)
-    corpus.sparkSession.sql(
-      s"DROP TABLE IF EXISTS `${graft.ext.Similarity.tombTable(table)}`")
-    graft.ext.Similarity.resetVersions(corpus.sparkSession, table)
-    graft.sources.Sources.writeBucketed(
-      lshIndex(corpus, idCol, textCol, n, k, bands, maxBucket).withColumn("seq", lit(era)),
-      table, buckets, "band", "bh")
-  }
+  ): Unit =
+    LshLayout.persist(lshIndex(corpus, idCol, textCol, n, k, bands, maxBucket), table, buckets, era)
 
   /** MAINTENANCE TIME — paid per ingested batch: append the batch's own
     * (band, bh, id) rows into a [[persistLshIndex]] table, so LATER
-    * batches' probes can match THIS batch's documents. The write appends
-    * new bucketed files under the same (band, bh) spec — the table stays
-    * exchange-free for every future probe; no rewrite of existing files.
-    * (`buckets` must equal the table's layout; Spark validates on append.)
-    * Probe-then-append per batch is the full index-maintenance cycle — the
-    * `foreachBatch` production shape `stream_index_maintain` exercises.
+    * batches' probes can match THIS batch's documents; no rewrite of
+    * existing files. Probe-then-append per batch is the full
+    * index-maintenance cycle — the `foreachBatch` production shape
+    * `stream_index_maintain` exercises.
     *
     * CACHE CAVEAT: the append invalidates the relation cache of the
     * session it WRITES through (`incoming`'s). Any OTHER session that
@@ -515,16 +511,9 @@ object Dedup {
       n: Int = 3,
       k: Int = 8,
       bands: Int = 4,
-      era: Long = graft.ext.Similarity.nextEra()
+      era: Long = BucketedIndex.nextEra()
   ): Unit =
-    lshIndex(incoming, idCol, textCol, n, k, bands)
-      .withColumn("seq", lit(era))
-      .write
-      .mode("append")
-      .bucketBy(buckets, "band", "bh")
-      .sortBy("band", "bh")
-      .format("parquet")
-      .saveAsTable(graft.ext.Similarity.servingTable(incoming.sparkSession, table))
+    LshLayout.append(lshIndex(incoming, idCol, textCol, n, k, bands), table, buckets, era)
 
   /** QUERY TIME — paid per batch, corpus side exchange-free: probe a
     * [[persistLshIndex]] table with an incoming batch. Identical pair
@@ -546,119 +535,45 @@ object Dedup {
   ): DataFrame =
     bandedIds(incoming, idCol, textCol, n, k, bands)
       .select(col("band"), col("bh"), col("id").as("new_id"))
-      .join(lshIndexLive(s, table), Seq("band", "bh"))
+      .join(LshLayout.live(s, table), Seq("band", "bh"))
       .select(col("new_id"), col("corpus_id"))
       .distinct() // a pair collides in several bands; report it once
 
-  /** MAINTENANCE TIME — the delete/retract half of the
-    * [[appendLshIndex]] cycle: record retracted document ids in the
-    * index's tombstone table; every [[probeLshIndex]] anti-joins them out
-    * (broadcast — the bucketed corpus scan keeps its exchange-free
-    * layout). Mirrors [[graft.ext.Similarity.deleteFromAnnIndex]], and
-    * like it descends from the reference's J4 anti-join retraction
-    * (chicago/permit_cleaning.py:838-883): the contract is
-    * delete-then-probe ≡ rebuild-without-deleted-then-probe, which the
-    * driver's dedup_index_delete oracle checks hash-exactly. Fold the
-    * tombstones into the files with [[compactLshIndex]].
-    *
-    * ERA-AWARE like the ANN twin: the tombstone hides rows appended at
-    * era ≤ `era` only, so a later re-append of a retracted id is visible
-    * immediately (no forced compaction between takedown and re-crawl).
+  /** MAINTENANCE TIME — retract documents: era-stamped tombstones that
+    * every [[probeLshIndex]] anti-joins out. Delete-then-probe ≡
+    * rebuild-without-deleted-then-probe, which the dedup_index_delete
+    * oracle checks hash-exactly.
     */
   def deleteFromLshIndex(
       s: org.apache.spark.sql.SparkSession,
       table: String,
       ids: DataFrame,
       idCol: Column,
-      era: Long = graft.ext.Similarity.nextEra()
-  ): Unit = {
-    graft.sources.Sources.dropStaleLocation(s, graft.ext.Similarity.tombTable(table))
-    ids
-      .select(idCol.cast("long").as("corpus_id"), lit(era).as("tomb_seq"))
-      .distinct()
-      .write
-      .mode("append")
-      .format("parquet")
-      .saveAsTable(graft.ext.Similarity.tombTable(table))
-  }
-
-  /** The live rows of a persisted LSH index: the bucketed scan minus its
-    * era-qualified tombstones (broadcast anti-join on id with the
-    * `seq ≤ tomb_seq` condition riding the same broadcast; bare scan when
-    * none exist, so the pre-delete plans are unchanged).
-    */
-  private def lshIndexLive(s: org.apache.spark.sql.SparkSession, table: String): DataFrame = {
-    val tomb = graft.ext.Similarity.tombTable(table)
-    val idx = s.table(graft.ext.Similarity.servingTable(s, table))
-    if (s.catalog.tableExists(tomb)) {
-      val t = s.table(tomb)
-      idx.join(
-        broadcast(t),
-        idx("corpus_id") === t("corpus_id") && idx("seq") <= t("tomb_seq"),
-        "left_anti")
-    } else idx
-  }
+      era: Long = BucketedIndex.nextEra()
+  ): Unit =
+    LshLayout.delete(s, table, ids, idCol, era)
 
   /** MAINTENANCE — bucket-preserving compaction of a [[persistLshIndex]]
-    * table: folds accumulated tombstones into the files and merges each
-    * (band, bh) bucket's append file-sets back to one file per bucket,
-    * keeping the bucket hashing (probes stay exchange-free — layout, not
-    * meaning; probe results are hash-identical before/after).
+    * table; `maxBucket > 0` also re-caps regrown buckets
+    * ([[BucketedIndex.Layout.compact]]).
     */
   def compactLshIndex(
       s: org.apache.spark.sql.SparkSession,
       table: String,
       buckets: Int,
       maxBucket: Int = 0
-  ): Unit = {
-    // takedowns recorded during the rewrite survive the retirement
-    // (the shared era-split — see Similarity.retireTombstonesBelow)
-    val horizon = graft.ext.Similarity.nextEra()
-    // content dedup keeping the highest era: duplicate rows from an
-    // overlapping append are inert at probe time (probeLshIndex distincts
-    // pairs) but index bloat — compaction heals them, mirroring
-    // compactAnnIndex; max(seq) keeps the survivor deterministic and
-    // maximally visible against future explicit-era tombstones.
-    // `maxBucket > 0` additionally RE-CAPS the layout (appends are never
-    // capped, so boilerplate buckets regrow between epochs; compaction
-    // rewrites every live row anyway, so the census filter is free —
-    // the Hamming family's compactHammingIndex doctrine, shared)
-    val healed = lshIndexLive(s, table)
-      .groupBy(col("band"), col("bh"), col("corpus_id"))
-      .agg(max(col("seq")).as("seq"))
-      .select(col("band"), col("bh"), col("corpus_id"), col("seq"))
-    // an index that keeps a quarantine side keeps it current through the
-    // re-cap in BOTH directions — new drops join it, tombstoned rows
-    // leave it (tombstone retirement below assumes every hiding store
-    // was rewritten) — the compactHammingIndex doctrine, shared via the
-    // quarantine core; materialized before the index rewrite, while
-    // `healed` still reads the pre-compact files
-    if (maxBucket > 0
-        && s.catalog.tableExists(graft.ext.Similarity.quarTable(table))) {
-      graft.sources.Sources.compactBucketed(
-        s, graft.ext.Similarity.quarTable(table), buckets, Seq("band", "bh"),
-        graft.ext.Similarity.quarLive(s, table)
-          .unionByName(capDropped(healed, Seq("band", "bh"), maxBucket)
-            .select(col("band"), col("bh"), col("corpus_id"), col("seq"))))
-      resetLshQuarantineSweep(s, table)
-    }
-    graft.sources.Sources.compactBucketed(
-      s, graft.ext.Similarity.servingTable(s, table), buckets, Seq("band", "bh"),
-      graft.ext.Similarity.collapsedToMaxEra(
-        capBuckets(healed, Seq("band", "bh"), maxBucket)))
-    graft.ext.Similarity.retireTombstonesBelow(s, table, horizon)
-  }
+  ): Unit =
+    LshLayout.compact(s, table, buckets, maxBucket)
 
   /** LAYOUT TIME — the RECOVERY side of a capped LSH layout: persist the
     * banded rows the cap dropped ([[capDropped]], the exact complement of
-    * the rows [[persistLshIndex]] stored) under `<table>_quar`, bucketed
-    * on the same (band, bh) keys, and reset the sweep watermark — the
-    * text twin of [[Multimodal.quarantineHammingIndex]], riding the same
-    * shared quarantine core. (Measured honesty: the synthetic `documents`
-    * corpus never concentrates — max bucket 6 at sf0.1 — so the capped
-    * LSH posture stays OPT-IN; real web corpora with boilerplate pages do
-    * concentrate, which is what the cap + this recovery exist for.
-    * Spec-pinned on an engineered boilerplate stratum.)
+    * the rows [[persistLshIndex]] stored) under `<table>_quar` — the text
+    * twin of [[Multimodal.quarantineHammingIndex]]. (Measured honesty: the
+    * synthetic `documents` corpus never concentrates — max bucket 6 at
+    * sf0.1 — so the capped LSH posture stays OPT-IN; real web corpora with
+    * boilerplate pages do concentrate, which is what the cap + this
+    * recovery exist for. Spec-pinned on an engineered boilerplate
+    * stratum.)
     */
   def quarantineLshIndex(
       s: org.apache.spark.sql.SparkSession,
@@ -672,34 +587,29 @@ object Dedup {
       k: Int = 8,
       bands: Int = 4,
       era: Long = 0L
-  ): Unit = {
-    val dropped = capDropped(
-      bandedIds(corpus, idCol, textCol, n, k, bands), Seq("band", "bh"), maxBucket)
-    graft.sources.Sources.writeBucketed(
-      dropped.select(
-        col("band"), col("bh"), col("id").as("corpus_id"), lit(era).as("seq")),
-      graft.ext.Similarity.quarTable(table), buckets, "band", "bh")
-    resetLshQuarantineSweep(s, table)
-  }
+  ): Unit =
+    LshLayout.quarantine(
+      s, table,
+      capDropped(bandedIds(corpus, idCol, textCol, n, k, bands), Seq("band", "bh"), maxBucket)
+        .select(col("band"), col("bh"), col("id").as("corpus_id")),
+      buckets, era)
 
   /** See [[Multimodal.quarantineWatermark]] — the LSH family's reader. */
   def lshQuarantineWatermark(
       s: org.apache.spark.sql.SparkSession, table: String): (Long, Long) =
-    graft.ext.Similarity.quarWatermark(s, table)
+    BucketedIndex.quarantineWatermark(s, table)
 
   /** Begin a fresh sweep pass over the LSH quarantine. */
   def resetLshQuarantineSweep(s: org.apache.spark.sql.SparkSession, table: String): Unit =
-    graft.ext.Similarity.quarReset(s, table, Seq("band", "bh"))
+    LshLayout.resetSweep(s, table)
 
-  /** MAINTENANCE — one bounded TICK of the LSH quarantine sweep:
-    * candidate pairs of the incoming batch against the quarantined
-    * members of the next `maxBucketsPerTick` unswept buckets
-    * (membership-heaviest first), emitting [[probeLshIndex]]'s pair
-    * schema (`new_id, corpus_id` — LSH emits candidates; the exact
-    * Jaccard verify is the caller's composition, as everywhere else in
-    * the family) and advancing the shared watermark. Once the watermark
-    * closes, capped-probe ∪ sweep ≡ uncapped-probe, tombstones respected
-    * (DedupSpec pins it on an engineered boilerplate stratum).
+  /** MAINTENANCE — one bounded TICK of the LSH quarantine sweep
+    * ([[BucketedIndex.sweepTick]]): candidate pairs of the incoming batch
+    * against the quarantined members of the next `maxBucketsPerTick`
+    * unswept buckets, in [[probeLshIndex]]'s pair schema (`new_id,
+    * corpus_id` — the exact Jaccard verify is the caller's composition).
+    * Once the watermark closes, capped-probe ∪ sweep ≡ uncapped-probe,
+    * tombstones respected (DedupSpec pins it).
     */
   def sweepLshQuarantine(
       s: org.apache.spark.sql.SparkSession,
@@ -712,17 +622,9 @@ object Dedup {
       n: Int = 3,
       k: Int = 8,
       bands: Int = 4
-  ): Unit = {
-    val (lo, hi, total) =
-      graft.ext.Similarity.quarTickRange(s, table, maxBucketsPerTick)
-    if (hi > lo) {
-      sweepLshTickFrame(s, table, incoming, idCol, textCol, lo, hi, n, k, bands)
-        .write.mode("append").parquet(sink)
-      // commit AFTER the write — the at-least-once discipline
-      // [[Multimodal.sweepHammingQuarantine]] documents
-      graft.ext.Similarity.quarTickCommit(s, table, hi, total)
-    }
-  }
+  ): Unit =
+    BucketedIndex.sweepTick(s, table, maxBucketsPerTick, sink)((lo, hi) =>
+      sweepLshTickFrame(s, table, incoming, idCol, textCol, lo, hi, n, k, bands))
 
   /** One tick's candidate frame over bucket ranks `(lo, hi]` — the pure
     * computation behind [[sweepLshQuarantine]].
@@ -739,10 +641,7 @@ object Dedup {
       k: Int = 8,
       bands: Int = 4
   ): DataFrame = {
-    val tickBuckets =
-      graft.ext.Similarity.quarBucketsAt(s, table, Seq("band", "bh"), lo, hi)
-    val members = graft.ext.Similarity.quarLive(s, table)
-      .join(broadcast(tickBuckets), Seq("band", "bh"))
+    val members = LshLayout.sweepMembers(s, table, lo, hi)
     bandedIds(incoming, idCol, textCol, n, k, bands)
       .select(col("band"), col("bh"), col("id").as("new_id"))
       .join(members, Seq("band", "bh"))
@@ -752,17 +651,12 @@ object Dedup {
   }
 
   /** MAINTENANCE — versioned probe-safe REBUILD of a [[persistLshIndex]]
-    * table, the text twin of [[graft.ext.Similarity.rebuildAnnIndex]]:
-    * when the corpus is re-cleaned or the shingling policy changes (an
-    * LSH index has no trained model, so its "retrain" is a re-shingle),
-    * build the fresh index ASIDE and publish it as the next immutable
-    * version via the shared single-RENAME machinery
-    * ([[graft.ext.Similarity.publishVersion]]) — concurrent probes
-    * resolve version N−1 or N, never a missing table. Accumulated
-    * tombstones drop with the publication: the rebuild corpus is the new
-    * authority, so previously retracted ids it re-includes are VISIBLE
-    * after the swap (the takedown-reversal shape, same contract as the
-    * ANN rebuild).
+    * table ([[BucketedIndex.rebuild]]): when the corpus is re-cleaned or
+    * the shingling policy changes (an LSH index has no trained model, so
+    * its "retrain" is a re-shingle), build the fresh index aside and
+    * publish it as the next version. The rebuild corpus is the new
+    * authority, so previously retracted ids it re-includes are visible
+    * after the swap; a kept quarantine side is re-decided against it.
     */
   def rebuildLshIndex(
       s: org.apache.spark.sql.SparkSession,
@@ -775,18 +669,10 @@ object Dedup {
       k: Int = 8,
       bands: Int = 4,
       maxBucket: Int = 0
-  ): Unit = {
-    graft.ext.Similarity.publishVersion(s, table)((bld, era) =>
-      persistLshIndex(
-        corpus, idCol, textCol, bld, buckets, n, k, bands, maxBucket,
-        era = era))
-    // an index that keeps a quarantine side gets it RE-DECIDED against
-    // the rebuild's own corpus after publication (the Hamming doctrine:
-    // one maintenance-epoch of sweep-side grace between rename and here)
-    if (maxBucket > 0
-        && s.catalog.tableExists(graft.ext.Similarity.quarTable(table)))
-      quarantineLshIndex(s, table, corpus, idCol, textCol, buckets, maxBucket, n, k, bands)
-  }
+  ): Unit =
+    BucketedIndex.rebuild(s, table, maxBucket)((bld, era) =>
+      persistLshIndex(corpus, idCol, textCol, bld, buckets, n, k, bands, maxBucket, era = era))(
+      quarantineLshIndex(s, table, corpus, idCol, textCol, buckets, maxBucket, n, k, bands))
 
   /** One (id, band, bh) row per document per band — the LSH bucket keys the
     * pair self-join runs on.
@@ -1945,6 +1831,11 @@ object Dedup {
       )
   }
 
+  /** The semantic family's [[BucketedIndex.Layout]]: rows
+    * (cell, corpus_id, vec, nrm, seq) bucketed by `cell`.
+    */
+  private[graft] val SemanticLayout = BucketedIndex.Layout("corpus_id", Seq("cell"))
+
   /** LAYOUT TIME — paid once per corpus: persist the semantic cell index
     * (cell, corpus_id, vec, nrm) `bucketBy(cell)`, so every future
     * incremental batch probes it with ZERO exchange on the corpus side —
@@ -1961,29 +1852,22 @@ object Dedup {
       table: String,
       buckets: Int,
       era: Long = 0L
-  ): Unit = {
-    // fresh build ⇒ fresh retraction history AND fresh version history,
-    // like the other index families
-    corpus.sparkSession.sql(
-      s"DROP TABLE IF EXISTS `${graft.ext.Similarity.tombTable(table)}`")
-    graft.ext.Similarity.resetVersions(corpus.sparkSession, table)
-    graft.sources.Sources.writeBucketed(
-      semanticAssigned(corpus, idCol, vecCol, cents)
-        .select(col("cell"), col("id").as("corpus_id"), col("vec"), col("nrm"), lit(era).as("seq")),
-      table, buckets, "cell")
-  }
+  ): Unit =
+    SemanticLayout.persist(semanticIndexRows(corpus, idCol, vecCol, cents), table, buckets, era)
+
+  private def semanticIndexRows(
+      df: DataFrame, idCol: Column, vecCol: Column, cents: Array[Seq[Long]]): DataFrame =
+    semanticAssigned(df, idCol, vecCol, cents)
+      .select(col("cell"), col("id").as("corpus_id"), col("vec"), col("nrm"))
 
   /** MAINTENANCE — append a batch to a [[persistSemanticIndex]] table,
-    * assigned with the PINNED centroid matrix (no retrain, no rebuild):
-    * one map-side cell assignment over the batch, one bucketed append.
-    * Same contract as the other two indexes' appends ([[appendLshIndex]],
-    * [[Similarity.appendAnnIndex]]): under a pinned model,
-    * append-then-probe ≡ rebuild-then-probe exactly, because cell/nrm are
-    * per-row functions of (vector, model) alone. A re-trained quantizer
-    * is a NEW index — never append rows assigned under different
-    * centroids.
+    * assigned with the PINNED centroid matrix (no retrain, no rebuild).
+    * Under a pinned model, append-then-probe ≡ rebuild-then-probe
+    * exactly, because cell/nrm are per-row functions of (vector, model)
+    * alone. A re-trained quantizer is a NEW index — never append rows
+    * assigned under different centroids.
     *
-    * OVERLAP CAVEAT (differs from the other two indexes): the semantic
+    * OVERLAP CAVEAT (differs from the other indexes): the semantic
     * probe emits one pair per matching index ROW (no distinct — justified
     * by one-cell-per-id), so a batch appended twice (at-least-once retry)
     * produces DUPLICATE pairs at probe time until [[compactSemanticIndex]]
@@ -1999,18 +1883,12 @@ object Dedup {
       cents: Array[Seq[Long]],
       table: String,
       buckets: Int,
-      era: Long = graft.ext.Similarity.nextEra()
+      era: Long = BucketedIndex.nextEra()
   ): Unit =
-    graft.sources.Sources.appendBucketed(
-      semanticAssigned(incoming, idCol, vecCol, cents)
-        .select(col("cell"), col("id").as("corpus_id"), col("vec"), col("nrm"), lit(era).as("seq")),
-      graft.ext.Similarity.servingTable(incoming.sparkSession, table), buckets, "cell")
+    SemanticLayout.append(semanticIndexRows(incoming, idCol, vecCol, cents), table, buckets, era)
 
-  /** MAINTENANCE — the delete/retract half for the semantic cell index:
-    * tombstone table + broadcast anti-join at probe time, the same
-    * doctrine as [[deleteFromLshIndex]] / [[Similarity.deleteFromAnnIndex]]
-    * (all three descend from the reference's J4 anti-join retraction,
-    * chicago/permit_cleaning.py:838-883). Contract: delete-then-probe ≡
+  /** MAINTENANCE — retract vectors from the semantic cell index
+    * ([[BucketedIndex.Layout.delete]]). Contract: delete-then-probe ≡
     * rebuild-without-deleted-then-probe.
     */
   def deleteFromSemanticIndex(
@@ -2018,53 +1896,25 @@ object Dedup {
       table: String,
       ids: DataFrame,
       idCol: Column,
-      era: Long = graft.ext.Similarity.nextEra()
-  ): Unit = {
-    graft.sources.Sources.dropStaleLocation(s, graft.ext.Similarity.tombTable(table))
-    ids
-      .select(idCol.cast("long").as("corpus_id"), lit(era).as("tomb_seq"))
-      .distinct()
-      .write
-      .mode("append")
-      .format("parquet")
-      .saveAsTable(graft.ext.Similarity.tombTable(table))
-  }
+      era: Long = BucketedIndex.nextEra()
+  ): Unit =
+    SemanticLayout.delete(s, table, ids, idCol, era)
 
-  /** MAINTENANCE — bucket-preserving compaction for the semantic index:
-    * folds tombstones into the files, dedupes exact-duplicate rows from
-    * overlapping appends, and merges each cell bucket back to one file
-    * without changing the bucket hashing (probes stay exchange-free and
-    * hash-identical).
+  /** MAINTENANCE — bucket-preserving compaction for the semantic index
+    * ([[BucketedIndex.Layout.compact]]).
     */
   def compactSemanticIndex(
       s: org.apache.spark.sql.SparkSession,
       table: String,
       buckets: Int
-  ): Unit = {
-    // takedowns recorded during the rewrite survive the retirement
-    // (the shared era-split — see Similarity.retireTombstonesBelow)
-    val horizon = graft.ext.Similarity.nextEra()
-    // content dedup keeping the highest era (overlapping-append healing,
-    // same doctrine as the other two indexes' compactions)
-    graft.sources.Sources.compactBucketed(
-      s, graft.ext.Similarity.servingTable(s, table), buckets, Seq("cell"),
-      graft.ext.Similarity.collapsedToMaxEra(
-        semanticIndexLive(s, table)
-          .groupBy(col("cell"), col("corpus_id"), col("vec"), col("nrm"))
-          .agg(max(col("seq")).as("seq"))
-          .select(col("cell"), col("corpus_id"), col("vec"), col("nrm"), col("seq"))))
-    graft.ext.Similarity.retireTombstonesBelow(s, table, horizon)
-  }
+  ): Unit =
+    SemanticLayout.compact(s, table, buckets, maxBucket = 0)
 
   /** MAINTENANCE — versioned probe-safe REBUILD of a
     * [[persistSemanticIndex]] table: the semantic index's model IS the
     * pinned centroid matrix, so re-clustering (new `cents`) demands a
-    * full re-assign of the corpus — never append rows assigned under
-    * different centroids (the appendSemanticIndex contract). The fresh
-    * index builds ASIDE under the shared versioned-publication machinery
-    * ([[graft.ext.Similarity.publishVersion]]): one catalog RENAME
-    * publishes it, concurrent probes resolve the previous or the new
-    * version, accumulated tombstones drop with the new authority.
+    * full re-assign of the corpus, published as the next version
+    * ([[BucketedIndex.publishVersion]]).
     */
   def rebuildSemanticIndex(
       s: org.apache.spark.sql.SparkSession,
@@ -2075,26 +1925,8 @@ object Dedup {
       cents: Array[Seq[Long]],
       buckets: Int
   ): Unit =
-    graft.ext.Similarity.publishVersion(s, table)((bld, era) =>
-      persistSemanticIndex(
-        corpus, idCol, vecCol, cents, bld, buckets,
-        era = era))
-
-  /** The live rows of a persisted semantic index: the bucketed scan minus
-    * its era-qualified tombstones (broadcast anti-join on id with the
-    * `seq ≤ tomb_seq` condition; bare scan when none exist).
-    */
-  private def semanticIndexLive(s: org.apache.spark.sql.SparkSession, table: String): DataFrame = {
-    val tomb = graft.ext.Similarity.tombTable(table)
-    val idx = s.table(graft.ext.Similarity.servingTable(s, table))
-    if (s.catalog.tableExists(tomb)) {
-      val t = s.table(tomb)
-      idx.join(
-        broadcast(t),
-        idx("corpus_id") === t("corpus_id") && idx("seq") <= t("tomb_seq"),
-        "left_anti")
-    } else idx
-  }
+    BucketedIndex.publishVersion(s, table)((bld, era) =>
+      persistSemanticIndex(corpus, idCol, vecCol, cents, bld, buckets, era = era))
 
   /** QUERY TIME — paid per batch, corpus side exchange-free: assign the
     * incoming vectors to their cells (map-side, same shared assignment)
@@ -2125,7 +1957,7 @@ object Dedup {
     val pairs = semanticAssigned(incoming, idCol, vecCol, cents)
       .select(col("cell"), col("id").as("new_id"), col("vec").as("vec_new"),
         col("nrm").as("nrm_new"))
-      .join(semanticIndexLive(s, table), Seq("cell"))
+      .join(SemanticLayout.live(s, table), Seq("cell"))
       .select(
         col("new_id"),
         col("corpus_id"),

@@ -8,8 +8,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * persisted-index lifecycles emit (tombstone load, append-era count,
   * quantizer drift, file amplification, capped-bucket regrowth) into a
   * none/compact/rebuild decision per index — the loop-closer over the
-  * per-family actions ([[graft.ext.Dedup.compactLshIndex]],
-  * [[Similarity.compactAnnIndex]], [[Similarity.rebuildAnnIndex]], …).
+  * lifecycle actions every index family shares ([[BucketedIndex]]:
+  * [[BucketedIndex.Layout.compact]], [[BucketedIndex.rebuild]],
+  * [[BucketedIndex.sweepTick]], [[BucketedIndex.dropAbandonedBuilds]]).
   * The reference's pipelines encode the same shape manually (re-pull
   * cache vs reuse, chicago permit_cleaning.py's per-year CSV memo); at
   * 100 TB the decision has to be an operator, not an operator's
@@ -60,11 +61,11 @@ object Maintenance {
       bucketKeys: Seq[String] = Nil,
       bucketCap: Int = 0
   ): DataFrame = {
-    val idx = s.table(Similarity.servingTable(s, table))
+    val idx = s.table(BucketedIndex.servingTable(s, table))
     val base = idx.agg(
       countDistinct(col(idColName)).as("index_docs"),
       countDistinct(col("seq")).as("append_eras"))
-    val tombT = Similarity.tombTable(table)
+    val tombT = BucketedIndex.tombTable(table)
     val tomb =
       if (s.catalog.tableExists(tombT))
         s.table(tombT).agg(count(lit(1)).as("tomb_entries"))
@@ -91,7 +92,7 @@ object Maintenance {
     // remain unswept — the policy's `sweep` pressure signal. One tiny
     // one-row table (the bucket total is snapshotted there at
     // quarantine/reset time), zero cost for indexes without a quarantine
-    val wmT = Similarity.quarWmTable(table)
+    val wmT = BucketedIndex.quarWmTable(table)
     // absent quarantine ⇒ plain literal columns, NOT a one-row crossJoin:
     // an extra BroadcastNestedLoopJoin stage per index measurably slowed
     // the fleet plan build (0.8 → 1.7 s for four censuses), and most
@@ -121,7 +122,7 @@ object Maintenance {
         // time, like the tombstone existence check above — spec-pinned
         // beside files_per_bucket, since catalog state is not
         // oracle-portable). The `janitor` decision drops them.
-        lit(Similarity.abandonedBuilds(s, table).size.toLong).as("stale_builds"))
+        lit(BucketedIndex.abandonedBuilds(s, table).size.toLong).as("stale_builds"))
   }
 
   /** Physical file amplification of a bucketed index table — the
@@ -131,7 +132,7 @@ object Maintenance {
     * oracle-portable (see object doc).
     */
   def filesPerBucket(s: SparkSession, table: String, buckets: Int): Long = {
-    val n = graft.sources.Sources.tableFileCount(s, Similarity.servingTable(s, table))
+    val n = graft.sources.Sources.tableFileCount(s, BucketedIndex.servingTable(s, table))
     (n + buckets - 1L) / buckets
   }
 
@@ -159,7 +160,7 @@ object Maintenance {
     *     build stages exist ([[indexCensus]]'s `stale_builds`: a rebuild
     *     killed between staging and publication leaks a fully-written
     *     `__v<N>__build` table nothing resolves) — the executor drops
-    *     them ([[Similarity.dropAbandonedBuilds]]); ranked below the
+    *     them ([[BucketedIndex.dropAbandonedBuilds]]); ranked below the
     *     rewrites (a successful publish recycles the stage name anyway)
     *     and above sweep (metadata-cheap storage reclaim first).
     *   - else `sweep` when the index keeps a persisted quarantine with at
@@ -408,7 +409,7 @@ object Maintenance {
             // family-agnostic by construction (abandoned stages are a
             // publishVersion artifact shared by all four index families),
             // so the executor owns the arc — no ManagedIndex thunk
-            case "janitor" => Similarity.dropAbandonedBuilds(s, ix.table)
+            case "janitor" => BucketedIndex.dropAbandonedBuilds(s, ix.table)
             case _         => ix.sweep.get()
           }
         })

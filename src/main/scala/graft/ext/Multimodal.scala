@@ -648,9 +648,17 @@ object Multimodal {
     persistHammingIndexRows(
       bandedFingerprints(hashes, idCol, hashCol), table, buckets, era, maxBucket)
 
+  /** The Hamming family's [[BucketedIndex.Layout]]: rows
+    * (band, bv, corpus_id, fp, seq) bucketed by (band, bv).
+    */
+  private[graft] val HammingLayout = BucketedIndex.Layout("corpus_id", Seq("band", "bv"))
+
   /** The banded-row core of [[persistHammingIndex]] — takes the
     * already-banded (band, bv, id, fp) frame so lifecycle specs can pin
-    * cap/regrowth semantics on hand-built bucket layouts.
+    * cap/regrowth semantics on hand-built bucket layouts. `maxBucket > 0`
+    * quarantines boilerplate band values AT LAYOUT TIME (every probe
+    * against a hot bucket pays its full membership; frame corpora
+    * concentrate hard — saturated gradients, black frames).
     */
   private[graft] def persistHammingIndexRows(
       banded: DataFrame,
@@ -658,21 +666,13 @@ object Multimodal {
       buckets: Int,
       era: Long = 0L,
       maxBucket: Int = 0
-  ): Unit = {
-    // fresh build ⇒ fresh retraction history AND fresh version history
-    // (same doctrine as the other persisted indexes)
-    banded.sparkSession.sql(
-      s"DROP TABLE IF EXISTS `${graft.ext.Similarity.tombTable(table)}`")
-    graft.ext.Similarity.resetVersions(banded.sparkSession, table)
-    // `maxBucket > 0` quarantines boilerplate band values AT LAYOUT TIME
-    // (every probe against a hot bucket pays its full membership; frame
-    // corpora concentrate hard — saturated gradients, black frames), the
-    // persistLshIndex cap applied to the fingerprint family
-    graft.sources.Sources.writeBucketed(
-      graft.ext.Dedup.capBuckets(banded, Seq("band", "bv"), maxBucket)
-        .select(col("band"), col("bv"), col("id").as("corpus_id"), col("fp"), lit(era).as("seq")),
-      table, buckets, "band", "bv")
-  }
+  ): Unit =
+    HammingLayout.persist(
+      hammingRows(graft.ext.Dedup.capBuckets(banded, Seq("band", "bv"), maxBucket)),
+      table, buckets, era)
+
+  private def hammingRows(banded: DataFrame): DataFrame =
+    banded.select(col("band"), col("bv"), col("id").as("corpus_id"), col("fp"))
 
   /** MAINTENANCE — append a batch's fingerprints to a
     * [[persistHammingIndex]] table under the same bucket spec: one
@@ -683,8 +683,8 @@ object Multimodal {
     * cap that equivalence is layout-epoch-scoped: the cap is a
     * corpus-global census taken at persist/rebuild time, and appends
     * are NOT re-capped — appended rows land in (and can regrow)
-    * quarantined buckets until the next [[rebuildHammingIndex]] at the
-    * same cap, which is the re-cap point.
+    * quarantined buckets until the next compaction or rebuild at the
+    * same cap, which are the re-cap points.
     */
   def appendHammingIndex(
       hashes: DataFrame,
@@ -692,7 +692,7 @@ object Multimodal {
       hashCol: String,
       table: String,
       buckets: Int,
-      era: Long = graft.ext.Similarity.nextEra()
+      era: Long = BucketedIndex.nextEra()
   ): Unit =
     appendHammingIndexRows(bandedFingerprints(hashes, idCol, hashCol), table, buckets, era)
 
@@ -703,125 +703,55 @@ object Multimodal {
       banded: DataFrame,
       table: String,
       buckets: Int,
-      era: Long = graft.ext.Similarity.nextEra()
+      era: Long = BucketedIndex.nextEra()
   ): Unit =
-    graft.sources.Sources.appendBucketed(
-      banded
-        .select(col("band"), col("bv"), col("id").as("corpus_id"), col("fp"), lit(era).as("seq")),
-      graft.ext.Similarity.servingTable(banded.sparkSession, table), buckets, "band", "bv")
+    HammingLayout.append(hammingRows(banded), table, buckets, era)
 
   /** MAINTENANCE — the retraction half (takedown of corpus assets):
-    * era-stamped tombstones, broadcast anti-joined out of every probe —
-    * the fingerprint twin of [[graft.ext.Dedup.deleteFromLshIndex]]. A
-    * later re-append of the same id (higher era) is visible immediately.
+    * era-stamped tombstones, broadcast anti-joined out of every probe
+    * ([[BucketedIndex.Layout.delete]]). A later re-append of the same id
+    * (higher era) is visible immediately.
     */
   def deleteFromHammingIndex(
       s: org.apache.spark.sql.SparkSession,
       table: String,
       ids: DataFrame,
       idCol: Column,
-      era: Long = graft.ext.Similarity.nextEra()
-  ): Unit = {
-    graft.sources.Sources.dropStaleLocation(s, graft.ext.Similarity.tombTable(table))
-    ids
-      .select(idCol.cast("long").as("corpus_id"), lit(era).as("tomb_seq"))
-      .distinct()
-      .write
-      .mode("append")
-      .format("parquet")
-      .saveAsTable(graft.ext.Similarity.tombTable(table))
-  }
+      era: Long = BucketedIndex.nextEra()
+  ): Unit =
+    HammingLayout.delete(s, table, ids, idCol, era)
 
-  /** The live rows of a persisted Hamming index: the serving version's
-    * bucketed scan minus its era-qualified tombstones (broadcast
-    * anti-join; bare scan when none exist, so pre-delete plans are
-    * unchanged).
-    */
-  private def hammingIndexLive(s: org.apache.spark.sql.SparkSession, table: String): DataFrame = {
-    val tomb = graft.ext.Similarity.tombTable(table)
-    val idx = s.table(graft.ext.Similarity.servingTable(s, table))
-    if (s.catalog.tableExists(tomb)) {
-      val t = s.table(tomb)
-      idx.join(
-        broadcast(t),
-        idx("corpus_id") === t("corpus_id") && idx("seq") <= t("tomb_seq"),
-        "left_anti")
-    } else idx
-  }
-
-  /** MAINTENANCE — bucket-preserving compaction: folds tombstones into
-    * the files, dedupes overlapping-append rows on content keeping the
-    * highest era, merges each (band, bv) bucket back to one file without
-    * changing the bucket hashing (probes stay exchange-free and
-    * hash-identical).
+  /** MAINTENANCE — bucket-preserving compaction
+    * ([[BucketedIndex.Layout.compact]]); `maxBucket > 0` makes it a
+    * RE-CAP point. Re-capping here costs nothing extra (compaction
+    * rewrites every live row anyway), versus a full rebuild whose only cap
+    * advantage is a refreshed fingerprint computation. For buckets that
+    * were UNDER the cap at layout time, compact-at-cap equals
+    * rebuild-at-cap exactly, even when retried appends stored a row
+    * twice. The censuses differ in SCOPE, though: compaction re-caps
+    * relative to STORED content, a rebuild relative to the FULL corpus —
+    * a bucket quarantined at persist (its original members never stored)
+    * whose appended rows alone stay under the cap SURVIVES compaction but
+    * would be re-quarantined by a rebuild at the same cap (MultimodalSpec
+    * pins the divergence). Compact heals regrowth; only rebuild
+    * re-decides the original quarantine.
     */
   def compactHammingIndex(
       s: org.apache.spark.sql.SparkSession,
       table: String,
       buckets: Int,
       maxBucket: Int = 0
-  ): Unit = {
-    // `maxBucket > 0` makes compaction a RE-CAP point: appends are never
-    // re-capped ([[appendHammingIndex]]), so hot buckets regrow between
-    // layout epochs — and compaction already rewrites every live row, so
-    // re-applying the census cap here costs nothing extra, versus a full
-    // rebuild (re-hash + re-band of the whole corpus) whose only cap
-    // advantage over this is a refreshed fingerprint computation. The cap
-    // counts the CONTENT-deduped census (after the overlap-append
-    // healing), so for buckets that were UNDER the cap at layout time
-    // compact-at-cap equals rebuild-at-cap exactly even when retried
-    // appends stored a row twice. The censuses differ in SCOPE, though:
-    // compaction re-caps relative to STORED content, a rebuild relative
-    // to the FULL corpus — a bucket quarantined at persist (its original
-    // members never stored) whose appended rows alone stay under the cap
-    // SURVIVES compaction but would be re-quarantined by a rebuild at the
-    // same cap (MultimodalSpec pins the divergence). Compact heals
-    // regrowth; only rebuild re-decides the original quarantine.
-    // takedowns recorded during the rewrite survive the retirement
-    // (the shared era-split — see Similarity.retireTombstonesBelow)
-    val horizon = graft.ext.Similarity.nextEra()
-    val healed = hammingIndexLive(s, table)
-      .groupBy(col("band"), col("bv"), col("corpus_id"), col("fp"))
-      .agg(max(col("seq")).as("seq"))
-      .select(col("band"), col("bv"), col("corpus_id"), col("fp"), col("seq"))
-    // an index that KEEPS a quarantine side must keep it current through
-    // the re-cap, in BOTH directions: rows this compact is about to drop
-    // (appends that regrew a bucket past the cap) join the quarantine —
-    // without that they would be dropped UNRECOVERABLY, the silent-loss
-    // posture the quarantine exists to close — and TOMBSTONED quarantine
-    // rows leave it, because the tombstone retirement below assumes every
-    // store hiding behind a tombstone was rewritten (an append-only
-    // capture would resurrect a takedown on the next sweep pass the
-    // moment retirement purged its tombstone). One staged rewrite
-    // (compactBucketed) of the quarantine = live survivors ∪ new drops,
-    // materialized BEFORE the index rewrite below, while `healed` still
-    // reads the pre-compact files. An index without a quarantine side
-    // keeps the plain capped contract (the drops are audit-only).
-    if (maxBucket > 0 && s.catalog.tableExists(graft.ext.Similarity.quarTable(table))) {
-      val qT = graft.ext.Similarity.quarTable(table)
-      val newDrops = graft.ext.Dedup.capDropped(healed, Seq("band", "bv"), maxBucket)
-        .select(col("band"), col("bv"), col("corpus_id"), col("fp"), col("seq"))
-      graft.sources.Sources.compactBucketed(
-        s, qT, buckets, Seq("band", "bv"),
-        graft.ext.Similarity.quarLive(s, table).unionByName(newDrops))
-      resetQuarantineSweep(s, table)
-    }
-    graft.sources.Sources.compactBucketed(
-      s, graft.ext.Similarity.servingTable(s, table), buckets, Seq("band", "bv"),
-      graft.ext.Similarity.collapsedToMaxEra(
-        graft.ext.Dedup.capBuckets(healed, Seq("band", "bv"), maxBucket)))
-    graft.ext.Similarity.retireTombstonesBelow(s, table, horizon)
-  }
+  ): Unit =
+    HammingLayout.compact(s, table, buckets, maxBucket)
 
   /** MAINTENANCE — versioned probe-safe REBUILD of a
-    * [[persistHammingIndex]] table: the fingerprint index has no trained
-    * model, so its rebuild trigger is a corpus re-crawl / re-decode (new
-    * payload bytes ⇒ new fingerprints). The fresh index builds ASIDE and
-    * publishes as the next immutable version via the shared
-    * single-RENAME machinery ([[graft.ext.Similarity.publishVersion]]) —
-    * concurrent probes resolve the previous or the new version, never a
-    * missing table; accumulated tombstones drop with the new authority
-    * (re-included ids are visible after the swap).
+    * [[persistHammingIndex]] table ([[BucketedIndex.rebuild]]): the
+    * fingerprint index has no trained model, so its rebuild trigger is a
+    * corpus re-crawl / re-decode (new payload bytes ⇒ new fingerprints).
+    * `maxBucket` rides through — the rebuild IS a re-cap point, and one
+    * that silently dropped the cap would republish every quarantined
+    * boilerplate bucket — and a kept quarantine side is re-decided
+    * against the rebuild's full corpus.
     */
   def rebuildHammingIndex(
       s: org.apache.spark.sql.SparkSession,
@@ -831,24 +761,10 @@ object Multimodal {
       hashCol: String,
       buckets: Int,
       maxBucket: Int = 0
-  ): Unit = {
-    // maxBucket rides through: a capped index's rebuild IS the re-cap
-    // point (appends are never re-capped — see appendHammingIndex), so a
-    // rebuild that silently dropped the cap would republish every
-    // quarantined boilerplate bucket
-    graft.ext.Similarity.publishVersion(s, table)((bld, era) =>
-      persistHammingIndex(
-        hashes, idCol, hashCol, bld, buckets, era = era, maxBucket = maxBucket))
-    // an index that keeps a quarantine side gets it RE-DECIDED against
-    // the rebuild's own corpus (a rebuild re-caps relative to the FULL
-    // corpus — the scope divergence compactHammingIndex documents), after
-    // publication: a probe landing between the rename and here pairs the
-    // new index with the previous quarantine — one maintenance-epoch of
-    // sweep-side grace, same order as the version grace readers already
-    // have
-    if (maxBucket > 0 && s.catalog.tableExists(graft.ext.Similarity.quarTable(table)))
-      quarantineHammingIndex(s, table, hashes, idCol, hashCol, buckets, maxBucket)
-  }
+  ): Unit =
+    BucketedIndex.rebuild(s, table, maxBucket)((bld, era) =>
+      persistHammingIndex(hashes, idCol, hashCol, bld, buckets, era = era, maxBucket = maxBucket))(
+      quarantineHammingIndex(s, table, hashes, idCol, hashCol, buckets, maxBucket))
 
   /** QUERY TIME — probe a [[persistHammingIndex]] table with a batch of
     * incoming fingerprints: band the batch map-side, join the live index
@@ -868,9 +784,16 @@ object Multimodal {
       hashCol: String,
       maxHamming: Int
   ): DataFrame =
-    bandedFingerprints(incoming, idCol, hashCol)
+    hammingVerified(bandedFingerprints(incoming, idCol, hashCol), HammingLayout.live(s, table), maxHamming)
+
+  /** The family's verify join: incoming banded fingerprints against stored
+    * rows on (band, bv), exact `bit_count(xor)` ≤ `maxHamming`, self-pairs
+    * excluded by id, each pair once.
+    */
+  private def hammingVerified(incoming: DataFrame, stored: DataFrame, maxHamming: Int): DataFrame =
+    incoming
       .select(col("band"), col("bv"), col("id").as("new_id"), col("fp").as("h_new"))
-      .join(hammingIndexLive(s, table), Seq("band", "bv"))
+      .join(stored, Seq("band", "bv"))
       .filter(col("new_id") =!= col("corpus_id"))
       .select(
         col("new_id"), col("corpus_id"),
@@ -899,10 +822,9 @@ object Multimodal {
 
   /** LAYOUT TIME — persist the RECOVERY side of a capped Hamming layout:
     * the banded rows the cap dropped ([[graft.ext.Dedup.capDropped]], the
-    * exact complement of the rows [[persistHammingIndex]] stored), written
-    * `bucketBy(band, bv)` under `<table>_quar` so the sweep's per-bucket
-    * joins stay exchange-free on the quarantine side. Resets the sweep
-    * watermark (a fresh quarantine is a fresh sweep pass).
+    * exact complement of the rows [[persistHammingIndex]] stored) under
+    * `<table>_quar` ([[BucketedIndex.Layout.quarantine]]), as a fresh
+    * sweep pass.
     *
     * This closes the capped posture's one gap: the cap trades recall for
     * probe cost, and before this the dropped side had observability
@@ -928,15 +850,12 @@ object Multimodal {
       buckets: Int,
       maxBucket: Int,
       era: Long = 0L
-  ): Unit = {
-    val dropped = graft.ext.Dedup.capDropped(
-      bandedFingerprints(hashes, idCol, hashCol), Seq("band", "bv"), maxBucket)
-    graft.sources.Sources.writeBucketed(
-      dropped.select(
-        col("band"), col("bv"), col("id").as("corpus_id"), col("fp"), lit(era).as("seq")),
-      graft.ext.Similarity.quarTable(table), buckets, "band", "bv")
-    resetQuarantineSweep(s, table)
-  }
+  ): Unit =
+    HammingLayout.quarantine(
+      s, table,
+      hammingRows(graft.ext.Dedup.capDropped(
+        bandedFingerprints(hashes, idCol, hashCol), Seq("band", "bv"), maxBucket)),
+      buckets, era)
 
   /** The sweep's progress state: `(swept_through, quar_buckets)` — how
     * many of the quarantine's buckets (in sweep rank order: membership
@@ -948,40 +867,35 @@ object Multimodal {
     */
   def quarantineWatermark(
       s: org.apache.spark.sql.SparkSession, table: String): (Long, Long) =
-    graft.ext.Similarity.quarWatermark(s, table)
+    BucketedIndex.quarantineWatermark(s, table)
 
   /** Begin a fresh sweep PASS over the current quarantine: watermark back
     * to zero, bucket total re-snapshotted from the quarantine table.
-    * Called by the quarantine writers (fresh layout, compact capture —
-    * content changed, so ranks changed) and by a scheduler starting a new
-    * periodic pass over an unchanged quarantine (a new probe batch wants
-    * the whole quarantine swept again).
+    * Every quarantine write does this itself; a scheduler calls it to
+    * start a new periodic pass over an unchanged quarantine (a new probe
+    * batch wants the whole quarantine swept again).
     */
   def resetQuarantineSweep(s: org.apache.spark.sql.SparkSession, table: String): Unit =
-    graft.ext.Similarity.quarReset(s, table, Seq("band", "bv"))
+    HammingLayout.resetSweep(s, table)
 
-  /** MAINTENANCE — one bounded TICK of the quarantine sweep: exact
-    * `bit_count(xor)` verification of the incoming batch against the
-    * quarantined members of the next `maxBucketsPerTick` unswept buckets
-    * (sweep order: membership DESC — the regrowth-heaviest boilerplate
-    * first — then band, bv for determinism), advancing the persisted
-    * watermark. Emits the SAME pair schema as [[probeHammingIndex]]
-    * (`new_id, corpus_id, hamming`), so capped-probe ∪ sweep composes by
-    * plain union: once the watermark closes, the union IS the uncapped
-    * probe (self-pairs excluded by id both sides, tombstones anti-joined
-    * out here exactly as the serving scan does).
+  /** MAINTENANCE — one bounded TICK of the quarantine sweep
+    * ([[BucketedIndex.sweepTick]]): exact `bit_count(xor)` verification
+    * of the incoming batch against the quarantined members of the next
+    * `maxBucketsPerTick` unswept buckets (sweep order: membership DESC —
+    * the regrowth-heaviest boilerplate first — then band, bv), advancing
+    * the persisted watermark. Emits the SAME pair schema as
+    * [[probeHammingIndex]] (`new_id, corpus_id, hamming`), so
+    * capped-probe ∪ sweep composes by plain union: once the watermark
+    * closes, the union IS the uncapped probe (self-pairs excluded by id
+    * both sides, tombstones anti-joined out exactly as the serving scan
+    * does).
     *
     * Cost per tick is the point: a hot bucket's pair volume is its
     * membership × the incoming rows banding into it, and this touches at
     * most `maxBucketsPerTick` buckets — the quadratic boilerplate mass
     * the cap evicted from the serving path is repaid in scheduled,
     * bounded installments instead of never ([[Maintenance]]'s `sweep`
-    * decision schedules it). The tick's bucket range is captured as PLAN
-    * LITERALS before the watermark advances, so the returned frame is
-    * stable however late it executes. The bucket ranking is a window over
-    * the quarantine's BUCKET census (quarantine buckets number at most
-    * corpus/cap and in practice far fewer — the boilerplate shape is few,
-    * huge buckets), never the member grain.
+    * decision schedules it).
     */
   def sweepHammingQuarantine(
       s: org.apache.spark.sql.SparkSession,
@@ -992,21 +906,9 @@ object Multimodal {
       maxHamming: Int,
       maxBucketsPerTick: Int,
       sink: String
-  ): Unit = {
-    val (lo, hi, total) =
-      graft.ext.Similarity.quarTickRange(s, table, maxBucketsPerTick)
-    if (hi > lo) {
-      sweepHammingTickFrame(s, table, incoming, idCol, hashCol, maxHamming, lo, hi)
-        .write.mode("append").parquet(sink)
-      // commit AFTER the tick's pairs are durably in the sink: a tick that
-      // dies mid-write leaves the watermark unmoved and the next tick
-      // re-covers the same bucket range (at-least-once — replayed pairs
-      // are absorbed by the sink's distinct() consumers). The old
-      // advance-before-execute shape could skip a failed tick's buckets
-      // forever (r20 verdict item 1).
-      graft.ext.Similarity.quarTickCommit(s, table, hi, total)
-    }
-  }
+  ): Unit =
+    BucketedIndex.sweepTick(s, table, maxBucketsPerTick, sink)((lo, hi) =>
+      sweepHammingTickFrame(s, table, incoming, idCol, hashCol, maxHamming, lo, hi))
 
   /** One tick's pair frame over bucket ranks `(lo, hi]` — the pure
     * computation behind [[sweepHammingQuarantine]], exposed for plan
@@ -1022,19 +924,8 @@ object Multimodal {
       lo: Long,
       hi: Long
   ): DataFrame = {
-    val tickBuckets =
-      graft.ext.Similarity.quarBucketsAt(s, table, Seq("band", "bv"), lo, hi)
-    val members = graft.ext.Similarity.quarLive(s, table)
-      .join(broadcast(tickBuckets), Seq("band", "bv"))
-    bandedFingerprints(incoming, idCol, hashCol)
-      .select(col("band"), col("bv"), col("id").as("new_id"), col("fp").as("h_new"))
-      .join(members, Seq("band", "bv"))
-      .filter(col("new_id") =!= col("corpus_id"))
-      .select(
-        col("new_id"), col("corpus_id"),
-        bit_count(col("h_new").bitwiseXOR(col("fp"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
+    val members = HammingLayout.sweepMembers(s, table, lo, hi)
+    hammingVerified(bandedFingerprints(incoming, idCol, hashCol), members, maxHamming)
   }
 
   /** The image-modality names of the fingerprint-index lifecycle — thin
@@ -1061,13 +952,13 @@ object Multimodal {
   /** See [[persistImageIndex]]. */
   def appendImageIndex(
       hashes: DataFrame, idCol: String, hashCol: String, table: String,
-      buckets: Int, era: Long = graft.ext.Similarity.nextEra()): Unit =
+      buckets: Int, era: Long = BucketedIndex.nextEra()): Unit =
     appendHammingIndex(hashes, idCol, hashCol, table, buckets, era)
 
   /** See [[persistImageIndex]]. */
   def deleteFromImageIndex(
       s: org.apache.spark.sql.SparkSession, table: String, ids: DataFrame,
-      idCol: Column, era: Long = graft.ext.Similarity.nextEra()): Unit =
+      idCol: Column, era: Long = BucketedIndex.nextEra()): Unit =
     deleteFromHammingIndex(s, table, ids, idCol, era)
 
   /** See [[persistImageIndex]] — compaction carries the SAME capped

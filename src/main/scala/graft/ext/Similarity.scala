@@ -426,13 +426,19 @@ object Similarity {
       .select(col("cand_id"), col("cell"), col("codes"))
   }
 
+  /** The IVF-PQ family's [[BucketedIndex.Layout]]: rows
+    * (cand_id, cell, codes, seq) bucketed by `cell`.
+    */
+  private[graft] val AnnLayout = BucketedIndex.Layout("cand_id", Seq("cell"))
+
   /** LAYOUT TIME — persist the IVFPQ serving index bucketed by `cell`.
     * The stored row is (cand_id, cell, codes): nsub+1 small ints per
     * vector. A BROADCASTABLE query set never needs this (the cell join
     * broadcasts the queries; the index side never shuffles anyway) — the
     * layout pays off for BATCH SCORING, where the query frame is itself
     * large: both sides then shuffle-join on cell, and the bucketed index
-    * side plans exchange-free ([[scoreAgainstAnnIndex]]).
+    * side plans exchange-free ([[scoreAgainstAnnIndex]]). The lifecycle
+    * (eras, tombstones, compaction, versions) is [[BucketedIndex]]'s.
     */
   def persistAnnIndex(
       corpus: DataFrame,
@@ -443,31 +449,15 @@ object Similarity {
       table: String,
       buckets: Int,
       era: Long = 0L
-  ): Unit = {
-    // a fresh build starts a fresh retraction history: leftover tombstones
-    // from a previous fixture/epoch under the same name would silently
-    // over-delete the new content (observed risk: tableOnce rebuilds across
-    // sf keys appended into a stale tomb table) — and a fresh VERSION
-    // history: published __v<N> versions would otherwise keep outranking
-    // the new bare table at serving resolution
-    corpus.sparkSession.sql(s"DROP TABLE IF EXISTS `${tombTable(table)}`")
-    resetVersions(corpus.sparkSession, table)
-    graft.sources.Sources.writeBucketed(
-      ivfPqIndexFrame(corpus, idCol, vecCol, coarse, books).withColumn("seq", lit(era)),
-      table, buckets, "cell")
-  }
+  ): Unit =
+    AnnLayout.persist(ivfPqIndexFrame(corpus, idCol, vecCol, coarse, books), table, buckets, era)
 
   /** MAINTENANCE — append new vectors to a [[persistAnnIndex]] table,
     * encoded with the FITTED model (the memoized coarse/books — no
-    * retrain, no rebuild): one map-side coding pass over the incoming
-    * batch, one bucketed append. The correctness contract is
-    * result-equivalence: under a pinned model, append-then-probe must
-    * equal one-shot-rebuild-then-probe exactly (the driver's
-    * ann_index_append oracle checks precisely that), because cell and
-    * codes are per-row functions of the model alone. The LSH text index's
-    * cycle ([[Dedup.appendLshIndex]]) is the precedent. Model drift is
-    * the trade — audit it with [[pqQuantError]] before trusting an aged
-    * model on shifted data.
+    * retrain, no rebuild). Under a pinned model, append-then-probe equals
+    * one-shot-rebuild-then-probe exactly (the ann_index_append oracle), because cell and codes are per-row functions of the model
+    * alone. Model drift is the trade — audit it with [[pqQuantError]]
+    * before trusting an aged model on shifted data.
     */
   def appendAnnIndex(
       incoming: DataFrame,
@@ -477,475 +467,49 @@ object Similarity {
       books: Array[Array[Seq[Long]]],
       table: String,
       buckets: Int,
-      era: Long = nextEra()
+      era: Long = BucketedIndex.nextEra()
   ): Unit =
-    graft.sources.Sources.appendBucketed(
-      ivfPqIndexFrame(incoming, idCol, vecCol, coarse, books).withColumn("seq", lit(era)),
-      servingTable(incoming.sparkSession, table), buckets, "cell")
+    AnnLayout.append(ivfPqIndexFrame(incoming, idCol, vecCol, coarse, books), table, buckets, era)
 
-  /** The tombstone companion table of a persisted index — one
-    * (`cand_id`, `tomb_seq`) row per retraction, model/metadata-sized
-    * (takedown scale, never corpus scale). `tomb_seq` is the retraction's
-    * ERA: the tombstone hides index rows of that id whose append era is
-    * ≤ `tomb_seq`, so a LATER re-append of the same id is visible
-    * immediately — delete-then-reappend composes without waiting for a
-    * compaction (the reference-rooted contract: J4's retraction composes
-    * with new arrivals, chicago/permit_cleaning.py:838-883).
-    */
-  private[graft] def tombTable(table: String): String = table + "_tomb"
-
-  /** Companion-table names of a capped index's QUARANTINE side (the
-    * banded rows a layout cap dropped, persisted for bounded recovery —
-    * [[Multimodal.quarantineHammingIndex]]) and its sweep WATERMARK (one
-    * row: how far the bounded sweep has progressed through the
-    * quarantined buckets, plus the bucket total the policy census reads).
-    * Logical-name scoped like [[tombTable]]: the quarantine outlives
-    * version publications (a rebuild re-decides it explicitly).
-    */
-  private[graft] def quarTable(table: String): String = table + "_quar"
-  private[graft] def quarWmTable(table: String): String = table + "_quar_wm"
-
-  // ---- shared quarantine-sweep core ------------------------------------
-  // One definition of the recovery side's state machinery for every
-  // capped banded family (Hamming fingerprints over (band, bv), text LSH
-  // over (band, bh)): watermark read/write/reset, the tombstone-filtered
-  // live view, and the bounded tick's bucket selection. The family
-  // operators ([[Multimodal.sweepHammingQuarantine]],
-  // [[Dedup.sweepLshQuarantine]]) own only their banding and their
-  // verify step — the cap doctrine is shared, so its recovery is too.
-
-  /** Driver-side MIRROR of the persisted sweep watermark, keyed by the
-    * watermark table name. Single-writer discipline holds per table within
-    * a JVM (the scheduled executor's one-action-per-table guard; the batch
-    * sweep loops are single-threaded), and every write goes through
-    * [[quarWmWrite]], so the mirror is coherent — it exists so the
-    * per-tick progress READ is a map lookup instead of a 1-row table scan
-    * job (r21 verdict item 4). The TABLE stays the durable source of
-    * truth: the policy census scans it, and a fresh JVM reads it cold
-    * through the fallback below.
-    */
-  private val wmMirror =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-
-  /** `(swept_through, quar_buckets)` of a logical index's sweep watermark;
-    * (0, 0) when the index has no quarantine side.
-    */
-  private[ext] def quarWatermark(
-      s: org.apache.spark.sql.SparkSession, table: String): (Long, Long) = {
-    val wmT = quarWmTable(table)
-    wmMirror.get(wmT) match {
-      case null =>
-        if (s.catalog.tableExists(wmT)) {
-          val r = s.table(wmT).collect().head
-          val v = (r.getAs[Long]("swept_through"), r.getAs[Long]("quar_buckets"))
-          wmMirror.put(wmT, v)
-          v
-        } else (0L, 0L)
-      case v => v
-    }
-  }
-
-  private[ext] def quarWmWrite(
-      s: org.apache.spark.sql.SparkSession, table: String, swept: Long, total: Long): Unit = {
-    val wmT = quarWmTable(table)
-    val df = s.createDataFrame(
-      java.util.Arrays.asList(org.apache.spark.sql.Row(swept, total)),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(
-          "swept_through", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField(
-          "quar_buckets", org.apache.spark.sql.types.LongType))))
-    // maintenance-epoch metadata with a single scheduled writer (the
-    // sweep action runs under applyMaintenancePlan's one-action-per-table
-    // guard): an in-place INSERT OVERWRITE replaces the data files without
-    // the DROP + CREATE catalog churn the old drop-and-replace paid per
-    // tick; the first write still creates the table.
-    if (s.catalog.tableExists(wmT)) {
-      df.write.mode("overwrite").insertInto(wmT)
-      // the census reads the table through whatever session planned it —
-      // keep relation/file-listing caches honest after the rewrite
-      s.catalog.refreshTable(wmT)
-    } else {
-      graft.sources.Sources.dropStaleLocation(s, wmT)
-      df.write.format("parquet").saveAsTable(wmT)
-    }
-    wmMirror.put(wmT, (swept, total))
-  }
-
-  /** Begin a fresh sweep PASS: watermark to zero, bucket total
-    * re-snapshotted from the quarantine under the family's bucket keys.
-    */
-  private[ext] def quarReset(
-      s: org.apache.spark.sql.SparkSession, table: String, bucketKeys: Seq[String]): Unit = {
-    val qT = quarTable(table)
-    require(s.catalog.tableExists(qT), s"index '$table' has no quarantine side to sweep")
-    // a reset begins a fresh pass over possibly-new quarantine content:
-    // drop the pass's rank snapshot and re-rank (the snapshot's length IS
-    // the bucket total the watermark records — one scan serves both)
-    rankMirror.remove(qT)
-    val total = quarRankedBuckets(s, table, bucketKeys).size.toLong
-    quarWmWrite(s, table, swept = 0L, total = total)
-  }
-
-  /** Per-PASS snapshot of the quarantine's ranked bucket list (membership
-    * DESC, then bucket keys — the sweep order). Ranks are constant between
-    * re-quarantine points, and every quarantine-content writer calls
-    * [[quarReset]] (spec-pinned), which invalidates this — so within one
-    * sweep pass the ranking is computed ONCE instead of re-windowed per
-    * tick. Bucket-census grain (at most corpus/cap buckets, in practice
-    * few), never the member grain, so the driver-side snapshot is
-    * fleet-metadata-sized.
-    */
-  private val rankMirror =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[org.apache.spark.sql.Row]]()
-
-  private[ext] def quarRankedBuckets(
-      s: org.apache.spark.sql.SparkSession,
-      table: String,
-      bucketKeys: Seq[String]): Seq[org.apache.spark.sql.Row] =
-    rankMirror.computeIfAbsent(quarTable(table), { qT =>
-      s.table(qT)
-        .groupBy(bucketKeys.map(col): _*)
-        .agg(count(lit(1)).as("__n"))
-        .orderBy(col("__n").desc +: bucketKeys.map(col): _*)
-        .select(bucketKeys.map(col): _*)
-        .collect()
-        .toSeq
-    })
-
-  /** The live rows of a persisted quarantine: the stored drops minus the
-    * index's era-qualified tombstones — the same anti-join contract as
-    * the serving scan, because a takedown hides an id wherever its rows
-    * live, stored or quarantined.
-    */
-  private[ext] def quarLive(
-      s: org.apache.spark.sql.SparkSession, table: String): DataFrame = {
-    val quar = s.table(quarTable(table))
-    val tomb = tombTable(table)
-    if (s.catalog.tableExists(tomb)) {
-      val t = s.table(tomb)
-      quar.join(
-        broadcast(t),
-        quar("corpus_id") === t("corpus_id") && quar("seq") <= t("tomb_seq"),
-        "left_anti")
-    } else quar
-  }
-
-  /** The next bounded tick's `(swept, hi, total)` range — a pure READ of
-    * the watermark (mirror-backed, no job). The caller COMMITS the advance
-    * via [[quarTickCommit]] only after the tick's output is durably
-    * written: a tick that dies mid-write leaves the watermark unmoved and
-    * the next tick re-covers the same bucket range (at-least-once; the
-    * sweep sinks are consumed through `distinct()`, so a replayed pair
-    * cannot change any result). The advance-before-execute shape this
-    * replaces could silently skip a failed tick's buckets forever
-    * (r20 verdict item 1).
-    */
-  private[ext] def quarTickRange(
-      s: org.apache.spark.sql.SparkSession,
-      table: String,
-      maxBucketsPerTick: Int
-  ): (Long, Long, Long) = {
-    require(maxBucketsPerTick > 0, "sweep ticks must make progress: maxBucketsPerTick >= 1")
-    require(
-      s.catalog.tableExists(quarTable(table)),
-      s"index '$table' has no quarantine side to sweep")
-    val (swept, total) = quarWatermark(s, table)
-    (swept, math.min(swept + maxBucketsPerTick, total), total)
-  }
-
-  /** Commit one tick: advance the persisted watermark to `hi`. */
-  private[ext] def quarTickCommit(
-      s: org.apache.spark.sql.SparkSession, table: String, hi: Long, total: Long): Unit =
-    quarWmWrite(s, table, swept = hi, total = total)
-
-  /** The bucket-key set of ranks `(lo, hi]` in sweep rank order:
-    * membership DESC — the regrowth-heaviest boilerplate first — then the
-    * bucket keys for determinism; ranks are stable because the quarantine
-    * changes only at re-quarantine points, which reset the watermark. The
-    * slice comes off the pass's rank SNAPSHOT ([[quarRankedBuckets]]) as a
-    * local relation, so a tick costs a broadcast of ≤ `maxBucketsPerTick`
-    * key rows instead of a window re-ranking the bucket census per tick
-    * (the old per-tick window was the measured cost floor of the sweep
-    * loops at fixture scale).
-    */
-  private[ext] def quarBucketsAt(
-      s: org.apache.spark.sql.SparkSession,
-      table: String,
-      bucketKeys: Seq[String],
-      lo: Long,
-      hi: Long
-  ): DataFrame = {
-    val ranked = quarRankedBuckets(s, table, bucketKeys)
-    val slice = ranked.slice(lo.toInt, hi.toInt)
-    val schema = org.apache.spark.sql.types.StructType(
-      s.table(quarTable(table)).select(bucketKeys.map(col): _*).schema)
-    s.createDataFrame(java.util.Arrays.asList(slice: _*), schema)
-  }
-
-  /** Strictly-increasing era stamp for index maintenance operations:
-    * wall-clock anchored (so independently-restarted maintenance JVMs
-    * still order correctly at takedown timescales) and monotonic within
-    * the JVM (so probe→append→delete inside one micro-batch orders even
-    * under a frozen clock). Era VALUES never appear in query results —
-    * only their relative order carries meaning — so auto-stamped eras
-    * keep every probe output deterministic.
-    */
-  private val eraCounter = new java.util.concurrent.atomic.AtomicLong(0L)
-  def nextEra(): Long =
-    eraCounter.updateAndGet(prev => math.max(prev + 1, System.currentTimeMillis()))
-
-  /** Resolve the SERVING physical table of a logical index name: the
-    * highest published version `<table>__v<N>` if any rebuild has run,
-    * else the bare `<table>`. [[rebuildAnnIndex]] publishes a fully-built
-    * version with one atomic catalog RENAME and retires only versions two
-    * generations back, so a reader that resolved here keeps a physical
-    * table whose files never move for at least one full rebuild cycle —
-    * no missing-table window, no mixed-era reads (the drop-then-rename
-    * swap this replaces had both).
+  /** The serving table and tombstone table of a logical index name —
+    * [[BucketedIndex.servingTable]] / [[BucketedIndex.tombTable]] under
+    * the names `perfbench/scala` calls.
     */
   private[graft] def servingTable(s: org.apache.spark.sql.SparkSession, table: String): String =
-    servingVersion(s, table) match {
-      case 0 => table
-      case n => s"${table}__v$n"
-    }
+    BucketedIndex.servingTable(s, table)
+  private[graft] def tombTable(table: String): String = BucketedIndex.tombTable(table)
 
-  private val VersionSuffix = "__v(\\d+)$".r
-
-  /** JVM-scoped memo of the resolved serving VERSION per logical index
-    * name (keyed db-qualified; all sessions of one JVM share the external
-    * catalog, so one memo serves them all). Version resolution otherwise
-    * LISTS the catalog with a pattern per call — a metadata scan per
-    * probe, hundreds of times per session. The memo is invalidated by the
-    * only two version-history writers ([[publishVersion]],
-    * [[resetVersions]]), and a memoized version N ≥ 1 is trust-but-verify
-    * (one exact-name `tableExists`, an O(1) catalog lookup) so an
-    * out-of-band drop of the memoized version degrades to a recompute,
-    * never a missing-table read. A probe that resolves version N−1
-    * concurrently with a publish is the documented reader grace, not
-    * staleness.
-    *
-    * The recompute path inserts via `computeIfAbsent`, which is ATOMIC
-    * against the writers' `remove`: either the invalidation lands first
-    * and the compute lists the post-publish catalog, or the compute's
-    * (possibly stale) value is inserted first and the invalidation
-    * removes it — a plain get-then-put would let a resolution that
-    * STARTED before a publish re-install the pre-publish version after
-    * the invalidation, and that stale value would then pass
-    * trust-but-verify forever (the grace version keeps existing) and
-    * derail the NEXT publish's version arithmetic.
-    *
-    * SCOPE: the memo assumes version-history writers share this JVM's
-    * catalog — the single-writer posture the whole lifecycle already
-    * assumes (the in-memory catalog is JVM-local, so an out-of-JVM
-    * publisher is invisible to a fresh LISTING too, memo or no memo). A
-    * deployment on a shared external metastore with out-of-band
-    * publishers sets `spark.graft.index.versionMemo.enabled=false`
-    * (session conf, read per resolution): the kill switch drops straight
-    * to a fresh catalog listing per call, so a catalog-restore or
-    * external publisher is visible immediately — the escape hatch costs
-    * only the metadata scan the memo was built to amortize.
-    */
-  private val versionMemo = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
-  private def memoKey(s: org.apache.spark.sql.SparkSession, table: String): String =
-    s.sessionState.catalog.getCurrentDatabase + "." + table
-
-  private def invalidateVersionMemo(s: org.apache.spark.sql.SparkSession, table: String): Unit = {
-    versionMemo.remove(memoKey(s, table)): Unit
-  }
-
-  /** A FRESH `persist*Index` build under a logical name is a new
-    * authority epoch: it must retire any published versions of that name,
-    * or the split-brain follows — the persist writes the BARE table while
-    * append/census/live keep resolving the highest `__v<N>` (stale
-    * content). Every index family's persist calls this beside its
-    * tombstone-history reset — fresh build ⇒ fresh retraction history ⇒
-    * fresh version history.
-    */
-  private[graft] def resetVersions(s: org.apache.spark.sql.SparkSession, table: String): Unit = {
-    val cur = servingVersion(s, table)
-    (1 to cur).foreach(v => s.sql(s"DROP TABLE IF EXISTS `${table}__v$v`"))
-    // fresh build ⇒ fresh version history INCLUDING any abandoned build
-    // stage a killed rebuild left behind — otherwise the orphan would
-    // carry a version number the fresh epoch will re-mint
-    dropAbandonedBuilds(s, table)
-    invalidateVersionMemo(s, table)
-  }
-
-  private[graft] val VersionMemoEnabledKey = "spark.graft.index.versionMemo.enabled"
-
-  private def listedVersion(s: org.apache.spark.sql.SparkSession, table: String): Int = {
-    val db = s.sessionState.catalog.getCurrentDatabase
-    s.sessionState.catalog
-      .listTables(db, s"${table}__v*")
-      .flatMap(t => VersionSuffix.findFirstMatchIn(t.table).map(_.group(1).toInt))
-      .sorted.lastOption.getOrElse(0)
-  }
-
-  private[graft] def servingVersion(s: org.apache.spark.sql.SparkSession, table: String): Int = {
-    // kill switch for shared-metastore deployments: bypass the memo (and
-    // drop any cached entry, so re-enabling starts clean) and list fresh
-    if (!s.conf.get(VersionMemoEnabledKey, "true").toBoolean) {
-      versionMemo.remove(memoKey(s, table)): Unit
-      return listedVersion(s, table)
-    }
-    val key = memoKey(s, table)
-    val memo = versionMemo.get(key)
-    if (memo != null && (memo.intValue == 0 || s.catalog.tableExists(s"${table}__v$memo")))
-      memo.intValue
-    else {
-      // failed trust-but-verify: retire exactly the entry we read (the
-      // value-qualified remove never clobbers a concurrent writer's state)
-      if (memo != null) versionMemo.remove(key, memo): Unit
-      versionMemo.computeIfAbsent(key, _ => Integer.valueOf(listedVersion(s, table))).intValue
-    }
-  }
-
-  /** MAINTENANCE — the delete/retract half of the [[appendAnnIndex]]
-    * cycle: record the retracted ids in the index's tombstone table, and
-    * every probe anti-joins them out before ranking. The index files are
-    * untouched (no bucket rewrite on the takedown path); the tombstone
-    * side rides a BROADCAST anti-join, so the index scan keeps its
-    * bucketed, exchange-free layout. The correctness contract mirrors the
-    * append contract: delete-then-probe must equal
-    * rebuild-without-deleted-then-probe exactly (the driver's
-    * ann_index_delete oracle checks precisely that). Accumulated
-    * tombstones are folded into the files by [[compactAnnIndex]].
-    *
-    * This is the engine twin of the reference's signature retraction
-    * join — the J4 anti-dedupe that removes already-uploaded rows from a
-    * new batch (chicago/permit_cleaning.py:838-883) — applied to the
-    * serving index instead of the upload frame.
-    *
-    * ERA-AWARE: the tombstone is stamped with `era` and hides only index
-    * rows appended at era ≤ `era` (delete is "remove this id's rows AS OF
-    * now"). A later re-append of the same id lands at a higher era and is
-    * visible immediately — no forced compaction between a takedown
-    * reversal and its re-crawl.
+  /** MAINTENANCE — retract vectors: era-stamped tombstones that every
+    * probe anti-joins out before ranking ([[BucketedIndex.Layout.delete]]).
+    * Delete-then-probe equals rebuild-without-deleted-then-probe exactly
+    * (the ann_index_delete oracle).
     */
   def deleteFromAnnIndex(
       s: org.apache.spark.sql.SparkSession,
       table: String,
       ids: DataFrame,
       idCol: String,
-      era: Long = nextEra()
-  ): Unit = {
-    graft.sources.Sources.dropStaleLocation(s, tombTable(table))
-    ids
-      .select(col(idCol).cast("long").as("cand_id"), lit(era).as("tomb_seq"))
-      .distinct()
-      .write
-      .mode("append")
-      .format("parquet")
-      .saveAsTable(tombTable(table))
-  }
+      era: Long = BucketedIndex.nextEra()
+  ): Unit =
+    AnnLayout.delete(s, table, ids, col(idCol), era)
 
-  /** The live rows of a persisted ANN index: the serving version's
-    * bucketed scan minus its era-qualified tombstones (broadcast anti-join
-    * on id with the `seq ≤ tomb_seq` era condition riding the same
-    * broadcast — the index side's bucketed output partitioning survives,
-    * PlanAuditSpec-asserted). No tombstone table ⇒ the bare scan,
-    * byte-identical plan to the pre-delete era.
-    */
-  private def annIndexLive(s: org.apache.spark.sql.SparkSession, table: String): DataFrame = {
-    val idx = s.table(servingTable(s, table))
-    if (s.catalog.tableExists(tombTable(table))) {
-      val tomb = s.table(tombTable(table))
-      idx.join(
-        broadcast(tomb),
-        idx("cand_id") === tomb("cand_id") && idx("seq") <= tomb("tomb_seq"),
-        "left_anti")
-    } else idx
-  }
-
-  /** Collapse a healed compaction rewrite to ONE era — the maximum LIVE
-    * era, so no row becomes "newer" than the newest real append. Shared
-    * by all four families' compacts. Compaction is an ERA HORIZON: its
-    * tombstones are folded and retired with it, so an explicit-era
-    * retraction dated BEFORE the compaction is spent (as-of-past deletes
-    * do not reach across a compaction epoch — the rows it would have
-    * hidden were either folded out or re-authorized by the rewrite), and
-    * the post-compact census reads a single append era. That census
-    * reset is load-bearing for the maintenance policy: an eras-triggered
-    * compact that did NOT collapse eras would re-trigger on every
-    * subsequent plan — the fixed point `index_maintenance_fixpoint`
-    * witnesses depends on this. The max is one driver-side Long
-    * (model-scale), at the cost of a SECOND streaming pass over the
-    * healed frame (the agg, then the rewrite) — deliberately NOT
-    * persisted/cached: at compaction scale the healed frame is the whole
-    * index, and two streaming passes beat pinning it in executor memory.
-    */
-  private[graft] def collapsedToMaxEra(healed: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val maxEra = healed
-      .agg(coalesce(max(col("seq")), lit(0L)))
-      .collect()(0).getLong(0)
-    healed.withColumn("seq", lit(maxEra))
-  }
-
-  /** MAINTENANCE — fold the tombstones into the files and merge each
-    * bucket's accumulated append file-sets back to one file per bucket,
-    * WITHOUT changing the bucket hashing (the exchange-free probe
-    * property survives — asserted in PlanAuditSpec). Needed after enough
-    * [[appendAnnIndex]]/[[deleteFromAnnIndex]] cycles: each append adds
-    * `buckets` more files (listing + open cost grows per cycle) and each
-    * delete grows the anti-join's broadcast. Probe results are
-    * hash-identical before/after — compaction is layout, not meaning;
-    * surviving rows collapse to the newest live era
-    * ([[collapsedToMaxEra]]), so the era census heals with the layout.
+  /** MAINTENANCE — fold tombstones and append file-sets back to one file
+    * per `cell` bucket; probe results are hash-identical before/after
+    * ([[BucketedIndex.Layout.compact]]).
     */
   def compactAnnIndex(
       s: org.apache.spark.sql.SparkSession,
       table: String,
       buckets: Int
-  ): Unit = {
-    // minted BEFORE the live snapshot: a takedown recorded during the
-    // rewrite carries tomb_seq >= horizon and survives the retirement
-    // ([[retireTombstonesBelow]] — the publication-side era-split shared)
-    val horizon = nextEra()
-    // content dedup keeping the HIGHEST era: an OVERLAPPING append
-    // (at-least-once foreachBatch retry) stores a row twice with identical
-    // (cand_id, cell, codes) but distinct auto-eras — semantically inert at
-    // probe time (TopKHeap's set semantics hold the pair once) but index
-    // bloat; compaction is the healing point. max(seq) keeps the survivor
-    // deterministic AND maximally visible against any future explicit-era
-    // tombstone. Distinct ids with different codes are distinct rows.
-    val live = annIndexLive(s, table)
-    graft.sources.Sources.compactBucketed(
-      s, servingTable(s, table), buckets, Seq("cell"),
-      collapsedToMaxEra(
-        live.groupBy(col("cand_id"), col("cell"), col("codes"))
-          .agg(max(col("seq")).as("seq"))
-          .select(col("cand_id"), col("cell"), col("codes"), col("seq"))))
-    // the rewrite materialized the anti-join — retire the applied
-    // tombstones, preserving any recorded during the rewrite window
-    retireTombstonesBelow(s, table, horizon)
-  }
+  ): Unit =
+    AnnLayout.compact(s, table, buckets, maxBucket = 0)
 
   /** MAINTENANCE — blue/green REBUILD, the staleness loop's last arc:
-    * when [[pqQuantError]] says the aged model no longer fits the corpus
-    * (append-only maintenance under a pinned model can only drift), build
-    * the retrained index ASIDE — serving reads are untouched while the
-    * full-corpus encode runs — then PUBLISH it as the next serving
-    * version.
-    *
-    * PROBE-SAFE publication on a plain (non-transactional) catalog:
-    * versions are immutable physical tables `<table>__v<N>`; the build
-    * stages under `<table>__v<N>__build` (never resolved by readers) and
-    * publication is ONE catalog RENAME `__build → __v<N>` — a reader's
-    * [[servingTable]] resolution sees either version N−1 or N, never a
-    * missing name and never a half-written table. The previous version is
-    * RETIRED ONLY ON THE NEXT REBUILD (grace of one full rebuild cycle —
-    * full-corpus encodes take far longer than any probe), so a probe that
-    * resolved the old version keeps files that never move. The bucket
-    * spec is catalog metadata and survives the rename — post-publish
-    * probes still plan exchange-free (spec-asserted).
-    *
-    * The new version's rows are stamped at a FRESH era, so tombstones
-    * accumulated against the old version (lower eras) cannot hide any
-    * re-crawled id in it — the tombstone drop afterwards is hygiene, not
-    * a correctness window.
+    * when [[pqQuantError]] says the aged model no longer fits the corpus,
+    * build the retrained index ASIDE and publish it as the next serving
+    * version ([[BucketedIndex.publishVersion]]: probe-safe, one catalog
+    * RENAME). Its rows carry a fresh era, so tombstones recorded against
+    * the old version cannot hide a re-crawled id in it.
     */
   def rebuildAnnIndex(
       s: org.apache.spark.sql.SparkSession,
@@ -957,140 +521,8 @@ object Similarity {
       books: Array[Array[Seq[Long]]],
       buckets: Int
   ): Unit =
-    // persistAnnIndex drops tombTable(bld) — a no-op companion; the real
-    // tombstones (keyed by the LOGICAL name) stay live for current readers
-    publishVersion(s, table)((bld, era) =>
+    BucketedIndex.publishVersion(s, table)((bld, era) =>
       persistAnnIndex(corpus, idCol, vecCol, coarse, books, bld, buckets, era = era))
-
-  /** The versioned-publication machinery behind every index REBUILD,
-    * shared by all four persisted-index families (IVFPQ vector, LSH text,
-    * semantic cell, Hamming fingerprint) so the probe-safety argument is
-    * proved once: `build` writes a complete index under the staging name
-    * it is given (`<table>__v<N>__build`, never resolved by readers) at
-    * the era it is given (minted HERE, before the build starts),
-    * publication is ONE catalog RENAME to `<table>__v<N>`, and versions
-    * two generations back retire. A concurrent [[servingTable]]
-    * resolution sees version N−1 or N — never a missing name, never a
-    * half-written table.
-    *
-    * Tombstone handling is ERA-SPLIT, not a blanket drop: retractions
-    * recorded BEFORE the build era are inert against the new version
-    * (its rows carry `seq = era > tomb_seq`) and are purged as hygiene,
-    * but a takedown recorded DURING the build window (full-corpus
-    * encodes are the longest maintenance op) carries `tomb_seq > era`
-    * and MUST survive publication — the build's corpus snapshot predates
-    * it, so only the tombstone hides the retracted id in the new
-    * version. The survivor rewrite stages through `<tomb>__keep` and
-    * republishes under the tombstone name (same rename doctrine).
-    */
-  /** JVM-local registry of build stages currently INSIDE a
-    * [[publishVersion]] call — the ground truth that separates an
-    * in-flight stage from an ABANDONED one (a rebuild killed between
-    * staging and publication leaves a fully-written `__v<N>__build`
-    * table that nothing resolves and nothing cleans). Same single-JVM
-    * posture as the version memo: the in-memory catalog where a crashed
-    * OTHER JVM's stage would live dies with that JVM (only its
-    * directory leaks, which dropStaleLocation already reaps at the next
-    * build), so within the catalog's lifetime this set is exact.
-    */
-  private val inFlightBuilds =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The ABANDONED build stages of a logical index: catalog tables named
-    * `<table>__v<N>__build` with no [[publishVersion]] call currently
-    * driving them. Storage-leak pressure for the maintenance policy
-    * ([[Maintenance.indexCensus]]'s `stale_builds`; the `janitor`
-    * decision drops them). Catalog-state derived, so spec-pinned rather
-    * than oracle-checked — the [[Maintenance.filesPerBucket]] precedent.
-    */
-  private[graft] def abandonedBuilds(
-      s: org.apache.spark.sql.SparkSession, table: String): Seq[String] = {
-    val db = s.sessionState.catalog.getCurrentDatabase
-    val stageRe = (java.util.regex.Pattern.quote(table) + "__v\\d+__build$").r
-    s.sessionState.catalog
-      .listTables(db, s"${table}__v*__build")
-      .map(_.table)
-      .filter(t => stageRe.pattern.matcher(t).matches())
-      .filterNot(t => inFlightBuilds.contains(s"$db.$t"))
-  }
-
-  /** Drop a logical index's abandoned build stages — the executor arc
-    * behind the policy's `janitor` decision. Idempotent; never touches a
-    * stage registered in-flight.
-    */
-  private[graft] def dropAbandonedBuilds(
-      s: org.apache.spark.sql.SparkSession, table: String): Unit =
-    abandonedBuilds(s, table).foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
-
-  private[graft] def publishVersion(
-      s: org.apache.spark.sql.SparkSession,
-      table: String
-  )(build: (String, Long) => Unit): Unit = {
-    val cur = servingVersion(s, table)
-    val next = s"${table}__v${cur + 1}"
-    val bld = next + "__build"
-    val era = nextEra()
-    // registered from first write THROUGH the rename (not merely the
-    // build call): a concurrently-running census must not flag a LIVE
-    // stage as abandoned, and a concurrent janitor must not drop it in
-    // the instant between build completion and publication
-    val bldKey = s.sessionState.catalog.getCurrentDatabase + "." + bld
-    inFlightBuilds.add(bldKey)
-    try {
-      build(bld, era)
-      // a prior JVM's leftover __v<N+1> DIRECTORY (its in-memory catalog
-      // died with it, so servingVersion cannot see the version) would make
-      // the RENAME refuse the target location — same stale-location doctrine
-      // as writeBucketed: a location the catalog doesn't own is garbage
-      graft.sources.Sources.dropStaleLocation(s, next)
-      s.sql(s"ALTER TABLE `$bld` RENAME TO `$next`") // atomic publication
-    } finally inFlightBuilds.remove(bldKey): Unit
-    // invalidate BEFORE retiring old generations: a resolution between the
-    // rename and here reads the memoized N−1 (the reader grace set, which
-    // survives this publication); after here it recomputes N
-    invalidateVersionMemo(s, table)
-    retireTombstonesBelow(s, table, era)
-    // retire generations ≤ cur−1; version cur stays as the reader grace set
-    (1 until cur).foreach(v => s.sql(s"DROP TABLE IF EXISTS `${table}__v$v`"))
-    if (cur >= 1) s.sql(s"DROP TABLE IF EXISTS `$table`")
-  }
-
-  /** Retire tombstone entries recorded BEFORE `horizon`, preserving the
-    * later ones — the ERA-SPLIT shared by the two maintenance rewrites
-    * (version publication and compaction). An entry with
-    * `tomb_seq >= horizon` was recorded during or after the rewrite's
-    * corpus/live snapshot (which therefore predates the takedown): only
-    * the tombstone hides that id in the rewritten table, so it MUST
-    * survive — a blanket drop would silently resurrect a mid-rewrite
-    * takedown (the publication side learned this in r18; compaction
-    * inherits the same split in r19, since a compact's live snapshot is
-    * materialized well before its tombstone retirement on a large
-    * index). Entries below the horizon are folded/outranked and purge as
-    * hygiene. The survivor rewrite stages through `<tomb>__keep` under
-    * the same rename doctrine as publication; a delete landing inside
-    * that staging window is the residual metadata-speed race both
-    * rewrites share — orders of magnitude narrower than the full-rewrite
-    * window this split closes.
-    */
-  private[graft] def retireTombstonesBelow(
-      s: org.apache.spark.sql.SparkSession,
-      table: String,
-      horizon: Long
-  ): Unit = {
-    val tomb = tombTable(table)
-    if (s.catalog.tableExists(tomb)) {
-      val late = s.table(tomb).filter(col("tomb_seq") >= horizon)
-      if (late.isEmpty) s.sql(s"DROP TABLE IF EXISTS `$tomb`")
-      else {
-        val keep = tomb + "__keep"
-        s.sql(s"DROP TABLE IF EXISTS `$keep`")
-        graft.sources.Sources.dropStaleLocation(s, keep)
-        late.write.format("parquet").saveAsTable(keep)
-        s.sql(s"DROP TABLE IF EXISTS `$tomb`")
-        s.sql(s"ALTER TABLE `$keep` RENAME TO `$tomb`")
-      }
-    }
-  }
 
   /** STALENESS SIGNAL — the PQ quantization error of an ALREADY-quantized
     * vector under fitted codebooks: Σ over subspaces of the minimum exact
@@ -1192,7 +624,7 @@ object Similarity {
     // tombstoned ids ([[deleteFromAnnIndex]]) anti-join out BEFORE the
     // cell join — broadcast, so the index side stays exchange-free; the
     // caller's candidate pre-filter lands on the scan itself
-    val live = annIndexLive(s, table)
+    val live = AnnLayout.live(s, table)
     val scored = candPred.fold(live)(live.filter)
       .join(q, Seq("cell"))
       .filter(col("query_id") =!= col("cand_id"))

@@ -334,7 +334,7 @@ private[queries] object QAnn {
       }
       // LSH index: corpus persisted, md5%3 takedown stratum tombstoned
       val lshTbl = Scratch.table("lsh_idx_cen")
-      Scratch.registerTable(Similarity.tombTable(lshTbl))
+      Scratch.registerTable(graft.ext.BucketedIndex.tombTable(lshTbl))
       val dcorp = docs.filter(col("doc_id") % 5 =!= 0)
       Scratch.tableOnce(lshTbl, dir) {
         Dedup.persistLshIndex(
@@ -459,7 +459,7 @@ private[queries] object QAnn {
       val coarse = Similarity.kmeansCentroidsCached(e, "vec_id", "embedding", nlist = 8, iters = 2)
       val books = Similarity.pqTrainCached(e, "vec_id", "embedding", nsub = 4, nlistSub = 4, iters = 1)
       val tbl = Scratch.table("ann_idx_del")
-      Scratch.registerTable(Similarity.tombTable(tbl))
+      Scratch.registerTable(graft.ext.BucketedIndex.tombTable(tbl))
       Scratch.tableOnce(tbl, dir) {
         Similarity.persistAnnIndex(e, "vec_id", "embedding", coarse, books, tbl, buckets = 8)
         Similarity.deleteFromAnnIndex(
@@ -483,7 +483,7 @@ private[queries] object QAnn {
       val coarse = Similarity.kmeansCentroidsCached(e, "vec_id", "embedding", nlist = 8, iters = 2)
       val books = Similarity.pqTrainCached(e, "vec_id", "embedding", nsub = 4, nlistSub = 4, iters = 1)
       val tbl = Scratch.table("ann_idx_reapp")
-      Scratch.registerTable(Similarity.tombTable(tbl))
+      Scratch.registerTable(graft.ext.BucketedIndex.tombTable(tbl))
       val delGate = graft.ops.Hashing.md5Mod(col("vec_id").cast("string"), 5L) === 0
       Scratch.tableOnce(tbl, dir) {
         Similarity.persistAnnIndex(e, "vec_id", "embedding", coarse, books, tbl, buckets = 8)
@@ -508,7 +508,7 @@ private[queries] object QAnn {
       val coarse = Similarity.kmeansCentroidsCached(e, "vec_id", "embedding", nlist = 8, iters = 2)
       val books = Similarity.pqTrainCached(e, "vec_id", "embedding", nsub = 4, nlistSub = 4, iters = 1)
       val tbl = Scratch.table("ann_idx_cmp")
-      Scratch.registerTable(Similarity.tombTable(tbl))
+      Scratch.registerTable(graft.ext.BucketedIndex.tombTable(tbl))
       Scratch.registerTable(tbl + "__compact_stage")
       Scratch.tableOnce(tbl, dir) {
         val g = graft.ops.Hashing.md5Mod(col("vec_id").cast("string"), 4L)

@@ -157,7 +157,7 @@ private[queries] object QDedup {
       val corpus = docs.filter(col("doc_id") % 5 =!= 0)
       val incoming = docs.filter(col("doc_id") % 5 === 0)
       val idxTable = Scratch.table("lsh_idx_del")
-      Scratch.registerTable(graft.ext.Similarity.tombTable(idxTable))
+      Scratch.registerTable(graft.ext.BucketedIndex.tombTable(idxTable))
       Scratch.tableOnce(idxTable, dir) {
         Dedup.persistLshIndex(
           corpus, col("doc_id"), col("text"), table = idxTable, buckets = 8,
@@ -193,7 +193,7 @@ private[queries] object QDedup {
       val corpus = docs.filter(col("doc_id") % 5 =!= 0)
       val incoming = docs.filter(col("doc_id") % 5 === 0)
       val idxTable = Scratch.table("lsh_idx_reapp")
-      Scratch.registerTable(graft.ext.Similarity.tombTable(idxTable))
+      Scratch.registerTable(graft.ext.BucketedIndex.tombTable(idxTable))
       val delGate = graft.ops.Hashing.md5Mod(col("doc_id").cast("string"), 7L) === 0
       Scratch.tableOnce(idxTable, dir) {
         Dedup.persistLshIndex(
@@ -415,7 +415,7 @@ private[queries] object QDedup {
       val corpus = e.filter(col("vec_id") % 5 =!= 0)
       val incoming = e.filter(col("vec_id") % 5 === 0)
       val tbl = Scratch.table("sem_idx_mnt")
-      Scratch.registerTable(Similarity.tombTable(tbl))
+      Scratch.registerTable(graft.ext.BucketedIndex.tombTable(tbl))
       Scratch.registerTable(tbl + "__compact_stage")
       Scratch.tableOnce(tbl, dir) {
         val g = graft.ops.Hashing.md5Mod(col("vec_id").cast("string"), 4L)

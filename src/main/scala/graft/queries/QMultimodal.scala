@@ -149,7 +149,7 @@ private[queries] object QMultimodal {
         .toDF()
       val corpus = hashes.filter(col("asset_id") % 5 =!= 0)
       val tbl = Scratch.table("img_idx_mnt")
-      Scratch.registerTable(graft.ext.Similarity.tombTable(tbl))
+      Scratch.registerTable(graft.ext.BucketedIndex.tombTable(tbl))
       Scratch.registerTable(tbl + "__compact_stage")
       Scratch.tableOnce(tbl, dir) {
         val g = graft.ops.Hashing.md5Mod(col("asset_id").cast("string"), 4L)
@@ -292,8 +292,8 @@ private[queries] object QMultimodal {
       val corpus = fh.filter(col("asset_id") % 5 =!= 0)
       val incoming = fh.filter(col("asset_id") % 25 === 0)
       val tbl = Scratch.table("frm_idx_sw")
-      Scratch.registerTable(Similarity.quarTable(tbl))
-      Scratch.registerTable(Similarity.quarWmTable(tbl))
+      Scratch.registerTable(graft.ext.BucketedIndex.quarTable(tbl))
+      Scratch.registerTable(graft.ext.BucketedIndex.quarWmTable(tbl))
       Scratch.tableOnce(tbl, dir) {
         Multimodal.persistHammingIndex(
           corpus, "frame_key", "dhash", tbl, buckets = 8, maxBucket = 64)
@@ -336,8 +336,8 @@ private[queries] object QMultimodal {
       val corpus = fh.filter(col("asset_id") % 5 =!= 0)
       val incoming = fh.filter(col("asset_id") % 25 === 0)
       val tbl = Scratch.table("frm_idx_sched")
-      Scratch.registerTable(Similarity.quarTable(tbl))
-      Scratch.registerTable(Similarity.quarWmTable(tbl))
+      Scratch.registerTable(graft.ext.BucketedIndex.quarTable(tbl))
+      Scratch.registerTable(graft.ext.BucketedIndex.quarWmTable(tbl))
       Scratch.tableOnce(tbl, dir) {
         Multimodal.persistHammingIndex(
           corpus, "frame_key", "dhash", tbl, buckets = 8, maxBucket = 64)

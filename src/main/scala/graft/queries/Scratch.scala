@@ -115,7 +115,7 @@ object Scratch {
     * hand-maintained registration lists drifting from the naming scheme.
     */
   def registerVersionedIndex(table: String, maxV: Int = 3): Unit = {
-    val tomb = graft.ext.Similarity.tombTable(table)
+    val tomb = graft.ext.BucketedIndex.tombTable(table)
     Seq(table, tomb, tomb + "__keep", table + "__compact_stage").foreach(registerTable)
     (1 to maxV).foreach { v =>
       registerTable(s"${table}__v$v")

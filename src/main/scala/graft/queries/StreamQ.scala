@@ -707,7 +707,7 @@ object StreamQ {
       val docsDf = t(s, dir, "documents")
       val corpus = docsDf.filter(col("doc_id") % 5 =!= 2)
       val table = Scratch.table("lsh_retract")
-      val tomb = Similarity.tombTable(table)
+      val tomb = graft.ext.BucketedIndex.tombTable(table)
       Scratch.registerTable(tomb)
       // layout time: overwrite resets the index each invocation; the TOMB
       // table must reset with it (bench reruns — a stale tombstone set
@@ -867,7 +867,7 @@ object StreamQ {
       val books = Similarity.pqTrainCached(e, "vec_id", "embedding", nsub = 4, nlistSub = 4, iters = 1)
       val g = graft.ops.Hashing.md5Mod(col("vec_id").cast("string"), 4L)
       val table = Scratch.table("ann_retract")
-      val tomb = Similarity.tombTable(table)
+      val tomb = graft.ext.BucketedIndex.tombTable(table)
       Scratch.registerTable(tomb)
       // layout time: index AND tombstones reset each invocation (bench
       // reruns in one JVM — stale tombstones would hide batch-A probes'
@@ -957,7 +957,7 @@ object StreamQ {
       val fh = frameHashes(s, dir)
       val corpus = fh.filter(col("asset_id") % 5 =!= 0)
       val table = Scratch.table("mm_retract")
-      val tomb = Similarity.tombTable(table)
+      val tomb = graft.ext.BucketedIndex.tombTable(table)
       Scratch.registerTable(tomb)
       // layout time: persist resets index, tombstones AND version history
       // each invocation (bench reruns in one JVM); the spilled hash frame
@@ -1033,7 +1033,7 @@ object StreamQ {
       val cents = Similarity.kmeansCentroidsCached(e, "vec_id", "embedding", nlist = 8, iters = 2)
       val g = graft.ops.Hashing.md5Mod(col("vec_id").cast("string"), 4L)
       val table = Scratch.table("sem_retract")
-      val tomb = Similarity.tombTable(table)
+      val tomb = graft.ext.BucketedIndex.tombTable(table)
       Scratch.registerTable(tomb)
       // layout time: index AND tombstones reset each invocation (bench
       // reruns in one JVM — stale tombstones would hide batch-A probes'
@@ -1116,7 +1116,7 @@ object StreamQ {
       val corpus = docsDf.filter(col("doc_id") % 5 =!= 0)
       val table = Scratch.table("lsh_mloop")
       Scratch.registerVersionedIndex(table)
-      s.sql(s"DROP TABLE IF EXISTS ${Similarity.tombTable(table)}")
+      s.sql(s"DROP TABLE IF EXISTS ${graft.ext.BucketedIndex.tombTable(table)}")
       graft.sources.Sources.writeBucketed(
         Dedup.spilled(
           Dedup.lshIndex(corpus, col("doc_id"), col("text"), n = 3, k = 8, bands = 4),

@@ -147,13 +147,15 @@ class PlanAuditSpec extends SparkSpecBase {
       "pipeline/PermitPipeline.scala" -> 2,
       "pipeline/LegacyPipeline.scala" -> 2,
       // query vectors / probed centroid ids / candidate id lists (top-k
-      // state) + the ANN-index tombstone anti-join (takedown-scale id set)
-      // + the shared quarantine core's tombstone anti-join (quarLive)
-      "ext/Similarity.scala" -> 11,
-      // common-lines boilerplate set (doc-freq capped), rare-gram hi side,
-      // LSH- and semantic-index tombstone anti-joins (takedown-scale ids),
-      // the LSH sweep's tick-bucket set (≤ maxBucketsPerTick rows)
-      "ext/Dedup.scala" -> 5,
+      // state)
+      "ext/Similarity.scala" -> 9,
+      // the persisted-index lifecycle shared by all four index families:
+      // the tombstone anti-join (takedown-scale id set; serving scan and
+      // quarantine alike) + the sweep's tick-bucket set (at most
+      // maxBucketsPerTick rows by construction)
+      "ext/BucketedIndex.scala" -> 2,
+      // common-lines boilerplate set (doc-freq capped), rare-gram hi side
+      "ext/Dedup.scala" -> 2,
       // corpus-level BM25 stats (one row)
       "ext/Ranking.scala" -> 1,
       // NB model state (capped vocab, vocabK×|classes| likelihoods, priors)
@@ -169,10 +171,6 @@ class PlanAuditSpec extends SparkSpecBase {
       "ext/Web.scala" -> 1,
       // heavy-hitter gram/bigram sets, bounded vocab
       "ext/TextStats.scala" -> 6,
-      // image-index tombstone anti-join (serving scan; the quarantine
-      // scan's moved to Similarity.quarLive) + the Hamming sweep's
-      // tick-bucket set (at most maxBucketsPerTick rows by construction)
-      "ext/Multimodal.scala" -> 2,
       // p8/j3 nation+region dims, j1/j5/vp customer-as-PIN-universe (see
       // doctrine comments at the sites), s10 DPP dim side
       "queries/Core.scala" -> 8,

@@ -5,18 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test JVM (Test/fork := true). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = graft.EngineIO.configure(SparkSession
-      .builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.EngineIO.localSession(4)
 }
 
 abstract class SparkSpecBase extends AnyFunSuite {

@@ -1,0 +1,80 @@
+package graft.ext
+
+import graft.SparkSpecBase
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+/** The shared index lifecycle's quarantine-sweep state: the watermark's
+  * cold read from outside the process and the rank snapshot's coherence
+  * with every quarantine write.
+  */
+class BucketedIndexSpec extends SparkSpecBase {
+  import spark.implicits._
+
+  // two boilerplate clusters (15× fp 42, 12× its 56-bit complement): cap
+  // 10 quarantines each cluster's four band buckets, the larger one
+  // ranking first in sweep order
+  private val far = (1L << 56) - 1 - 42
+  private val small = (1L << 42) | (1L << 28) | (1L << 14) | 1L
+
+  private def quarantined(corpus: Seq[(Long, Long)]): String = {
+    val tbl = s"bispec_${System.nanoTime()}"
+    val df = corpus.toDF("asset_id", "fp")
+    Multimodal.persistHammingIndex(df, "asset_id", "fp", tbl, buckets = 4, maxBucket = 10)
+    Multimodal.quarantineHammingIndex(spark, tbl, df, "asset_id", "fp", buckets = 4, maxBucket = 10)
+    tbl
+  }
+
+  /** The corpus ids among the members of the next tick's bucket slice. */
+  private def nextTickIds(tbl: String): Seq[Long] = {
+    val (lo, total) = Multimodal.quarantineWatermark(spark, tbl)
+    Multimodal.HammingLayout
+      .sweepMembers(spark, tbl, lo, math.min(lo + 4, total))
+      .select("corpus_id").distinct().as[Long].collect().sorted.toSeq
+  }
+
+  test("a watermark past Int.MaxValue read cold fails the tick instead of sweeping a wrapped range") {
+    val tbl = quarantined((1L to 15L).map(_ -> 42L) ++ (21L to 32L).map(_ -> far))
+    val wmT = BucketedIndex.quarWmTable(tbl)
+    val beyond = Int.MaxValue.toLong + 5
+    // a watermark written outside this process, read by a fresh JVM: the
+    // persisted row is the only state, the driver-side mirror is empty
+    spark.createDataFrame(
+      java.util.Arrays.asList(Row(beyond, beyond + 10)),
+      StructType(Seq(StructField("swept_through", LongType), StructField("quar_buckets", LongType))))
+      .write.mode("overwrite").insertInto(wmT)
+    spark.catalog.refreshTable(wmT)
+    BucketedIndex.wmMirror.remove(wmT)
+    assert(Multimodal.quarantineWatermark(spark, tbl) == ((beyond, beyond + 10)))
+    val sink = java.nio.file.Files.createTempDirectory("bispec_wm").resolve("t").toString
+    intercept[ArithmeticException] {
+      Multimodal.sweepHammingQuarantine(
+        spark, tbl, Seq((100L, 42L)).toDF("asset_id", "fp"), "asset_id", "fp",
+        maxHamming = 8, maxBucketsPerTick = 1, sink = sink)
+    }
+    assert(!new java.io.File(sink).exists, "the failed tick must write nothing")
+    assert(Multimodal.quarantineWatermark(spark, tbl) == ((beyond, beyond + 10)),
+      "the failed tick must not advance the watermark")
+  }
+
+  test("every quarantine write re-ranks: the next tick's slice matches the new content") {
+    val tbl = quarantined((1L to 15L).map(_ -> 42L) ++ (21L to 32L).map(_ -> far))
+    assert(nextTickIds(tbl) == (1L to 15L), "the 15-member cluster ranks first")
+    // layout-time re-quarantine with different content: the 42-cluster is
+    // gone and a 20-member cluster of `small` now outranks the far one.
+    // No explicit sweep reset — the write alone must refresh the ranks.
+    Multimodal.quarantineHammingIndex(
+      spark, tbl, ((21L to 32L).map(_ -> far) ++ (51L to 70L).map(_ -> small)).toDF("asset_id", "fp"),
+      "asset_id", "fp", buckets = 4, maxBucket = 10)
+    assert(Multimodal.quarantineWatermark(spark, tbl) == ((0L, 8L)))
+    assert(nextTickIds(tbl) == (51L to 70L), "the re-quarantined content must rank fresh")
+    // compaction capture: regrow the stored (empty) side past the cap with
+    // a 25-member cluster; compact-at-cap moves it into the quarantine,
+    // where it now ranks first
+    Multimodal.appendHammingIndex(
+      (81L to 105L).map(_ -> 7L).toDF("asset_id", "fp"), "asset_id", "fp", tbl, buckets = 4)
+    Multimodal.compactHammingIndex(spark, tbl, buckets = 4, maxBucket = 10)
+    assert(Multimodal.quarantineWatermark(spark, tbl) == ((0L, 12L)))
+    assert(nextTickIds(tbl) == (81L to 105L), "the compaction capture must rank fresh")
+  }
+}

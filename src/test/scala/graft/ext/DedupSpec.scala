@@ -832,7 +832,7 @@ class DedupSpec extends SparkSpecBase {
     Dedup.deleteFromLshIndex(spark, tbl, all.filter(col("doc_id") % 2 === 0), col("doc_id"))
     // rebuild from the full corpus; a takedown lands MID-BUILD (the thunk
     // IS the build window — full-corpus encodes are the longest op)
-    Similarity.publishVersion(spark, tbl) { (bld, era) =>
+    BucketedIndex.publishVersion(spark, tbl) { (bld, era) =>
       Dedup.persistLshIndex(corpus, col("doc_id"), col("text"), bld, buckets = 4, era = era)
       Dedup.deleteFromLshIndex(spark, tbl, all.filter(col("doc_id") % 3 === 0), col("doc_id"))
     }

@@ -836,7 +836,7 @@ class MultimodalSpec extends SparkSpecBase {
     // not blanket-drop the tombstone table
     Multimodal.deleteFromHammingIndex(
       spark, tbl, Seq(2L).toDF("id"), col("id"),
-      era = Similarity.nextEra() + 10000000L)
+      era = BucketedIndex.nextEra() + 10000000L)
     Multimodal.compactHammingIndex(spark, tbl, buckets = 2)
     val stored = spark.table(tbl).select(col("corpus_id")).as[Long].collect().toSet
     assert(stored == Set(1L), s"both takedowns must apply; stored $stored")

@@ -649,7 +649,7 @@ class SimilaritySpec extends SparkSpecBase {
     // the final serving version is rebuild #3's corpus (all), under the
     // logical name, with only the grace version retained behind it
     assert(probe(tbl) == probe(truthAll), "post-rebuild probe must serve the last era")
-    assert(Similarity.servingVersion(spark, tbl) == 3)
+    assert(BucketedIndex.servingVersion(spark, tbl) == 3)
     assert(!spark.catalog.tableExists(s"${tbl}__v1"), "retired versions must be dropped")
     assert(spark.catalog.tableExists(s"${tbl}__v2"), "the grace version must be retained")
   }
@@ -701,13 +701,13 @@ class SimilaritySpec extends SparkSpecBase {
     // stays invisible — the exact stale-serve the advisor flagged
     assert(Similarity.servingTable(spark, tbl) == tbl)
     // kill switch on: fresh listing finds the external version
-    spark.conf.set(Similarity.VersionMemoEnabledKey, "false")
+    spark.conf.set(BucketedIndex.VersionMemoEnabledKey, "false")
     try {
       assert(Similarity.servingTable(spark, tbl) == s"${tbl}__v1")
       // and a second external change is also seen (no residual caching)
       spark.table(tbl).write.saveAsTable(s"${tbl}__v2")
       assert(Similarity.servingTable(spark, tbl) == s"${tbl}__v2")
-    } finally spark.conf.set(Similarity.VersionMemoEnabledKey, "true")
+    } finally spark.conf.set(BucketedIndex.VersionMemoEnabledKey, "true")
     // re-enabled: the bypass dropped the stale entry, so the first
     // memoized resolution recomputes from the post-change catalog
     assert(Similarity.servingTable(spark, tbl) == s"${tbl}__v2")
@@ -720,21 +720,21 @@ class SimilaritySpec extends SparkSpecBase {
     val tbl = s"annspec_janitor_${System.nanoTime()}"
     Similarity.persistAnnIndex(e, "vec_id", "embedding", coarse, books, tbl, buckets = 4)
     Similarity.rebuildAnnIndex(spark, tbl, e, "vec_id", "embedding", coarse, books, buckets = 4)
-    assert(Similarity.servingVersion(spark, tbl) == 1)
+    assert(BucketedIndex.servingVersion(spark, tbl) == 1)
     // kill a rebuild BETWEEN staging and publication: the stage table is
     // fully written, the rename never runs — and while the build is
     // in-flight it must NOT read as abandoned
     intercept[RuntimeException] {
-      Similarity.publishVersion(spark, tbl) { (bld, era) =>
+      BucketedIndex.publishVersion(spark, tbl) { (bld, era) =>
         Similarity.persistAnnIndex(e, "vec_id", "embedding", coarse, books, bld, buckets = 4)
-        assert(Similarity.abandonedBuilds(spark, tbl).isEmpty,
+        assert(BucketedIndex.abandonedBuilds(spark, tbl).isEmpty,
           "a stage inside a live publishVersion call is in-flight, not abandoned")
         throw new RuntimeException(s"killed before publishing era $era")
       }
     }
     assert(spark.catalog.tableExists(s"${tbl}__v2__build"), "the killed stage leaks")
-    assert(Similarity.servingVersion(spark, tbl) == 1, "version arithmetic untouched by the abort")
-    assert(Similarity.abandonedBuilds(spark, tbl) == Seq(s"${tbl}__v2__build"))
+    assert(BucketedIndex.servingVersion(spark, tbl) == 1, "version arithmetic untouched by the abort")
+    assert(BucketedIndex.abandonedBuilds(spark, tbl) == Seq(s"${tbl}__v2__build"))
     // the policy notices (stale_builds census signal), the executor heals
     // (janitor drops the stage), and the replan reaches the fixed point
     def planOf() = {
@@ -756,26 +756,26 @@ class SimilaritySpec extends SparkSpecBase {
       fleet)
     assert(audit.collect().head.getAs[String]("decision") == "janitor")
     assert(!spark.catalog.tableExists(s"${tbl}__v2__build"), "janitor must drop the stage")
-    assert(Similarity.abandonedBuilds(spark, tbl).isEmpty)
+    assert(BucketedIndex.abandonedBuilds(spark, tbl).isEmpty)
     assert(planOf().collect().head.getAs[String]("decision") == "none",
       "post-janitor replan must reach the all-none fixed point")
     // version arithmetic stays intact END TO END: the next real rebuild
     // publishes v2 and serves it
     Similarity.rebuildAnnIndex(spark, tbl, e, "vec_id", "embedding", coarse, books, buckets = 4)
-    assert(Similarity.servingVersion(spark, tbl) == 2)
+    assert(BucketedIndex.servingVersion(spark, tbl) == 2)
     // a fresh persist under the same name also reaps a leaked stage (the
     // fresh-epoch doctrine), not just the janitor
     intercept[RuntimeException] {
-      Similarity.publishVersion(spark, tbl) { (bld, _) =>
+      BucketedIndex.publishVersion(spark, tbl) { (bld, _) =>
         Similarity.persistAnnIndex(e, "vec_id", "embedding", coarse, books, bld, buckets = 4)
         throw new RuntimeException("killed again")
       }
     }
-    assert(Similarity.abandonedBuilds(spark, tbl).nonEmpty)
+    assert(BucketedIndex.abandonedBuilds(spark, tbl).nonEmpty)
     Similarity.persistAnnIndex(e, "vec_id", "embedding", coarse, books, tbl, buckets = 4)
-    assert(Similarity.abandonedBuilds(spark, tbl).isEmpty,
+    assert(BucketedIndex.abandonedBuilds(spark, tbl).isEmpty,
       "resetVersions must reap abandoned stages with the rest of the version history")
-    assert(Similarity.servingVersion(spark, tbl) == 0)
+    assert(BucketedIndex.servingVersion(spark, tbl) == 0)
   }
 
   test("rebuildAnnIndex: blue/green swap serves the retrained index, clears stale state") {
