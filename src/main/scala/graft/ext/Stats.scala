@@ -275,12 +275,14 @@ object Stats {
     // lanes measured as ~half this query's steady-state cost. Weights are
     // capped at 4 by the inverse-CDF chain, so Σ w·v over a group is
     // bounded by 4·n·max|v| — an EXACT per-group overflow certificate
-    // computable from two cheap extra aggregates (count already exists,
-    // max|v| rides the same partial agg). The long plan runs first; if ANY
-    // group's bound reaches 2^63 the result is discarded and the original
-    // decimal plan recomputes (exactness never at risk — the guard is
-    // sufficient, not heuristic). Below the bound, long and decimal sums
-    // are the same integers, so the output is bit-identical.
+    // computable from cheap extra aggregates (count already exists, min v
+    // and max v ride the same partial agg; |v| is taken in decimal because
+    // a long abs(Long.MinValue) wraps, or throws under ANSI). The long
+    // plan runs first; if ANY group's bound reaches 2^63 the result is
+    // discarded and the original decimal plan recomputes (exactness never
+    // at risk — the guard is sufficient, not heuristic). Below the bound,
+    // long and decimal sums are the same integers, so the output is
+    // bit-identical.
     def aggPlan(sumType: String): DataFrame = {
       // the fallback computes the w·v product IN decimal — a long-first
       // product would hit the same per-row ANSI overflow the fallback
@@ -291,7 +293,8 @@ object Stats {
       val aggs = Seq(
         count(lit(1)).as("n"),
         sum(col("v").cast(sumType)).as("__sx"),
-        max(abs(col("v"))).as("__maxv")) ++
+        min(col("v")).as("__minv"),
+        max(col("v")).as("__maxv")) ++
         (0 until reps).flatMap(b =>
           Seq(
             sum(prod(b).cast(sumType)).as(s"__s$b"),
@@ -312,7 +315,8 @@ object Stats {
         val r = aggLong
           .select(max(
             when(
-              col("__maxv").cast(dec) * col("n") * lit(4) >= lit(Long.MaxValue).cast(dec),
+              greatest(abs(col("__minv").cast(dec)), abs(col("__maxv").cast(dec))) *
+                col("n") * lit(4) >= lit(Long.MaxValue).cast(dec),
               1).otherwise(0)).as("u"))
           .collect()(0)
         !r.isNullAt(0) && r.getInt(0) == 1

@@ -72,10 +72,10 @@ object ValidateOps {
 
   /** Partition into (upload, review): upload = no rule fired, review = at
     * least one, with the errors retained for the reviewer
-    * (chicago/permit_cleaning.py:427-452). The input plan is evaluated once
-    * per output; callers that materialize both should `.persist()` the
-    * flagged frame first — at 100 TB this is one full scan either way since
-    * both filters push into the same parquet scan.
+    * (chicago/permit_cleaning.py:427-452). Both outputs are lazy filters
+    * over one unshared plan, so materializing both evaluates the input
+    * twice; a caller that needs both evaluates the flagged frame once, as
+    * `PermitPipeline.run` does.
     */
   def partition(
       df: DataFrame,

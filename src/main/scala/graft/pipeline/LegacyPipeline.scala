@@ -83,8 +83,9 @@ object LegacyPipeline {
   )
 
   /** The finalize head: universe join + dup flag + the legacy flag suite as
-    * columns — the SHARED parent both split sides filter (exposed so
-    * callers materializing both can persist it once).
+    * columns — the SHARED parent both split sides filter. Lazy, like
+    * [[splitFinal]]'s sides: a caller that materializes both sides
+    * evaluates it twice (only `PermitPipeline.run` shares one evaluation).
     */
   def flagFinal(
       df: DataFrame,

@@ -105,8 +105,9 @@ object PermitPipeline {
 
   /** Step 8 head (§3.1): universe membership as a broadcast left join
     * producing the `pin_in_universe` flag, then the §2.10 rule suite as an
-    * `errors` array — the SHARED parent both partitions filter. Exposed so
-    * callers materializing both sides can persist it once.
+    * `errors` array — the SHARED parent both partitions filter. [[run]]
+    * evaluates it once for both sides; a single-side caller composes
+    * [[runFlagged]] + [[partitionFlagged]] and stays fully lazy.
     */
   def flag(permits: DataFrame, universe: DataFrame): DataFrame = {
     val u = broadcast(
@@ -143,11 +144,18 @@ object PermitPipeline {
     flag(deduped, universe)
   }
 
-  /** Full §3.1 chain as one lazy plan. */
+  /** Full §3.1 chain, both sides (chicago/permit_cleaning.py:1138-1230
+    * validates a batch once, then splits it). The flagged parent is
+    * checkpointed lazily, so whichever side a caller materializes first
+    * computes the chain once into the block store and the other side reads
+    * that copy back; the blocks are freed once both frames are dropped.
+    * Physical planning (and AQE's universe-side broadcast stages) runs
+    * here, at call time.
+    */
   def run(
       raw: DataFrame,
       universe: DataFrame,
       existing: Option[DataFrame]
   ): (DataFrame, DataFrame) =
-    partitionFlagged(runFlagged(raw, universe, existing))
+    partitionFlagged(runFlagged(raw, universe, existing).localCheckpoint(false))
 }

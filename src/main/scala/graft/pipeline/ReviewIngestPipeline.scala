@@ -28,8 +28,10 @@ object ReviewIngestPipeline {
     )
 
   /** §3.2 steps 4–5 up to the flagged frame: flag-filter → F4 normalize →
-    * legacy flag suite — the shared parent of the upload and review sides
-    * (exposed so callers materializing both can persist it once).
+    * legacy flag suite — the shared parent of the upload and review sides.
+    * Lazy: a single-side caller composes it with
+    * `LegacyPipeline.splitFinal`; [[run]] returns lazy sides that each
+    * re-evaluate it.
     */
   def runFlagged(sheet: DataFrame, universe: DataFrame): DataFrame = {
     // S5: the reviewer's fill-color predicate

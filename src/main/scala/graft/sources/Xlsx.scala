@@ -701,15 +701,26 @@ object Xlsx {
 
   /** XML-escape; control characters below 0x20 (except tab/LF/CR) are
     * illegal in XML 1.0 even as numeric references, so they are dropped —
-    * the same lossy mapping every spreadsheet writer applies.
+    * the same lossy mapping every spreadsheet writer applies. One pass per
+    * cell; a string with nothing to escape is returned as is.
     */
-  private def escape(s: String): String =
-    s.flatMap {
-      case '&'  => "&amp;"
-      case '<'  => "&lt;"
-      case '>'  => "&gt;"
-      case '"'  => "&quot;"
-      case c if c < ' ' && c != '\t' && c != '\n' && c != '\r' => ""
-      case c    => c.toString
+  private def escape(s: String): String = {
+    var sb: java.lang.StringBuilder = null
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      val rep = c match {
+        case '&' => "&amp;"
+        case '<' => "&lt;"
+        case '>' => "&gt;"
+        case '"' => "&quot;"
+        case _ if c < ' ' && c != '\t' && c != '\n' && c != '\r' => ""
+        case _ => null
+      }
+      if (rep != null && sb == null) sb = new java.lang.StringBuilder(s.length + 16).append(s, 0, i)
+      if (sb != null) { if (rep != null) sb.append(rep) else sb.append(c) }
+      i += 1
     }
+    if (sb == null) s else sb.toString
+  }
 }

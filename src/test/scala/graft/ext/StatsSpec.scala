@@ -455,6 +455,28 @@ class StatsSpec extends SparkSpecBase {
       s"constant group must collapse to a point CI: $out")
   }
 
+  test("bootstrapMeanCI: a Long.MinValue row matches the all-decimal plan under ANSI on and off") {
+    // |Long.MinValue| has no long: a long abs wraps to the value itself
+    // (ANSI off, so the certificate passes and the long sums wrap) or
+    // throws (ANSI on, also inside the decimal fallback)
+    val data = (1 to 64).map(i => ("min", i.toLong, Long.MinValue)) ++
+      (1 to 64).map(i => ("mix", 100L + i, if (i == 1) Long.MinValue else i * 1000L))
+    // 4·64·2^61 ≥ 2^63: this group alone sends the whole call down the
+    // all-decimal plan, whatever the other groups hold
+    val trip = (1 to 64).map(i => ("trip", 1000L + i, 1L << 61))
+    def ci(d: Seq[(String, Long, Long)]): Map[String, Seq[Any]] =
+      Stats.bootstrapMeanCI(d.toDF("g", "id", "v"), col("g"), col("id"), col("v"))
+        .collect().map(r => r.getString(0) -> r.toSeq).toMap - "trip"
+    Seq("true", "false").foreach { ansi =>
+      withSQLConf("spark.sql.ansi.enabled" -> ansi) {
+        val got = ci(data)
+        assert(got == ci(data ++ trip), s"ansi=$ansi")
+        val m = Long.MinValue.toDouble
+        assert(got("min") == Seq("min", 64L, m, m, m), s"ansi=$ansi: exact sums collapse to a point")
+      }
+    }
+  }
+
   test("groupedQuantiles: one pass serves all quartiles; robustScale handles IQR 0") {
     val rows = (0 to 8).map(v => ("g", v.toLong, v.toLong)) ++
       (1 to 4).map(i => ("const", 100L + i, 7L))

@@ -1,6 +1,10 @@
 package graft.pipeline
 
 import graft.SparkSpecBase
+import graft.sources.Sources
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /** End-to-end §3.1 chain on reference-shaped micro-fixtures. */
@@ -66,21 +70,51 @@ class PermitPipelineSpec extends SparkSpecBase {
     assert(review.columns.contains("errors"))
   }
 
+  private def cleaned = PermitPipeline.addSuggestedPins(PermitPipeline.cleanPermits(raw), universe)
+
+  // fabricate an existing table matching P1/pin1's canonical keys exactly
+  private def existing = cleaned
+    .filter($"permit_no" === "P1" && $"pin" === "12345678901234")
+    .select(
+      $"pin".as("parid"),
+      graft.ops.TimeOps.renderPermdt(graft.ops.TimeOps.parseFlexible($"issue_date")).as("permdt"),
+      $"amount".cast("decimal(38,2)").as("amount"),
+      graft.ops.TextOps.addrDedupeKey($"applicant_street_address").as("note2"),
+      $"applicant".as("user21"),
+      $"permit_no".as("user28"),
+      graft.ops.TextOps.smartfileCanon($"work_description").as("user43")
+    )
+
   test("dedupeAgainstExisting drops rows already in the warehouse") {
-    val cleaned = PermitPipeline.addSuggestedPins(PermitPipeline.cleanPermits(raw), universe)
-    // fabricate an existing table matching P1/pin1's canonical keys exactly
-    val existing = cleaned
-      .filter($"permit_no" === "P1" && $"pin" === "12345678901234")
-      .select(
-        $"pin".as("parid"),
-        graft.ops.TimeOps.renderPermdt(graft.ops.TimeOps.parseFlexible($"issue_date")).as("permdt"),
-        $"amount".cast("decimal(38,2)").as("amount"),
-        graft.ops.TextOps.addrDedupeKey($"applicant_street_address").as("note2"),
-        $"applicant".as("user21"),
-        $"permit_no".as("user28"),
-        graft.ops.TextOps.smartfileCanon($"work_description").as("user43")
-      )
     val out = PermitPipeline.dedupeAgainstExisting(cleaned, existing)
     assert(out.count() == cleaned.count() - 1)
+  }
+
+  /** FileSourceScanExec nodes over `dir` in a frame's plan, AQE stages included. */
+  private def scansOf(df: DataFrame, dir: String): Int =
+    new AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(df.queryExecution.executedPlan) {
+        case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.toString.endsWith(dir)) => s
+      }
+      .length
+
+  test("run evaluates the batch once for both the upload sink and the review read") {
+    val dir = s"/tmp/graft_cache/permit_pipeline_spec/run-${System.nanoTime()}"
+    raw.write.json(s"$dir/permits")
+    val permits = spark.read.schema(raw.schema).json(s"$dir/permits")
+    Seq(None, Some(existing)).zipWithIndex.foreach { case (ex, k) =>
+      val (upload, review) = PermitPipeline.run(permits, universe, ex)
+      Sources.writeBatched(upload, s"$dir/upload_$k", maxRecords = 10000)
+      val reviewRows = rows(review)
+      // neither action re-reads the JSON: both read the one evaluation back
+      assert(scansOf(upload, "/permits") == 0 && scansOf(review, "/permits") == 0,
+        s"existing=$ex: a side re-scans the permits source")
+      val (up0, rev0) =
+        PermitPipeline.partitionFlagged(PermitPipeline.runFlagged(permits, universe, ex))
+      assert(scansOf(up0, "/permits") == 1 && scansOf(rev0, "/permits") == 1)
+      assert(rows(spark.read.parquet(s"$dir/upload_$k")) == rows(up0), s"existing=$ex")
+      assert(reviewRows == rows(rev0), s"existing=$ex")
+      assert(rows(up0).nonEmpty && reviewRows.nonEmpty)
+    }
   }
 }

@@ -108,6 +108,128 @@ class XlsxSpec extends SparkSpecBase {
     assert(rows.exists(r => r.getString(0) != null && r.getString(0).contains("Green font")))
   }
 
+  test("reads a crosswalk-shaped workbook in a foreign writer's part layout") {
+    // the parts an Excel-family writer emits, unlike our own writer:
+    // sharedStrings.xml with t="s" cells (a repeated string shares one
+    // index), numeric <v> cells, styled cells, dimension/sheetViews/cols,
+    // row spans, theme + docProps parts, and the crosswalk's 4-column shape
+    // with a zero row and free-text annotation rows at the tail
+    val bos = new ByteArrayOutputStream()
+    val zip = new ZipOutputStream(bos)
+    def part(n: String, b: String): Unit = {
+      zip.putNextEntry(new ZipEntry(n)); zip.write(b.getBytes("UTF-8")); zip.closeEntry()
+    }
+    val decl = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" + "\r\n"
+    val main = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+    val rel = "http://schemas.openxmlformats.org/officeDocument/2006/relationships"
+    part("[Content_Types].xml", decl +
+      """<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">""" +
+      """<Default Extension="rels" ContentType="application/vnd.openxmlformats-package.relationships+xml"/>""" +
+      """<Default Extension="xml" ContentType="application/xml"/>""" +
+      """<Override PartName="/xl/workbook.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>""" +
+      """<Override PartName="/xl/worksheets/sheet1.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>""" +
+      """<Override PartName="/xl/theme/theme1.xml" ContentType="application/vnd.openxmlformats-officedocument.theme+xml"/>""" +
+      """<Override PartName="/xl/styles.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.styles+xml"/>""" +
+      """<Override PartName="/xl/sharedStrings.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.sharedStrings+xml"/>""" +
+      """<Override PartName="/docProps/app.xml" ContentType="application/vnd.openxmlformats-officedocument.extended-properties+xml"/>""" +
+      """</Types>""")
+    part("_rels/.rels", decl +
+      """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
+      s"""<Relationship Id="rId2" Type="$rel/extended-properties" Target="docProps/app.xml"/>""" +
+      s"""<Relationship Id="rId1" Type="$rel/officeDocument" Target="xl/workbook.xml"/>""" +
+      """</Relationships>""")
+    part("docProps/app.xml", decl +
+      """<Properties xmlns="http://schemas.openxmlformats.org/officeDocument/2006/extended-properties"><Application>Microsoft Excel</Application></Properties>""")
+    part("xl/workbook.xml", decl +
+      s"""<workbook xmlns="$main" xmlns:r="$rel"><fileVersion appName="xl" lastEdited="7" rupBuild="27328"/>""" +
+      """<bookViews><workbookView xWindow="0" yWindow="0" windowWidth="28800" windowHeight="12300"/></bookViews>""" +
+      """<sheets><sheet name="Sheet1" sheetId="1" r:id="rId1"/></sheets><calcPr calcId="191029"/></workbook>""")
+    part("xl/_rels/workbook.xml.rels", decl +
+      """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
+      s"""<Relationship Id="rId3" Type="$rel/styles" Target="styles.xml"/>""" +
+      s"""<Relationship Id="rId2" Type="$rel/theme" Target="theme/theme1.xml"/>""" +
+      s"""<Relationship Id="rId1" Type="$rel/worksheet" Target="worksheets/sheet1.xml"/>""" +
+      s"""<Relationship Id="rId4" Type="$rel/sharedStrings" Target="sharedStrings.xml"/>""" +
+      """</Relationships>""")
+    part("xl/theme/theme1.xml", decl +
+      """<a:theme xmlns:a="http://schemas.openxmlformats.org/drawingml/2006/main" name="Office Theme"/>""")
+    // xf 1 = green font, no fill: font colour is not fill metadata
+    part("xl/styles.xml", decl +
+      s"""<styleSheet xmlns="$main"><fonts count="2"><font><sz val="11"/><name val="Calibri"/></font>""" +
+      """<font><sz val="11"/><color rgb="FF00B050"/><name val="Calibri"/></font></fonts>""" +
+      """<fills count="2"><fill><patternFill patternType="none"/></fill><fill><patternFill patternType="gray125"/></fill></fills>""" +
+      """<borders count="1"><border><left/><right/><top/><bottom/><diagonal/></border></borders>""" +
+      """<cellStyleXfs count="1"><xf numFmtId="0" fontId="0" fillId="0" borderId="0"/></cellStyleXfs>""" +
+      """<cellXfs count="2"><xf numFmtId="0" fontId="0" fillId="0" borderId="0" xfId="0"/>""" +
+      """<xf numFmtId="0" fontId="1" fillId="0" borderId="0" xfId="0" applyFont="1"/></cellXfs>""" +
+      """<cellStyles count="1"><cellStyle name="Normal" xfId="0" builtinId="0"/></cellStyles></styleSheet>""")
+    val strings = Seq(
+      "meta_pin", "year", "tab", "original_pin",                    // 0-3
+      "17051000010000", "Permits 2021", "17051000010001",            // 4-6
+      "17051000020000", "17051000020001", "Permits 2022",            // 7-9
+      "25344000300000", "Permits 2023", "25344000300017",            // 10-12
+      "Green font = PIN verified against the 2023 roll",            // 13
+      "  Rows below were added by hand  ")                           // 14
+    part("xl/sharedStrings.xml", decl +
+      s"""<sst xmlns="$main" count="22" uniqueCount="${strings.length}">""" +
+      strings.map(t => s"""<si><t xml:space="preserve">$t</t></si>""").mkString + "</sst>")
+    def ss(ref: String, i: Int, style: String = "") = s"""<c r="$ref"$style t="s"><v>$i</v></c>"""
+    def num(ref: String, v: String) = s"""<c r="$ref"><v>$v</v></c>"""
+    def row(r: Int, cells: String*) = s"""<row r="$r" spans="1:4" x14ac:dyDescent="0.25">${cells.mkString}</row>"""
+    part("xl/worksheets/sheet1.xml", decl +
+      s"""<worksheet xmlns="$main" xmlns:r="$rel" xmlns:x14ac="http://schemas.microsoft.com/office/spreadsheetml/2009/9/ac">""" +
+      """<dimension ref="A1:D9"/><sheetViews><sheetView tabSelected="1" workbookViewId="0"/></sheetViews>""" +
+      """<sheetFormatPr defaultRowHeight="15" x14ac:dyDescent="0.25"/>""" +
+      """<cols><col min="1" max="1" width="17.7109375" customWidth="1"/><col min="4" max="4" width="17.7109375" customWidth="1"/></cols>""" +
+      "<sheetData>" +
+      row(1, ss("A1", 0), ss("B1", 1), ss("C1", 2), ss("D1", 3)) +
+      row(2, ss("A2", 4), num("B2", "2021"), ss("C2", 5), ss("D2", 6)) +
+      row(3, ss("A3", 4), num("B3", "2021"), ss("C3", 5), ss("D3", 4)) +
+      row(4, ss("A4", 7), num("B4", "2022"), ss("C4", 9), ss("D4", 8)) +
+      row(5, ss("A5", 10, """ s="1""""), num("B5", "2023"), ss("C5", 11), ss("D5", 12, """ s="1"""")) +
+      row(6, num("A6", "0"), num("B6", "2023"), ss("C6", 11), num("D6", "0")) +
+      row(8, ss("A8", 13, """ s="1"""")) +
+      row(9, ss("A9", 14)) +
+      "</sheetData>" +
+      """<pageMargins left="0.7" right="0.7" top="0.75" bottom="0.75" header="0.3" footer="0.3"/></worksheet>""")
+    zip.close()
+    val path = tmp("foreign")
+    val f = new java.io.File(path)
+    f.getParentFile.mkdirs()
+    java.nio.file.Files.write(f.toPath, bos.toByteArray)
+
+    val df = Xlsx.read(spark, path)
+    assert(df.columns.toSeq == Seq("meta_pin", "year", "tab", "original_pin"))
+    val got = df.collect().map(r => Seq(r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSeq
+    // the skipped row 7 is absent, not a blank row; whitespace in a
+    // preserved shared string survives
+    assert(got == Seq(
+      Seq("17051000010000", "2021", "Permits 2021", "17051000010001"),
+      Seq("17051000010000", "2021", "Permits 2021", "17051000010000"),
+      Seq("17051000020000", "2022", "Permits 2022", "17051000020001"),
+      Seq("25344000300000", "2023", "Permits 2023", "25344000300017"),
+      Seq("0", "2023", "Permits 2023", "0"),
+      Seq("Green font = PIN verified against the 2023 roll", null, null, null),
+      Seq("  Rows below were added by hand  ", null, null, null)))
+    // the green-font cells carry no fill, so the fill reader reports none
+    assert(Xlsx.readWithFill(spark, path, None, "meta_pin").collect().forall(_.isNullAt(4)))
+  }
+
+  test("XML escaping writes & < > \" as entities and drops illegal control characters") {
+    val v = "a&b<c>d\"e\u0001f\u001fg\th\ni"
+    val bytes = Xlsx.buildWorkbook(Seq("R&D <1>" -> Seq(Seq("plain text"), Seq(v))))
+    val zin = new java.util.zip.ZipInputStream(new java.io.ByteArrayInputStream(bytes))
+    val parts = Iterator.continually(zin.getNextEntry).takeWhile(_ != null)
+      .map(e => e.getName -> new String(zin.readAllBytes(), "UTF-8")).toMap
+    assert(parts("xl/workbook.xml").contains("""<sheet name="R&amp;D &lt;1&gt;" sheetId="1" r:id="rId1"/>"""))
+    val sheet = parts("xl/worksheets/sheet1.xml")
+    assert(sheet.contains("""<c r="A1" t="inlineStr"><is><t xml:space="preserve">plain text</t></is></c>"""))
+    assert(sheet.contains(
+      "<c r=\"A2\" t=\"inlineStr\"><is><t xml:space=\"preserve\">a&amp;b&lt;c&gt;d&quot;efg\th\ni</t></is></c>"))
+    val (name, header, rows) = Xlsx.parseWorkbook(bytes).head
+    assert(name == "R&D <1>" && header == Seq("plain text") && rows == Seq(Seq("a&b<c>d\"efg\th\ni")))
+  }
+
   test("multi-file scan aligns heterogeneous workbooks by header name") {
     val dir = s"/tmp/graft_cache/xlsx_spec/hetero-${System.nanoTime()}"
     // a_* sorts first -> its header (id, src) is the schema; the second
