@@ -228,21 +228,17 @@ object Bench {
         s""""shuffle_mb":${mb(totalShuffle)},"spill_mb":${mb(totalSpill)},"failed":${failed.size}}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("/tmp/bench_out.json"), full + "\n")
     catch { case _: Throwable => () }
-    // Memo observability: the fitted-model memo is entry-capped and the
-    // content-keyed parquet spill is byte-capped with LRU eviction (4 GiB
-    // default — never reached at fixture scale, so evicted=0 here means
-    // "possible, not needed", the long-lived-service bound); this line
-    // makes both growth numbers and both eviction counters a NUMBER in
-    // every bench log instead of an article of faith. QueryHygieneSpec
-    // bounds what classes/sizes may enter the model memo.
+    // Memo observability: one census line per run — entries and bytes per
+    // kind (spilled frames, fitted models, build-once fixtures) under the
+    // one byte cap, and the eviction count (0 at fixture scale: eviction
+    // is possible, not needed). QueryHygieneSpec bounds what may enter.
     try {
-      val mc = graft.ext.Similarity.modelMemoCensus()
-      val sc = graft.ext.Dedup.spillCensus()
+      val byKind = Memo.census().groupBy(_.kind)
       System.err.println(
-        s"[bench] memo census: model entries=${mc.size} bytes~${mc.map(_._3).sum} " +
-          s"evicted=${graft.ext.Similarity.modelMemoEvictions}; " +
-          s"spill entries=${sc.size} disk_bytes=${sc.map(_._2).sum} " +
-          s"evicted=${graft.ext.Dedup.spillEvictions}")
+        "[bench] memo census: " + Seq(Memo.Frame, Memo.Value, Memo.Once).map { k =>
+          val rows = byKind.getOrElse(k, Nil)
+          s"$k entries=${rows.size} bytes=${rows.map(_.bytes).sum}"
+        }.mkString("; ") + s"; cap_bytes=${Memo.CapBytes} evicted=${Memo.evictions}")
     } catch { case e: Throwable => System.err.println(s"[bench] memo census failed: ${e.getMessage}") }
     // Versioned per-query history: the same full map lands in the repo at
     // bench_history/latest.json, so a round-over-round drift is a one-line

@@ -77,11 +77,19 @@ object EngineIO {
     * algorithm v2 (direct task commit, no job-commit rename pass) is safe
     * here: local mode runs no speculative duplicates, and every engine
     * write lands in a pid-scoped path a failed job simply deletes.
+    *
+    * Also sets `spark.sql.legacy.parquet.nanosAsLong` (the `events`
+    * fixture's TIMESTAMP(NANOS) column reads as long nanos, see
+    * [[graft.queries.Fixtures.events]]) at session build rather than from
+    * a query: the conf is part of every [[graft.Memo]] key, so a query
+    * that set it mid-session made each memo built before it a miss.
+    * Sessions cloned with `newSession` inherit it.
     */
   def configure(b: SparkSession.Builder): SparkSession.Builder = {
     val base = b
       .config("spark.sql.warehouse.dir", warehouseDir)
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     localDir.fold(base)(d => base.config("spark.local.dir", d))
   }
 

@@ -12,9 +12,6 @@ object Verify {
     }
     val spark = EngineIO.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
-    // Session-global conf consumed by Fixtures.events — set ONCE before the
-    // pool starts so no query races a conf flip mid-plan.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Queries are independent; submit them from a small thread pool so the
     // scheduler overlaps their (mostly tiny) jobs instead of running 58
     // plan+execute cycles serially. INVARIANT for query authors: the pool

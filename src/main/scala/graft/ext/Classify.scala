@@ -174,13 +174,12 @@ object Classify {
     // ONE tokenize+explode+collapse per corpus, shared by the vocabulary,
     // count, and scoring passes through the content-keyed spill. The fence
     // keeps the Generate from re-evaluating the split per output element.
-    val perDocTok = Dedup.spilledAt(
+    val perDocTok = graft.Memo.frame("nb_doctok", Some(s"$corpusKey|gate=$trainPermille"), df.sparkSession)(
       graft.ops.PlanOps
         .fence(base.select(col("doc_id"), col("label"), col("is_train"), explode(col("w")).as("tok")))
         .filter(length(col("tok")) > 0)
         .groupBy(col("doc_id"), col("label"), col("is_train"), col("tok"))
-        .agg(count(lit(1)).as("m")),
-      "nb_doctok", s"$corpusKey|gate=$trainPermille", df.sparkSession)
+        .agg(count(lit(1)).as("m")))
     val train = perDocTok.filter(col("is_train"))
     // model state from here down: vocabK rows, then vocabK × |classes|
     val vocab = train

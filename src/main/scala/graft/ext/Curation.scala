@@ -886,7 +886,7 @@ object Curation {
     // the scored base feeds TWO passes (histogram, then the verdict join);
     // spill it once so an expensive upstream score (e.g. the stopword
     // quality scan) is computed once, not per pass
-    val base = Dedup.spilled(
+    val base = graft.Memo.planFrame(
       df.select(
         idCol.as("id"),
         scoreCol.cast("long").as("score"),

@@ -15,184 +15,10 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  private val spillMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** EVICTION BOUND for the spill memo: the content-keyed parquet spill
-    * is a pure re-read cache, fine to grow for a short bench JVM (96
-    * entries / 22 MB at sf0.1, r19 census) but unbounded for a
-    * long-lived service. When total on-disk bytes exceed the cap, the
-    * OLDEST-UNUSED entries (a monotonic touch tick per acquisition — LRU
-    * without clock reads) are deleted (dir + memo entry) until the total
-    * fits; the entry just acquired is never evicted. Contract the
-    * eviction leans on: a spill's readers execute promptly after
-    * acquisition (the same assumption Scratch's exit-time deletion
-    * already makes) — an evicted key's next acquisition simply
-    * recomputes. Default cap 4 GiB; `-Dgraft.spill.capBytes=` overrides,
-    * specs use [[setSpillCapBytes]].
-    */
-  private val spillCapBytes = new java.util.concurrent.atomic.AtomicLong(
-    sys.props.get("graft.spill.capBytes").map(_.toLong).getOrElse(4L << 30))
-  private val spillTick = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val spillLastUse = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-  private val spillEvicted = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private[graft] def setSpillCapBytes(n: Long): Long = spillCapBytes.getAndSet(n)
-  private[graft] def spillEvictions: Long = spillEvicted.get()
-
-  private def dirBytes(p: java.io.File): Long =
-    if (!p.exists()) 0L
-    else if (p.isFile) p.length()
-    else Option(p.listFiles()).map(_.iterator.map(dirBytes).sum).getOrElse(0L)
-
-  private def deleteDir(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteDir))
-    f.delete(): Unit
-  }
-
-  /** Insert-time byte accounting so the acquire-side hook is O(1): one
-    * directory walk per NEW spill (not per acquisition — an every-acquire
-    * census walk measured as a uniform ~70 ms smear across the whole
-    * board), a running total, and the eviction walk only when the cheap
-    * counter check says the cap is actually exceeded.
-    */
-  private val spillSizes = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-  private val spillTotalBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private def recordSpillSize(key: String, path: String): Unit = {
-    val bytes = dirBytes(new java.io.File(path))
-    if (spillSizes.putIfAbsent(key, bytes) == null) spillTotalBytes.addAndGet(bytes): Unit
-  }
-
-  /** Acquire-side hook every spill site calls: stamp recency (O(1)), and
-    * only when the recorded total exceeds the cap, evict
-    * oldest-unused-first. Synchronized — eviction is rare (never at
-    * fixture scale) and must not race itself; the common path is one
-    * atomic compare.
-    */
-  private def touchAndEnforceSpillCap(key: String): Unit = {
-    spillLastUse.put(key, spillTick.incrementAndGet())
-    if (spillTotalBytes.get() > spillCapBytes.get()) spillMemo.synchronized {
-      import scala.jdk.CollectionConverters._
-      val cap = spillCapBytes.get()
-      val byAge = spillMemo.asScala.toSeq
-        .filter(_._1 != key)
-        .sortBy { case (k, _) => spillLastUse.getOrDefault(k, 0L) }
-      byAge.iterator
-        .takeWhile(_ => spillTotalBytes.get() > cap)
-        .foreach { case (k, p) =>
-          deleteDir(new java.io.File(p))
-          spillMemo.remove(k)
-          spillLastUse.remove(k)
-          spillTotalBytes.addAndGet(-spillSizes.getOrDefault(k, 0L))
-          spillSizes.remove(k)
-          spillEvicted.incrementAndGet()
-        }
-    }
-  }
-
-  /** OBSERVABILITY — census of the content/plan-keyed parquet spill: one
-    * (key, onDiskBytes) row per memoized spill. The spill is scratch-FS
-    * state (pid-scoped dir, deleted at JVM exit), not heap, so "bytes"
-    * here is disk footprint; Bench prints the totals so a long session's
-    * spill growth is a number, not a surprise. Entries whose directory
-    * vanished (external cleanup) report 0.
-    */
-  private[graft] def spillCensus(): Seq[(String, Long)] = {
-    import scala.jdk.CollectionConverters._
-    spillMemo.asScala.toSeq
-      .map { case (k, p) => (k, dirBytes(new java.io.File(p))) }
-      .sortBy(_._1)
-  }
-
-  /** Materialize `df` once as a parquet spill and return a scan of it, so a
-    * plan that references the same subtree N times computes it once instead
-    * of N times (exchange reuse does not fire across differently-projected
-    * broadcast sides). Keyed by an md5 of the ANALYZED plan's canonicalized
-    * string (a full-plan fingerprint — strictly stronger than the 32-bit
-    * semanticHash, whose collisions could silently serve another plan's
-    * data) plus the session confs that change what a given plan COMPUTES
-    * (time zone, ANSI mode, parquet nanos decoding). Session identity is
-    * deliberately NOT in the key: two sessions evaluating the same
-    * canonical plan under the same semantic confs read the same bytes, and
-    * the stream-parity harness clones a fresh session per invocation — a
-    * session-keyed memo would rebuild the shared gram/token spills every
-    * run. The pid-scoped path is deleted at JVM exit (graft.queries
-    * .Scratch). At cluster scale the same shape holds with a durable
-    * scratch FS — the spill is a splittable columnar table, not driver
-    * state.
-    */
-  /** [[spilled]] with a CALLER-SUPPLIED content key instead of the plan
-    * signature — for builders whose plan roots in a [[graft.ops.PlanOps
-    * .fence]] (a fresh LogicalRDD per invocation, so the canonicalized
-    * plan never repeats and a plan-keyed memo would rebuild every time).
-    * The caller asserts `contentKey` identifies the input data and every
-    * parameter the spilled content depends on (corpus path + op params);
-    * the exactness-relevant confs still ride the key.
-    *
-    * `df` is BY-NAME and evaluated only on a memo miss: the unrolled loop
-    * builders behind several keys (BFS/kcore/LPA rounds) run eager lazy-
-    * checkpoint planning (`toRdd`) at frame CONSTRUCTION, so a memo hit
-    * that still constructed the frame paid the full multi-round Catalyst
-    * pass per invocation just to be handed a parquet path — measured as
-    * the bulk of graph_bfs' steady-state time. The schema consequently no
-    * longer rides the key (it required building the frame); the caller's
-    * content-identity assertion covers it, and the memo is pid-scoped —
-    * one code version per JVM, so a schema change cannot alias a key
-    * within a memo's lifetime.
-    */
-  private[graft] def spilledAt(
-      df: => DataFrame,
-      tag: String,
-      contentKey: String,
-      spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    val confSig = Seq(
-      "spark.sql.session.timeZone",
-      "spark.sql.ansi.enabled",
-      "spark.sql.legacy.parquet.nanosAsLong"
-    ).map(k => spark.conf.getOption(k).getOrElse("")).mkString("|")
-    val sig = java.security.MessageDigest.getInstance("MD5")
-      .digest((contentKey + "|" + confSig).getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val key = s"${tag}_$sig"
-    val path = spillMemo.computeIfAbsent(key, { k =>
-      val p = graft.queries.Scratch.dir(tag, k)
-      df.write.mode("overwrite").parquet(p)
-      recordSpillSize(k, p)
-      p
-    })
-    touchAndEnforceSpillCap(key)
-    spark.read.parquet(path)
-  }
-
-  private[graft] def spilled(df: DataFrame, tag: String): DataFrame = {
-    val s = df.sparkSession
-    val confSig = Seq(
-      "spark.sql.session.timeZone",
-      "spark.sql.ansi.enabled",
-      "spark.sql.legacy.parquet.nanosAsLong"
-    ).map(k => s.conf.getOption(k).getOrElse("")).mkString("|")
-    // canonicalized.toString can truncate wide field lists
-    // (spark.sql.debug.maxToStringFields), so the 32-bit semanticHash and
-    // the full schema ride along - a collision would need all three equal
-    val planSig = {
-      val a = df.queryExecution.analyzed
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.digest((a.canonicalized.toString + "|" + a.semanticHash() + "|" +
-          df.schema.catalogString + "|" + confSig)
-          .getBytes("UTF-8"))
-        .map("%02x".format(_))
-        .mkString
-    }
-    val key = s"${tag}_$planSig"
-    val path = spillMemo.computeIfAbsent(key, { k =>
-      val p = graft.queries.Scratch.dir(tag, k)
-      df.write.mode("overwrite").parquet(p)
-      recordSpillSize(k, p)
-      p
-    })
-    touchAndEnforceSpillCap(key)
-    s.read.parquet(path)
-  }
+  /** Census of the spilled frames in [[graft.Memo]]: one (key, onDiskBytes)
+    * row per frame entry. */
+  private[graft] def spillCensus(): Seq[(String, Long)] =
+    graft.Memo.census().collect { case graft.Memo.Row(k, graft.Memo.Frame, _, b) => (k, b) }
 
   /** Exact dedup: group identical `textCol` content by md5 digest, keep the
     * lowest id as canonical. Output one row per distinct content with the
@@ -813,11 +639,8 @@ object Dedup {
       .join(g.select(col("doc_id").as("id_hi"), col("grams").as("g_hi")), "id_hi")
       .select(col("id_lo"), col("id_hi"), jaccardSorted(col("g_lo"), col("g_hi")).as("jac_raw"))
       .filter(col("jac_raw") >= tau)
-    contentKey match {
-      case Some(key) =>
-        spilledAt(ver, "near_verified", s"$key|n=$n|k=$k|b=$bands|tau=$tau", docs.sparkSession)
-      case None => ver
-    }
+    graft.Memo.frame(
+      "near_verified", contentKey.map(key => s"$key|n=$n|k=$k|b=$bands|tau=$tau"), docs.sparkSession)(ver)
   }
 
   /** [[connectedComponents]] through the content-keyed spill. Unlike the
@@ -827,32 +650,16 @@ object Dedup {
     * hit the loop never starts. Three same-corpus consumers
     * (dedup_clusters, dedup_survivors, corpus_split_leakage_safe) compute
     * identical labels; the caller asserts input identity via contentKey
-    * (corpus + pair-generation params), the spilledAt contract.
+    * (corpus + pair-generation params), the [[graft.Memo.frame]] contract.
     */
   def connectedComponentsKeyed(
       pairs: => DataFrame,
       contentKey: String,
       spark: org.apache.spark.sql.SparkSession,
       maxIter: Int = 25
-  ): DataFrame = {
-    val confSig = Seq(
-      "spark.sql.session.timeZone",
-      "spark.sql.ansi.enabled",
-      "spark.sql.legacy.parquet.nanosAsLong"
-    ).map(k => spark.conf.getOption(k).getOrElse("")).mkString("|")
-    val sig = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$contentKey|cc|$maxIter|$confSig".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val key = s"cc_labels_$sig"
-    val path = spillMemo.computeIfAbsent(key, { k =>
-      val p = graft.queries.Scratch.dir("cc_labels", k)
-      connectedComponents(pairs, maxIter).write.mode("overwrite").parquet(p)
-      recordSpillSize(k, p)
-      p
-    })
-    touchAndEnforceSpillCap(key)
-    spark.read.parquet(path)
-  }
+  ): DataFrame =
+    graft.Memo.frame("cc_labels", Some(s"$contentKey|cc|$maxIter"), spark)(
+      connectedComponents(pairs, maxIter))
 
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
     // Pacing: LAZY local checkpoints + a fused convergence count. Each
@@ -1155,7 +962,7 @@ object Dedup {
           .select(col("id"), explode(gramsFromWords(col("__w"), shingle)).as("token"))
           .filter(length(col("token")) > 0)
     val dfreq = tok.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    val ordered = spilled(
+    val ordered = graft.Memo.planFrame(
       tok
         .join(dfreq, Seq("token"))
         .groupBy(col("id"))
@@ -1214,7 +1021,7 @@ object Dedup {
     // (binary UTF8) order, the precondition of the native merge-walk
     // verify (graft_inter_sorted). The df-ordered full array is never
     // materialized past the aggregate.
-    val ordered = spilled(
+    val ordered = graft.Memo.planFrame(
       tok
         .join(dfreq, Seq("token"))
         .groupBy(col("id"))
@@ -1257,7 +1064,7 @@ object Dedup {
     // every downstream consumer (the dedup report, the triangle census,
     // survivor selection), and a session computing two of them would
     // otherwise run the candidate join + verify once per consumer.
-    spilled(
+    graft.Memo.planFrame(
       cand
         .join(ordered.select(col("id").as("id_lo"), col("toks").as("t_lo"), col("n").as("n_lo")), Seq("id_lo"))
         .join(ordered.select(col("id").as("id_hi"), col("toks").as("t_hi"), col("n").as("n_hi")), Seq("id_hi"))
@@ -1383,13 +1190,9 @@ object Dedup {
       n: Int,
       maxDocFreq: Int,
       contentKey: Option[String]
-  ): DataFrame = {
-    val g = rareGrams(df, idCol, textCol, n, maxDocFreq)
-    contentKey match {
-      case Some(key) => spilledAt(g, "rare_grams", s"$key|n=$n|df=$maxDocFreq", df.sparkSession)
-      case None => g
-    }
-  }
+  ): DataFrame =
+    graft.Memo.frame("rare_grams", contentKey.map(key => s"$key|n=$n|df=$maxDocFreq"), df.sparkSession)(
+      rareGrams(df, idCol, textCol, n, maxDocFreq))
 
   private def rareGrams(
       df: DataFrame,

@@ -134,13 +134,13 @@ object EmbAlgebra {
     m
   }
 
-  /** [[covPpmMatrix]] through [[Similarity.modelMemo]] (the fitted-model
-    * memo): the covariance is a deterministic function of (corpus, dim),
+  /** [[covPpmMatrix]] through the fitted-model memo
+    * ([[graft.Memo.model]]): the covariance is a deterministic function of (corpus, dim),
     * so repeated invocations — bench passes, the fit+serve query — pay ONE
     * aggregation pass. Model-state-sized value: d² longs.
     */
   def covPpmMatrixCached(df: DataFrame, vecCol: Column, dim: Int): Array[Array[Long]] =
-    Similarity.memoized(s"cov_${Similarity.modelKey(df, s"$vecCol|$dim")}")(
+    graft.Memo.model("cov", df, s"$vecCol|$dim")(
       covPpmMatrix(df, vecCol, dim))
 
   /** FIT state in RAW-SUM form: the flat co-moment pyramid
@@ -167,7 +167,7 @@ object EmbAlgebra {
     * cycles pay ONE aggregation pass per distinct (corpus, dim).
     */
   def coMomentFlatCached(df: DataFrame, vecCol: Column, dim: Int): Array[Long] =
-    Similarity.memoized(s"comom_${Similarity.modelKey(df, s"$vecCol|$dim")}")(
+    graft.Memo.model("comom", df, s"$vecCol|$dim")(
       coMomentFlat(df, vecCol, dim))
 
   /** MERGE two co-moment pyramids — exact elementwise long addition (the

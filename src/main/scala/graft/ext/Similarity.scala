@@ -658,104 +658,10 @@ object Similarity {
     *
     * @return codebooks[subspace][cell][dim within slice], quantized longs
     */
-  /** Driver-side fitted-MODEL memo — the [[Dedup.spilled]] discipline
-    * applied to model state instead of a frame: keyed by the corpus's
-    * canonicalized plan (+ semanticHash + schema + the exactness confs) and
-    * the training params; the value is the fitted model, bounded by
-    * (nsub·nlistSub·dsub) / (nlist·dim) longs — never data. Training is a
-    * deterministic function of the corpus (seeded by the lowest-id vectors,
-    * fixed iteration count), so every consumer of the same (corpus, params)
-    * gets byte-identical books from ONE training pass: ann_pq_topk,
-    * ann_ivfpq_topk, ann_index_scored and ann_recall_audit's pq ranker all
-    * train the same 4×4 books and previously paid four training scans per
-    * bench pass. Like the spill memo, session identity is deliberately NOT
-    * in the key (the stream harness clones sessions per invocation).
-    */
-  private[ext] val modelMemo = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-  private val memoInsertOrder = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  private val memoEvictions = new java.util.concurrent.atomic.LongAdder
-  // Bounded for long-lived serving sessions: the memo is a pure
-  // performance cache (every value is a deterministic recompute of its
-  // corpus + params), so evicting the OLDEST entries is always safe —
-  // a re-request just pays one training pass again. Bench/driver JVMs
-  // never approach the bound; the env knob exists for serving processes.
-  private val memoMaxEntries: Int =
-    math.max(1, sys.env.getOrElse("SPARK_GRAFT_MODEL_MEMO_MAX", "256").toInt)
-
-  /** The single write path into [[modelMemo]]: compute-if-absent, track
-    * insertion order, and evict the oldest entries past the bound (never
-    * the entry just requested). All fitted-model cachers route here.
-    */
-  private[ext] def memoized[T <: AnyRef](key: String)(compute: => T): T = {
-    // enqueue only AFTER the mapping function SUCCEEDS: a compute that
-    // throws (failed training job) must not leave a queue entry with no
-    // map entry — repeated failures would grow the queue unboundedly and
-    // each stale key would burn an eviction-loop iteration later. The
-    // flag is safe under computeIfAbsent's per-key mutual exclusion (at
-    // most one caller runs the mapping function for a given key).
-    var ran = false
-    val v = modelMemo.computeIfAbsent(key, { _ =>
-      ran = true
-      compute
-    })
-    if (ran) memoInsertOrder.add(key)
-    var guard = 0
-    while (modelMemo.size > memoMaxEntries && guard < 4096) {
-      val old = memoInsertOrder.poll()
-      if (old == null) guard = 4096
-      else if (old == key) memoInsertOrder.add(old) // keep the live request
-      else if (modelMemo.remove(old) != null) memoEvictions.increment()
-      guard += 1
-    }
-    v.asInstanceOf[T]
-  }
-
-  private[graft] def modelMemoEvictions: Long = memoEvictions.sum()
-  private[graft] def modelMemoQueueSize: Int = memoInsertOrder.size()
-
-  /** OBSERVABILITY — census of the fitted-model memo: one (key,
-    * valueClass, approxBytes) row per entry. Entries are bounded at
-    * `memoMaxEntries` with oldest-first eviction (see [[memoized]]);
-    * this census is what keeps the posture honest — Bench prints the
-    * totals (and the eviction count) at the end of every run, and
-    * QueryHygieneSpec bounds the value classes and per-entry size so a
-    * data-sized value can never silently enter.
-    */
-  private[graft] def modelMemoCensus(): Seq[(String, String, Long)] = {
-    import scala.jdk.CollectionConverters._
-    modelMemo.asScala.toSeq
-      .map { case (k, v) => (k, v.getClass.getName, approxModelBytes(v)) }
-      .sortBy(_._1)
-  }
-
-  /** Conservative in-heap size estimate of a memoized model value —
-    * recursive over the shapes the memo actually holds (nested arrays /
-    * seqs of longs, string pairs for BPE merges). Unknown leaves count a
-    * flat 64 bytes; the hygiene spec rejects their classes anyway.
-    */
-  private[graft] def approxModelBytes(v: Any): Long = v match {
-    case _: Long | _: Int | _: Double | _: java.lang.Long | _: java.lang.Integer |
-        _: java.lang.Double => 8L
-    case s: String => 40L + 2L * s.length
-    case (a, b) => 24L + approxModelBytes(a) + approxModelBytes(b)
-    case arr: Array[_] => 16L + arr.iterator.map(approxModelBytes).sum
-    case seq: scala.collection.Seq[_] => 24L + seq.iterator.map(approxModelBytes).sum
-    case _ => 64L
-  }
-
-  private[ext] def modelKey(corpus: DataFrame, params: String): String = {
-    val s = corpus.sparkSession
-    val confSig = Seq(
-      "spark.sql.session.timeZone",
-      "spark.sql.ansi.enabled",
-      "spark.sql.legacy.parquet.nanosAsLong"
-    ).map(k => s.conf.getOption(k).getOrElse("")).mkString("|")
-    val a = corpus.queryExecution.analyzed
-    java.security.MessageDigest.getInstance("MD5")
-      .digest((a.canonicalized.toString + "|" + a.semanticHash() + "|" +
-        corpus.schema.catalogString + "|" + confSig + "|" + params).getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-  }
+  /** Census of the fitted models in [[graft.Memo]]: one (key, valueClass,
+    * approxBytes) row per value entry. */
+  private[graft] def modelMemoCensus(): Seq[(String, String, Long)] =
+    graft.Memo.census().collect { case graft.Memo.Row(k, graft.Memo.Value, v, b) => (k, v.getClass.getName, b) }
 
   /** [[pqTrain]] through the model memo — the registration-site entry
     * point, so the audit and the serving queries share one training pass.
@@ -768,7 +674,7 @@ object Similarity {
       nlistSub: Int,
       iters: Int
   ): Array[Array[Seq[Long]]] =
-    memoized(s"pq_${modelKey(corpus, s"$idCol|$vecCol|$nsub|$nlistSub|$iters")}")(
+    graft.Memo.model("pq", corpus, s"$idCol|$vecCol|$nsub|$nlistSub|$iters")(
       pqTrain(corpus, idCol, vecCol, nsub, nlistSub, iters))
 
   /** [[kmeansCentroids]] through the model memo (the IVF coarse quantizer
@@ -782,7 +688,7 @@ object Similarity {
       nlist: Int,
       iters: Int
   ): Array[Seq[Long]] =
-    memoized(s"km_${modelKey(corpus, s"$idCol|$vecCol|$nlist|$iters")}")(
+    graft.Memo.model("km", corpus, s"$idCol|$vecCol|$nlist|$iters")(
       kmeansCentroids(corpus, idCol, vecCol, nlist, iters))
 
   def pqTrain(
@@ -1441,7 +1347,7 @@ object Similarity {
     // truth is read by every ranker branch (one base agg + one semi-join
     // each) — spill it once via the plan-keyed memo instead of re-running
     // the brute-force scoring per branch
-    val truth = Dedup.spilled(
+    val truth = graft.Memo.planFrame(
       bruteForceTopK(corpus, queries, idCol, vecCol, k)
         .select(col("query_id"), col("cand_id")),
       "recall_truth")
@@ -1516,7 +1422,7 @@ object Similarity {
     require(k >= 1, "k must be >= 1")
     val s = df.sparkSession
     import s.implicits._
-    val base = Dedup.spilled(
+    val base = graft.Memo.planFrame(
       df.select(idCol.cast("long").as("id"), quantize(vecCol).as("qv")),
       "coreset_base")
     def vecOf(r: org.apache.spark.sql.Row): Seq[Long] = r.getSeq[Long](1)

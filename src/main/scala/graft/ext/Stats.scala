@@ -15,14 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Stats {
 
-  /** The previous [[bootstrapMeanCI]] invocation's cached group-grain
-    * aggregate — replaced (and unpersisted) on the next call so repeated
-    * invocations do not accumulate InMemoryRelations. Group-grain only,
-    * never data-grain.
-    */
-  private val bootstrapAggCache =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
   /** Exact linear-interpolated quantiles (the `quantile_cont`
     * definition: index (n−1)·p into the sorted values, interpolate
     * between the straddling pair). One row per requested p.
@@ -274,60 +266,41 @@ object Stats {
     // were decimal(38,0) for overflow headroom, and the decimal aggregate
     // lanes measured as ~half this query's steady-state cost. Weights are
     // capped at 4 by the inverse-CDF chain, so Σ w·v over a group is
-    // bounded by 4·n·max|v| — an EXACT per-group overflow certificate
-    // computable from cheap extra aggregates (count already exists, min v
-    // and max v ride the same partial agg; |v| is taken in decimal because
-    // a long abs(Long.MinValue) wraps, or throws under ANSI). The long
-    // plan runs first; if ANY group's bound reaches 2^63 the result is
-    // discarded and the original decimal plan recomputes (exactness never
-    // at risk — the guard is sufficient, not heuristic). Below the bound,
-    // long and decimal sums are the same integers, so the output is
-    // bit-identical.
-    def aggPlan(sumType: String): DataFrame = {
-      // the fallback computes the w·v product IN decimal — a long-first
-      // product would hit the same per-row ANSI overflow the fallback
-      // exists to absorb
-      val prod: Int => Column =
-        if (sumType == dec) b => col(s"__w$b").cast(dec) * col("v").cast(dec)
-        else b => col(s"__w$b") * col("v")
-      val aggs = Seq(
-        count(lit(1)).as("n"),
-        sum(col("v").cast(sumType)).as("__sx"),
-        min(col("v")).as("__minv"),
-        max(col("v")).as("__maxv")) ++
-        (0 until reps).flatMap(b =>
-          Seq(
-            sum(prod(b).cast(sumType)).as(s"__s$b"),
-            sum(col(s"__w$b")).as(s"__n$b")))
-      weighted.groupBy(col("grp")).agg(aggs.head, aggs.tail: _*)
+    // bounded by 4·n·max|v| — an EXACT per-group overflow certificate,
+    // computed first from a cheap (count, min v, max v) aggregate of the
+    // unweighted rows; |v| is taken in decimal because a long
+    // abs(Long.MinValue) wraps, or throws under ANSI. If ANY group's bound
+    // reaches 2^63 the original decimal plan runs instead (exactness never
+    // at risk — the guard is sufficient, not heuristic). Below the bound no
+    // long product or sum can overflow, and long and decimal sums are the
+    // same integers, so the output is bit-identical. The certificate is
+    // its own small job rather than a read of a cached long aggregate: the
+    // returned plan then holds the one replicate aggregate itself, and no
+    // cache outlives the call.
+    val overflowPossible = {
+      val r = base
+        .groupBy(col("grp"))
+        .agg(count(lit(1)).as("n"), min(col("v")).as("minv"), max(col("v")).as("maxv"))
+        .select(max(
+          when(
+            greatest(abs(col("minv").cast(dec)), abs(col("maxv").cast(dec))) *
+              col("n") * lit(4) >= lit(Long.MaxValue).cast(dec),
+            1).otherwise(0)).as("u"))
+        .collect()(0)
+      !r.isNullAt(0) && r.getInt(0) == 1
     }
-    val aggLong = aggPlan("long").persist()
-    // release the PREVIOUS invocation's guard cache (group-grain rows;
-    // the current frame must stay cached — the returned plan reads it)
-    Option(bootstrapAggCache.getAndSet(aggLong)).foreach(_.unpersist(false))
-    // the guard collect materializes the long plan; under ANSI mode a
-    // per-row product overflow throws HERE instead of wrapping, so either
-    // signal — bound tripped or arithmetic failure — routes to the decimal
-    // fallback. A non-overflow failure reproduces on the fallback path, so
-    // nothing real is swallowed.
-    val overflowPossible =
-      try {
-        val r = aggLong
-          .select(max(
-            when(
-              greatest(abs(col("__minv").cast(dec)), abs(col("__maxv").cast(dec))) *
-                col("n") * lit(4) >= lit(Long.MaxValue).cast(dec),
-              1).otherwise(0)).as("u"))
-          .collect()(0)
-        !r.isNullAt(0) && r.getInt(0) == 1
-      } catch { case _: Throwable => true }
-    val agg =
-      if (!overflowPossible) aggLong
-      else {
-        bootstrapAggCache.compareAndSet(aggLong, null): Unit
-        aggLong.unpersist(false)
-        aggPlan(dec)
-      }
+    // the fallback computes the w·v product IN decimal — a long-first
+    // product would hit the per-row ANSI overflow the fallback exists for
+    val sumType = if (overflowPossible) dec else "long"
+    val prod: Int => Column =
+      if (overflowPossible) b => col(s"__w$b").cast(dec) * col("v").cast(dec)
+      else b => col(s"__w$b") * col("v")
+    val aggs = Seq(count(lit(1)).as("n"), sum(col("v").cast(sumType)).as("__sx")) ++
+      (0 until reps).flatMap(b =>
+        Seq(
+          sum(prod(b).cast(sumType)).as(s"__s$b"),
+          sum(col(s"__w$b")).as(s"__n$b")))
+    val agg = weighted.groupBy(col("grp")).agg(aggs.head, aggs.tail: _*)
     val means = array((0 until reps).map(b =>
       when(col(s"__n$b") > 0, col(s"__s$b").cast("double") / col(s"__n$b").cast("double"))): _*)
     def interp(arr: Column, p: Double): Column = {

@@ -434,13 +434,13 @@ object TextStats {
     * and therefore every later round's counts.
     */
   /** The k fitted merges as driver-held model state, through the fitted-
-    * model memo ([[Similarity.modelMemo]]): training is k deterministic
+    * model memo ([[graft.Memo.model]]): training is k deterministic
     * Spark rounds over (corpus, k), so the encode query, repeated bench
     * passes, and any stream twin share ONE training loop. Rank-ordered
     * (left, right) pairs — exactly what [[bpeEncode]] consumes.
     */
   def bpeMergesModel(df: DataFrame, idCol: Column, textCol: Column, k: Int): Seq[(String, String)] =
-    Similarity.memoized(s"bpe_${Similarity.modelKey(df, s"$idCol|$textCol|$k")}")(
+    graft.Memo.model("bpe", df, s"$idCol|$textCol|$k")(
       bpeMerges(df, idCol, textCol, k)
         .orderBy(col("rank"))
         .collect()
@@ -632,20 +632,18 @@ object TextStats {
     // invocation, so neither exchange reuse nor a plan-keyed memo can fire
     // — the caller's corpusKey carries the identity instead, and tokenize
     // + explode + collapse runs exactly once per corpus
-    val perDoc = Dedup.spilledAt(
-      bigrams.groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("m")),
-      "lm_bigrams", corpusKey, df.sparkSession)
+    val perDoc = graft.Memo.frame("lm_bigrams", Some(corpusKey), df.sparkSession)(
+      bigrams.groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("m")))
     val model = perDoc.groupBy(col("b")).agg(sum(col("m")).as("cb"))
     val heads = model
       .groupBy(substring_index(col("b"), " ", 1).as("w1"))
       .agg(sum(col("cb")).as("ch"))
     // one scalar row — broadcast; spilled on the same key (its fenced
     // token explode would otherwise re-tokenize the corpus per invocation)
-    val vocab = Dedup.spilledAt(
+    val vocab = graft.Memo.frame("lm_vocab", Some(corpusKey), df.sparkSession)(
       graft.ops.PlanOps
         .fence(words.select(explode(col("w")).as("tok")).filter(length(col("tok")) > 0))
-        .agg(count_distinct(col("tok")).as("v")),
-      "lm_vocab", corpusKey, df.sparkSession)
+        .agg(count_distinct(col("tok")).as("v")))
     val hot = model.orderBy(col("cb").desc, col("b")).limit(hotK)
     val probe = perDoc.withColumn("w1", substring_index(col("b"), " ", 1))
     val hotHits = probe.join(broadcast(hot), Seq("b"))

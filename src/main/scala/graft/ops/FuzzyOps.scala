@@ -57,7 +57,7 @@ object FuzzyOps {
     */
   /** @param contentKey when set, the verified pair frame lands in the
     *                    content-keyed parquet spill
-    *                    ([[graft.ext.Dedup.spilledAt]]): the caller asserts
+    *                    ([[graft.Memo.frame]]): the caller asserts
     *                    the key identifies the input data and blocking
     *                    params. The fixture corpus feeds THREE declared
     *                    queries with one (input, maxDist, maxBlock) triple
@@ -91,12 +91,8 @@ object FuzzyOps {
       .withColumn("dist", levenshtein(col("s_lo"), col("s_hi")))
       .filter(col("dist") <= maxDist)
       .select(col("id_lo"), col("id_hi"), col("dist"))
-    contentKey match {
-      case Some(key) =>
-        graft.ext.Dedup.spilledAt(
-          pairs, "edit_pairs", s"$key|d=$maxDist|b=$maxBlock", df.sparkSession)
-      case None => pairs
-    }
+    graft.Memo.frame("edit_pairs", contentKey.map(key => s"$key|d=$maxDist|b=$maxBlock"), df.sparkSession)(
+      pairs)
   }
 
   /** The quarantine report: blocks larger than `maxBlock` (with sizes),

@@ -65,11 +65,7 @@ object GraphOps {
     // caller-asserted contentKey the orientation lands in the plan-keyed
     // parquet memo once (the kcorePeel/lpa round-sharing discipline).
     val oriented = orientByDegree(edges, srcCol, dstCol)
-    val e = contentKey match {
-      case Some(key) =>
-        graft.ext.Dedup.spilledAt(oriented, "tri_oriented", s"$key|orient", edges.sparkSession)
-      case None => oriented
-    }
+    val e = graft.Memo.frame("tri_oriented", contentKey.map(_ + "|orient"), edges.sparkSession)(oriented)
     val deg = e
       .select(explode(array(col("a"), col("b"))).as("v"))
       .groupBy(col("v"))
@@ -211,11 +207,7 @@ object GraphOps {
       }
       labels
     }
-    contentKey match {
-      case Some(key) =>
-        graft.ext.Dedup.spilledAt(loop, "lpa_labels", s"$key|iters=$iters", edges.sparkSession)
-      case None => loop
-    }
+    graft.Memo.frame("lpa_labels", contentKey.map(key => s"$key|iters=$iters"), edges.sparkSession)(loop)
   }
 
   /** The canonical symmetric adjacency of an undirected edge frame:
@@ -363,12 +355,8 @@ object GraphOps {
       }
       e
     }
-    contentKey match {
-      case Some(key) =>
-        graft.ext.Dedup.spilledAt(
-          loop, "kcore_peeled", s"$key|k=$k|rounds=$rounds", edges.sparkSession)
-      case None => loop
-    }
+    graft.Memo.frame("kcore_peeled", contentKey.map(key => s"$key|k=$k|rounds=$rounds"), edges.sparkSession)(
+      loop)
   }
 
   /** Multi-source BFS hop distances over the undirected graph, `rounds`
@@ -430,12 +418,7 @@ object GraphOps {
       }
       dist
     }
-    contentKey match {
-      case Some(key) =>
-        graft.ext.Dedup.spilledAt(
-          loop, "bfs_dist", s"$key|rounds=$rounds", edges.sparkSession)
-      case None => loop
-    }
+    graft.Memo.frame("bfs_dist", contentKey.map(key => s"$key|rounds=$rounds"), edges.sparkSession)(loop)
   }
 
   /** The frontier-semi-joined adjacency of one BFS expansion: the nodes
@@ -602,33 +585,21 @@ object GraphOps {
     // materialization point, not a semantic change.
     val prepared = edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"), col(wCol).cast("long").as("w"))
-    val e = contentKey match {
-      case Some(key) =>
-        graft.ext.Dedup.spilledAt(prepared, "pr_edges", s"$key|edges", edges.sparkSession)
-      case None => prepared
-    }
+    val e = graft.Memo.frame("pr_edges", contentKey.map(_ + "|edges"), edges.sparkSession)(prepared)
     // nodes and out-weights are likewise referenced once per unrolled
     // iteration; both are vertex-grain (model-shaped next to the edge
     // frame), so the same memo turns their per-iteration aggregate
     // subtrees into leaf reads (94 → 24 Exchanges at 3 iterations, the
     // remainder being the rank recurrence's own join/agg rounds)
     val nodes0 = e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct()
-    val nodes = contentKey match {
-      case Some(key) =>
-        graft.ext.Dedup.spilledAt(nodes0, "pr_nodes", s"$key|nodes", edges.sparkSession)
-      case None => nodes0
-    }
+    val nodes = graft.Memo.frame("pr_nodes", contentKey.map(_ + "|nodes"), edges.sparkSession)(nodes0)
     // |V| is the one driver scalar (model size, not data): the teleport
     // term needs it as a literal inside integer division
     val n = nodes.count()
     require(n > 0, "graph has no nodes")
     val base = scale / n
     val outw0 = e.groupBy(col("src")).agg(sum(col("w")).as("outw"))
-    val outw = contentKey match {
-      case Some(key) =>
-        graft.ext.Dedup.spilledAt(outw0, "pr_outw", s"$key|outw", edges.sparkSession)
-      case None => outw0
-    }
+    val outw = graft.Memo.frame("pr_outw", contentKey.map(_ + "|outw"), edges.sparkSession)(outw0)
     var ranks = nodes.withColumn("rank", lit(base))
     for (i <- 1 to iters) {
       val in = e

@@ -16,9 +16,6 @@ object Core {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Fixtures.t(s, dir, name) // schema-asserted: drift fails with a named diff
 
-  /** [[Scratch.once]]: build a deterministic fixture once per JVM. */
-  private def fixtureOnce(path: String)(write: => Unit): Unit = Scratch.once(path)(write)
-
   /** Socrata-shaped permit payload synthesized from orders (S1 fixtures). */
   private def permitsPayload(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "orders").select(
@@ -522,13 +519,13 @@ object Core {
         lpad(col("c_custkey").cast("string"), 10, "0").as("pin10"),
         concat(lit("ADDR "), col("c_name")).as("prop_address_full")
       )
-      fixtureOnce(path)(graft.sources.Sources.writePinUniverseCsv(uni, path))
+      graft.Memo.once(path, dir)(graft.sources.Sources.writePinUniverseCsv(uni, path))
       graft.sources.Sources.readPinUniverseCsv(s, path)
     },
     // ---- S1: schema-pinned JSON scan roundtrip ---------------------------
     "s1_json_roundtrip" -> { (s, dir) =>
       val path = Scratch.dir("permits_json", dir)
-      fixtureOnce(path)(permitsPayload(s, dir).write.mode("overwrite").json(path))
+      graft.Memo.once(path, dir)(permitsPayload(s, dir).write.mode("overwrite").json(path))
       graft.sources.Sources.readPermitsJson(s, path)
     },
     // ---- S5: metadata-predicate scan (cell-color filter modeled as a
@@ -565,7 +562,7 @@ object Core {
           .when(col("c_custkey") % 11 === 0, lit("theme:7:0.3999755851924192"))
           .as("pin_fill")
       )
-      fixtureOnce(new java.io.File(path).getParent)(
+      graft.Memo.once(new java.io.File(path).getParent, dir)(
         graft.sources.Xlsx.writeSheets(
           Seq("PIN Errors" -> sheet), path, fillColumns = Map("pin" -> "pin_fill")))
       graft.sources.Xlsx
@@ -591,7 +588,7 @@ object Core {
           .when(col("c_custkey") % 11 === 0, lit("theme:7:0.3999755851924192"))
           .as("pin_fill")
       )
-      fixtureOnce(base) {
+      graft.Memo.once(base, dir) {
         graft.sources.Xlsx.writeSheets(
           Seq("PIN Errors" -> sheet), orig, fillColumns = Map("pin" -> "pin_fill"))
         graft.sources.Xlsx.removeFlaggedRows(orig, cleaned, "PIN Errors", "pin")
@@ -619,7 +616,7 @@ object Core {
     // SourcesSpec), the 100 TB form of the P7 date-range filter
     "s10_partition_pruned" -> { (s, dir) =>
       val path = Scratch.dir("partitioned", dir)
-      fixtureOnce(path)(graft.sources.Sources.writePartitioned(
+      graft.Memo.once(path, dir)(graft.sources.Sources.writePartitioned(
         t(s, dir, "orders")
           .select(col("o_orderkey"), col("o_totalprice"), year(col("o_orderdate")).as("yr")),
         path, "yr"))
@@ -635,7 +632,7 @@ object Core {
     // selective dim join (plan-asserted in PlanAuditSpec)
     "s10_dpp_join" -> { (s, dir) =>
       val path = Scratch.dir("partitioned_dpp", dir)
-      fixtureOnce(path)(graft.sources.Sources.writePartitioned(
+      graft.Memo.once(path, dir)(graft.sources.Sources.writePartitioned(
         t(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
             year(col("o_orderdate")).as("yr")),
@@ -659,7 +656,7 @@ object Core {
     // SourcesSpec) — format portability for warehouse interop
     "s11_orc_roundtrip" -> { (s, dir) =>
       val path = Scratch.dir("orc_rt", dir)
-      fixtureOnce(path)(
+      graft.Memo.once(path, dir)(
         t(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("o_orderstatus"))
           .write.mode("overwrite").orc(path))
@@ -678,7 +675,7 @@ object Core {
         col("c_name").as("name"),
         col("c_mktsegment").as("segment")
       )
-      fixtureOnce(new java.io.File(path).getParent)(
+      graft.Memo.once(new java.io.File(path).getParent, dir)(
         graft.sources.Xlsx.writeSheets(Seq("Customers" -> sheet), path))
       graft.sources.Xlsx.read(s, path, Some("Customers"))
     },
@@ -687,7 +684,7 @@ object Core {
       val upload = t(s, dir, "orders")
         .filter(col("o_orderstatus") === "F")
         .select(col("o_orderkey"), col("o_totalprice"))
-      fixtureOnce(path)(graft.sources.Sources.writeBatched(upload, path, 250))
+      graft.Memo.once(path, dir)(graft.sources.Sources.writeBatched(upload, path, 250))
       s.read.parquet(path)
     },
     // ---- S9 (packaging half): zip-archive sink round-trip ----------------
@@ -705,7 +702,7 @@ object Core {
         .select(
           col("o_orderkey").cast("string").as("permit_"),
           floor(col("o_totalprice")).cast("long").cast("string").as("reported_cost"))
-      fixtureOnce(base) {
+      graft.Memo.once(base, dir) {
         upload.write.mode("overwrite").option("header", "true")
           .option("maxRecordsPerFile", 250L).csv(base)
         graft.sources.Sources.zipDirectory(base, zip)
@@ -736,7 +733,7 @@ object Core {
     // full row set must round-trip identically to the plain-text scan
     "s1_gz_roundtrip" -> { (s, dir) =>
       val path = Scratch.dir("permits_gz", dir)
-      fixtureOnce(path)(
+      graft.Memo.once(path, dir)(
         permitsPayload(s, dir).write.mode("overwrite")
           .option("compression", "gzip").json(path))
       s.read
@@ -749,7 +746,7 @@ object Core {
       // own path — Verify dumps queries concurrently, so sharing
       // s1_json_roundtrip's directory would race its overwrite
       val path = Scratch.dir("permits_dsv2", dir)
-      fixtureOnce(path)(permitsPayload(s, dir).write.mode("overwrite").json(path))
+      graft.Memo.once(path, dir)(permitsPayload(s, dir).write.mode("overwrite").json(path))
       s.read
         .format("graft.sources.PermitsJsonSource")
         .option("path", path)
@@ -764,7 +761,7 @@ object Core {
     // the scan moves |partitions| rows instead of the row set
     "s1_agg_pushdown" -> { (s, dir) =>
       val path = Scratch.dir("permits_aggpd", dir)
-      fixtureOnce(path)(permitsPayload(s, dir).write.mode("overwrite").json(path))
+      graft.Memo.once(path, dir)(permitsPayload(s, dir).write.mode("overwrite").json(path))
       s.read
         .format("graft.sources.PermitsJsonSource")
         .option("path", path)
@@ -783,7 +780,7 @@ object Core {
     // deterministic under the hash compare.
     "s1_limit_pushdown" -> { (s, dir) =>
       val path = Scratch.dir("permits_topn", dir)
-      fixtureOnce(path)(permitsPayload(s, dir).write.mode("overwrite").json(path))
+      graft.Memo.once(path, dir)(permitsPayload(s, dir).write.mode("overwrite").json(path))
       s.read
         .format("graft.sources.PermitsJsonSource")
         .option("path", path)

@@ -113,15 +113,15 @@ object Fixtures {
     assertSchema(s.read.parquet(s"$dir/$name.parquet"), name)
 
   /** `events.ts` arrives in whatever encoding the fixture writer last chose:
-    * parquet TIMESTAMP(NANOS) (no native Spark type — read as long nanos via
-    * the legacy conf), TIMESTAMP_NTZ micros (current writers), or plain
-    * session-TZ TIMESTAMP. Normalize all three to micro-precision
+    * parquet TIMESTAMP(NANOS) (no native Spark type — read as long nanos
+    * via `spark.sql.legacy.parquet.nanosAsLong`, which every engine
+    * session sets at build, [[graft.EngineIO.configure]]), TIMESTAMP_NTZ
+    * micros (current writers), or plain session-TZ TIMESTAMP. Normalize all three to micro-precision
     * session-TZ TimestampType so `unix_micros`/`window`/`date_format`
     * semantics match the DuckDB oracle (which reads the same parquet as a
     * naive timestamp; Verify pins the session TZ to UTC).
     */
   def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = t(s, dir, "events")
     raw.schema("ts").dataType match {
       case LongType =>          // TIMESTAMP(NANOS) read as long nanos

@@ -83,47 +83,6 @@ object PipelineQ {
       )
       .filter(col("permdt").isNotNull)
 
-  /** Each pipeline family's upload/review/workbook queries all filter the
-    * SAME flagged frame, but the driver contract makes every query
-    * independent — so the shared parent is computed ONCE per (session, key)
-    * and spilled to local parquet; every family query then scans the spill
-    * with normal pruning/pushdown. Parquet-spill beats cache persistence
-    * here: the MEMORY-level cache measurably regressed under GC, and the
-    * DISK_ONLY cache's columnar-batch builder showed 3× run-to-run
-    * variance on this wide string frame — the parquet writer is the same
-    * stable codegen path every sink already uses. Keyed by session identity
-    * so a stopped test session's spills are never reused.
-    */
-  // weak session keys (identity equality): a stopped session's memo entry is
-  // GC-evicted with the session. The map VALUE holds only spill-path strings
-  // — a DataFrame value would strongly reference its SparkSession
-  // (Dataset.sparkSession) and pin the weak key forever, the classic
-  // WeakHashMap value→key pitfall — so eviction genuinely happens, and the
-  // pid-scoped spill dirs themselves are deleted by Scratch's shutdown hook.
-  private val flaggedMemo =
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, String]]()
-
-  private def memoDisk(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val perSession = flaggedMemo.synchronized {
-      var m = flaggedMemo.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, String]()
-        flaggedMemo.put(s, m)
-      }
-      m
-    }
-    val path = perSession.computeIfAbsent(
-      key, { k =>
-        // session identity in the path on top of Scratch's pid scoping: two
-        // live sessions in one JVM must not share a spill either
-        val p = Scratch.dir("memo", s"${System.identityHashCode(s)}_$k")
-        build.write.mode("overwrite").parquet(p)
-        p
-      }
-    )
-    s.read.parquet(path)
-  }
-
   /** Fixture parquet is one file with ONE row group, so a scan is a single
     * partition — an explicit repartition ahead of the string-heavy chain
     * lets the full core count work (at production scale the input arrives
@@ -132,8 +91,19 @@ object PipelineQ {
   private def par(s: SparkSession, df: DataFrame): DataFrame =
     df.repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
 
+  /** Each pipeline family's upload/review/workbook queries all filter the
+    * SAME flagged frame, but the driver contract makes every query
+    * independent — so the shared parent is computed ONCE per (family, sf
+    * dir) through the content-keyed frame memo ([[graft.Memo.frame]]) and
+    * every family query scans the spill with normal pruning/pushdown.
+    * Parquet-spill beats cache persistence here: the MEMORY-level cache
+    * measurably regressed under GC, and the DISK_ONLY cache's
+    * columnar-batch builder showed 3× run-to-run variance on this wide
+    * string frame — the parquet writer is the same stable codegen path
+    * every sink already uses.
+    */
   private def flaggedFor(s: SparkSession, dir: String, dedupe: Boolean): DataFrame = {
-    val base = memoDisk(s, s"chain|$dir") {
+    val base = graft.Memo.frame("pipe_chain", Some(dir), s) {
       PermitPipeline.runFlagged(par(s, rawPermits(s, dir)), pinUniverse(s, dir), existing = None)
     }
     // flag() is row-wise, so running the 7-key anti-join AFTER it selects
@@ -215,7 +185,7 @@ object PipelineQ {
         .otherwise(lpad(col("c_custkey").cast("string"), 14, "0"))
         .as("pin")
     )
-    LegacyPipeline.splitFinal(memoDisk(s, s"legacy|$dir") {
+    LegacyPipeline.splitFinal(graft.Memo.frame("pipe_legacy", Some(dir), s) {
       LegacyPipeline.runFlagged(par(s, sheet), Seq("PIN2", "PIN3"), crosswalk, universe)
     })
   }
@@ -254,7 +224,7 @@ object PipelineQ {
   private def runReview(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
     val universe = t(s, dir, "customer")
       .select(lpad(col("c_custkey").cast("string"), 14, "0").as("pin"))
-    val (upload, review) = LegacyPipeline.splitFinal(memoDisk(s, s"ri|$dir") {
+    val (upload, review) = LegacyPipeline.splitFinal(graft.Memo.frame("pipe_ri", Some(dir), s) {
       ReviewIngestPipeline.runFlagged(par(s, reviewSheet(s, dir)), universe)
     })
     (upload, review, ReviewIngestPipeline.qcCopy(reviewSheet(s, dir)))
@@ -312,7 +282,7 @@ object PipelineQ {
       val pins = pinUniverse(s, dir)
         .select(PinOps.zfill14(col("pin")).as("pin"))
         .withColumn("pin_hyphenated", PinOps.hyphenate(col("pin")))
-      Scratch.once(new java.io.File(path).getParent)(
+      graft.Memo.once(new java.io.File(path).getParent, dir)(
         graft.sources.Xlsx.writeSheets(
           Seq("Permits" -> permits, "Universe of Valid PINs" -> pins),
           path

@@ -201,7 +201,7 @@ private[queries] object QAnn {
       val coarse = Similarity.kmeansCentroidsCached(e, "vec_id", "embedding", nlist = 8, iters = 2)
       val books = Similarity.pqTrainCached(e, "vec_id", "embedding", nsub = 4, nlistSub = 4, iters = 1)
       val tbl = Scratch.table("ann_idx")
-      Scratch.tableOnce(tbl, dir)(
+      graft.Memo.once(tbl, dir)(
         Similarity.persistAnnIndex(e, "vec_id", "embedding", coarse, books, tbl, buckets = 8))
       Similarity.scoreAgainstAnnIndex(
         s, tbl, e.filter(col("vec_id") < 50), "vec_id", "embedding",
@@ -221,7 +221,7 @@ private[queries] object QAnn {
       val coarse = Similarity.kmeansCentroidsCached(e, "vec_id", "embedding", nlist = 8, iters = 2)
       val books = Similarity.pqTrainCached(e, "vec_id", "embedding", nsub = 4, nlistSub = 4, iters = 1)
       val tbl = Scratch.table("ann_idx")
-      Scratch.tableOnce(tbl, dir)(
+      graft.Memo.once(tbl, dir)(
         Similarity.persistAnnIndex(e, "vec_id", "embedding", coarse, books, tbl, buckets = 8))
       Similarity.scoreAgainstAnnIndexWhere(
         s, tbl, e.filter(col("vec_id") >= 180 && col("vec_id") < 220), "vec_id", "embedding",
@@ -239,7 +239,7 @@ private[queries] object QAnn {
       val coarse = Similarity.kmeansCentroidsCached(e, "vec_id", "embedding", nlist = 8, iters = 2)
       val books = Similarity.pqTrainCached(e, "vec_id", "embedding", nsub = 4, nlistSub = 4, iters = 1)
       val tbl = Scratch.table("ann_idx_app")
-      Scratch.tableOnce(tbl, dir) {
+      graft.Memo.once(tbl, dir) {
         val g = graft.ops.Hashing.md5Mod(col("vec_id").cast("string"), 4L)
         Similarity.persistAnnIndex(
           e.filter(g =!= 0), "vec_id", "embedding", coarse, books, tbl, buckets = 8)
@@ -269,7 +269,7 @@ private[queries] object QAnn {
       // rebuilds publish immutable VERSIONS (probe-safe swap) — register
       // the whole versioned name family for exit cleanup
       Scratch.registerVersionedIndex(tbl)
-      Scratch.tableOnce(tbl, dir) {
+      graft.Memo.once(tbl, dir) {
         Similarity.persistAnnIndex(
           old, "vec_id", "embedding", staleCoarse, staleBooks, tbl, buckets = 8)
         Similarity.deleteFromAnnIndex(
@@ -326,7 +326,7 @@ private[queries] object QAnn {
       val g = graft.ops.Hashing.md5Mod(col("vec_id").cast("string"), 4L)
       // ANN index: one era persisted + one appended, no tombstones
       val annTbl = Scratch.table("ann_idx_cen")
-      Scratch.tableOnce(annTbl, dir) {
+      graft.Memo.once(annTbl, dir) {
         Similarity.persistAnnIndex(
           e.filter(g =!= 0), "vec_id", "embedding", coarse, books, annTbl, buckets = 8)
         Similarity.appendAnnIndex(
@@ -336,7 +336,7 @@ private[queries] object QAnn {
       val lshTbl = Scratch.table("lsh_idx_cen")
       Scratch.registerTable(graft.ext.BucketedIndex.tombTable(lshTbl))
       val dcorp = docs.filter(col("doc_id") % 5 =!= 0)
-      Scratch.tableOnce(lshTbl, dir) {
+      graft.Memo.once(lshTbl, dir) {
         Dedup.persistLshIndex(
           dcorp, col("doc_id"), col("text"), table = lshTbl, buckets = 8,
           n = 3, k = 8, bands = 4)
@@ -347,7 +347,7 @@ private[queries] object QAnn {
       }
       // semantic index: freshly built, nothing pending
       val semTbl = Scratch.table("sem_idx_cen")
-      Scratch.tableOnce(semTbl, dir)(
+      graft.Memo.once(semTbl, dir)(
         Dedup.persistSemanticIndex(
           e.filter(col("vec_id") % 5 =!= 0), col("vec_id"), col("embedding"), coarse,
           semTbl, buckets = 8))
@@ -360,7 +360,7 @@ private[queries] object QAnn {
       // quarantine regrowth is noticed by the POLICY, not by an operator
       // reading SCALING.md
       val hamTbl = Scratch.table("frm_idx_cen")
-      Scratch.tableOnce(hamTbl, dir) {
+      graft.Memo.once(hamTbl, dir) {
         val fh = frameHashes(s, dir)
         Multimodal.persistHammingIndex(
           fh.filter(col("asset_id") % 5 =!= 0 && col("asset_id") % 3 =!= 0),
@@ -399,7 +399,7 @@ private[queries] object QAnn {
     // artifact of the PRE-state)
     "index_maintenance_apply" -> { (s, dir) =>
       val auditTbl = Scratch.table("mnt_audit")
-      Scratch.tableOnce(auditTbl, dir) {
+      graft.Memo.once(auditTbl, dir) {
         val (plan, fleet) = buildMaintenanceFleet(s, dir, "apl")
         val audit = Maintenance.applyMaintenancePlan(s, plan, fleet)
         audit.write.mode("overwrite").format("parquet").saveAsTable(auditTbl)
@@ -420,7 +420,7 @@ private[queries] object QAnn {
     // non-vacuity (a too-low threshold does NOT reach the fixpoint)
     "index_maintenance_fixpoint" -> { (s, dir) =>
       val fxTbl = Scratch.table("mnt_fixpoint")
-      Scratch.tableOnce(fxTbl, dir) {
+      graft.Memo.once(fxTbl, dir) {
         val e = t(s, dir, "embeddings")
         val books = Similarity.pqTrainCached(e, "vec_id", "embedding", nsub = 4, nlistSub = 4, iters = 1)
         val g = graft.ops.Hashing.md5Mod(col("vec_id").cast("string"), 4L)
@@ -460,7 +460,7 @@ private[queries] object QAnn {
       val books = Similarity.pqTrainCached(e, "vec_id", "embedding", nsub = 4, nlistSub = 4, iters = 1)
       val tbl = Scratch.table("ann_idx_del")
       Scratch.registerTable(graft.ext.BucketedIndex.tombTable(tbl))
-      Scratch.tableOnce(tbl, dir) {
+      graft.Memo.once(tbl, dir) {
         Similarity.persistAnnIndex(e, "vec_id", "embedding", coarse, books, tbl, buckets = 8)
         Similarity.deleteFromAnnIndex(
           s, tbl,
@@ -485,7 +485,7 @@ private[queries] object QAnn {
       val tbl = Scratch.table("ann_idx_reapp")
       Scratch.registerTable(graft.ext.BucketedIndex.tombTable(tbl))
       val delGate = graft.ops.Hashing.md5Mod(col("vec_id").cast("string"), 5L) === 0
-      Scratch.tableOnce(tbl, dir) {
+      graft.Memo.once(tbl, dir) {
         Similarity.persistAnnIndex(e, "vec_id", "embedding", coarse, books, tbl, buckets = 8)
         Similarity.deleteFromAnnIndex(s, tbl, e.filter(delGate), "vec_id")
         Similarity.appendAnnIndex(
@@ -510,7 +510,7 @@ private[queries] object QAnn {
       val tbl = Scratch.table("ann_idx_cmp")
       Scratch.registerTable(graft.ext.BucketedIndex.tombTable(tbl))
       Scratch.registerTable(tbl + "__compact_stage")
-      Scratch.tableOnce(tbl, dir) {
+      graft.Memo.once(tbl, dir) {
         val g = graft.ops.Hashing.md5Mod(col("vec_id").cast("string"), 4L)
         Similarity.persistAnnIndex(
           e.filter(g =!= 0), "vec_id", "embedding", coarse, books, tbl, buckets = 8)

@@ -128,7 +128,7 @@ private[queries] object QDedup {
       // the table out from under a bench JVM's probe (Scratch's
       // concurrent-JVM concern, catalog-table form)
       val idxTable = Scratch.table("lsh_idx")
-      Scratch.tableOnce(idxTable, dir)(
+      graft.Memo.once(idxTable, dir)(
         Dedup.persistLshIndex(
           corpus, col("doc_id"), col("text"), table = idxTable, buckets = 8,
           n = 3, k = 8, bands = 4))
@@ -158,7 +158,7 @@ private[queries] object QDedup {
       val incoming = docs.filter(col("doc_id") % 5 === 0)
       val idxTable = Scratch.table("lsh_idx_del")
       Scratch.registerTable(graft.ext.BucketedIndex.tombTable(idxTable))
-      Scratch.tableOnce(idxTable, dir) {
+      graft.Memo.once(idxTable, dir) {
         Dedup.persistLshIndex(
           corpus, col("doc_id"), col("text"), table = idxTable, buckets = 8,
           n = 3, k = 8, bands = 4)
@@ -195,7 +195,7 @@ private[queries] object QDedup {
       val idxTable = Scratch.table("lsh_idx_reapp")
       Scratch.registerTable(graft.ext.BucketedIndex.tombTable(idxTable))
       val delGate = graft.ops.Hashing.md5Mod(col("doc_id").cast("string"), 7L) === 0
-      Scratch.tableOnce(idxTable, dir) {
+      graft.Memo.once(idxTable, dir) {
         Dedup.persistLshIndex(
           corpus, col("doc_id"), col("text"), table = idxTable, buckets = 8,
           n = 3, k = 8, bands = 4)
@@ -231,7 +231,7 @@ private[queries] object QDedup {
       val incoming = docs.filter(col("doc_id") % 5 === 0)
       val idxTable = Scratch.table("lsh_idx_rb")
       Scratch.registerVersionedIndex(idxTable)
-      Scratch.tableOnce(idxTable, dir) {
+      graft.Memo.once(idxTable, dir) {
         Dedup.persistLshIndex(
           corpus.filter(col("doc_id") % 2 === 0), col("doc_id"), col("text"),
           table = idxTable, buckets = 8, n = 3, k = 8, bands = 4)
@@ -397,7 +397,7 @@ private[queries] object QDedup {
       val corpus = e.filter(col("vec_id") % 5 =!= 0)
       val incoming = e.filter(col("vec_id") % 5 === 0)
       val tbl = Scratch.table("sem_idx")
-      Scratch.tableOnce(tbl, dir)(
+      graft.Memo.once(tbl, dir)(
         Dedup.persistSemanticIndex(corpus, col("vec_id"), col("embedding"), cents, tbl, buckets = 8))
       Dedup.probeSemanticIndex(s, tbl, incoming, col("vec_id"), col("embedding"), cents, tau = 0.42)
     },
@@ -417,7 +417,7 @@ private[queries] object QDedup {
       val tbl = Scratch.table("sem_idx_mnt")
       Scratch.registerTable(graft.ext.BucketedIndex.tombTable(tbl))
       Scratch.registerTable(tbl + "__compact_stage")
-      Scratch.tableOnce(tbl, dir) {
+      graft.Memo.once(tbl, dir) {
         val g = graft.ops.Hashing.md5Mod(col("vec_id").cast("string"), 4L)
         Dedup.persistSemanticIndex(
           corpus.filter(g =!= 0), col("vec_id"), col("embedding"), cents, tbl, buckets = 8)
@@ -450,7 +450,7 @@ private[queries] object QDedup {
       val incoming = e.filter(col("vec_id") % 5 === 0)
       val tbl = Scratch.table("sem_idx_rb")
       Scratch.registerVersionedIndex(tbl)
-      Scratch.tableOnce(tbl, dir) {
+      graft.Memo.once(tbl, dir) {
         Dedup.persistSemanticIndex(
           corpus.filter(col("vec_id") % 2 === 0), col("vec_id"), col("embedding"),
           staleCents, tbl, buckets = 8)

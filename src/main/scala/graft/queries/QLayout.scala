@@ -170,13 +170,13 @@ private[queries] object QLayout {
     // the file-count drop itself is asserted in LayoutOpsSpec
     "layout_compact" -> { (s, dir) =>
       val frag = Scratch.dir("layout_frag", dir)
-      Scratch.once(frag) {
+      graft.Memo.once(frag, dir) {
         t(s, dir, "orders")
           .repartition(12)
           .write.mode("overwrite").partitionBy("o_orderpriority").parquet(frag)
       }
       val compacted = Scratch.dir("layout_compacted", dir)
-      Scratch.once(compacted) {
+      graft.Memo.once(compacted, dir) {
         graft.ops.LayoutOps.compact(
           s, frag, compacted, "o_orderpriority", targetRowsPerFile = 4096)
       }
@@ -189,7 +189,7 @@ private[queries] object QLayout {
     // the file-count drop itself is asserted in LayoutOpsSpec
     "layout_skipping_scan" -> { (s, dir) =>
       val ranged = Scratch.dir("layout_ranged", dir)
-      Scratch.once(ranged) {
+      graft.Memo.once(ranged, dir) {
         t(s, dir, "orders")
           .repartitionByRange(8, col("o_orderkey"))
           .write.mode("overwrite").parquet(ranged)
@@ -207,7 +207,7 @@ private[queries] object QLayout {
     // stats — which is what the oracle checks without seeing file paths
     "layout_manifest_maintain" -> { (s, dir) =>
       val ranged = Scratch.dir("layout_ranged", dir)
-      Scratch.once(ranged) {
+      graft.Memo.once(ranged, dir) {
         t(s, dir, "orders")
           .repartitionByRange(8, col("o_orderkey"))
           .write.mode("overwrite").parquet(ranged)
@@ -229,7 +229,7 @@ private[queries] object QLayout {
     // leading column; the Morton curve bounds both per file)
     "layout_zorder_skip" -> { (s, dir) =>
       val zdir = Scratch.dir("layout_z2d", dir)
-      Scratch.once(zdir) {
+      graft.Memo.once(zdir, dir) {
         graft.ops.ZOrderOps
           .zorderLayout(
             t(s, dir, "lineitem")
@@ -251,7 +251,7 @@ private[queries] object QLayout {
     // residual filter makes collisions an I/O cost, never a wrong row
     "layout_point_lookup" -> { (s, dir) =>
       val ranged = Scratch.dir("layout_ranged", dir)
-      Scratch.once(ranged) {
+      graft.Memo.once(ranged, dir) {
         t(s, dir, "orders")
           .repartitionByRange(8, col("o_orderkey"))
           .write.mode("overwrite").parquet(ranged)

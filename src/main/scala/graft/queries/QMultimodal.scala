@@ -128,7 +128,7 @@ private[queries] object QMultimodal {
         .dHashImages(Multimodal.synthImages(tPar(s, dir, "documents"), "doc_id"))
         .toDF()
       val tbl = Scratch.table("img_idx")
-      Scratch.tableOnce(tbl, dir)(
+      graft.Memo.once(tbl, dir)(
         Multimodal.persistImageIndex(
           hashes.filter(col("asset_id") % 5 =!= 0), "asset_id", "dhash", tbl, buckets = 8))
       Multimodal.probeImageIndex(
@@ -151,7 +151,7 @@ private[queries] object QMultimodal {
       val tbl = Scratch.table("img_idx_mnt")
       Scratch.registerTable(graft.ext.BucketedIndex.tombTable(tbl))
       Scratch.registerTable(tbl + "__compact_stage")
-      Scratch.tableOnce(tbl, dir) {
+      graft.Memo.once(tbl, dir) {
         val g = graft.ops.Hashing.md5Mod(col("asset_id").cast("string"), 4L)
         Multimodal.persistImageIndex(
           corpus.filter(g =!= 0), "asset_id", "dhash", tbl, buckets = 8)
@@ -180,7 +180,7 @@ private[queries] object QMultimodal {
       val corpus = hashes.filter(col("asset_id") % 5 =!= 0)
       val tbl = Scratch.table("img_idx_rb")
       Scratch.registerVersionedIndex(tbl)
-      Scratch.tableOnce(tbl, dir) {
+      graft.Memo.once(tbl, dir) {
         Multimodal.persistImageIndex(
           corpus.filter(col("asset_id") % 2 === 0), "asset_id", "dhash", tbl, buckets = 8)
         Multimodal.deleteFromImageIndex(
@@ -203,7 +203,7 @@ private[queries] object QMultimodal {
         .audioFingerprints(Multimodal.synthWavAudio(tPar(s, dir, "documents"), "doc_id"))
         .toDF()
       val tbl = Scratch.table("aud_idx")
-      Scratch.tableOnce(tbl, dir)(
+      graft.Memo.once(tbl, dir)(
         Multimodal.persistHammingIndex(
           fps.filter(col("asset_id") % 5 =!= 0), "asset_id", "fingerprint", tbl, buckets = 8))
       Multimodal.probeHammingIndex(
@@ -226,7 +226,7 @@ private[queries] object QMultimodal {
       // video), and candidates are Σ bucket²; the cap quarantines the
       // boilerplate buckets at layout time, measured 93 MB → ~1 MB of
       // pair-distinct shuffle at sf0.1 for the same non-boilerplate pairs
-      Scratch.tableOnce(tbl, dir)(
+      graft.Memo.once(tbl, dir)(
         Multimodal.persistHammingIndex(
           fh.filter(col("asset_id") % 5 =!= 0), "frame_key", "dhash", tbl, buckets = 8,
           maxBucket = 64))
@@ -257,11 +257,11 @@ private[queries] object QMultimodal {
       val corpus = fh.filter(col("asset_id") % 5 =!= 0)
       val sample = fh.filter(col("asset_id") % 25 === 0) // 1/5 of the incoming stratum
       val capped = Scratch.table("frm_idx") // shared build with mm_frame_index_probe
-      Scratch.tableOnce(capped, dir)(
+      graft.Memo.once(capped, dir)(
         Multimodal.persistHammingIndex(
           corpus, "frame_key", "dhash", capped, buckets = 8, maxBucket = 64))
       val uncapped = Scratch.table("frm_idx_unc")
-      Scratch.tableOnce(uncapped, dir)(
+      graft.Memo.once(uncapped, dir)(
         Multimodal.persistHammingIndex(corpus, "frame_key", "dhash", uncapped, buckets = 8))
       val nC = Multimodal
         .probeHammingIndex(s, capped, sample, "frame_key", "dhash", maxHamming = 8)
@@ -294,7 +294,7 @@ private[queries] object QMultimodal {
       val tbl = Scratch.table("frm_idx_sw")
       Scratch.registerTable(graft.ext.BucketedIndex.quarTable(tbl))
       Scratch.registerTable(graft.ext.BucketedIndex.quarWmTable(tbl))
-      Scratch.tableOnce(tbl, dir) {
+      graft.Memo.once(tbl, dir) {
         Multimodal.persistHammingIndex(
           corpus, "frame_key", "dhash", tbl, buckets = 8, maxBucket = 64)
         Multimodal.quarantineHammingIndex(
@@ -338,7 +338,7 @@ private[queries] object QMultimodal {
       val tbl = Scratch.table("frm_idx_sched")
       Scratch.registerTable(graft.ext.BucketedIndex.quarTable(tbl))
       Scratch.registerTable(graft.ext.BucketedIndex.quarWmTable(tbl))
-      Scratch.tableOnce(tbl, dir) {
+      graft.Memo.once(tbl, dir) {
         Multimodal.persistHammingIndex(
           corpus, "frame_key", "dhash", tbl, buckets = 8, maxBucket = 64)
         Multimodal.quarantineHammingIndex(
@@ -399,7 +399,7 @@ private[queries] object QMultimodal {
     "mm_clip_containment" -> { (s, dir) =>
       val fh = frameHashes(s, dir) // the shared spilled frame-key grain
       val tbl = Scratch.table("frm_idx")
-      Scratch.tableOnce(tbl, dir)(
+      graft.Memo.once(tbl, dir)(
         Multimodal.persistHammingIndex(
           fh.filter(col("asset_id") % 5 =!= 0), "frame_key", "dhash", tbl, buckets = 8,
           maxBucket = 64))

@@ -37,7 +37,7 @@ private[queries] object QShared {
     * shares one GIF-decode+dHash pass per sf.
     */
   private[queries] def frameHashes(s: SparkSession, dir: String): DataFrame =
-    Dedup.spilled(
+    graft.Memo.planFrame(
       Multimodal
         .dHashFrames(
           Multimodal.synthGifAnimations(tPar(s, dir, "documents"), "doc_id"), everyNth = 1)

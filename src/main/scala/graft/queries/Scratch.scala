@@ -9,8 +9,11 @@ package graft.queries
   *     zip/json parse failures). Every path therefore embeds the pid.
   *   - CLEANUP: pid-scoped paths are never reused across JVMs, so they are
   *     garbage the moment this JVM exits — a shutdown hook deletes every
-  *     path registered here (spills included; the memo map only holds path
-  *     strings, so nothing pins a SparkSession — see PipelineQ.memoDisk).
+  *     path registered here (spills included; [[graft.Memo]] holds only
+  *     path strings for its frames, so nothing pins a SparkSession).
+  *
+  * Fixture dirs and tables built here once per sf dir go through
+  * [[graft.Memo.once]].
   */
 object Scratch {
 
@@ -19,63 +22,6 @@ object Scratch {
   Runtime.getRuntime.addShutdownHook(new Thread(() => {
     created.forEach(p => deleteRecursively(new java.io.File(p)))
   }))
-
-  /** Run a fixture-building `write` ONCE per JVM for `path`: the fixture
-    * content is a deterministic function of the sf dir and the path is
-    * pid-scoped, so re-writing on every invocation — bench runs each
-    * query three times (warmup + two timed passes) — only re-measures
-    * harness setup, not the scan under test. The `_graft_done` marker is
-    * created AFTER `write` returns, so a crashed build never counts; the
-    * underscore prefix keeps every Spark/Hadoop file listing from
-    * treating the marker as data.
-    */
-  private val onceGuard = new java.util.concurrent.ConcurrentHashMap[String, Unit]()
-
-  def once(path: String)(write: => Unit): Unit =
-    // computeIfAbsent serializes same-path builders (Verify runs queries
-    // concurrently in one JVM — an unguarded check-then-act would let two
-    // queries sharing a fixture dir double-write / scan a half-built
-    // fixture); the marker file still carries the cross-JVM memo
-    onceGuard.computeIfAbsent(path, _ => {
-      val marker = new java.io.File(path, "_graft_done")
-      if (!marker.exists()) {
-        write
-        marker.getParentFile.mkdirs()
-        marker.createNewFile(): Unit
-      }
-    })
-
-  private val tableBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** [[once]] for catalog TABLES, keyed by (table, sf dir): table names are
-    * pid-scoped but NOT sf-scoped, and one bench JVM runs the warmup at
-    * sf0.001 before the timed passes at sf0.1 — a marker keyed on the
-    * table alone would serve the warmup's tiny index to the timed run.
-    * Rebuilds whenever the data key changes, skips when it matches — a
-    * serving index is built once per corpus, not once per query, which is
-    * the production posture the persisted-index operators exist to model.
-    */
-  private val tableLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  def tableOnce(table: String, key: String)(build: => Unit): Unit = {
-    // a PER-TABLE lock object serializes same-table builders: two queries
-    // sharing one index table (ann_index_scored/filtered) run concurrently
-    // under Verify, and an unguarded double-build lets one scan the table
-    // mid-DROP/rewrite. The lock is NOT the CHM bin lock (an earlier
-    // compute()-based version held a bin lock across a multi-minute Spark
-    // build — unrelated tables hashing to the same bin blocked behind it,
-    // and a re-entrant tableOnce from inside a build would have thrown
-    // 'recursive update'); monitors are re-entrant and per-table, so only
-    // genuine same-table contention waits. A failed build stores nothing —
-    // the next caller retries.
-    val lock = tableLocks.computeIfAbsent(table, _ => new Object)
-    lock.synchronized {
-      if (tableBuilt.get(table) != key) {
-        build
-        tableBuilt.put(table, key): Unit
-      }
-    }
-  }
 
   /** Delete a scratch path's CURRENT contents now (for queries that append
     * into a dir and re-run within one JVM — bench's warmup + two timed

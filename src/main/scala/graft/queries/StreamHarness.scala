@@ -25,7 +25,8 @@ private[graft] object StreamHarness {
     * 32 partitions is pure commit overhead — a production deployment sizes
     * this to its key cardinality, and the parity claim is partition-count
     * independent. `newSession` shares the SparkContext but NOT runtime-set
-    * SQL confs, so the fixture-critical ones are copied over explicitly.
+    * SQL confs, so the session time zone is copied over explicitly (confs
+    * set at session build, such as the parquet nanos decoding, carry over).
     */
   /** Test hook: the clone the most recent stream-parity query ran on.
     * Sink views register in the CLONE's catalog, so hygiene specs must
@@ -65,9 +66,6 @@ private[graft] object StreamHarness {
     s2.conf.set(
       "spark.sql.streaming.checkpointLocation",
       graft.queries.Scratch.dirAt(ckptRoot, "stream_ckpt", "root"))
-    s2.conf.set(
-      "spark.sql.legacy.parquet.nanosAsLong",
-      s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "true"))
     s2.conf.set(
       "spark.sql.session.timeZone",
       s.conf.get("spark.sql.session.timeZone", "UTC"))

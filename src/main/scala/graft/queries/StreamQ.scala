@@ -425,7 +425,7 @@ object StreamQ {
       // token explosion feeds BOTH the stream and the batch-side exact
       // counts; the plan-keyed spill tokenizes once across the two reads
       // and across bench re-runs
-      val tokens = Dedup.spilled(
+      val tokens = graft.Memo.planFrame(
         t(s, dir, "documents")
           .select(explode(split(trim(col("text")), "\\s+")).as("token"))
           .filter(length(col("token")) > 0),
@@ -527,7 +527,7 @@ object StreamQ {
       // shared across the three gram-verify stream surfaces AND their bench
       // re-runs: the parity clones are fresh sessions, so the plan-keyed
       // spill (not session-keyed) is what makes this compute-once
-      val g = Dedup.spilled(
+      val g = graft.Memo.planFrame(
         Dedup.shingled(docsDf, col("doc_id"), col("text"), 3), "stream_grams")
       val verified = cands
         .join(g.select(col("doc_id").as("id_lo"), col("grams").as("g_lo")), "id_lo")
@@ -581,7 +581,7 @@ object StreamQ {
       // shared across the three gram-verify stream surfaces AND their bench
       // re-runs: the parity clones are fresh sessions, so the plan-keyed
       // spill (not session-keyed) is what makes this compute-once
-      val g = Dedup.spilled(
+      val g = graft.Memo.planFrame(
         Dedup.shingled(docsDf, col("doc_id"), col("text"), 3), "stream_grams")
       val verified = cands
         .join(g.select(col("doc_id").as("new_id"), col("grams").as("g_new")), "new_id")
@@ -628,7 +628,7 @@ object StreamQ {
       // and shared across invocations via the plan-keyed spill — only the
       // (small) bucketed write repeats.
       graft.sources.Sources.writeBucketed(
-        Dedup.spilled(
+        graft.Memo.planFrame(
           Dedup.lshIndex(corpus, col("doc_id"), col("text"), n = 3, k = 8, bands = 4),
           "lsh_maint_bands").withColumn("seq", lit(0L)), // era 0 (the appendLshIndex schema)
         table, 8, "band", "bh")
@@ -637,7 +637,7 @@ object StreamQ {
       // shared across the three gram-verify stream surfaces AND their bench
       // re-runs: the parity clones are fresh sessions, so the plan-keyed
       // spill (not session-keyed) is what makes this compute-once
-      val g = Dedup.spilled(
+      val g = graft.Memo.planFrame(
         Dedup.shingled(docsDf, col("doc_id"), col("text"), 3), "stream_grams")
       val outDir = Scratch.dir("lsh_maint", dir)
       Scratch.reset(outDir)
@@ -715,11 +715,11 @@ object StreamQ {
       // frame is shared verbatim with stream_index_maintain's spill.
       s.sql(s"DROP TABLE IF EXISTS $tomb")
       graft.sources.Sources.writeBucketed(
-        Dedup.spilled(
+        graft.Memo.planFrame(
           Dedup.lshIndex(corpus, col("doc_id"), col("text"), n = 3, k = 8, bands = 4),
           "lsh_maint_bands").withColumn("seq", lit(0L)), // era 0 (the appendLshIndex schema)
         table, 8, "band", "bh")
-      val g = Dedup.spilled(
+      val g = graft.Memo.planFrame(
         Dedup.shingled(docsDf, col("doc_id"), col("text"), 3), "stream_grams")
       val outDir = Scratch.dir("lsh_retract", dir)
       Scratch.reset(outDir)
@@ -1118,7 +1118,7 @@ object StreamQ {
       Scratch.registerVersionedIndex(table)
       s.sql(s"DROP TABLE IF EXISTS ${graft.ext.BucketedIndex.tombTable(table)}")
       graft.sources.Sources.writeBucketed(
-        Dedup.spilled(
+        graft.Memo.planFrame(
           Dedup.lshIndex(corpus, col("doc_id"), col("text"), n = 3, k = 8, bands = 4),
           "lsh_maint_bands").withColumn("seq", lit(0L)),
         table, 8, "band", "bh")
@@ -1207,7 +1207,7 @@ object StreamQ {
     // appends are never re-capped, so the quarantined boilerplate buckets
     // regrow and ONLY capped_ppm demands that compact (LSH is healed by
     // now: none). ANN and semantic members never mutate, so their tables
-    // build once per corpus (tableOnce); the two mutated members rebuild
+    // build once per corpus (Memo.once); the two mutated members rebuild
     // per run. Output = the per-cycle plan rows; the oracle re-derives
     // both cycles' censuses from the md5/modulo strata and the shared
     // frame-hash replay arithmetically
@@ -1224,13 +1224,13 @@ object StreamQ {
       val hcorp = frameHashes(s, dir).filter(col("asset_id") % 5 =!= 0)
       val annTbl = Scratch.table("ann_floop")
       Scratch.registerVersionedIndex(annTbl)
-      Scratch.tableOnce(annTbl, dir) {
+      graft.Memo.once(annTbl, dir) {
         val books = Similarity.pqTrainCached(e, "vec_id", "embedding", nsub = 4, nlistSub = 4, iters = 1)
         Similarity.persistAnnIndex(e, "vec_id", "embedding", coarse, books, annTbl, buckets = 8)
       }
       val semTbl = Scratch.table("sem_floop")
       Scratch.registerVersionedIndex(semTbl)
-      Scratch.tableOnce(semTbl, dir)(
+      graft.Memo.once(semTbl, dir)(
         Dedup.persistSemanticIndex(scorp, col("vec_id"), col("embedding"), coarse, semTbl, buckets = 8))
       val lshTbl = Scratch.table("lsh_floop")
       Scratch.registerVersionedIndex(lshTbl)

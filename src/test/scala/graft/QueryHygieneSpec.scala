@@ -12,7 +12,7 @@ class QueryHygieneSpec extends SparkSpecBase {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("every contentKey at a registration site embeds the sf dir") {
-    // The content-keyed spill (Dedup.spilledAt and the wrappers built on
+    // The content-keyed spill (Memo.frame and the wrappers built on
     // it: rareGramsKeyed, connectedComponentsKeyed, verifiedNearDupPairs,
     // triangleStats, kcorePeel/LPA/BFS) trusts the CALLER to identify the
     // input data. One JVM runs the same query at multiple scale factors
@@ -65,6 +65,36 @@ class QueryHygieneSpec extends SparkSpecBase {
     graft.ext.Dedup.spillCensus().foreach { case (key, bytes) =>
       assert(bytes >= 0, s"spill census for '$key' negative: $bytes")
     }
+  }
+
+  test("JVM-global concurrent maps and references live only in the memo and the allowlist") {
+    // One memo (graft.Memo) instead of one cache per module: a new
+    // ConcurrentHashMap / WeakHashMap / AtomicReference field anywhere
+    // else in main code fails here, so adding a cache means removing one
+    // or extending this list in review. BucketedIndex keeps its table-state
+    // caches (served version, quarantine watermark/rank mirrors, in-flight
+    // builds) behind its one writer; Scratch keeps its exit-time deletion set.
+    val allowed = Set(
+      "BucketedIndex.scala:versionMemo", "BucketedIndex.scala:inFlightBuilds",
+      "BucketedIndex.scala:wmMirror", "BucketedIndex.scala:rankMirror",
+      "Scratch.scala:created")
+    // a declaration typed as, or initialised (possibly on the next line)
+    // with, one of the three classes
+    val t = "(?:ConcurrentHashMap|WeakHashMap|AtomicReference)"
+    val fieldRe =
+      (raw"""\b(?:val|var)\s+(\w+)\s*(?::[^=\n]*\b$t\b[^=\n]*|""" +
+        raw"""(?::[^=\n]*)?=\s*(?:new\s+)?[\w.]*\b$t\b)""").r
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    val found = walk(new java.io.File("src/main/scala"))
+      .filter(f => f.getName.endsWith(".scala") && f.getName != "Memo.scala")
+      .flatMap { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        fieldRe.findAllMatchIn(src).map(m => s"${f.getName}:${m.group(1)}")
+      }
+    assert(found.toSet.contains("Scratch.scala:created"), s"the scan must see known fields: $found")
+    val extra = found.filterNot(allowed)
+    assert(extra.isEmpty, s"JVM-global caches outside graft.Memo and the allowlist: $extra")
   }
 
   test("every registered query has an oracle twin, and no oracle is orphaned") {

@@ -880,9 +880,9 @@ class DedupSpec extends SparkSpecBase {
     val n = System.nanoTime()
     def mk(i: Int) = Seq((i.toLong, s"spill fixture $i $n")).toDF("id", "text")
     def census() = Dedup.spillCensus().filter(_._1.startsWith("evspec_")).toMap
-    def acquire(i: Int) = Dedup.spilledAt(mk(i), "evspec", s"evict_fixture_${n}_$i", spark)
-    val before = Dedup.spillEvictions
-    val cap0 = Dedup.setSpillCapBytes(Long.MaxValue)
+    def acquire(i: Int) = graft.Memo.frame("evspec", Some(s"evict_fixture_${n}_$i"), spark)(mk(i))
+    val before = graft.Memo.evictions
+    val cap0 = graft.Memo.setCapBytes(Long.MaxValue)
     try {
       // three tiny spills under a generous cap: all retained; record each
       // entry's memo key as it appears (census delta per acquisition)
@@ -900,10 +900,10 @@ class DedupSpec extends SparkSpecBase {
       // 3.5 spills' worth: the 4th pushes over, ONE eviction brings it
       // back under (the four spills are byte-identical single-row parquet)
       val perSpill = census().values.max
-      Dedup.setSpillCapBytes(perSpill * 7 / 2): Unit
+      graft.Memo.setCapBytes(perSpill * 7 / 2): Unit
       acquire(4).count(): Unit
       val after = census()
-      assert(Dedup.spillEvictions > before, "the cap must have evicted")
+      assert(graft.Memo.evictions > before, "the cap must have evicted")
       assert(!after.contains(keys(1)), "the oldest-unused entry (2) must be the eviction")
       assert(after.contains(keys(0)) && after.contains(keys(2)),
         "recently-touched entries must survive")
@@ -914,7 +914,7 @@ class DedupSpec extends SparkSpecBase {
         assert(acquire(i).collect().map(_.getLong(0)).toSeq == Seq(i.toLong),
           s"post-eviction re-request of spill $i must serve the right content")
       }
-    } finally Dedup.setSpillCapBytes(cap0): Unit
+    } finally graft.Memo.setCapBytes(cap0): Unit
   }
 
   test("LSH quarantine sweep: capped-probe ∪ sweep equals uncapped, tombstones respected") {

@@ -423,34 +423,39 @@ class SimilaritySpec extends SparkSpecBase {
   }
 
   test("model memo stays bounded: oldest entries evict, a re-request recomputes") {
-    // flood with synthetic model-shaped entries well past the bound; the
-    // memo is a pure performance cache, so eviction is always safe
-    (0 until 300).foreach(i =>
-      Similarity.memoized(s"km_spec_evict_$i")(Array(Seq(i.toLong))))
-    assert(Similarity.modelMemoCensus().size <= 256,
-      s"memo must stay bounded: ${Similarity.modelMemoCensus().size}")
-    assert(Similarity.modelMemoEvictions > 0, "flooding past the bound must evict")
-    // an evicted key recomputes on demand — no correctness dependence on
-    // residency (the value below differs from the original on purpose)
-    val v = Similarity.memoized("km_spec_evict_0")(Array(Seq(42L)))
-    assert(v(0) == Seq(42L) || v(0) == Seq(0L), s"unexpected value: ${v(0)}")
+    // flood with synthetic model-shaped entries well past a cap of 256
+    // such entries; the memo is a pure performance cache, so eviction is
+    // always safe
+    def fit(i: Int, v: Long) = graft.Memo.value("km_spec_evict", s"$i", spark)(Array(Seq(v)))
+    val before = graft.Memo.evictions
+    val cap0 = graft.Memo.setCapBytes(256 * graft.Memo.approxBytes(Array(Seq(0L))))
+    try {
+      (0 until 300).foreach(i => fit(i, i.toLong))
+      assert(Similarity.modelMemoCensus().size <= 256,
+        s"memo must stay bounded: ${Similarity.modelMemoCensus().size}")
+      assert(graft.Memo.evictions > before, "flooding past the bound must evict")
+      // an evicted key recomputes on demand — no correctness dependence on
+      // residency (the value below differs from the original on purpose)
+      val v = fit(0, 42L)
+      assert(v(0) == Seq(42L) || v(0) == Seq(0L), s"unexpected value: ${v(0)}")
+    } finally graft.Memo.setCapBytes(cap0): Unit
   }
 
   test("memoized: a throwing compute leaves no queue residue and the key stays computable") {
-    val qBefore = Similarity.modelMemoQueueSize
+    def qSize = graft.Memo.census().size
+    val qBefore = qSize
     for (_ <- 1 to 5)
       intercept[RuntimeException](
-        Similarity.memoized[AnyRef]("km_spec_fail")(throw new RuntimeException("training failed")))
-    // failures must not enqueue: a stale queue key with no map entry
-    // would burn eviction-loop iterations forever
-    assert(Similarity.modelMemoQueueSize == qBefore,
-      s"failed computes leaked queue entries: $qBefore -> ${Similarity.modelMemoQueueSize}")
+        graft.Memo.value[AnyRef]("km_spec_fail", "k", spark)(throw new RuntimeException("training failed")))
+    // failures must not leave an entry: a stale key with no model would
+    // burn eviction-loop iterations forever
+    assert(qSize == qBefore, s"failed computes leaked memo entries: $qBefore -> $qSize")
     // the key is not poisoned — a later successful fit lands normally
-    // (queue grows by AT MOST one: when the memo sits at its bound, the
+    // (the memo grows by AT MOST one: when the memo sits at its cap, the
     // eviction loop retires an oldest entry in the same call)
-    val v = Similarity.memoized("km_spec_fail")(Array(Seq(7L)))
+    val v = graft.Memo.value("km_spec_fail", "k", spark)(Array(Seq(7L)))
     assert(v(0) == Seq(7L))
-    assert(Similarity.modelMemoQueueSize <= qBefore + 1)
+    assert(qSize <= qBefore + 1)
   }
 
   test("appendAnnIndex: append-then-probe hash-equals one-shot rebuild under a pinned model") {
