@@ -77,18 +77,17 @@ object Bench {
       }
     // Measure the stream-harness floor (fixed MemoryStream/micro-batch cost
     // every stream_* query pays regardless of operator — see
-    // StreamHarness.harnessFloor). Min-of-3 after the warmup pass, same
-    // discipline as query timing; ~21 stream_* queries × a 1.5-4.5 s floor
-    // is ~40 s of the board total that is harness, not operator, and
-    // BenchDiff subtracts this floor before banding stream_* deltas.
+    // StreamHarness.harnessFloor, which runs the queries' own sinkRun loop).
+    // Min-of-3 after the warmup pass, same discipline as query timing; 29
+    // stream_* queries each pay one floor, harness rather than operator
+    // time, and BenchDiff subtracts it before banding stream_* deltas.
     def floorMin(stateful: Boolean): Double =
       (0 until 3).map(_ => graft.queries.StreamHarness.harnessFloor(spark, stateful)).min
     val floorStateless = try floorMin(stateful = false) catch { case _: Throwable => -1.0 }
     val floorStateful = try floorMin(stateful = true) catch { case _: Throwable => -1.0 }
     var failed = Set.empty[String]
     // statefulness OBSERVED off each stream run's executed plan
-    // (StreamHarness.stopRecording) — the floor attribution source; the
-    // hand-pinned StreamQ.statefulQueries set is only cross-checked
+    // (StreamHarness.stopRecording) — the floor attribution source
     val observedStateful = scala.collection.mutable.Map.empty[String, Boolean]
     case class Meas(sec: Double, shuffle: Long, spill: Long)
     def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Meas = {
@@ -168,24 +167,14 @@ object Bench {
     // time, so a committed bench_history file reads as operator cost
     // without a BenchDiff run. BenchDiff prefers these per-entry floors
     // over the file-level fallback. Statefulness comes from the EXECUTED
-    // plan (state operators observed in the run's streaming progress),
-    // falling back to the pinned StreamQ.statefulQueries set only when no
-    // run completed; the pin is cross-checked below and a mismatch is
-    // reported in the JSON — a misclassified entry can no longer silently
-    // draw the wrong floor.
-    def isStateful(k: String): Boolean =
-      observedStateful.getOrElse(k, graft.queries.StreamQ.statefulQueries(k))
+    // plan (state operators observed in the run's streaming progress); an
+    // entry with no completed run has no observation and carries no floor.
     def floorOf(k: String): Double =
-      if (!k.startsWith("stream_")) -1.0
-      else if (isStateful(k)) floorStateful
-      else floorStateless
-    val misclassified = observedStateful.collect {
-      case (k, obs) if obs != graft.queries.StreamQ.statefulQueries(k) => k
-    }.toSeq.sorted
-    if (misclassified.nonEmpty)
-      System.err.println(
-        s"[bench] statefulQueries pin disagrees with the executed plans: " +
-          misclassified.mkString(", "))
+      observedStateful.get(k) match {
+        case Some(true)  => floorStateful
+        case Some(false) => floorStateless
+        case None        => -1.0
+      }
     val qs = results.map { case (k, m) =>
       val fl = floorOf(k)
       val floorPart =
@@ -221,7 +210,6 @@ object Bench {
       s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"sf":"$sfDir",""" +
         s""""shuffle_mb":${mb(totalShuffle)},"spill_mb":${mb(totalSpill)},"failed":${failed.size},""" +
         s""""host_loadavg1":${f(hostLoad1)},"host_jvms":$hostJvms,""" +
-        s""""floor_misclassified":${misclassified.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
         s""""harness_floor_sec":${f(floorStateless)},"harness_floor_stateful_sec":${f(floorStateful)}}"""
     val line =
       s"""{"metric":"total","value":${f(total)},"unit":"sec","sf":"$sfDir",""" +
