@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.sources.Sources
@@ -34,8 +35,14 @@ import graft.sources.Sources
   *   - REBUILD publishes a fully-built version by one catalog RENAME
   *     (probe-safe on a plain catalog).
   *   - QUARANTINE + SWEEP: a capped layout's dropped rows persist under
-  *     `<table>_quar`, and bounded ticks recover them against a durable
-  *     watermark, committed only after each tick's output is written.
+  *     `<table>_quar`, each stamped with its bucket's sweep rank, and
+  *     bounded ticks recover them rank range by rank range against a
+  *     durable watermark, committed only after each tick's output is
+  *     written.
+  *
+  * The catalog and these companion tables are the only record of index
+  * state: versions are listed, watermarks and ranks are read back, and
+  * no driver-side copy of either can go stale.
   *
   * The maintenance policy ([[Maintenance]]) drives every family through
   * these same actions — the "Continuously Adaptive Similarity Search"
@@ -139,7 +146,7 @@ object BucketedIndex {
       if (keepsQuarantine(s, table, maxBucket))
         writeQuarantine(
           s, table, buckets, staged = true,
-          withoutTombstones(s, table, s.table(quarTable(table))).unionByName(
+          withoutTombstones(s, table, s.table(quarTable(table))).drop("__rank").unionByName(
             Dedup.capDropped(healed, keys, maxBucket).select(payload :+ col("seq"): _*)))
       Sources.compactBucketed(
         s, servingTable(s, table), buckets, keys,
@@ -155,64 +162,51 @@ object BucketedIndex {
       writeQuarantine(s, table, buckets, staged = false, rows.withColumn("seq", lit(era)))
 
     /** The ONE writer of `<table>_quar` (layout-time quarantine and
-      * compaction capture alike): the pass's rank snapshot drops before
-      * the write and the watermark restarts after it, so the driver-side
-      * mirrors can never describe older quarantine content. `staged`
-      * content reads the table it replaces, so it rewrites through
-      * [[Sources.compactBucketed]]'s stage.
+      * compaction capture alike). Each stored row carries its bucket's
+      * SWEEP RANK `__rank` (1-based): membership DESC — the
+      * regrowth-heaviest boilerplate first — then the bucket keys. The
+      * ranks are computed at bucket grain and broadcast back onto the
+      * members, so the table itself is the pass's bucket order and a tick
+      * selects its slice by predicate. The watermark restarts after the
+      * write. `staged` content reads the table it replaces, so it rewrites
+      * through [[Sources.compactBucketed]]'s stage.
       */
     private def writeQuarantine(
         s: SparkSession, table: String, buckets: Int, staged: Boolean, content: DataFrame): Unit = {
       val qT = quarTable(table)
-      rankMirror.remove(qT)
-      if (staged) Sources.compactBucketed(s, qT, buckets, keys, content)
-      else Sources.writeBucketed(content, qT, buckets, keys.head, keys.tail: _*)
+      val bucketCols = keys.map(col)
+      val sweepOrder = Window.orderBy(col("__n").desc +: bucketCols: _*)
+      val ranks = content
+        .groupBy(bucketCols: _*)
+        .agg(count(lit(1)).as("__n"))
+        .select(bucketCols :+ row_number().over(sweepOrder).cast("long").as("__rank"): _*)
+      val ranked = content.join(broadcast(ranks), keys)
+      if (staged) Sources.compactBucketed(s, qT, buckets, keys, ranked)
+      else Sources.writeBucketed(ranked, qT, buckets, keys.head, keys.tail: _*)
       resetSweep(s, table)
     }
 
-    /** Begin a fresh sweep PASS: watermark to zero, bucket total
-      * re-snapshotted from the quarantine (the rank snapshot's length).
+    /** Begin a fresh sweep PASS: watermark to zero, bucket total read
+      * from the quarantine as its highest rank (one-row aggregate).
       */
     def resetSweep(s: SparkSession, table: String): Unit = {
       val qT = quarTable(table)
       require(s.catalog.tableExists(qT), s"index '$table' has no quarantine side to sweep")
-      rankMirror.remove(qT)
-      quarWmWrite(s, table, swept = 0L, total = rankedBuckets(s, table).size.toLong)
+      quarWmWrite(s, table, swept = 0L, total = s.table(qT).select(rankTotal).head.getLong(0))
     }
-
-    /** Per-PASS snapshot of the quarantine's bucket list in sweep order:
-      * membership DESC (the regrowth-heaviest boilerplate first), then the
-      * bucket keys. Ranks only change when the quarantine is rewritten,
-      * and [[writeQuarantine]] drops the snapshot, so a pass ranks once
-      * instead of re-windowing per tick. Bucket grain (at most
-      * corpus/cap buckets), never member grain.
-      */
-    private def rankedBuckets(s: SparkSession, table: String): Seq[Row] =
-      rankMirror.computeIfAbsent(quarTable(table), { qT =>
-        s.table(qT)
-          .groupBy(keys.map(col): _*)
-          .agg(count(lit(1)).as("__n"))
-          .orderBy(col("__n").desc +: keys.map(col): _*)
-          .select(keys.map(col): _*)
-          .collect()
-          .toSeq
-      })
 
     /** The live quarantined members of bucket ranks `(lo, hi]` — the
-      * input of one sweep tick's verify join. The slice is a local
-      * relation of at most `maxBucketsPerTick` key rows joined by
-      * broadcast. The watermark may come from the persisted table (a
-      * fresh JVM's cold read), so an out-of-range rank fails loudly
-      * instead of sweeping a wrapped range.
+      * input of one sweep tick's verify join, a rank-range filter on the
+      * quarantine's own bucketed scan.
       */
     def sweepMembers(s: SparkSession, table: String, lo: Long, hi: Long): DataFrame = {
-      val slice = rankedBuckets(s, table).slice(Math.toIntExact(lo), Math.toIntExact(hi))
       val quar = s.table(quarTable(table))
-      val tickBuckets = s.createDataFrame(
-        java.util.Arrays.asList(slice: _*), quar.select(keys.map(col): _*).schema)
-      withoutTombstones(s, table, quar).join(broadcast(tickBuckets), keys)
+      withoutTombstones(s, table, quar.filter(col("__rank") > lo && col("__rank") <= hi)).drop("__rank")
     }
   }
+
+  /** The quarantine's bucket total: its highest sweep rank (0 when empty). */
+  private def rankTotal: Column = coalesce(max(col("__rank")), lit(0L)).as("ranked")
 
   /** Companion-table names of a logical index: its tombstones, its
     * quarantine and the quarantine's sweep watermark. Logical-name
@@ -293,51 +287,15 @@ object BucketedIndex {
 
   private val VersionSuffix = "__v(\\d+)$".r
 
-  /** JVM-scoped memo of the resolved serving VERSION per db-qualified
-    * logical name: resolution otherwise lists the catalog per probe. Only
-    * [[publishVersion]] and [[resetVersions]] write version history, and
-    * both invalidate it; a memoized N ≥ 1 is trust-but-verify (one
-    * exact-name `tableExists`), so an out-of-band drop degrades to a
-    * recompute. The recompute inserts via `computeIfAbsent`, atomic
-    * against the writers' `remove` — a get-then-put could re-install a
-    * pre-publish version after the invalidation, which would then pass
-    * trust-but-verify forever (the grace version still exists).
-    *
-    * The memo assumes version writers share this JVM's catalog. On a
-    * shared external metastore with out-of-band publishers, set
-    * `spark.graft.index.versionMemo.enabled=false` (session conf, read per
-    * resolution) to list the catalog fresh on every call.
+  /** The serving VERSION of a logical index, listed from the catalog on
+    * every call: the catalog is the only record of version history, so a
+    * version published or dropped by another writer is seen at once.
     */
-  private val versionMemo = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
-  private[graft] val VersionMemoEnabledKey = "spark.graft.index.versionMemo.enabled"
-
-  private def memoKey(s: SparkSession, table: String): String =
-    s.sessionState.catalog.getCurrentDatabase + "." + table
-
-  private def listedVersion(s: SparkSession, table: String): Int =
+  private[graft] def servingVersion(s: SparkSession, table: String): Int =
     s.sessionState.catalog
       .listTables(s.sessionState.catalog.getCurrentDatabase, s"${table}__v*")
       .flatMap(t => VersionSuffix.findFirstMatchIn(t.table).map(_.group(1).toInt))
       .sorted.lastOption.getOrElse(0)
-
-  private[graft] def servingVersion(s: SparkSession, table: String): Int = {
-    val key = memoKey(s, table)
-    if (!s.conf.get(VersionMemoEnabledKey, "true").toBoolean) {
-      // drop any cached entry too, so re-enabling starts clean
-      versionMemo.remove(key): Unit
-      return listedVersion(s, table)
-    }
-    val memo = versionMemo.get(key)
-    if (memo != null && (memo.intValue == 0 || s.catalog.tableExists(s"${table}__v$memo")))
-      memo.intValue
-    else {
-      // failed trust-but-verify: retire exactly the entry we read (the
-      // value-qualified remove never clobbers a concurrent writer's state)
-      if (memo != null) versionMemo.remove(key, memo): Unit
-      versionMemo.computeIfAbsent(key, _ => Integer.valueOf(listedVersion(s, table))).intValue
-    }
-  }
 
   /** Fresh build ⇒ fresh version history: drop every published version
     * and any abandoned build stage (which would otherwise carry a version
@@ -346,7 +304,6 @@ object BucketedIndex {
   private[graft] def resetVersions(s: SparkSession, table: String): Unit = {
     (1 to servingVersion(s, table)).foreach(v => s.sql(s"DROP TABLE IF EXISTS `${table}__v$v`"))
     dropAbandonedBuilds(s, table)
-    versionMemo.remove(memoKey(s, table)): Unit
   }
 
   /** Build stages currently inside a [[publishVersion]] call — what
@@ -406,10 +363,6 @@ object BucketedIndex {
       Sources.dropStaleLocation(s, next)
       s.sql(s"ALTER TABLE `$bld` RENAME TO `$next`") // atomic publication
     } finally inFlightBuilds.remove(bldKey): Unit
-    // invalidate BEFORE retiring old generations: a resolution between
-    // the rename and here reads the memoized N−1, the grace set that
-    // survives this publication
-    versionMemo.remove(memoKey(s, table)): Unit
     retireTombstonesBelow(s, table, era)
     (1 until cur).foreach(v => s.sql(s"DROP TABLE IF EXISTS `${table}__v$v`"))
     if (cur >= 1) s.sql(s"DROP TABLE IF EXISTS `$table`")
@@ -434,34 +387,18 @@ object BucketedIndex {
   private def keepsQuarantine(s: SparkSession, table: String, maxBucket: Int): Boolean =
     maxBucket > 0 && s.catalog.tableExists(quarTable(table))
 
-  /** Driver-side MIRRORS of the sweep state, keyed by table name: the
-    * watermark (so a tick's progress read is a map lookup, not a 1-row
-    * scan job) and the pass's bucket-rank snapshot. Every watermark write
-    * goes through [[quarWmWrite]] and every quarantine write through
-    * `writeQuarantine`, which drop or refresh them; single-writer per
-    * table within a JVM (the maintenance executor's one-action-per-table
-    * guard). The TABLES stay the durable truth: the census scans the
-    * watermark, and a fresh JVM reads it cold (specs clear the watermark
-    * mirror to stand in for that JVM).
-    */
-  private[ext] val wmMirror = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-  private val rankMirror = new java.util.concurrent.ConcurrentHashMap[String, Seq[Row]]()
-
-  /** `(swept_through, quar_buckets)` of a logical index's sweep watermark;
-    * (0, 0) when the index has no quarantine side.
+  /** `(swept_through, quar_buckets)` of a logical index's sweep watermark,
+    * read from its one-row table on every call; (0, 0) when the index has
+    * no quarantine side. The table is the only record: every write goes
+    * through [[quarWmWrite]], and a fresh JVM reads what the last one
+    * committed.
     */
   private[graft] def quarantineWatermark(s: SparkSession, table: String): (Long, Long) = {
     val wmT = quarWmTable(table)
-    wmMirror.get(wmT) match {
-      case null =>
-        if (s.catalog.tableExists(wmT)) {
-          val r = s.table(wmT).collect().head
-          val v = (r.getAs[Long]("swept_through"), r.getAs[Long]("quar_buckets"))
-          wmMirror.put(wmT, v)
-          v
-        } else (0L, 0L)
-      case v => v
-    }
+    if (s.catalog.tableExists(wmT)) {
+      val r = s.table(wmT).head
+      (r.getAs[Long]("swept_through"), r.getAs[Long]("quar_buckets"))
+    } else (0L, 0L)
   }
 
   private def quarWmWrite(s: SparkSession, table: String, swept: Long, total: Long): Unit = {
@@ -479,7 +416,6 @@ object BucketedIndex {
       Sources.dropStaleLocation(s, wmT)
       df.write.format("parquet").saveAsTable(wmT)
     }
-    wmMirror.put(wmT, (swept, total))
   }
 
   /** MAINTENANCE — one bounded sweep TICK: `tick(lo, hi)` builds the
@@ -489,16 +425,30 @@ object BucketedIndex {
     * A tick that dies mid-write leaves the watermark unmoved and the next
     * tick re-covers the same range (at-least-once; sinks are consumed
     * through `distinct()`, so a replayed pair changes no result).
+    *
+    * The tick starts with one durable read: the watermark row beside the
+    * quarantine's highest rank. A watermark whose bucket total exceeds
+    * the ranks stored (written outside this lifecycle, or against older
+    * quarantine content) fails the tick before anything is written.
+    * Returns the `(swept_through, quar_buckets)` the tick committed.
     */
   def sweepTick(s: SparkSession, table: String, maxBucketsPerTick: Int, sink: String)(
-      tick: (Long, Long) => DataFrame): Unit = {
+      tick: (Long, Long) => DataFrame): (Long, Long) = {
     require(maxBucketsPerTick > 0, "sweep ticks must make progress: maxBucketsPerTick >= 1")
     require(s.catalog.tableExists(quarTable(table)), s"index '$table' has no quarantine side to sweep")
-    val (lo, total) = quarantineWatermark(s, table)
+    val r = s.table(quarWmTable(table))
+      .select(col("swept_through"), col("quar_buckets"))
+      .crossJoin(s.table(quarTable(table)).select(rankTotal))
+      .head
+    val (lo, total, ranked) = (r.getLong(0), r.getLong(1), r.getLong(2))
+    if (total > ranked)
+      throw new IllegalStateException(
+        s"index '$table': its sweep watermark counts $total buckets, its quarantine ranks $ranked")
     val hi = math.min(lo + maxBucketsPerTick, total)
     if (hi > lo) {
       tick(lo, hi).write.mode("append").parquet(sink)
       quarWmWrite(s, table, swept = hi, total = total)
-    }
+      (hi, total)
+    } else (lo, total)
   }
 }

@@ -435,7 +435,8 @@ object Dedup {
     * unswept buckets, in [[probeLshIndex]]'s pair schema (`new_id,
     * corpus_id` — the exact Jaccard verify is the caller's composition).
     * Once the watermark closes, capped-probe ∪ sweep ≡ uncapped-probe,
-    * tombstones respected (DedupSpec pins it).
+    * tombstones respected (DedupSpec pins it). Returns the
+    * `(swept_through, quar_buckets)` the tick committed.
     */
   def sweepLshQuarantine(
       s: org.apache.spark.sql.SparkSession,
@@ -448,7 +449,7 @@ object Dedup {
       n: Int = 3,
       k: Int = 8,
       bands: Int = 4
-  ): Unit =
+  ): (Long, Long) =
     BucketedIndex.sweepTick(s, table, maxBucketsPerTick, sink)((lo, hi) =>
       sweepLshTickFrame(s, table, incoming, idCol, textCol, lo, hi, n, k, bands))
 

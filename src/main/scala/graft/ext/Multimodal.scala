@@ -860,17 +860,18 @@ object Multimodal {
   /** The sweep's progress state: `(swept_through, quar_buckets)` — how
     * many of the quarantine's buckets (in sweep rank order: membership
     * DESC, then band, bv) have been swept, out of how many. (0, 0) when
-    * the index has no quarantine side. The bucket total is snapshotted
-    * into the watermark table at quarantine/reset time so the policy
-    * census ([[Maintenance.indexCensus]]'s `swept_through` /
-    * `quar_unswept`) reads one tiny table, not a quarantine scan.
+    * the index has no quarantine side. Each call reads the one-row
+    * watermark table; the bucket total is written there at
+    * quarantine/reset time so this read and the policy census
+    * ([[Maintenance.indexCensus]]'s `swept_through` / `quar_unswept`)
+    * scan one tiny table, not the quarantine.
     */
   def quarantineWatermark(
       s: org.apache.spark.sql.SparkSession, table: String): (Long, Long) =
     BucketedIndex.quarantineWatermark(s, table)
 
   /** Begin a fresh sweep PASS over the current quarantine: watermark back
-    * to zero, bucket total re-snapshotted from the quarantine table.
+    * to zero, bucket total re-read from the quarantine's highest rank.
     * Every quarantine write does this itself; a scheduler calls it to
     * start a new periodic pass over an unchanged quarantine (a new probe
     * batch wants the whole quarantine swept again).
@@ -895,7 +896,8 @@ object Multimodal {
     * most `maxBucketsPerTick` buckets — the quadratic boilerplate mass
     * the cap evicted from the serving path is repaid in scheduled,
     * bounded installments instead of never ([[Maintenance]]'s `sweep`
-    * decision schedules it).
+    * decision schedules it). Returns the `(swept_through, quar_buckets)`
+    * the tick committed.
     */
   def sweepHammingQuarantine(
       s: org.apache.spark.sql.SparkSession,
@@ -906,7 +908,7 @@ object Multimodal {
       maxHamming: Int,
       maxBucketsPerTick: Int,
       sink: String
-  ): Unit =
+  ): (Long, Long) =
     BucketedIndex.sweepTick(s, table, maxBucketsPerTick, sink)((lo, hi) =>
       sweepHammingTickFrame(s, table, incoming, idCol, hashCol, maxHamming, lo, hi))
 
@@ -1007,7 +1009,7 @@ object Multimodal {
   def sweepImageQuarantine(
       s: org.apache.spark.sql.SparkSession, table: String, incoming: DataFrame,
       idCol: String, hashCol: String, maxHamming: Int, maxBucketsPerTick: Int,
-      sink: String): Unit =
+      sink: String): (Long, Long) =
     sweepHammingQuarantine(s, table, incoming, idCol, hashCol, maxHamming, maxBucketsPerTick, sink)
 
   /** Target-dimension arithmetic alone (no pixels) — kept as the cheap

@@ -305,17 +305,16 @@ private[queries] object QMultimodal {
       Multimodal.resetQuarantineSweep(s, tbl)
       val sink = Scratch.dir("quar_sweep", dir)
       Scratch.reset(sink)
-      // watermark reads are mirror-backed (no job per tick); the sweep
-      // itself writes the tick's pairs to the sink and commits the
-      // watermark AFTER the write (at-least-once — see the operator doc)
+      // each tick writes its pairs to the sink, commits the watermark
+      // AFTER the write (at-least-once — see the operator doc) and returns
+      // the state it committed, so progress needs no read-back
       var (swept, total) = Multimodal.quarantineWatermark(s, tbl)
       var wrote = false
       while (swept < total) {
-        Multimodal.sweepHammingQuarantine(
+        val st = Multimodal.sweepHammingQuarantine(
           s, tbl, incoming, "frame_key", "dhash",
           maxHamming = 8, maxBucketsPerTick = 16, sink = sink)
         wrote = true
-        val st = Multimodal.quarantineWatermark(s, tbl)
         swept = st._1
         total = st._2
       }

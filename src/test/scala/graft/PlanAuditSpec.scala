@@ -571,8 +571,8 @@ class PlanAuditSpec extends SparkSpecBase {
   test("quarantine sweep tick: quarantine side exchange-free, bounded sides broadcast") {
     // the recovery path carries the same plan contract as the serving
     // probe: the quarantine table is bucketed on the SAME (band, bv)
-    // keys, so a tick's join reads it exchange-free; the tick-bucket set
-    // (≤ maxBucketsPerTick rows) and the tombstones broadcast
+    // keys, so a tick's join reads it exchange-free; the tick's buckets
+    // are a rank filter on that scan, and the tombstones broadcast
     import org.apache.spark.sql.functions.col
     import graft.ext.Multimodal
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -71,13 +71,12 @@ class QueryHygieneSpec extends SparkSpecBase {
     // One memo (graft.Memo) instead of one cache per module: a new
     // ConcurrentHashMap / WeakHashMap / AtomicReference field anywhere
     // else in main code fails here, so adding a cache means removing one
-    // or extending this list in review. BucketedIndex keeps its table-state
-    // caches (served version, quarantine watermark/rank mirrors, in-flight
-    // builds) behind its one writer; Scratch keeps its exit-time deletion set.
-    val allowed = Set(
-      "BucketedIndex.scala:versionMemo", "BucketedIndex.scala:inFlightBuilds",
-      "BucketedIndex.scala:wmMirror", "BucketedIndex.scala:rankMirror",
-      "Scratch.scala:created")
+    // or extending this list in review. Index state lives in the catalog
+    // and its companion tables; the two fields left hold what no table
+    // can: BucketedIndex's in-flight build stages (the catalog cannot tell
+    // a live stage from an abandoned one) and Scratch's exit-time deletion
+    // registry. The found set must EQUAL the list, so a stale entry fails.
+    val allowed = Set("BucketedIndex.scala:inFlightBuilds", "Scratch.scala:created")
     // a declaration typed as, or initialised (possibly on the next line)
     // with, one of the three classes
     val t = "(?:ConcurrentHashMap|WeakHashMap|AtomicReference)"
@@ -92,9 +91,23 @@ class QueryHygieneSpec extends SparkSpecBase {
         val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
         fieldRe.findAllMatchIn(src).map(m => s"${f.getName}:${m.group(1)}")
       }
-    assert(found.toSet.contains("Scratch.scala:created"), s"the scan must see known fields: $found")
-    val extra = found.filterNot(allowed)
-    assert(extra.isEmpty, s"JVM-global caches outside graft.Memo and the allowlist: $extra")
+    assert(found.toSet == allowed,
+      s"JVM-global caches outside graft.Memo must be exactly the allowlist: found $found")
+  }
+
+  test("main code installs exactly one SparkListener") {
+    // one listener (today Bench's per-query counters) instead of a
+    // hand-rolled copy per harness: a second addSparkListener call fails
+    // here
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    val calls = walk(new java.io.File("src/main/scala"))
+      .filter(_.getName.endsWith(".scala"))
+      .flatMap { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        "addSparkListener\\(".r.findAllMatchIn(src).map(_ => f.getName)
+      }
+    assert(calls.size == 1, s"addSparkListener calls in main code: $calls")
   }
 
   test("every registered query has an oracle twin, and no oracle is orphaned") {

@@ -2,11 +2,12 @@ package graft.ext
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The shared index lifecycle's quarantine-sweep state: the watermark's
-  * cold read from outside the process and the rank snapshot's coherence
-  * with every quarantine write.
+  * cold read from outside the process, and the stored sweep ranks'
+  * coherence with every quarantine write and with each tick's slice.
   */
 class BucketedIndexSpec extends SparkSpecBase {
   import spark.implicits._
@@ -37,17 +38,16 @@ class BucketedIndexSpec extends SparkSpecBase {
     val tbl = quarantined((1L to 15L).map(_ -> 42L) ++ (21L to 32L).map(_ -> far))
     val wmT = BucketedIndex.quarWmTable(tbl)
     val beyond = Int.MaxValue.toLong + 5
-    // a watermark written outside this process, read by a fresh JVM: the
-    // persisted row is the only state, the driver-side mirror is empty
+    // a watermark written outside this process: the persisted row is the
+    // only state, so every read below is a cold one
     spark.createDataFrame(
       java.util.Arrays.asList(Row(beyond, beyond + 10)),
       StructType(Seq(StructField("swept_through", LongType), StructField("quar_buckets", LongType))))
       .write.mode("overwrite").insertInto(wmT)
     spark.catalog.refreshTable(wmT)
-    BucketedIndex.wmMirror.remove(wmT)
     assert(Multimodal.quarantineWatermark(spark, tbl) == ((beyond, beyond + 10)))
     val sink = java.nio.file.Files.createTempDirectory("bispec_wm").resolve("t").toString
-    intercept[ArithmeticException] {
+    intercept[IllegalStateException] {
       Multimodal.sweepHammingQuarantine(
         spark, tbl, Seq((100L, 42L)).toDF("asset_id", "fp"), "asset_id", "fp",
         maxHamming = 8, maxBucketsPerTick = 1, sink = sink)
@@ -76,5 +76,52 @@ class BucketedIndexSpec extends SparkSpecBase {
     Multimodal.compactHammingIndex(spark, tbl, buckets = 4, maxBucket = 10)
     assert(Multimodal.quarantineWatermark(spark, tbl) == ((0L, 12L)))
     assert(nextTickIds(tbl) == (81L to 105L), "the compaction capture must rank fresh")
+  }
+
+  test("sweep ticks select their bucket slice by rank predicate, no local relation") {
+    // three hot clusters (15, 12 and 11 members; 4 band buckets each)
+    // give 12 ranked buckets; 5-bucket ticks take three passes, and the
+    // middle tick straddles two clusters' ranks
+    val tbl = quarantined(
+      (1L to 15L).map(_ -> 42L) ++ (21L to 32L).map(_ -> far) ++ (51L to 61L).map(_ -> small))
+    Multimodal.deleteFromHammingIndex(spark, tbl, Seq(3L, 25L).toDF("id"), col("id"))
+    // the slice as the bucket list was cut before ranks were stored:
+    // buckets by membership DESC then keys, positions (lo, hi], their
+    // member rows minus the takedowns. Rows, not ids: a cluster's ids
+    // recur in each of its four band buckets, so only the rows show a
+    // tick that takes one bucket too many or too few
+    val quar = spark.table(BucketedIndex.quarTable(tbl))
+    val order = quar.groupBy("band", "bv").agg(count(lit(1)).as("n"))
+      .orderBy(col("n").desc, col("band"), col("bv"))
+      .select("band", "bv").as[(Int, Long)].collect().toSeq
+    val rows = quar.select("band", "bv", "corpus_id").as[(Int, Long, Long)].collect().toSeq
+    def expected(lo: Long, hi: Long): Seq[(Int, Long, Long)] = {
+      val slice = order.slice(lo.toInt, hi.toInt).toSet
+      rows.filter { case (b, v, id) => slice((b, v)) && id != 3L && id != 25L }.sorted
+    }
+    val sink = java.nio.file.Files.createTempDirectory("bispec_ticks").resolve("t").toString
+    val (start, total) = Multimodal.quarantineWatermark(spark, tbl)
+    assert(start == 0L && total == 12L)
+    var lo = start
+    var ticks = 0
+    while (lo < total) {
+      val hi = math.min(lo + 5, total)
+      val members = Multimodal.HammingLayout.sweepMembers(spark, tbl, lo, hi)
+      val qe = members.queryExecution
+      val plans = Seq(qe.optimizedPlan.toString, qe.executedPlan.toString)
+      assert(plans.forall(p => !p.contains("LocalRelation") && !p.contains("LocalTableScan")),
+        s"tick ($lo, $hi] plans a local relation:\n${plans.mkString("\n")}")
+      assert(!members.columns.contains("__rank"))
+      assert(members.select("band", "bv", "corpus_id").as[(Int, Long, Long)].collect().sorted.toSeq ==
+        expected(lo, hi), s"tick ($lo, $hi]")
+      val committed = Multimodal.sweepHammingQuarantine(
+        spark, tbl, Seq((100L, 42L)).toDF("asset_id", "fp"), "asset_id", "fp",
+        maxHamming = 8, maxBucketsPerTick = 5, sink = sink)
+      assert(committed == ((hi, total)) && Multimodal.quarantineWatermark(spark, tbl) == committed,
+        "the tick returns the watermark it committed")
+      lo = committed._1
+      ticks += 1
+    }
+    assert(ticks == 3)
   }
 }

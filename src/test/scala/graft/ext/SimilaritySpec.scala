@@ -659,17 +659,16 @@ class SimilaritySpec extends SparkSpecBase {
     assert(spark.catalog.tableExists(s"${tbl}__v2"), "the grace version must be retained")
   }
 
-  test("servingVersion memo: publish and reset invalidate it, out-of-band drops degrade safely") {
+  test("servingVersion follows publish and reset, out-of-band drops degrade safely") {
     val e = fixtureEmb
     val coarse = Similarity.kmeansCentroids(e, "vec_id", "embedding", nlist = 4, iters = 1)
     val books = Similarity.pqTrain(e, "vec_id", "embedding", nsub = 4, nlistSub = 4, iters = 1)
-    val tbl = s"annspec_memo_${System.nanoTime()}"
+    val tbl = s"annspec_versions_${System.nanoTime()}"
     Similarity.persistAnnIndex(e, "vec_id", "embedding", coarse, books, tbl, buckets = 4)
-    // memoized bare resolution, then a memo hit
+    // the bare resolution, twice: resolving changes nothing
     assert(Similarity.servingTable(spark, tbl) == tbl)
     assert(Similarity.servingTable(spark, tbl) == tbl)
-    // publication must invalidate: the next resolution serves __v1, not a
-    // stale memoized bare name
+    // after a publication the next resolution serves __v1, then __v2
     Similarity.rebuildAnnIndex(spark, tbl, e, "vec_id", "embedding", coarse, books, buckets = 4)
     assert(Similarity.servingTable(spark, tbl) == s"${tbl}__v1")
     Similarity.rebuildAnnIndex(spark, tbl, e, "vec_id", "embedding", coarse, books, buckets = 4)
@@ -678,43 +677,30 @@ class SimilaritySpec extends SparkSpecBase {
     // resolution must return to the bare table, not the retired __v2
     Similarity.persistAnnIndex(e, "vec_id", "embedding", coarse, books, tbl, buckets = 4)
     assert(Similarity.servingTable(spark, tbl) == tbl)
-    // out-of-band version drop (neither publish nor reset saw it): the
-    // memoized version fails its exact-name existence check and resolution
-    // recomputes — degraded to the bare table, never a missing-table read
+    // out-of-band version drop (neither publish nor reset saw it):
+    // resolution lists the catalog and degrades to the bare table, never
+    // a missing-table read
     Similarity.rebuildAnnIndex(spark, tbl, e, "vec_id", "embedding", coarse, books, buckets = 4)
     assert(Similarity.servingTable(spark, tbl) == s"${tbl}__v1")
     spark.sql(s"DROP TABLE `${tbl}__v1`")
     assert(Similarity.servingTable(spark, tbl) == tbl)
   }
 
-  test("servingVersion kill switch: memo disabled sees out-of-band catalog changes") {
-    // a shared-metastore deployment disables the memo; resolution must
-    // then list the catalog FRESH per call, so an out-of-band publish or
-    // restore (a __v<N> table materialized by another writer, never via
-    // publishVersion in this JVM) is visible immediately — the blind spot
-    // the memo's single-JVM posture documents
+  test("servingVersion sees out-of-band publishes with no conf") {
+    // resolution lists the catalog on every call, so a __v<N> table
+    // materialized by another writer (never via publishVersion here) is
+    // served from the next resolution on — no setting to flip
     val e = fixtureEmb
     val coarse = Similarity.kmeansCentroids(e, "vec_id", "embedding", nlist = 4, iters = 1)
     val books = Similarity.pqTrain(e, "vec_id", "embedding", nsub = 4, nlistSub = 4, iters = 1)
-    val tbl = s"annspec_killsw_${System.nanoTime()}"
+    val tbl = s"annspec_extpub_${System.nanoTime()}"
     Similarity.persistAnnIndex(e, "vec_id", "embedding", coarse, books, tbl, buckets = 4)
-    // memoize the bare resolution (version 0), then simulate an external
-    // publisher: copy the bare table to __v1 WITHOUT touching the memo
     assert(Similarity.servingTable(spark, tbl) == tbl)
+    // an external publisher copies the bare table to __v1: visible at once
     spark.table(tbl).write.saveAsTable(s"${tbl}__v1")
-    // memo enabled: version 0 is a trusted memo hit, the external __v1
-    // stays invisible — the exact stale-serve the advisor flagged
-    assert(Similarity.servingTable(spark, tbl) == tbl)
-    // kill switch on: fresh listing finds the external version
-    spark.conf.set(BucketedIndex.VersionMemoEnabledKey, "false")
-    try {
-      assert(Similarity.servingTable(spark, tbl) == s"${tbl}__v1")
-      // and a second external change is also seen (no residual caching)
-      spark.table(tbl).write.saveAsTable(s"${tbl}__v2")
-      assert(Similarity.servingTable(spark, tbl) == s"${tbl}__v2")
-    } finally spark.conf.set(BucketedIndex.VersionMemoEnabledKey, "true")
-    // re-enabled: the bypass dropped the stale entry, so the first
-    // memoized resolution recomputes from the post-change catalog
+    assert(Similarity.servingTable(spark, tbl) == s"${tbl}__v1")
+    // and a second external change is seen too
+    spark.table(tbl).write.saveAsTable(s"${tbl}__v2")
     assert(Similarity.servingTable(spark, tbl) == s"${tbl}__v2")
   }
 
