@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** I/O placement for the engine's LOCAL entry points (Bench / Verify /
-  * Smoke / Time / Explain and the test harness): where the
+  * Smoke / Explain and the test harness): where the
   * catalog warehouse, Spark's local dirs (shuffle/broadcast/blockmgr
   * spill), and the engine's scratch roots live.
   *
@@ -12,23 +12,31 @@ import org.apache.spark.sql.SparkSession
   * but by small-file COMMIT cost — every saveAsTable / bucketed append /
   * watermark rewrite pays directory creation, per-task commit renames,
   * CRC sidecars and fsync-ish metadata on the root disk. A RAM-backed
-  * root (`/dev/shm`, present on every Linux host) removes that fixed
+  * base (`/dev/shm`, present on every Linux host) removes that fixed
   * cost without touching what any query computes: nothing is memoized
-  * across runs (tables stay pid-scoped and are deleted at JVM exit;
-  * every bench invocation still computes from the parquet inputs). The
-  * WAREHOUSE + scratch legs carry that rationale; the `spark.local.dir`
-  * leg was measured a net negative at 32 cores and reverted (see
-  * [[localDir]]).
+  * across runs (every bench invocation still computes from the parquet
+  * inputs). The WAREHOUSE + scratch legs carry that rationale; the
+  * `spark.local.dir` leg was measured a net negative at 32 cores and
+  * reverted (see [[localDir]]).
+  *
+  * Each JVM owns its files: [[warehouseDir]] and [[scratchRoot]] are fresh
+  * directories (`graft_<random>`) this JVM creates under the two bases and
+  * deletes whole at exit. Every catalog table, index companion, memo
+  * spill, query sink and stream checkpoint lives under one of them, so
+  * names need no pid, nothing is registered for cleanup, two concurrent
+  * JVMs never see each other's files, and a JVM started after a `kill -9`
+  * never adopts the dead one's directory (whose leftovers stay in the base
+  * until removed by hand).
   *
   * At cluster scale the same knobs exist and are deployment decisions
   * (fast local SSDs for `spark.local.dir`, a real distributed FS for the
-  * warehouse), so everything here is env-overridable:
+  * warehouse), so the bases are env-overridable:
   *
-  *   - `SPARK_GRAFT_WAREHOUSE_DIR` — catalog warehouse root
+  *   - `SPARK_GRAFT_WAREHOUSE_DIR` — base of the per-JVM catalog warehouse
   *   - `SPARK_GRAFT_LOCAL_DIR`     — spark.local.dir
-  *   - `SPARK_GRAFT_SCRATCH_ROOT`  — [[graft.queries.Scratch.dir]] root
+  *   - `SPARK_GRAFT_SCRATCH_ROOT`  — base of the per-JVM scratch root
   *
-  * Defaults fall back to the pre-r21 locations (cwd `spark-warehouse`,
+  * Defaults fall back to the pre-r21 bases (cwd `spark-warehouse`,
   * Spark's own local-dir default, `/tmp/graft_cache`) when `/dev/shm` is
   * absent, so behavior off-Linux is unchanged.
   */
@@ -37,18 +45,38 @@ object EngineIO {
   private def shm: Option[String] =
     Some("/dev/shm").filter(p => new java.io.File(p).isDirectory)
 
-  /** Warehouse root every entry-point session sets as
-    * `spark.sql.warehouse.dir`. NOT pid-scoped: concurrent graft JVMs
-    * (driver verify alongside a local bench) share the root exactly as
-    * they shared cwd `spark-warehouse` before — isolation comes from the
-    * pid-scoped TABLE names ([[graft.queries.Scratch.table]]), and each
-    * JVM deletes its own tables' directories at exit.
+  /** A fresh `graft_<random>` directory under `base` (created if missing). */
+  private def jvmDir(base: String): String = {
+    val b = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
+    java.nio.file.Files.createTempDirectory(b, "graft_").toAbsolutePath.toString
+  }
+
+  /** This JVM's catalog warehouse, set as `spark.sql.warehouse.dir` by
+    * every entry-point session.
     */
-  val warehouseDir: String =
+  val warehouseDir: String = jvmDir(
     sys.env
       .get("SPARK_GRAFT_WAREHOUSE_DIR")
       .orElse(shm.map(_ + "/graft_warehouse"))
-      .getOrElse(new java.io.File("spark-warehouse").getAbsolutePath)
+      .getOrElse(new java.io.File("spark-warehouse").getAbsolutePath))
+
+  /** This JVM's root for [[graft.queries.Scratch.dir]] (memo spills,
+    * query-local fixture/sink dirs, stream checkpoints).
+    */
+  val scratchRoot: String = jvmDir(
+    sys.env
+      .get("SPARK_GRAFT_SCRATCH_ROOT")
+      .orElse(shm.map(_ + "/graft_cache"))
+      .getOrElse("/tmp/graft_cache"))
+
+  Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    Seq(warehouseDir, scratchRoot).foreach(p => deleteRecursively(new java.io.File(p)))))
+
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
+    val children = f.listFiles()
+    if (children != null) children.foreach(deleteRecursively)
+    f.delete(): Unit
+  }
 
   /** spark.local.dir (shuffle files, broadcast disk store, block-manager
     * spill). None ⇒ leave Spark's default (java.io.tmpdir).
@@ -64,19 +92,11 @@ object EngineIO {
   val localDir: Option[String] =
     sys.env.get("SPARK_GRAFT_LOCAL_DIR")
 
-  /** Root for [[graft.queries.Scratch.dir]] (spill memo, query-local
-    * fixture/sink dirs).
-    */
-  val scratchRoot: String =
-    sys.env
-      .get("SPARK_GRAFT_SCRATCH_ROOT")
-      .orElse(shm.map(_ + "/graft_cache"))
-      .getOrElse("/tmp/graft_cache")
-
   /** Apply the engine's I/O placement to a session builder. Commit
     * algorithm v2 (direct task commit, no job-commit rename pass) is safe
     * here: local mode runs no speculative duplicates, and every engine
-    * write lands in a pid-scoped path a failed job simply deletes.
+    * write lands under this JVM's own roots, where a failed job's partial
+    * output is simply deleted.
     *
     * Also sets `spark.sql.legacy.parquet.nanosAsLong` (the `events`
     * fixture's TIMESTAMP(NANOS) column reads as long nanos, see

@@ -34,9 +34,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * dropped (frames' directories deleted) until the total fits, never the
   * entry just acquired and never a build-once entry. Contract the
   * eviction leans on: a frame's readers execute promptly after
-  * acquisition (Scratch's exit-time deletion makes the same assumption);
-  * an evicted key's next acquisition simply rebuilds. Every spill path is
-  * pid-scoped and deleted at JVM exit.
+  * acquisition; an evicted key's next acquisition simply rebuilds. Every
+  * spill lies under this JVM's scratch root ([[graft.EngineIO]]), which
+  * is deleted whole at exit.
   *
   * One census ([[census]]) lists every entry with its kind and weight.
   */
@@ -149,7 +149,7 @@ object Memo {
 
   /** Run `build` once for `name` while its data `key` is unchanged, and
     * again when the key changes (one JVM warms at sf0.001 and then runs
-    * sf0.1 against the same pid-scoped table names). Same-name builders
+    * sf0.1 against the same table names). Same-name builders
     * serialize on the name's single flight, so no query scans a fixture or
     * table another query is still writing.
     */

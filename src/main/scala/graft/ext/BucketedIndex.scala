@@ -358,8 +358,8 @@ object BucketedIndex {
     inFlightBuilds.add(bldKey)
     try {
       build(bld, era)
-      // a prior JVM's leftover __v<N+1> directory (invisible to this
-      // catalog) would make the rename refuse the target location
+      // a leftover __v<N+1> directory the catalog does not know (a failed
+      // earlier write) would make the rename refuse the target location
       Sources.dropStaleLocation(s, next)
       s.sql(s"ALTER TABLE `$bld` RENAME TO `$next`") // atomic publication
     } finally inFlightBuilds.remove(bldKey): Unit

@@ -420,15 +420,6 @@ object Dedup {
         .select(col("band"), col("bh"), col("id").as("corpus_id")),
       buckets, era)
 
-  /** See [[Multimodal.quarantineWatermark]] — the LSH family's reader. */
-  def lshQuarantineWatermark(
-      s: org.apache.spark.sql.SparkSession, table: String): (Long, Long) =
-    BucketedIndex.quarantineWatermark(s, table)
-
-  /** Begin a fresh sweep pass over the LSH quarantine. */
-  def resetLshQuarantineSweep(s: org.apache.spark.sql.SparkSession, table: String): Unit =
-    LshLayout.resetSweep(s, table)
-
   /** MAINTENANCE — one bounded TICK of the LSH quarantine sweep
     * ([[BucketedIndex.sweepTick]]): candidate pairs of the incoming batch
     * against the quarantined members of the next `maxBucketsPerTick`

@@ -995,7 +995,7 @@ object Multimodal {
 
   /** See [[quarantineHammingIndex]] — the image-named recovery side of the
     * family's capped default: persist the quarantined banded rows so
-    * [[sweepImageQuarantine]] can repay the cap's dropped recall in
+    * [[sweepHammingQuarantine]] can repay the cap's dropped recall in
     * bounded installments. Opt-in beside the persist (one extra banding
     * pass over the fingerprints at layout time); once present, compaction
     * and rebuild keep it current automatically.
@@ -1004,13 +1004,6 @@ object Multimodal {
       s: org.apache.spark.sql.SparkSession, table: String, hashes: DataFrame,
       idCol: String, hashCol: String, buckets: Int, maxBucket: Int = 64): Unit =
     quarantineHammingIndex(s, table, hashes, idCol, hashCol, buckets, maxBucket)
-
-  /** See [[sweepHammingQuarantine]]. */
-  def sweepImageQuarantine(
-      s: org.apache.spark.sql.SparkSession, table: String, incoming: DataFrame,
-      idCol: String, hashCol: String, maxHamming: Int, maxBucketsPerTick: Int,
-      sink: String): (Long, Long) =
-    sweepHammingQuarantine(s, table, incoming, idCol, hashCol, maxHamming, maxBucketsPerTick, sink)
 
   /** Target-dimension arithmetic alone (no pixels) — kept as the cheap
     * metadata projection for non-image media whose decode the JDK lacks.

@@ -607,7 +607,7 @@ object Core {
       val right = t(s, dir, "customer")
         .select(col("c_custkey").as("custkey"), col("c_mktsegment"))
       graft.ops.BucketOps
-        .bucketedEquiJoin(s, left, right, "custkey", buckets = 8, tag = Scratch.bucketTag("j7"))
+        .bucketedEquiJoin(s, left, right, "custkey", buckets = 8, tag = "j7")
         .select(col("custkey"), col("o_orderkey"), col("o_totalprice"), col("c_mktsegment"))
     },
     // ---- S10: partition-pruned layout roundtrip --------------------------

@@ -12,9 +12,7 @@ import graft.pipeline.{LegacyPipeline, PermitPipeline, ReviewIngestPipeline}
   * star schema, with a full DuckDB twin of the whole chain.
   */
 object PipelineQ {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Fixtures.t(s, dir, name) // schema-asserted: drift fails with a named diff
+  import QShared.{par, t}
 
   /** Reference-shaped Socrata permits + PIN universe from orders×customer.
     * Every modulus plants one §2.10 failure class (same trick as vp_*).
@@ -82,14 +80,6 @@ object PipelineQ {
         TextOps.smartfileCanon(col("work_description")).as("user43")
       )
       .filter(col("permdt").isNotNull)
-
-  /** Fixture parquet is one file with ONE row group, so a scan is a single
-    * partition — an explicit repartition ahead of the string-heavy chain
-    * lets the full core count work (at production scale the input arrives
-    * already split and this shuffle is noise next to the map work).
-    */
-  private def par(s: SparkSession, df: DataFrame): DataFrame =
-    df.repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
 
   /** Each pipeline family's upload/review/workbook queries all filter the
     * SAME flagged frame, but the driver contract makes every query

@@ -266,9 +266,6 @@ private[queries] object QAnn {
       val coarse = Similarity.kmeansCentroidsCached(e, "vec_id", "embedding", nlist = 8, iters = 2)
       val books = Similarity.pqTrainCached(e, "vec_id", "embedding", nsub = 4, nlistSub = 4, iters = 1)
       val tbl = Scratch.table("ann_idx_bg")
-      // rebuilds publish immutable VERSIONS (probe-safe swap) — register
-      // the whole versioned name family for exit cleanup
-      Scratch.registerVersionedIndex(tbl)
       graft.Memo.once(tbl, dir) {
         Similarity.persistAnnIndex(
           old, "vec_id", "embedding", staleCoarse, staleBooks, tbl, buckets = 8)
@@ -334,7 +331,6 @@ private[queries] object QAnn {
       }
       // LSH index: corpus persisted, md5%3 takedown stratum tombstoned
       val lshTbl = Scratch.table("lsh_idx_cen")
-      Scratch.registerTable(graft.ext.BucketedIndex.tombTable(lshTbl))
       val dcorp = docs.filter(col("doc_id") % 5 =!= 0)
       graft.Memo.once(lshTbl, dir) {
         Dedup.persistLshIndex(
@@ -459,7 +455,6 @@ private[queries] object QAnn {
       val coarse = Similarity.kmeansCentroidsCached(e, "vec_id", "embedding", nlist = 8, iters = 2)
       val books = Similarity.pqTrainCached(e, "vec_id", "embedding", nsub = 4, nlistSub = 4, iters = 1)
       val tbl = Scratch.table("ann_idx_del")
-      Scratch.registerTable(graft.ext.BucketedIndex.tombTable(tbl))
       graft.Memo.once(tbl, dir) {
         Similarity.persistAnnIndex(e, "vec_id", "embedding", coarse, books, tbl, buckets = 8)
         Similarity.deleteFromAnnIndex(
@@ -483,7 +478,6 @@ private[queries] object QAnn {
       val coarse = Similarity.kmeansCentroidsCached(e, "vec_id", "embedding", nlist = 8, iters = 2)
       val books = Similarity.pqTrainCached(e, "vec_id", "embedding", nsub = 4, nlistSub = 4, iters = 1)
       val tbl = Scratch.table("ann_idx_reapp")
-      Scratch.registerTable(graft.ext.BucketedIndex.tombTable(tbl))
       val delGate = graft.ops.Hashing.md5Mod(col("vec_id").cast("string"), 5L) === 0
       graft.Memo.once(tbl, dir) {
         Similarity.persistAnnIndex(e, "vec_id", "embedding", coarse, books, tbl, buckets = 8)
@@ -508,8 +502,6 @@ private[queries] object QAnn {
       val coarse = Similarity.kmeansCentroidsCached(e, "vec_id", "embedding", nlist = 8, iters = 2)
       val books = Similarity.pqTrainCached(e, "vec_id", "embedding", nsub = 4, nlistSub = 4, iters = 1)
       val tbl = Scratch.table("ann_idx_cmp")
-      Scratch.registerTable(graft.ext.BucketedIndex.tombTable(tbl))
-      Scratch.registerTable(tbl + "__compact_stage")
       graft.Memo.once(tbl, dir) {
         val g = graft.ops.Hashing.md5Mod(col("vec_id").cast("string"), 4L)
         Similarity.persistAnnIndex(
@@ -805,7 +797,6 @@ private[queries] object QAnn {
     val lshTbl = Scratch.table(s"lsh_idx_$suffix")
     val semTbl = Scratch.table(s"sem_idx_$suffix")
     val hamTbl = Scratch.table(s"frm_idx_$suffix")
-    Seq(annTbl, lshTbl, semTbl, hamTbl).foreach(Scratch.registerVersionedIndex(_))
     Similarity.persistAnnIndex(
       e.filter(g =!= 0), "vec_id", "embedding", coarse, books, annTbl, buckets = 8)
     Similarity.appendAnnIndex(

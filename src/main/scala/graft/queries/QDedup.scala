@@ -124,9 +124,6 @@ private[queries] object QDedup {
       val docs = tPar(s, dir, "documents")
       val corpus = docs.filter(col("doc_id") % 5 =!= 0)
       val incoming = docs.filter(col("doc_id") % 5 === 0)
-      // pid-scoped name: a fixed one would let a concurrent verify DROP
-      // the table out from under a bench JVM's probe (Scratch's
-      // concurrent-JVM concern, catalog-table form)
       val idxTable = Scratch.table("lsh_idx")
       graft.Memo.once(idxTable, dir)(
         Dedup.persistLshIndex(
@@ -157,7 +154,6 @@ private[queries] object QDedup {
       val corpus = docs.filter(col("doc_id") % 5 =!= 0)
       val incoming = docs.filter(col("doc_id") % 5 === 0)
       val idxTable = Scratch.table("lsh_idx_del")
-      Scratch.registerTable(graft.ext.BucketedIndex.tombTable(idxTable))
       graft.Memo.once(idxTable, dir) {
         Dedup.persistLshIndex(
           corpus, col("doc_id"), col("text"), table = idxTable, buckets = 8,
@@ -193,7 +189,6 @@ private[queries] object QDedup {
       val corpus = docs.filter(col("doc_id") % 5 =!= 0)
       val incoming = docs.filter(col("doc_id") % 5 === 0)
       val idxTable = Scratch.table("lsh_idx_reapp")
-      Scratch.registerTable(graft.ext.BucketedIndex.tombTable(idxTable))
       val delGate = graft.ops.Hashing.md5Mod(col("doc_id").cast("string"), 7L) === 0
       graft.Memo.once(idxTable, dir) {
         Dedup.persistLshIndex(
@@ -230,7 +225,6 @@ private[queries] object QDedup {
       val corpus = docs.filter(col("doc_id") % 5 =!= 0)
       val incoming = docs.filter(col("doc_id") % 5 === 0)
       val idxTable = Scratch.table("lsh_idx_rb")
-      Scratch.registerVersionedIndex(idxTable)
       graft.Memo.once(idxTable, dir) {
         Dedup.persistLshIndex(
           corpus.filter(col("doc_id") % 2 === 0), col("doc_id"), col("text"),
@@ -415,8 +409,6 @@ private[queries] object QDedup {
       val corpus = e.filter(col("vec_id") % 5 =!= 0)
       val incoming = e.filter(col("vec_id") % 5 === 0)
       val tbl = Scratch.table("sem_idx_mnt")
-      Scratch.registerTable(graft.ext.BucketedIndex.tombTable(tbl))
-      Scratch.registerTable(tbl + "__compact_stage")
       graft.Memo.once(tbl, dir) {
         val g = graft.ops.Hashing.md5Mod(col("vec_id").cast("string"), 4L)
         Dedup.persistSemanticIndex(
@@ -449,7 +441,6 @@ private[queries] object QDedup {
       val corpus = e.filter(col("vec_id") % 5 =!= 0)
       val incoming = e.filter(col("vec_id") % 5 === 0)
       val tbl = Scratch.table("sem_idx_rb")
-      Scratch.registerVersionedIndex(tbl)
       graft.Memo.once(tbl, dir) {
         Dedup.persistSemanticIndex(
           corpus.filter(col("vec_id") % 2 === 0), col("vec_id"), col("embedding"),

@@ -149,8 +149,6 @@ private[queries] object QMultimodal {
         .toDF()
       val corpus = hashes.filter(col("asset_id") % 5 =!= 0)
       val tbl = Scratch.table("img_idx_mnt")
-      Scratch.registerTable(graft.ext.BucketedIndex.tombTable(tbl))
-      Scratch.registerTable(tbl + "__compact_stage")
       graft.Memo.once(tbl, dir) {
         val g = graft.ops.Hashing.md5Mod(col("asset_id").cast("string"), 4L)
         Multimodal.persistImageIndex(
@@ -179,7 +177,6 @@ private[queries] object QMultimodal {
         .toDF()
       val corpus = hashes.filter(col("asset_id") % 5 =!= 0)
       val tbl = Scratch.table("img_idx_rb")
-      Scratch.registerVersionedIndex(tbl)
       graft.Memo.once(tbl, dir) {
         Multimodal.persistImageIndex(
           corpus.filter(col("asset_id") % 2 === 0), "asset_id", "dhash", tbl, buckets = 8)
@@ -292,8 +289,6 @@ private[queries] object QMultimodal {
       val corpus = fh.filter(col("asset_id") % 5 =!= 0)
       val incoming = fh.filter(col("asset_id") % 25 === 0)
       val tbl = Scratch.table("frm_idx_sw")
-      Scratch.registerTable(graft.ext.BucketedIndex.quarTable(tbl))
-      Scratch.registerTable(graft.ext.BucketedIndex.quarWmTable(tbl))
       graft.Memo.once(tbl, dir) {
         Multimodal.persistHammingIndex(
           corpus, "frame_key", "dhash", tbl, buckets = 8, maxBucket = 64)
@@ -335,8 +330,6 @@ private[queries] object QMultimodal {
       val corpus = fh.filter(col("asset_id") % 5 =!= 0)
       val incoming = fh.filter(col("asset_id") % 25 === 0)
       val tbl = Scratch.table("frm_idx_sched")
-      Scratch.registerTable(graft.ext.BucketedIndex.quarTable(tbl))
-      Scratch.registerTable(graft.ext.BucketedIndex.quarWmTable(tbl))
       graft.Memo.once(tbl, dir) {
         Multimodal.persistHammingIndex(
           corpus, "frame_key", "dhash", tbl, buckets = 8, maxBucket = 64)

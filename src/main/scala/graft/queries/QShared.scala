@@ -17,12 +17,17 @@ private[queries] object QShared {
 
   /** Fixture parquet is one file with ONE row group — a scan is a single
     * partition. Queries whose first stage does heavy per-row work (shingle
-    * + k×md5 signatures, per-row m² counting) repartition first so the
-    * full core count works; at production scale the input arrives already
-    * split and the ~MB shuffle is noise next to the map stage.
+    * + k×md5 signatures, per-row m² counting, the string-heavy permit
+    * chain) repartition first so the full core count works; at production
+    * scale the input arrives already split and the ~MB shuffle is noise
+    * next to the map stage.
     */
+  private[queries] def par(s: SparkSession, df: DataFrame): DataFrame =
+    df.repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+
+  /** [[par]] over one fixture table. */
   private[queries] def tPar(s: SparkSession, dir: String, name: String): DataFrame =
-    t(s, dir, name).repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+    par(s, t(s, dir, name))
 
   /** The module-wide quantization (see [[Similarity.quantize]]) — one
     * definition so the oracles cannot drift from the engine.

@@ -53,14 +53,10 @@ private[graft] object StreamHarness {
     s2.conf.set("spark.sql.streaming.minBatchesToRetain", "1")
     s2.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
     // checkpoints (offset/commit logs + state snapshots) are fsync-heavy
-    // tiny-file writes; a RAM-backed root removes that fixed per-batch
-    // disk cost. Pid-scoped and deleted at JVM exit (Scratch); every sink
+    // tiny-file writes: they go under the scratch root (RAM-backed by
+    // default, see graft.EngineIO), which dies with the JVM; every sink
     // name is nanoTime-unique so a run never resumes a prior checkpoint.
-    val ckptRoot =
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else "/tmp"
-    s2.conf.set(
-      "spark.sql.streaming.checkpointLocation",
-      graft.queries.Scratch.dirAt(ckptRoot, "stream_ckpt", "root"))
+    s2.conf.set("spark.sql.streaming.checkpointLocation", Scratch.dir("stream_ckpt", "root"))
     s2.conf.set(
       "spark.sql.session.timeZone",
       s.conf.get("spark.sql.session.timeZone", "UTC"))

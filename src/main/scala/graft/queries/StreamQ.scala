@@ -423,7 +423,7 @@ object StreamQ {
       // emitted pair exists ONLY because batch A's bands were appended —
       // the split that actually witnesses the append-back semantics
       // (incoming %5==0 had no cross-batch near-dups in the fixture)
-      val table = Scratch.table("lsh_maint") // pid-scoped: see dedup_incremental_bucketed
+      val table = Scratch.table("lsh_maint")
       resetLshIndex(docsDf.filter(col("doc_id") % 5 =!= 2), table)
       def docs(f: Column) = docsDf.filter(f).select(col("doc_id"), col("text"))
       lshIndexCycles(s, dir, table, Scratch.dir("lsh_maint", dir), Seq(
@@ -445,7 +445,6 @@ object StreamQ {
       val docsDf = t(s, dir, "documents")
       val corpus = docsDf.filter(col("doc_id") % 5 =!= 2)
       val table = Scratch.table("lsh_retract")
-      Scratch.registerTable(graft.ext.BucketedIndex.tombTable(table))
       resetLshIndex(corpus, table)
       def docs(f: Column) = docsDf.filter(f).select(col("doc_id"), col("text"))
       // takedowns target EXISTING corpus docs (batch A); batch B then
@@ -506,7 +505,6 @@ object StreamQ {
       val books = Similarity.pqTrainCached(e, "vec_id", "embedding", nsub = 4, nlistSub = 4, iters = 1)
       val g = graft.ops.Hashing.md5Mod(col("vec_id").cast("string"), 4L)
       val table = Scratch.table("ann_retract")
-      Scratch.registerTable(graft.ext.BucketedIndex.tombTable(table))
       // layout time: persist resets the index AND its tombstones each
       // invocation (bench reruns in one JVM — stale tombstones would hide
       // batch-A probes' retracted partners too early)
@@ -549,7 +547,6 @@ object StreamQ {
       val fh = frameHashes(s, dir)
       val corpus = fh.filter(col("asset_id") % 5 =!= 0)
       val table = Scratch.table("mm_retract")
-      Scratch.registerTable(graft.ext.BucketedIndex.tombTable(table))
       // layout time: persist resets index, tombstones AND version history
       // each invocation (bench reruns in one JVM); the spilled hash frame
       // keeps the GIF decode out of the per-invocation cost
@@ -586,7 +583,6 @@ object StreamQ {
       val cents = Similarity.kmeansCentroidsCached(e, "vec_id", "embedding", nlist = 8, iters = 2)
       val g = graft.ops.Hashing.md5Mod(col("vec_id").cast("string"), 4L)
       val table = Scratch.table("sem_retract")
-      Scratch.registerTable(graft.ext.BucketedIndex.tombTable(table))
       // layout time: persist resets the index AND its tombstones each
       // invocation (bench reruns in one JVM — stale tombstones would hide
       // batch-A probes' retracted partners too early)
@@ -626,7 +622,6 @@ object StreamQ {
     "stream_index_maintenance_loop" -> { (s, dir) =>
       val docsDf = t(s, dir, "documents")
       val table = Scratch.table("lsh_mloop")
-      Scratch.registerVersionedIndex(table)
       resetLshIndex(docsDf.filter(col("doc_id") % 5 =!= 0), table)
       val fleet = Map("lsh_text" -> Maintenance.ManagedIndex(
         table, "corpus_id",
@@ -690,17 +685,14 @@ object StreamQ {
       val scorp = e.filter(col("vec_id") % 5 =!= 0)
       val hcorp = frameHashes(s, dir).filter(col("asset_id") % 5 =!= 0)
       val annTbl = Scratch.table("ann_floop")
-      Scratch.registerVersionedIndex(annTbl)
       graft.Memo.once(annTbl, dir) {
         val books = Similarity.pqTrainCached(e, "vec_id", "embedding", nsub = 4, nlistSub = 4, iters = 1)
         Similarity.persistAnnIndex(e, "vec_id", "embedding", coarse, books, annTbl, buckets = 8)
       }
       val semTbl = Scratch.table("sem_floop")
-      Scratch.registerVersionedIndex(semTbl)
       graft.Memo.once(semTbl, dir)(
         Dedup.persistSemanticIndex(scorp, col("vec_id"), col("embedding"), coarse, semTbl, buckets = 8))
       val lshTbl = Scratch.table("lsh_floop")
-      Scratch.registerVersionedIndex(lshTbl)
       Dedup.persistLshIndex(
         dcorp, col("doc_id"), col("text"), table = lshTbl, buckets = 8, n = 3, k = 8, bands = 4)
       Dedup.deleteFromLshIndex(
@@ -708,7 +700,6 @@ object StreamQ {
         dcorp.filter(graft.ops.Hashing.md5Mod(col("doc_id").cast("string"), 3L) === 0),
         col("doc_id"))
       val hamTbl = Scratch.table("frm_floop")
-      Scratch.registerVersionedIndex(hamTbl)
       Multimodal.persistHammingIndex(
         hcorp.filter(col("asset_id") % 3 =!= 0), "frame_key", "dhash", hamTbl,
         buckets = 8, maxBucket = 64)

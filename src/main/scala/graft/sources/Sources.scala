@@ -7,8 +7,8 @@ import org.apache.spark.sql.types._
   *
   * The reference's scans are HTTP JSON (Socrata, S1), warehouse SQL (Athena,
   * S2), CSV cache (S3) and XLSX (S4/S5). Engine equivalents: schema-pinned
-  * JSON/CSV readers (schemas forced to string where leading zeros matter)
-  * and a parquet-backed cache table standing in for the CSV memo.
+  * JSON/CSV readers (schemas forced to string where leading zeros matter);
+  * the CSV memo itself is a [[graft.Memo.once]] build (`s3_csv_roundtrip`).
   */
 object Sources {
 
@@ -46,27 +46,6 @@ object Sources {
   def writePinUniverseCsv(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").option("header", "true").csv(path)
 
-  /** Engine-level cache-or-compute: parquet memo keyed by an identifier —
-    * the scalable version of the reference's per-year CSV memo
-    * (chicago/permit_cleaning.py:510-513). Parquet keeps types + statistics
-    * and splits on read, which CSV does not.
-    */
-  def cached(spark: SparkSession, cacheDir: String, key: String)(compute: => DataFrame): DataFrame = {
-    val path = s"$cacheDir/$key.parquet"
-    // existence check through the Hadoop FileSystem for the path's scheme:
-    // a java.io.File probe would always miss on hdfs://- or s3a://-backed
-    // cache dirs and silently recompute every run (the same failure shape
-    // as the r6 writeBucketed fix)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(path)
-    else {
-      val df = compute
-      df.write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
-    }
-  }
-
   /** S8: batched sink — at most `maxRecords` rows per output file
     * (format_reviewed_permits_for_upload.py:214-216). Uses the native
     * writer option instead of a window bucket when per-file numbering is
@@ -93,11 +72,11 @@ object Sources {
     // EXTERNAL table's data alone — never delete a location we didn't
     // resolve through the catalog.
     s.sql(s"DROP TABLE IF EXISTS `$table`")
-    // The warehouse DIRECTORY outlives the in-memory catalog across JVMs: a
-    // fresh session doesn't know the old table, but saveAsTable refuses the
-    // leftover default location. Resolve that location through the catalog
-    // (not string concat) and delete it via the Hadoop FileSystem for its
-    // scheme, so hdfs://- or s3a://-backed warehouses work too.
+    // A failed earlier write can leave the default location behind with no
+    // catalog entry, and saveAsTable refuses such a leftover directory.
+    // Resolve that location through the catalog (not string concat) and
+    // delete it via the Hadoop FileSystem for its scheme, so hdfs://- or
+    // s3a://-backed warehouses work too.
     val stale = new org.apache.hadoop.fs.Path(
       s.sessionState.catalog.defaultTablePath(
         org.apache.spark.sql.catalyst.TableIdentifier(table))
@@ -133,10 +112,11 @@ object Sources {
   /** Delete a table's DEFAULT warehouse location when the catalog does
     * not know the table — the leftover-directory case [[writeBucketed]]
     * handles inline, factored out for every derived-table writer
-    * (tombstone tables, compaction stages): an in-memory catalog cannot
-    * adopt a previous JVM's files, and `saveAsTable` would either refuse
-    * the stale dir or silently adopt its rows as data. A catalog that
-    * DOES know the table is left alone — then the files are the table.
+    * (tombstone tables, compaction stages): a write that failed after
+    * creating files leaves a directory the catalog never recorded, and
+    * `saveAsTable` would either refuse the stale dir or silently adopt
+    * its rows as data. A catalog that DOES know the table is left alone —
+    * then the files are the table.
     */
   private[graft] def dropStaleLocation(s: SparkSession, table: String): Unit =
     if (!s.catalog.tableExists(table)) {
@@ -184,7 +164,7 @@ object Sources {
     )
     val stage = table + "__compact_stage"
     s.sql(s"DROP TABLE IF EXISTS `$stage`")
-    dropStaleLocation(s, stage) // a crashed prior JVM's leftover stage dir
+    dropStaleLocation(s, stage) // a failed earlier compaction's leftover stage dir
     content.write.mode("overwrite").format("parquet").saveAsTable(stage)
     import org.apache.spark.sql.functions.col
     val realigned = s.table(stage).repartition(buckets, keys.map(col): _*)

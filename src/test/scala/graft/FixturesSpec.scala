@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Row
@@ -18,9 +17,6 @@ import graft.queries.Fixtures
   *    analysis errors.
   */
 class FixturesSpec extends SparkSpecBase {
-
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-fixtures").toString
 
   // Three instants around a DST boundary + an exact second, micro precision.
   private val microsUtc = Seq(
@@ -43,11 +39,11 @@ class FixturesSpec extends SparkSpecBase {
         lit("{}").as("props"))
 
     // Encoding A: int64 nanos column named ts (what nanosAsLong yields).
-    val dirA = tmpDir()
+    val dirA = tempDir("fixtures")
     eventRows(($"us" * 1000L).cast("long")).write.parquet(s"$dirA/events.parquet")
 
     // Encoding B: TIMESTAMP_NTZ micros (the current fixture writer's type).
-    val dirB = tmpDir()
+    val dirB = tempDir("fixtures")
     eventRows(timestamp_micros($"us").cast(TimestampNTZType))
       .write.parquet(s"$dirB/events.parquet")
 
@@ -66,7 +62,7 @@ class FixturesSpec extends SparkSpecBase {
   test("wrong-typed fixture column fails with a named schema diff") {
     val s = spark
     import s.implicits._
-    val dir = tmpDir()
+    val dir = tempDir("fixtures")
     // documents.n_chars as string — a type drift the loader must name.
     Seq((1L, "hello", "en", "web", "5"))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -79,7 +75,7 @@ class FixturesSpec extends SparkSpecBase {
   test("missing fixture column is named in the diff") {
     val s = spark
     import s.implicits._
-    val dir = tmpDir()
+    val dir = tempDir("fixtures")
     Seq((1L, "hello")).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
     val e = intercept[IllegalStateException](Fixtures.t(spark, dir, "documents"))
     assert(e.getMessage.contains("documents.lang: MISSING"))

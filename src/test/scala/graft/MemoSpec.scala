@@ -104,7 +104,7 @@ class MemoSpec extends SparkSpecBase {
       s2.range(3).toDF("id")
     }
     // a minimal events fixture in the long-nanos encoding
-    val dir = java.nio.file.Files.createTempDirectory("memo_events").toString
+    val dir = tempDir("memo_events")
     s2.range(3)
       .select(col("id").as("event_id"), (col("id") * 1000000000L).as("ts"), col("id").as("user_id"),
         lit("click").as("event_type"), col("id").cast("double").as("value"), lit("{}").as("props"))

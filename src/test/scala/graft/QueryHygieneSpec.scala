@@ -72,11 +72,11 @@ class QueryHygieneSpec extends SparkSpecBase {
     // ConcurrentHashMap / WeakHashMap / AtomicReference field anywhere
     // else in main code fails here, so adding a cache means removing one
     // or extending this list in review. Index state lives in the catalog
-    // and its companion tables; the two fields left hold what no table
+    // and its companion tables; the one field left holds what no table
     // can: BucketedIndex's in-flight build stages (the catalog cannot tell
-    // a live stage from an abandoned one) and Scratch's exit-time deletion
-    // registry. The found set must EQUAL the list, so a stale entry fails.
-    val allowed = Set("BucketedIndex.scala:inFlightBuilds", "Scratch.scala:created")
+    // a live stage from an abandoned one). The found set must EQUAL the
+    // list, so a stale entry fails.
+    val allowed = Set("BucketedIndex.scala:inFlightBuilds")
     // a declaration typed as, or initialised (possibly on the next line)
     // with, one of the three classes
     val t = "(?:ConcurrentHashMap|WeakHashMap|AtomicReference)"

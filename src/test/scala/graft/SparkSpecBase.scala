@@ -18,6 +18,15 @@ abstract class SparkSpecBase extends AnyFunSuite {
   def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
 
+  /** A fresh directory under this JVM's scratch root, deleted with the
+    * root at exit.
+    */
+  def tempDir(tag: String): String = {
+    val d = graft.queries.Scratch.dir(tag, System.nanoTime().toString)
+    new java.io.File(d).mkdirs()
+    d
+  }
+
   def strings(df: DataFrame, colName: String): Seq[String] =
     df.select(colName).collect().toSeq.map(r => Option(r.get(0)).map(_.toString).orNull)
 

@@ -46,7 +46,7 @@ class BucketedIndexSpec extends SparkSpecBase {
       .write.mode("overwrite").insertInto(wmT)
     spark.catalog.refreshTable(wmT)
     assert(Multimodal.quarantineWatermark(spark, tbl) == ((beyond, beyond + 10)))
-    val sink = java.nio.file.Files.createTempDirectory("bispec_wm").resolve("t").toString
+    val sink = tempDir("bispec_wm") + "/t"
     intercept[IllegalStateException] {
       Multimodal.sweepHammingQuarantine(
         spark, tbl, Seq((100L, 42L)).toDF("asset_id", "fp"), "asset_id", "fp",
@@ -99,7 +99,7 @@ class BucketedIndexSpec extends SparkSpecBase {
       val slice = order.slice(lo.toInt, hi.toInt).toSet
       rows.filter { case (b, v, id) => slice((b, v)) && id != 3L && id != 25L }.sorted
     }
-    val sink = java.nio.file.Files.createTempDirectory("bispec_ticks").resolve("t").toString
+    val sink = tempDir("bispec_ticks") + "/t"
     val (start, total) = Multimodal.quarantineWatermark(spark, tbl)
     assert(start == 0L && total == 12L)
     var lo = start

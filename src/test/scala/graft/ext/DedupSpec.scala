@@ -933,7 +933,7 @@ class DedupSpec extends SparkSpecBase {
       corpus, col("doc_id"), col("text"), tbl, buckets = 4, maxBucket = 10)
     Dedup.quarantineLshIndex(
       spark, tbl, corpus, col("doc_id"), col("text"), buckets = 4, maxBucket = 10)
-    assert(Dedup.lshQuarantineWatermark(spark, tbl) == ((0L, 4L)),
+    assert(BucketedIndex.quarantineWatermark(spark, tbl) == ((0L, 4L)),
       "the boilerplate cluster quarantines one bucket per band")
     def pairsOf(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
@@ -948,8 +948,7 @@ class DedupSpec extends SparkSpecBase {
     var tickNo = 0
     def tick() = {
       tickNo += 1
-      val sink = java.nio.file.Files
-        .createTempDirectory("lshspec_sweep").resolve(s"t$tickNo").toString
+      val sink = s"${tempDir("lshspec_sweep")}/t$tickNo"
       Dedup.sweepLshQuarantine(
         spark, tbl, incoming, col("doc_id"), col("text"),
         maxBucketsPerTick = 3, sink = sink)
@@ -960,11 +959,11 @@ class DedupSpec extends SparkSpecBase {
     val want100 = (1L to 12L).filterNot(Set(3L, 7L)).map((100L, _))
     val t1 = tick()
     assert(t1 == want100, s"tick 1: $t1")
-    assert(Dedup.lshQuarantineWatermark(spark, tbl) == ((3L, 4L)))
+    assert(BucketedIndex.quarantineWatermark(spark, tbl) == ((3L, 4L)))
     val t2 = tick()
     assert(t2 == want100, "the last bucket repeats the same candidates (4-band redundancy)")
-    assert(Dedup.lshQuarantineWatermark(spark, tbl) == ((4L, 4L)))
-    assert(tick().isEmpty && Dedup.lshQuarantineWatermark(spark, tbl) == ((4L, 4L)))
+    assert(BucketedIndex.quarantineWatermark(spark, tbl) == ((4L, 4L)))
+    assert(tick().isEmpty && BucketedIndex.quarantineWatermark(spark, tbl) == ((4L, 4L)))
     // the recovery contract vs an UNCAPPED index over the live corpus
     val unc = s"lshspec_sweep_unc_${System.nanoTime()}"
     Dedup.persistLshIndex(
@@ -980,13 +979,13 @@ class DedupSpec extends SparkSpecBase {
       (51L to 62L).map((_, textB)).toDF("doc_id", "text"),
       col("doc_id"), col("text"), tbl, buckets = 4)
     Dedup.compactLshIndex(spark, tbl, buckets = 4, maxBucket = 10)
-    assert(Dedup.lshQuarantineWatermark(spark, tbl)._1 == 0L,
+    assert(BucketedIndex.quarantineWatermark(spark, tbl)._1 == 0L,
       "compact capture must reset the sweep watermark")
     assert(
       Dedup.probeLshIndex(spark, tbl, incoming, col("doc_id"), col("text")).count() == 0,
       "the regrown bucket must be re-capped out of the serving path")
-    Dedup.resetLshQuarantineSweep(spark, tbl)
-    val (_, total) = Dedup.lshQuarantineWatermark(spark, tbl)
+    Dedup.LshLayout.resetSweep(spark, tbl)
+    val (_, total) = BucketedIndex.quarantineWatermark(spark, tbl)
     val afterCompact = (1L to (total + 2) / 3).flatMap(_ => tick()).distinct.sorted
     val wantB = ((41L to 42L) ++ (51L to 62L)).map((102L, _))
     assert(afterCompact == (want100 ++ wantB).sorted,

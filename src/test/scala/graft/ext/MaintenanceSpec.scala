@@ -194,8 +194,7 @@ class MaintenanceSpec extends SparkSpecBase {
     Multimodal.sweepHammingQuarantine(
       spark, tbl, Seq((100L, 42L)).toDF("asset_id", "fp"), "asset_id", "fp",
       maxHamming = 8, maxBucketsPerTick = 3,
-      sink = java.nio.file.Files
-        .createTempDirectory("mntspec_sweep").resolve("t1").toString)
+      sink = tempDir("mntspec_sweep") + "/t1")
     val c2 = Maintenance.indexCensus(spark, tbl, "corpus_id", "q").collect().head
     assert((c2.getAs[Long]("swept_through"), c2.getAs[Long]("quar_unswept")) == ((3L, 1L)),
       "a bounded tick advances the watermark by its bucket budget")

@@ -627,8 +627,7 @@ class MultimodalSpec extends SparkSpecBase {
     var tickNo = 0
     def sweepTick() = {
       tickNo += 1
-      val sink = java.nio.file.Files
-        .createTempDirectory("hamspec_sweep").resolve(s"t$tickNo").toString
+      val sink = s"${tempDir("hamspec_sweep")}/t$tickNo"
       Multimodal.sweepHammingQuarantine(
         spark, tbl, incoming, "asset_id", "fp",
         maxHamming = 8, maxBucketsPerTick = 4, sink = sink)
@@ -684,8 +683,7 @@ class MultimodalSpec extends SparkSpecBase {
     def sweepAll() = {
       Multimodal.resetQuarantineSweep(spark, tbl)
       val (_, total) = Multimodal.quarantineWatermark(spark, tbl)
-      val sink = java.nio.file.Files
-        .createTempDirectory("hamspec_sweeptomb").resolve("all").toString
+      val sink = tempDir("hamspec_sweeptomb") + "/all"
       (1L to (total + 3) / 4).foreach(_ => Multimodal.sweepHammingQuarantine(
         spark, tbl, incoming, "asset_id", "fp",
         maxHamming = 8, maxBucketsPerTick = 4, sink = sink))
@@ -726,7 +724,8 @@ class MultimodalSpec extends SparkSpecBase {
     assert(Multimodal.quarantineWatermark(spark, tbl) == ((0L, 4L)))
     // a sink path that is an existing FILE: the tick dies mid-write, before
     // its pairs are durable
-    val bad = java.nio.file.Files.createTempFile("hamspec_sweepfail", ".notadir").toString
+    val bad = tempDir("hamspec_sweepfail") + "/sink.notadir"
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(bad))
     intercept[Exception] {
       Multimodal.sweepHammingQuarantine(
         spark, tbl, incoming, "asset_id", "fp",
@@ -737,8 +736,7 @@ class MultimodalSpec extends SparkSpecBase {
     // the retry covers the SAME bucket range and recovers every pair — the
     // at-least-once contract (the old advance-before-execute shape skipped
     // a failed tick's buckets forever)
-    val good = java.nio.file.Files
-      .createTempDirectory("hamspec_sweepfail").resolve("t1").toString
+    val good = tempDir("hamspec_sweepfail") + "/t1"
     Multimodal.sweepHammingQuarantine(
       spark, tbl, incoming, "asset_id", "fp",
       maxHamming = 8, maxBucketsPerTick = 4, sink = good)

@@ -7,12 +7,6 @@ import org.apache.spark.sql.functions._
 class LayoutOpsSpec extends SparkSpecBase {
   import spark.implicits._
 
-  private def tmpDir(tag: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_layout_$tag").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
-
   private def contentOf(path: String): Seq[(Long, String, String)] =
     spark.read.parquet(path)
       .select($"id", $"p", $"payload")
@@ -20,8 +14,8 @@ class LayoutOpsSpec extends SparkSpecBase {
       .collect().toSeq.sorted
 
   test("compact: fragmented partitions collapse to exactly ceil(rows/target) files, content intact") {
-    val in = tmpDir("in")
-    val out = tmpDir("out")
+    val in = tempDir("layout_in")
+    val out = tempDir("layout_out")
     // 3 partitions × 1000 rows, written from 10 shuffle partitions → 10
     // small files per partition directory
     val df = (1 to 3000).map(i => (i.toLong, s"p${i % 3}", s"row$i")).toDF("id", "p", "payload")
@@ -40,8 +34,8 @@ class LayoutOpsSpec extends SparkSpecBase {
   }
 
   test("compact: an oversized partition splits across salt groups with bounded tail slack") {
-    val in = tmpDir("skewin")
-    val out = tmpDir("skewout")
+    val in = tempDir("layout_skewin")
+    val out = tempDir("layout_skewout")
     // one hot partition (5000 rows) beside a small one (300): the hot one
     // must spread across ceil(5000/500) = 10 groups for write parallelism
     val df = ((1 to 5000).map(i => (i.toLong, "hot", s"r$i")) ++
@@ -57,7 +51,7 @@ class LayoutOpsSpec extends SparkSpecBase {
   }
 
   test("manifest + skippingScan: prunes files by min/max, loses no qualifying row") {
-    val in = tmpDir("skip")
+    val in = tempDir("layout_skip")
     // range-clustered layout: 8 files with disjoint id ranges
     val df = (1 to 4000).map(i => (i.toLong, s"v$i")).toDF("id", "payload")
     df.repartitionByRange(8, $"id").write.mode("overwrite").parquet(in)
@@ -82,7 +76,7 @@ class LayoutOpsSpec extends SparkSpecBase {
   }
 
   test("skippingScan: all-null stat files are skipped safely (null never matches a range)") {
-    val in = tmpDir("skipnull")
+    val in = tempDir("layout_skipnull")
     val some = (1 to 100).map(i => (Option(i.toLong), s"v$i"))
     val nulls = (1 to 50).map(i => (Option.empty[Long], s"n$i"))
     // two single-file writes into one dir: one real range, one all-null
@@ -95,7 +89,7 @@ class LayoutOpsSpec extends SparkSpecBase {
   }
 
   test("manifestAppend: maintained manifest equals a full rebuild; no fresh files = identity") {
-    val in = tmpDir("mmaint")
+    val in = tempDir("layout_mmaint")
     val df = (1 to 2000).map(i => (i.toLong, s"v$i")).toDF("id", "payload")
     df.repartitionByRange(4, $"id").write.mode("overwrite").parquet(in)
     val all = spark.read.parquet(in).inputFiles.sorted
@@ -113,7 +107,7 @@ class LayoutOpsSpec extends SparkSpecBase {
   }
 
   test("bucketIndex + pointLookupScan: IN-probe opens few files, exact rows, absent key reads nothing") {
-    val in = tmpDir("ptlk")
+    val in = tempDir("layout_ptlk")
     val df = (1 to 4000).map(i => (i.toLong, s"v$i")).toDF("id", "payload")
     df.repartitionByRange(8, $"id").write.mode("overwrite").parquet(in)
     val idx = LayoutOps.bucketIndex(spark, in, "id", buckets = 4096)
@@ -132,7 +126,7 @@ class LayoutOpsSpec extends SparkSpecBase {
   }
 
   test("z-ordered layout + manifest skips files on EITHER interleaved dimension") {
-    val in = tmpDir("zskip")
+    val in = tempDir("layout_zskip")
     // 64×64 grid: a z-ordered 8-file layout bounds both x and y per file;
     // a linear sort on x would leave every file spanning all of y
     val grid = for { x <- 0 until 64; y <- 0 until 64 } yield (x.toLong, y.toLong)
@@ -149,9 +143,9 @@ class LayoutOpsSpec extends SparkSpecBase {
   }
 
   test("compact: deterministic — two runs produce identical file assignment") {
-    val in = tmpDir("detin")
-    val out1 = tmpDir("detout1")
-    val out2 = tmpDir("detout2")
+    val in = tempDir("layout_detin")
+    val out1 = tempDir("layout_detout1")
+    val out2 = tempDir("layout_detout2")
     val df = (1 to 900).map(i => (i.toLong, s"p${i % 2}", s"x$i")).toDF("id", "p", "payload")
     df.repartition(6).write.mode("overwrite").partitionBy("p").parquet(in)
     LayoutOps.compact(spark, in, out1, "p", targetRowsPerFile = 128)

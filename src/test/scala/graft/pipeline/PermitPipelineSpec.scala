@@ -99,7 +99,7 @@ class PermitPipelineSpec extends SparkSpecBase {
       .length
 
   test("run evaluates the batch once for both the upload sink and the review read") {
-    val dir = s"/tmp/graft_cache/permit_pipeline_spec/run-${System.nanoTime()}"
+    val dir = tempDir("permit_pipeline_spec")
     raw.write.json(s"$dir/permits")
     val permits = spark.read.schema(raw.schema).json(s"$dir/permits")
     Seq(None, Some(existing)).zipWithIndex.foreach { case (ex, k) =>

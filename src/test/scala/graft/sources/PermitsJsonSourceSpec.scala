@@ -9,7 +9,7 @@ class PermitsJsonSourceSpec extends SparkSpecBase {
   import spark.implicits._
 
   private def writeFixture(): String = {
-    val dir = Files.createTempDirectory("permits_json").toFile
+    val dir = new java.io.File(tempDir("permits_json"))
     val lines = Seq(
       """{"permit_":"P1","issue_date":"1995-06-01T00:00:00.000000","pin_list":"111","work_description":"New roof"}""",
       """{"permit_":"P2","issue_date":"1996-06-01T00:00:00.000000","pin_list":"222","work_description":"Garage"}""",
@@ -96,7 +96,7 @@ class PermitsJsonSourceSpec extends SparkSpecBase {
   test("byte-range splits read every line exactly once, at every boundary alignment") {
     // 200 variable-length lines; small splitBytes guarantees many ranges
     // whose boundaries land mid-line, at line starts, and at newlines
-    val dir = Files.createTempDirectory("permits_split").toFile
+    val dir = new java.io.File(tempDir("permits_split"))
     val lines = (0 until 200).map(i =>
       s"""{"permit_":"S$i","issue_date":"1995-01-01T00:00:00.000000","pin_list":"${"x" * (i % 37)}"}""")
     Files.write(new java.io.File(dir, "big.json").toPath, lines.mkString("\n").getBytes)
@@ -115,7 +115,7 @@ class PermitsJsonSourceSpec extends SparkSpecBase {
   }
 
   test("pushed filters and limit compose with byte-range splits") {
-    val dir = Files.createTempDirectory("permits_split2").toFile
+    val dir = new java.io.File(tempDir("permits_split2"))
     val lines = (0 until 100).map(i =>
       s"""{"permit_":"Q$i","issue_date":"${if (i % 2 == 0) "1995" else "1996"}-01-01T00:00:00.000000"}""")
     Files.write(new java.io.File(dir, "big.json").toPath, lines.mkString("\n").getBytes)
@@ -146,7 +146,7 @@ class PermitsJsonSourceSpec extends SparkSpecBase {
   }
 
   test("gzipped members read identically and are never byte-range split") {
-    val dir = Files.createTempDirectory("permits_gz").toFile
+    val dir = new java.io.File(tempDir("permits_gz"))
     // enough lines that the raw size clears a tiny splitBytes
     val lines = (1 to 200).map(i =>
       s"""{"permit_":"P$i","issue_date":"1995-06-01T00:00:00.000000","pin_list":"$i"}""")

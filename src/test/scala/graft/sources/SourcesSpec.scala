@@ -3,13 +3,13 @@ package graft.sources
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
 
-/** Source/sink helpers: batched sink, parquet memo, bucketed co-location. */
+/** Source/sink helpers: batched sink, bucketed co-location, zip packaging. */
 class SourcesSpec extends SparkSpecBase {
   import spark.implicits._
 
   test("writePartitioned layout prunes non-qualifying partitions at plan time") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("partitioned").toString
+    val dir = tempDir("partitioned")
     val df = (1 to 300).map(i => (i.toLong, 1990 + i % 3)).toDF("id", "yr")
     Sources.writePartitioned(df, dir, "yr")
     // one directory per partition value
@@ -24,7 +24,7 @@ class SourcesSpec extends SparkSpecBase {
   }
 
   test("ORC roundtrip preserves values and pushes the predicate to the reader") {
-    val dir = java.nio.file.Files.createTempDirectory("orc_rt").toString
+    val dir = tempDir("orc_rt")
     val df = (1 to 200).map(i => (i.toLong, if (i % 4 == 0) "F" else "O")).toDF("id", "st")
     df.write.mode("overwrite").orc(dir)
     val q = spark.read.orc(dir).filter($"st" === "F").select($"id")
@@ -37,32 +37,22 @@ class SourcesSpec extends SparkSpecBase {
   }
 
   test("writeBatched caps rows per file at maxRecords") {
-    val dir = java.nio.file.Files.createTempDirectory("batched").toString
+    val dir = tempDir("batched")
     Sources.writeBatched((1 to 1000).toDF("n"), dir, 250)
     val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
     val sizes = files.map(f => spark.read.parquet(f.getAbsolutePath).count())
     assert(sizes.sum == 1000L && sizes.max <= 250L)
   }
 
-  test("cached(): first call computes and memoizes, second call reads the memo") {
-    val dir = java.nio.file.Files.createTempDirectory("memo").toString
-    var computes = 0
-    def compute = { computes += 1; (1 to 10).toDF("n") }
-    val a = Sources.cached(spark, dir, "k1")(compute)
-    val b = Sources.cached(spark, dir, "k1")(compute)
-    assert(computes == 1)
-    assert(a.count() == 10 && b.count() == 10)
-  }
-
   test("zipDirectory is deterministic and lossless (S9 packaging twin)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("s9src").toFile
+    val dir = new java.io.File(tempDir("s9src"))
     val data = (0 until 600).map(i => (s"P$i", s"${i * 7}"))
     data.toDF("permit_", "reported_cost")
       .write.mode("overwrite").option("header", "true")
       .option("maxRecordsPerFile", 250L).csv(dir.getAbsolutePath)
-    val z1 = java.nio.file.Files.createTempFile("s9", ".zip").toString
-    val z2 = java.nio.file.Files.createTempFile("s9", ".zip").toString
+    val z1 = tempDir("s9") + "/a.zip"
+    val z2 = tempDir("s9") + "/b.zip"
     Sources.zipDirectory(dir.getAbsolutePath, z1)
     Sources.zipDirectory(dir.getAbsolutePath, z2)
     // reproducible bytes: same input directory → byte-identical archive

@@ -9,7 +9,7 @@ class XlsxSpec extends SparkSpecBase {
   import spark.implicits._
 
   private def tmp(name: String): String =
-    s"/tmp/graft_cache/xlsx_spec/$name-${System.nanoTime()}.xlsx"
+    s"${tempDir("xlsx_spec")}/$name.xlsx"
 
   test("multi-sheet write → read roundtrip, named-sheet resolution") {
     val a = Seq(("1", "alpha"), ("2", "beta & <gamma>")).toDF("id", "name")
@@ -77,7 +77,7 @@ class XlsxSpec extends SparkSpecBase {
   }
 
   test("many workbooks scan as one DataFrame via glob (one task per file)") {
-    val dir = s"/tmp/graft_cache/xlsx_spec/multi-${System.nanoTime()}"
+    val dir = tempDir("xlsx_spec_multi")
     (1 to 3).foreach { i =>
       val df = Seq((s"$i", s"wb$i")).toDF("id", "src")
       Xlsx.writeSheets(Seq("Data" -> df), s"$dir/wb$i.xlsx")
@@ -231,7 +231,7 @@ class XlsxSpec extends SparkSpecBase {
   }
 
   test("multi-file scan aligns heterogeneous workbooks by header name") {
-    val dir = s"/tmp/graft_cache/xlsx_spec/hetero-${System.nanoTime()}"
+    val dir = tempDir("xlsx_spec_hetero")
     // a_* sorts first -> its header (id, src) is the schema; the second
     // workbook has the columns REVERSED plus an extra one
     Xlsx.writeSheets(Seq("Data" -> Seq(("1", "wb1")).toDF("id", "src")), s"$dir/a_wb1.xlsx")
@@ -242,7 +242,7 @@ class XlsxSpec extends SparkSpecBase {
   }
 
   test("schema falls back to the first file that HAS the sheet; absent everywhere fails loudly") {
-    val dir = s"/tmp/graft_cache/xlsx_spec/fallback-${System.nanoTime()}"
+    val dir = tempDir("xlsx_spec_fallback")
     // a_* sorts first but lacks the "Data" sheet — its file must contribute
     // neither schema nor rows, NOT collapse the scan to zero columns
     Xlsx.writeSheets(Seq("Other" -> Seq(("x", "y")).toDF("p", "q")), s"$dir/a_other.xlsx")
@@ -326,7 +326,7 @@ class XlsxSpec extends SparkSpecBase {
   }
 
   test("removeFlaggedRows deletes flagged rows, preserves other rows' fills and other sheets") {
-    val dir = s"/tmp/graft_cache/xlsx_spec/qc-${System.nanoTime()}"
+    val dir = tempDir("xlsx_spec_qc")
     val orig = s"$dir/orig.xlsx"
     val cleaned = s"$dir/cleaned.xlsx"
     val data = Seq(
@@ -350,7 +350,7 @@ class XlsxSpec extends SparkSpecBase {
   }
 
   test("removeFlaggedRows round-trips header-row fills like the reference's in-place edit") {
-    val dir = s"/tmp/graft_cache/xlsx_spec/qc-hdr-${System.nanoTime()}"
+    val dir = tempDir("xlsx_spec_qc_hdr")
     val orig = s"$dir/orig.xlsx"
     val cleaned = s"$dir/cleaned.xlsx"
     // workbook with a FILLED header row (blue on both header cells) plus a

@@ -115,8 +115,8 @@ class SessionizeSpec extends SparkSpecBase {
     // File sink because memory sinks refuse checkpoint recovery.
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sess_ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft_sess_out").toString
+    val ckpt = tempDir("sess_ckpt")
+    val outDir = tempDir("sess_out")
     val mem = MemoryStream[Sessionize.SessionEvent]
     def start() = Sessionize.sessionizeWithState(mem.toDS(), gapMinutes = 30)
       .writeStream.format("parquet").option("path", outDir)

@@ -81,8 +81,8 @@ class TemporalStreamSpec extends SparkSpecBase {
     // fault-tolerant file sink (exactly-once via the _spark_metadata log).
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_asof_ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft_asof_out").toString
+    val ckpt = tempDir("asof_ckpt")
+    val outDir = tempDir("asof_out")
     val mem = MemoryStream[TemporalStream.AsofIn]
     def start() = TemporalStream
       .asofJoinStream(mem.toDS(), watermarkDelay = "0 seconds")
