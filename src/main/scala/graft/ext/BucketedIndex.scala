@@ -187,7 +187,9 @@ object BucketedIndex {
     }
 
     /** Begin a fresh sweep PASS: watermark to zero, bucket total read
-      * from the quarantine as its highest rank (one-row aggregate).
+      * from the quarantine as its highest rank (one-row aggregate). Every
+      * quarantine write does this itself; a scheduler calls it to sweep an
+      * unchanged quarantine again for a new probe batch.
       */
     def resetSweep(s: SparkSession, table: String): Unit = {
       val qT = quarTable(table)

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.PlanOps.freeCheckpoint
 
 /** Large-scale dedup operators for training-data pipelines (north-star
   * extensions, SURVEY.md §7.5). Generalizes the reference's exact anti-join
@@ -85,23 +86,6 @@ object Dedup {
     )
   }
 
-  /** MinHash signature as `k` hex-string minima. Permutation hashes are
-    * non-overlapping 8-hex-char (32-bit) windows of md5(gram) and
-    * md5(gram || "#s") salts — fixed-width lowercase hex, so lexicographic
-    * MIN == numeric MIN, and the same construction is expressible in any SQL
-    * oracle without a shared integer hash function. k must be a multiple
-    * of 4 (4 windows per md5).
-    *
-    * Convenience single-Column form; the staged [[minhashSignatures]] is the
-    * scale path (it keeps each expensive intermediate a real attribute so
-    * Catalyst's CollapseProject cannot inline-duplicate the shingle/md5
-    * subtrees into every permutation lambda).
-    */
-  def minhashSignature(gramsCol: Column, k: Int): Column = {
-    require(k % 4 == 0, s"k must be a multiple of 4, got $k")
-    sigFromHexes((0 until k / 4).map(s => transform(gramsCol, g => saltedMd5(g, s))))
-  }
-
   private def saltedMd5(g: Column, salt: Int): Column =
     if (salt == 0) md5(g) else md5(concat(g, lit("#" + salt)))
 
@@ -115,7 +99,11 @@ object Dedup {
 
   /** Staged signature pipeline: id + `sig` (array of k hex minima), with
     * optional carried-through columns (e.g. an event-time column for the
-    * streaming variant).
+    * streaming variant). Permutation hashes are non-overlapping 8-hex-char
+    * (32-bit) windows of md5(gram) and md5(gram || "#s") salts — fixed-width
+    * lowercase hex, so lexicographic MIN == numeric MIN, and the same
+    * construction is expressible in any SQL oracle without a shared integer
+    * hash function. k must be a multiple of 4 (4 windows per md5).
     *
     * Each stage materializes its intermediate as a named attribute in its own
     * projection. CollapseProject refuses to merge projections whose producer
@@ -785,15 +773,6 @@ object Dedup {
         (-col("w.nid")).as("doc_id"),
         col("cluster_id"),
         col("w.s").as(scoreName))
-
-  /** Release a localCheckpoint'ed frame's persisted blocks. The blocks are
-    * RDD-level persists (not CacheManager entries), so `Dataset.unpersist`
-    * cannot reach them — the handle is the LogicalRDD node's rdd.
-    */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed
-      .collectFirst { case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd }
-      .foreach(_.unpersist(blocking = false))
 
   /** 32-bit SimHash over word tokens. Bit i of the fingerprint is the sign
     * of the sum over tokens of ±1, where the vote is bit (i mod 4) of hex

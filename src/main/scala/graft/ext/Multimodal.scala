@@ -1,8 +1,10 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import java.awt.image.BufferedImage
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Multimodal column plumbing (north-star extension, SURVEY.md §7.5).
   *
@@ -94,39 +96,62 @@ object Multimodal {
       height: Int
   )
 
-  /** The imperative decode path a codec needs: `mapPartitions` with one
-    * codec context amortized across the partition's rows (opening a decoder
-    * per row is the classic per-row-UDF mistake; per-partition batching is
-    * the Scala twin of an Arrow-batched Pandas UDF). Input must have
-    * (asset_id: long, media_type: string, payload: binary).
+  /** The asset loop every per-asset media operator is a kernel over — the
+    * imperative decode path a codec needs: `mapPartitions` with one codec
+    * context amortized across the partition's rows (opening a decoder per
+    * row is the classic per-row-UDF mistake; per-partition batching is the
+    * Scala twin of an Arrow-batched Pandas UDF). Selects `asset_id` (as
+    * long), `media_type` only when the kernel reads it (the kernel sees
+    * `null` otherwise) and `payload`; each row flat-maps through the kernel
+    * into rows of `R`. Map-only: no shuffle before or after the decode.
+    */
+  private def perAsset[R <: Product: TypeTag](assets: DataFrame, mediaType: Boolean)(
+      kernel: (ImageCodec, Long, String, Array[Byte]) => IterableOnce[R]): Dataset[R] = {
+    val cols = Seq(col("asset_id").cast("long")) ++ Option.when(mediaType)(col("media_type")) :+ col("payload")
+    assets.select(cols: _*).mapPartitions { rows =>
+      val codec = new ImageCodec
+      rows.flatMap { r =>
+        kernel(codec, r.getLong(0), if (mediaType) r.getString(1) else null, r.getAs[Array[Byte]](r.length - 1))
+      }
+    }(Encoders.product[R])
+  }
+
+  /** The id loop behind every `synth*` fixture generator: each id of
+    * `idCol` (as long) runs through `kernel` with one codec per partition,
+    * which returns the asset's media type and payload bytes. Output is the
+    * (asset_id, media_type, payload) asset triple.
+    */
+  private def perId(df: DataFrame, idCol: String)(
+      kernel: (ImageCodec, Long) => (String, Array[Byte])): DataFrame =
+    df.select(col(idCol).cast("long"))
+      .as[Long](Encoders.scalaLong)
+      .mapPartitions { ids =>
+        val codec = new ImageCodec
+        ids.map { id =>
+          val (mt, payload) = kernel(codec, id)
+          (id, mt, payload)
+        }
+      }(Encoders.product[(Long, String, Array[Byte])])
+      .toDF("asset_id", "media_type", "payload")
+
+  /** Partition-batched decode over an asset table with (asset_id: long,
+    * media_type: string, payload: binary).
     *
     * `image/…`-typed payloads take the REAL branch — `javax.imageio` parses the
     * actual PNG/BMP bytes for dimensions. Non-image payloads (text, and
     * audio/video for which the JDK ships no codec) fall back to the
-    * deterministic byte-derived dims of [[ByteDimsCodec]] — that fallback
+    * deterministic byte-derived dims of [[byteDims]] — that fallback
     * is the remaining STUB surface, clearly scoped.
     */
-  def decodePartitioned(assets: DataFrame): Dataset[DecodedAsset] = {
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets
-      .select(col("asset_id").cast("long"), col("media_type"), col("payload"))
-      .as[(Long, String, Array[Byte])]
-      .mapPartitions { rows =>
-        // one codec context per partition (the expensive init a real
-        // decoder amortizes here)
-        val fallback = new ByteDimsCodec
-        val codec = new ImageCodec
-        rows.map { case (id, mt, payload) =>
-          val (w, h) =
-            if (mt != null && mt.startsWith("image/") && payload != null) {
-              val img = codec.decode(payload, s"asset $id")
-              (img.getWidth, img.getHeight)
-            } else fallback.decodeDims(payload)
-          DecodedAsset(id, mt, if (payload == null) 0L else payload.length.toLong, w, h)
-        }
-      }
-  }
+  def decodePartitioned(assets: DataFrame): Dataset[DecodedAsset] =
+    perAsset(assets, mediaType = true) { (codec, id, mt, payload) =>
+      val (w, h) =
+        if (mt != null && mt.startsWith("image/") && payload != null) {
+          val img = codec.decode(payload, s"asset $id")
+          (img.getWidth, img.getHeight)
+        } else byteDims(payload)
+      Some(DecodedAsset(id, mt, if (payload == null) 0L else payload.length.toLong, w, h))
+    }
 
   /** One decoded image row: REAL dimensions and raw-sample pixel sum. */
   final case class DecodedImage(
@@ -149,32 +174,13 @@ object Multimodal {
 
   /** REAL image decode (JDK-only `javax.imageio`, PNG + BMP): parses the
     * actual payload bytes inside the partition-batched plumbing and folds
-    * band-0 raster samples into a pixel checksum. Raster samples (not
-    * `getRGB`) on purpose: `getRGB` routes gray images through a
-    * linear-gray→sRGB color transform and would corrupt the raw values.
+    * band-0 raster samples into a pixel checksum ([[band0Sum]]).
     */
-  def decodeImages(assets: DataFrame): Dataset[DecodedImage] = {
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets
-      .select(col("asset_id").cast("long"), col("media_type"), col("payload"))
-      .as[(Long, String, Array[Byte])]
-      .mapPartitions { rows =>
-        val codec = new ImageCodec
-        rows.map { case (id, mt, payload) =>
-          val img = codec.decode(payload, s"asset $id")
-          val raster = img.getRaster
-          var sum = 0L
-          var y = 0
-          while (y < img.getHeight) {
-            var x = 0
-            while (x < img.getWidth) { sum += raster.getSample(x, y, 0); x += 1 }
-            y += 1
-          }
-          DecodedImage(id, mt, img.getWidth, img.getHeight, sum)
-        }
-      }
-  }
+  def decodeImages(assets: DataFrame): Dataset[DecodedImage] =
+    perAsset(assets, mediaType = true) { (codec, id, mt, payload) =>
+      val img = codec.decode(payload, s"asset $id")
+      Some(DecodedImage(id, mt, img.getWidth, img.getHeight, band0Sum(img)))
+    }
 
   /** Image SHARPNESS audit — the variance-of-Laplacian blur detector every
     * vision-data curation pipeline runs before training (blurry frames and
@@ -188,43 +194,30 @@ object Multimodal {
     * Same decode plumbing as [[decodeImages]]: partition-batched real
     * codec, no shuffle before or after — map-only over the asset table.
     */
-  def imageSharpness(assets: DataFrame): Dataset[ImageSharpness] = {
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets
-      .select(col("asset_id").cast("long"), col("media_type"), col("payload"))
-      .as[(Long, String, Array[Byte])]
-      .mapPartitions { rows =>
-        val codec = new ImageCodec
-        rows.map { case (id, mt, payload) =>
-          val img = codec.decode(payload, s"asset $id")
-          val r = img.getRaster
-          val w = img.getWidth
-          val h = img.getHeight
-          var sq = 0L
-          var n = 0L
-          var y = 1
-          while (y < h - 1) {
-            var x = 1
-            while (x < w - 1) {
-              val lap = 4L * r.getSample(x, y, 0) -
-                r.getSample(x - 1, y, 0) - r.getSample(x + 1, y, 0) -
-                r.getSample(x, y - 1, 0) - r.getSample(x, y + 1, 0)
-              sq += lap * lap
-              n += 1
-              x += 1
-            }
-            y += 1
-          }
-          val mean =
-            if (n == 0) None
-            else
-              Some(java.math.BigDecimal.valueOf(sq.toDouble / n.toDouble)
-                .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue)
-          ImageSharpness(id, mt, w, h, n, sq, mean)
+  def imageSharpness(assets: DataFrame): Dataset[ImageSharpness] =
+    perAsset(assets, mediaType = true) { (codec, id, mt, payload) =>
+      val img = codec.decode(payload, s"asset $id")
+      val r = img.getRaster
+      val w = img.getWidth
+      val h = img.getHeight
+      var sq = 0L
+      var n = 0L
+      var y = 1
+      while (y < h - 1) {
+        var x = 1
+        while (x < w - 1) {
+          val lap = 4L * r.getSample(x, y, 0) -
+            r.getSample(x - 1, y, 0) - r.getSample(x + 1, y, 0) -
+            r.getSample(x, y - 1, 0) - r.getSample(x, y + 1, 0)
+          sq += lap * lap
+          n += 1
+          x += 1
         }
+        y += 1
       }
-  }
+      val mean = if (n == 0) None else Some(round6(sq.toDouble / n.toDouble))
+      Some(ImageSharpness(id, mt, w, h, n, sq, mean))
+    }
 
   final case class ImageExposure(
       asset_id: Long,
@@ -250,46 +243,34 @@ object Multimodal {
     * Same decode plumbing as [[decodeImages]]: partition-batched real
     * codec, map-only — no shuffle before or after.
     */
-  def imageExposure(assets: DataFrame): Dataset[ImageExposure] = {
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets
-      .select(col("asset_id").cast("long"), col("media_type"), col("payload"))
-      .as[(Long, String, Array[Byte])]
-      .mapPartitions { rows =>
-        val codec = new ImageCodec
-        rows.map { case (id, mt, payload) =>
-          val img = codec.decode(payload, s"asset $id")
-          val r = img.getRaster
-          val w = img.getWidth
-          val h = img.getHeight
-          var s = 0L
-          var ss = 0L
-          var lo = 0L
-          var hi = 0L
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val p = r.getSample(x, y, 0).toLong
-              s += p
-              ss += p * p
-              if (p <= 2) lo += 1
-              if (p >= 253) hi += 1
-              x += 1
-            }
-            y += 1
-          }
-          val n = w.toLong * h
-          val mean = java.math.BigDecimal.valueOf(s.toDouble / n.toDouble)
-            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-          val rms = java.math.BigDecimal.valueOf(
-            math.sqrt((n * ss - s * s).toDouble) / n.toDouble)
-            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-          ImageExposure(id, mt, w, h, n, mean, rms, lo, hi)
+  def imageExposure(assets: DataFrame): Dataset[ImageExposure] =
+    perAsset(assets, mediaType = true) { (codec, id, mt, payload) =>
+      val img = codec.decode(payload, s"asset $id")
+      val r = img.getRaster
+      val w = img.getWidth
+      val h = img.getHeight
+      var s = 0L
+      var ss = 0L
+      var lo = 0L
+      var hi = 0L
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          val p = r.getSample(x, y, 0).toLong
+          s += p
+          ss += p * p
+          if (p <= 2) lo += 1
+          if (p >= 253) hi += 1
+          x += 1
         }
+        y += 1
       }
-  }
+      val n = w.toLong * h
+      val mean = round6(s.toDouble / n.toDouble)
+      val rms = round6(math.sqrt((n * ss - s * s).toDouble) / n.toDouble)
+      Some(ImageExposure(id, mt, w, h, n, mean, rms, lo, hi))
+    }
 
   final case class ImageHistBin(asset_id: Long, bin: Int, cnt: Long)
 
@@ -303,29 +284,21 @@ object Multimodal {
   def imageHistogram(assets: DataFrame, bins: Int): Dataset[ImageHistBin] = {
     require(bins >= 1 && 256 % bins == 0, "bins must divide 256")
     val width = 256 / bins
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets
-      .select(col("asset_id").cast("long"), col("media_type"), col("payload"))
-      .as[(Long, String, Array[Byte])]
-      .mapPartitions { rows =>
-        val codec = new ImageCodec
-        rows.flatMap { case (id, _, payload) =>
-          val img = codec.decode(payload, s"asset $id")
-          val r = img.getRaster
-          val h = new Array[Long](bins)
-          var y = 0
-          while (y < img.getHeight) {
-            var x = 0
-            while (x < img.getWidth) {
-              h(r.getSample(x, y, 0) / width) += 1
-              x += 1
-            }
-            y += 1
-          }
-          (0 until bins).iterator.filter(h(_) > 0).map(b => ImageHistBin(id, b, h(b)))
+    perAsset(assets, mediaType = false) { (codec, id, _, payload) =>
+      val img = codec.decode(payload, s"asset $id")
+      val r = img.getRaster
+      val h = new Array[Long](bins)
+      var y = 0
+      while (y < img.getHeight) {
+        var x = 0
+        while (x < img.getWidth) {
+          h(r.getSample(x, y, 0) / width) += 1
+          x += 1
         }
+        y += 1
       }
+      (0 until bins).iterator.filter(h(_) > 0).map(b => ImageHistBin(id, b, h(b)))
+    }
   }
 
   /** Deterministic REAL JPEG fixture: encodes actual baseline-JFIF bytes
@@ -338,31 +311,12 @@ object Multimodal {
     * codec is lossy in general (verified: 0 mismatched pixels over the id
     * range). The general lossy path is bound-checked in MultimodalSpec.
     */
-  def synthJpegImages(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"))
-      .as[Long]
-      .mapPartitions { ids =>
-        val codec = new ImageCodec
-        ids.map { id =>
-          val w = (1 + (id % 13)).toInt
-          val h = (1 + (id % 11)).toInt
-          val v = ((id * 31) % 256).toInt
-          val img = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-          val raster = img.getRaster
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) { raster.setSample(x, y, 0, v); x += 1 }
-            y += 1
-          }
-          (id, "image/jpeg", codec.encodeJpeg(img))
-        }
-      }
-      .toDF("asset_id", "media_type", "payload")
-  }
+  def synthJpegImages(df: DataFrame, idCol: String): DataFrame =
+    perId(df, idCol) { (codec, id) =>
+      val v = ((id * 31) % 256).toInt
+      val img = filled((1 + id % 13).toInt, (1 + id % 11).toInt, BufferedImage.TYPE_BYTE_GRAY)((_, _) => v)
+      ("image/jpeg", codec.encodeJpeg(img))
+    }
 
   /** Deterministic REAL image fixture: encodes actual PNG (even ids,
     * 8-bit grayscale) and BMP (odd ids, 24-bit with equal channels)
@@ -372,38 +326,15 @@ object Multimodal {
     * the expected decode output arithmetically while the bytes on the wire
     * are genuine codec output.
     */
-  def synthImages(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"))
-      .as[Long]
-      .mapPartitions { ids =>
-        val codec = new ImageCodec
-        ids.map { id =>
-          val w = (1 + (id % 13)).toInt
-          val h = (1 + (id % 11)).toInt
-          val png = id % 2 == 0
-          val imgType =
-            if (png) java.awt.image.BufferedImage.TYPE_BYTE_GRAY
-            else java.awt.image.BufferedImage.TYPE_3BYTE_BGR
-          val img = new java.awt.image.BufferedImage(w, h, imgType)
-          val raster = img.getRaster
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val v = ((id * 31 + 7L * x + 13L * y) % 256).toInt
-              var b = 0
-              while (b < raster.getNumBands) { raster.setSample(x, y, b, v); b += 1 }
-              x += 1
-            }
-            y += 1
-          }
-          (id, if (png) "image/png" else "image/bmp", codec.encode(img, bmp = !png))
-        }
-      }
-      .toDF("asset_id", "media_type", "payload")
-  }
+  def synthImages(df: DataFrame, idCol: String): DataFrame =
+    perId(df, idCol) { (codec, id) =>
+      val png = id % 2 == 0
+      val img = filled(
+        (1 + id % 13).toInt, (1 + id % 11).toInt,
+        if (png) BufferedImage.TYPE_BYTE_GRAY else BufferedImage.TYPE_3BYTE_BGR
+      )((x, y) => ((id * 31 + 7L * x + 13L * y) % 256).toInt)
+      (if (png) "image/png" else "image/bmp", codec.encode(img, bmp = !png))
+    }
 
   /** REAL image resize: decode → nearest-neighbor resample → re-encode,
     * inside the partition-batched plumbing. The contract is integer-exact
@@ -417,49 +348,39 @@ object Multimodal {
     */
   def resizeImages(assets: DataFrame, maxSide: Int): DataFrame = {
     require(maxSide > 0, "maxSide must be positive")
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets
-      .select(col("asset_id").cast("long"), col("media_type"), col("payload"))
-      .as[(Long, String, Array[Byte])]
-      .mapPartitions { rows =>
-        val codec = new ImageCodec
-        rows.map { case (id, mt, payload) =>
-          val img = codec.decode(payload, s"asset $id")
-          val (w, h) = (img.getWidth, img.getHeight)
-          val (tw, th) =
-            if (w <= maxSide && h <= maxSide) (w, h)
-            else {
-              val m = math.max(w, h)
-              (math.max(1, w * maxSide / m), math.max(1, h * maxSide / m))
-            }
-          val outType =
-            if (img.getType == java.awt.image.BufferedImage.TYPE_CUSTOM)
-              java.awt.image.BufferedImage.TYPE_3BYTE_BGR
-            else img.getType
-          val out = new java.awt.image.BufferedImage(tw, th, outType)
-          val src = img.getRaster
-          val dst = out.getRaster
-          val bands = math.min(src.getNumBands, dst.getNumBands)
-          var y = 0
-          while (y < th) {
-            val sy = y * h / th
-            var x = 0
-            while (x < tw) {
-              val sx = x * w / tw
-              var b = 0
-              while (b < bands) { dst.setSample(x, y, b, src.getSample(sx, sy, b)); b += 1 }
-              x += 1
-            }
-            y += 1
-          }
-          val bytes =
-            if (mt != null && mt.endsWith("jpeg")) codec.encodeJpeg(out)
-            else codec.encode(out, bmp = mt != null && mt.endsWith("bmp"))
-          (id, mt, bytes)
+    perAsset(assets, mediaType = true) { (codec, id, mt, payload) =>
+      val img = codec.decode(payload, s"asset $id")
+      val (w, h) = (img.getWidth, img.getHeight)
+      val (tw, th) =
+        if (w <= maxSide && h <= maxSide) (w, h)
+        else {
+          val m = math.max(w, h)
+          (math.max(1, w * maxSide / m), math.max(1, h * maxSide / m))
         }
+      val outType =
+        if (img.getType == BufferedImage.TYPE_CUSTOM) BufferedImage.TYPE_3BYTE_BGR
+        else img.getType
+      val out = new BufferedImage(tw, th, outType)
+      val src = img.getRaster
+      val dst = out.getRaster
+      val bands = math.min(src.getNumBands, dst.getNumBands)
+      var y = 0
+      while (y < th) {
+        val sy = y * h / th
+        var x = 0
+        while (x < tw) {
+          val sx = x * w / tw
+          var b = 0
+          while (b < bands) { dst.setSample(x, y, b, src.getSample(sx, sy, b)); b += 1 }
+          x += 1
+        }
+        y += 1
       }
-      .toDF("asset_id", "media_type", "payload")
+      val bytes =
+        if (mt != null && mt.endsWith("jpeg")) codec.encodeJpeg(out)
+        else codec.encode(out, bmp = mt != null && mt.endsWith("bmp"))
+      Some((id, mt, bytes))
+    }.toDF("asset_id", "media_type", "payload")
   }
 
   /** One perceptual-hash row: REAL decode dims + the 56-bit dHash. */
@@ -476,25 +397,16 @@ object Multimodal {
     * bit (DuckDB overflow-checks `1<<63`; Spark wraps — 56 bits keeps the
     * twins exactly comparable).
     *
-    * Map-only `mapPartitions` with per-partition codec reuse, like every
-    * decode in this module: at 100 TB the hash pass is one scan, and only
+    * Map-only with per-partition codec reuse, like every decode in this
+    * module: at 100 TB the hash pass is one scan, and only
     * the (asset_id, w, h, dhash) row — never payload bytes — flows into
     * the dedup join downstream ([[dhashNearDupPairs]]).
     */
-  def dHashImages(assets: DataFrame): Dataset[ImageHash] = {
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets
-      .select(col("asset_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        val codec = new ImageCodec
-        rows.map { case (id, payload) =>
-          val img = codec.decode(payload, s"asset $id")
-          ImageHash(id, img.getWidth, img.getHeight, dhash9x7(img))
-        }
-      }
-  }
+  def dHashImages(assets: DataFrame): Dataset[ImageHash] =
+    perAsset(assets, mediaType = false) { (codec, id, _, payload) =>
+      val img = codec.decode(payload, s"asset $id")
+      Some(ImageHash(id, img.getWidth, img.getHeight, dhash9x7(img)))
+    }
 
   /** The shared 56-bit gradient hash: 9×7 NN sample grid of raster band 0
     * (resizeImages' integer-div convention), one horizontal-gradient bit
@@ -502,7 +414,7 @@ object Multimodal {
     * ([[dHashImages]]) and the per-frame hash ([[dHashFrames]]) so the
     * two can never drift in grid convention.
     */
-  private def dhash9x7(img: java.awt.image.BufferedImage): Long = {
+  private def dhash9x7(img: BufferedImage): Long = {
     val raster = img.getRaster
     val (w, h) = (img.getWidth, img.getHeight)
     val g = Array.ofDim[Int](7, 9)
@@ -542,21 +454,12 @@ object Multimodal {
     * any frame of this new clip near-dup any frame of the corpus" (clip
     * containment / re-edit detection). Map-only like every decode here.
     */
-  def dHashFrames(assets: DataFrame, everyNth: Int): Dataset[FrameHash] = {
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets
-      .select(col("asset_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        val codec = new ImageCodec
-        rows.flatMap { case (id, payload) =>
-          codec.decodeGifFrames(payload, s"asset $id", everyNth).map { case (f, n, img) =>
-            FrameHash(id, f, n, img.getWidth, img.getHeight, dhash9x7(img))
-          }
-        }
+  def dHashFrames(assets: DataFrame, everyNth: Int): Dataset[FrameHash] =
+    perAsset(assets, mediaType = false) { (codec, id, _, payload) =>
+      codec.decodeGifFrames(payload, s"asset $id", everyNth).map { case (f, n, img) =>
+        FrameHash(id, f, n, img.getWidth, img.getHeight, dhash9x7(img))
       }
-  }
+    }
 
   /** Image near-duplicates from [[dHashImages]] fingerprints: banded-LSH
     * candidate generation (the minhash-LSH shape from `Dedup` applied to
@@ -857,28 +760,6 @@ object Multimodal {
         bandedFingerprints(hashes, idCol, hashCol), Seq("band", "bv"), maxBucket)),
       buckets, era)
 
-  /** The sweep's progress state: `(swept_through, quar_buckets)` — how
-    * many of the quarantine's buckets (in sweep rank order: membership
-    * DESC, then band, bv) have been swept, out of how many. (0, 0) when
-    * the index has no quarantine side. Each call reads the one-row
-    * watermark table; the bucket total is written there at
-    * quarantine/reset time so this read and the policy census
-    * ([[Maintenance.indexCensus]]'s `swept_through` / `quar_unswept`)
-    * scan one tiny table, not the quarantine.
-    */
-  def quarantineWatermark(
-      s: org.apache.spark.sql.SparkSession, table: String): (Long, Long) =
-    BucketedIndex.quarantineWatermark(s, table)
-
-  /** Begin a fresh sweep PASS over the current quarantine: watermark back
-    * to zero, bucket total re-read from the quarantine's highest rank.
-    * Every quarantine write does this itself; a scheduler calls it to
-    * start a new periodic pass over an unchanged quarantine (a new probe
-    * batch wants the whole quarantine swept again).
-    */
-  def resetQuarantineSweep(s: org.apache.spark.sql.SparkSession, table: String): Unit =
-    HammingLayout.resetSweep(s, table)
-
   /** MAINTENANCE — one bounded TICK of the quarantine sweep
     * ([[BucketedIndex.sweepTick]]): exact `bit_count(xor)` verification
     * of the incoming batch against the quarantined members of the next
@@ -993,18 +874,6 @@ object Multimodal {
       idCol: String, hashCol: String, maxHamming: Int): DataFrame =
     probeHammingIndex(s, table, incoming, idCol, hashCol, maxHamming)
 
-  /** See [[quarantineHammingIndex]] — the image-named recovery side of the
-    * family's capped default: persist the quarantined banded rows so
-    * [[sweepHammingQuarantine]] can repay the cap's dropped recall in
-    * bounded installments. Opt-in beside the persist (one extra banding
-    * pass over the fingerprints at layout time); once present, compaction
-    * and rebuild keep it current automatically.
-    */
-  def quarantineImageIndex(
-      s: org.apache.spark.sql.SparkSession, table: String, hashes: DataFrame,
-      idCol: String, hashCol: String, buckets: Int, maxBucket: Int = 64): Unit =
-    quarantineHammingIndex(s, table, hashes, idCol, hashCol, buckets, maxBucket)
-
   /** Target-dimension arithmetic alone (no pixels) — kept as the cheap
     * metadata projection for non-image media whose decode the JDK lacks.
     * Plan shape: pure projection, map-side.
@@ -1031,38 +900,14 @@ object Multimodal {
     * because the JDK GIF writer corrupts the final rows of 2–4-row-high
     * frames (verified empirically; h=1 and h≥5 are exact).
     */
-  def synthGifAnimations(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"))
-      .as[Long]
-      .mapPartitions { ids =>
-        val codec = new ImageCodec
-        val palette = ImageCodec.grayPalette
-        ids.map { id =>
-          val w = (1 + (id % 13)).toInt
-          val h = (5 + (id % 11)).toInt
-          val nFrames = (1 + (id % 4)).toInt
-          val frames = (0 until nFrames).map { f =>
-            val img = new java.awt.image.BufferedImage(
-              w, h, java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, palette)
-            val raster = img.getRaster
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                raster.setSample(x, y, 0, ((id * 31 + f * 17 + 7L * x + 13L * y) % 256).toInt)
-                x += 1
-              }
-              y += 1
-            }
-            img
-          }
-          (id, "image/gif", codec.encodeGif(frames))
-        }
+  def synthGifAnimations(df: DataFrame, idCol: String): DataFrame =
+    perId(df, idCol) { (codec, id) =>
+      val frames = (0 until (1 + id % 4).toInt).map { f =>
+        filled((1 + id % 13).toInt, (5 + id % 11).toInt, BufferedImage.TYPE_BYTE_INDEXED)(
+          (x, y) => ((id * 31 + f * 17 + 7L * x + 13L * y) % 256).toInt)
       }
-      .toDF("asset_id", "media_type", "payload")
-  }
+      ("image/gif", codec.encodeGif(frames))
+    }
 
   /** One decoded animation frame: REAL per-frame dims and pixel sum. */
   final case class DecodedFrame(
@@ -1085,27 +930,18 @@ object Multimodal {
     */
   def decodeFrames(assets: DataFrame, everyNth: Int): Dataset[DecodedFrame] = {
     require(everyNth > 0, "everyNth must be positive")
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets
-      .select(col("asset_id").cast("long"), col("media_type"), col("payload"))
-      .as[(Long, String, Array[Byte])]
-      .mapPartitions { rows =>
-        val codec = new ImageCodec
-        rows.flatMap { case (id, mt, payload) =>
-          codec.decodeGifFrames(payload, s"asset $id", everyNth).map {
-            case (f, n, img) =>
-              var sum = 0L
-              var y = 0
-              while (y < img.getHeight) {
-                var x = 0
-                while (x < img.getWidth) { sum += (img.getRGB(x, y) & 0xff); x += 1 }
-                y += 1
-              }
-              DecodedFrame(id, mt, f, n, img.getWidth, img.getHeight, sum)
-          }
+    perAsset(assets, mediaType = true) { (codec, id, mt, payload) =>
+      codec.decodeGifFrames(payload, s"asset $id", everyNth).map { case (f, n, img) =>
+        var sum = 0L
+        var y = 0
+        while (y < img.getHeight) {
+          var x = 0
+          while (x < img.getWidth) { sum += (img.getRGB(x, y) & 0xff); x += 1 }
+          y += 1
         }
+        DecodedFrame(id, mt, f, n, img.getWidth, img.getHeight, sum)
       }
+    }
   }
 
   /** Deterministic REAL audio fixture: encodes actual RIFF/WAVE PCM-16
@@ -1115,28 +951,20 @@ object Multimodal {
     * `sample(i) = (id*31 + 7i) % 2003 - 1001`. PCM is lossless, so an
     * arithmetic SQL oracle reproduces the decode exactly.
     */
-  def synthWavAudio(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"))
-      .as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val n = (100 + (id % 200)).toInt
-          val rate = if (id % 2 == 0) 8000 else 16000
-          val pcm = new Array[Byte](n * 2)
-          var i = 0
-          while (i < n) {
-            val s = ((id * 31 + 7L * i) % 2003 - 1001).toInt
-            pcm(2 * i) = (s & 0xff).toByte
-            pcm(2 * i + 1) = ((s >> 8) & 0xff).toByte
-            i += 1
-          }
-          (id, "audio/wav", AudioCodec.encodeWav(pcm, n, rate))
-        }
+  def synthWavAudio(df: DataFrame, idCol: String): DataFrame =
+    perId(df, idCol) { (_, id) =>
+      val n = (100 + (id % 200)).toInt
+      val rate = if (id % 2 == 0) 8000 else 16000
+      val pcm = new Array[Byte](n * 2)
+      var i = 0
+      while (i < n) {
+        val s = ((id * 31 + 7L * i) % 2003 - 1001).toInt
+        pcm(2 * i) = (s & 0xff).toByte
+        pcm(2 * i + 1) = ((s >> 8) & 0xff).toByte
+        i += 1
       }
-      .toDF("asset_id", "media_type", "payload")
-  }
+      ("audio/wav", AudioCodec.encodeWav(pcm, n, rate))
+    }
 
   /** One decoded audio row: REAL format fields and exact PCM sample sum. */
   final case class DecodedAudio(
@@ -1152,44 +980,20 @@ object Multimodal {
   /** REAL audio decode (JDK `javax.sound.sampled`, WAV/PCM): parses the
     * actual RIFF header for format fields and folds the signed little-endian
     * 16-bit samples into an amplitude sum. Map-only — no shuffle before the
-    * decode `mapPartitions`; the WAVE SPI provider is resolved once per JVM
-    * ([[AudioCodec]]), not per row.
+    * decode; the WAVE SPI provider is resolved once per JVM
+    * ([[AudioCodec]]), not per row. Mono only ([[AudioCodec.monoPcm16]]):
+    * `n_samples` counts FRAMES while `amp_sum` folds every 16-bit word, so
+    * for multi-channel audio the two would disagree in units.
     */
-  def decodeAudio(assets: DataFrame): Dataset[DecodedAudio] = {
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets
-      .select(col("asset_id").cast("long"), col("media_type"), col("payload"))
-      .as[(Long, String, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, mt, payload) =>
-          require(payload != null && payload.length > 44, s"asset $id: not a WAV payload")
-          val in = AudioCodec.openWav(payload)
-          try {
-            val fmt = in.getFormat
-            require(
-              fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian,
-              s"asset $id: expected PCM-16 LE, got $fmt")
-            // n_samples counts FRAMES while amp_sum folds every 16-bit word;
-            // for multi-channel audio the two would disagree in units, so
-            // hold the same mono contract audioFrameFeatures enforces.
-            require(fmt.getChannels == 1, s"asset $id: expected mono, got ${fmt.getChannels} channels")
-            val data = in.readAllBytes()
-            val bytesPerSample = 2 * fmt.getChannels
-            val n = data.length / bytesPerSample
-            var sum = 0L
-            var i = 0
-            while (i < data.length - 1) {
-              sum += ((data(i + 1) << 8) | (data(i) & 0xff)).toShort
-              i += 2
-            }
-            DecodedAudio(
-              id, mt, fmt.getSampleRate.toInt, fmt.getChannels,
-              fmt.getSampleSizeInBits, n.toLong, sum)
-          } finally in.close()
-        }
-      }
-  }
+  def decodeAudio(assets: DataFrame): Dataset[DecodedAudio] =
+    perAsset(assets, mediaType = true) { (_, id, mt, payload) =>
+      val (fmt, s) = AudioCodec.monoPcm16(id, payload)
+      var sum = 0L
+      var i = 0
+      while (i < s.length) { sum += s(i); i += 1 }
+      Some(DecodedAudio(
+        id, mt, fmt.getSampleRate.toInt, fmt.getChannels, fmt.getSampleSizeInBits, s.length.toLong, sum))
+    }
 
   final case class AudioSilence(
       asset_id: Long,
@@ -1219,45 +1023,28 @@ object Multimodal {
       assets: DataFrame,
       silenceThreshold: Int,
       clipThreshold: Int
-  ): Dataset[AudioSilence] = {
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets
-      .select(col("asset_id").cast("long"), col("media_type"), col("payload"))
-      .as[(Long, String, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, _, payload) =>
-          require(payload != null && payload.length > 44, s"asset $id: not a WAV payload")
-          val in = AudioCodec.openWav(payload)
-          try {
-            val fmt = in.getFormat
-            require(
-              fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian && fmt.getChannels == 1,
-              s"asset $id: expected mono PCM-16 LE, got $fmt")
-            val data = in.readAllBytes()
-            val n = data.length / 2
-            var silent = 0L
-            var clipped = 0L
-            var run = 0L
-            var maxRun = 0L
-            var i = 0
-            while (i < data.length - 1) {
-              val s = ((data(i + 1) << 8) | (data(i) & 0xff)).toShort.toInt
-              val a = math.abs(s)
-              if (a < silenceThreshold) {
-                silent += 1
-                run += 1
-                if (run > maxRun) maxRun = run
-              } else run = 0
-              if (a >= clipThreshold) clipped += 1
-              i += 2
-            }
-            val ppm = if (n == 0) 0L else silent * 1000000L / n
-            AudioSilence(id, fmt.getSampleRate.toInt, n.toLong, silent, ppm, maxRun, clipped)
-          } finally in.close()
-        }
+  ): Dataset[AudioSilence] =
+    perAsset(assets, mediaType = false) { (_, id, _, payload) =>
+      val (fmt, s) = AudioCodec.monoPcm16(id, payload)
+      var silent = 0L
+      var clipped = 0L
+      var run = 0L
+      var maxRun = 0L
+      var i = 0
+      while (i < s.length) {
+        val a = math.abs(s(i).toInt)
+        if (a < silenceThreshold) {
+          silent += 1
+          run += 1
+          if (run > maxRun) maxRun = run
+        } else run = 0
+        if (a >= clipThreshold) clipped += 1
+        i += 1
       }
-  }
+      val n = s.length
+      val ppm = if (n == 0) 0L else silent * 1000000L / n
+      Some(AudioSilence(id, fmt.getSampleRate.toInt, n.toLong, silent, ppm, maxRun, clipped))
+    }
 
   /** One analysis frame of an audio asset: the classic frame descriptors
     * in exact integer arithmetic (no float windowing), so the row is
@@ -1283,46 +1070,27 @@ object Multimodal {
     *
     * Scale shape: map-only like [[decodeAudio]] — no shuffle touches the
     * payload bytes; the fan-out to frames happens after decode, inside the
-    * same `mapPartitions`, emitting only the 5-column feature rows.
+    * same partition loop, emitting only the 5-column feature rows.
     */
   def audioFrameFeatures(assets: DataFrame, frameLen: Int = 50): Dataset[AudioFrameFeatures] = {
     require(frameLen > 0, "frameLen must be positive")
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets
-      .select(col("asset_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, payload) =>
-          require(payload != null && payload.length > 44, s"asset $id: not a WAV payload")
-          val in = AudioCodec.openWav(payload)
-          try {
-            val fmt = in.getFormat
-            require(
-              fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian && fmt.getChannels == 1,
-              s"asset $id: expected mono PCM-16 LE, got $fmt")
-            val data = in.readAllBytes()
-            val n = data.length / 2
-            val nFrames = (n + frameLen - 1) / frameLen
-            (0 until nFrames).map { f =>
-              val lo = f * frameLen
-              val hi = math.min(lo + frameLen, n)
-              var energy = 0L
-              var zc = 0L
-              var prev = 0
-              var i = lo
-              while (i < hi) {
-                val s = ((data(2 * i + 1) << 8) | (data(2 * i) & 0xff)).toShort.toInt
-                energy += s.toLong * s
-                if (i > lo && prev * s < 0) zc += 1
-                prev = s
-                i += 1
-              }
-              AudioFrameFeatures(id, f, (hi - lo).toLong, energy, zc)
-            }
-          } finally in.close()
+    perAsset(assets, mediaType = false) { (_, id, _, payload) =>
+      val s = AudioCodec.monoPcm16(id, payload)._2
+      val n = s.length
+      (0 until (n + frameLen - 1) / frameLen).map { f =>
+        val lo = f * frameLen
+        val hi = math.min(lo + frameLen, n)
+        var energy = 0L
+        var zc = 0L
+        var i = lo
+        while (i < hi) {
+          energy += s(i).toLong * s(i)
+          if (i > lo && s(i - 1) * s(i) < 0) zc += 1
+          i += 1
         }
+        AudioFrameFeatures(id, f, (hi - lo).toLong, energy, zc)
       }
+    }
   }
 
   /** One audio fingerprint row: sample count + the 56-bit energy-envelope
@@ -1344,50 +1112,25 @@ object Multimodal {
     * Map-only like every decode here; downstream near-dup pairing is
     * [[hammingNearDupPairs]] over the fingerprint column.
     */
-  def audioFingerprints(assets: DataFrame): Dataset[AudioFingerprint] = {
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets
-      .select(col("asset_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, payload) =>
-          require(payload != null && payload.length > 44, s"asset $id: not a WAV payload")
-          val in = AudioCodec.openWav(payload)
-          try {
-            val fmt = in.getFormat
-            require(
-              fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian && fmt.getChannels == 1,
-              s"asset $id: expected mono PCM-16 LE, got $fmt")
-            val data = in.readAllBytes()
-            val n = data.length / 2
-            require(n >= 57, s"asset $id: need >= 57 samples for 57 envelope frames, got $n")
-            val energy = new Array[Long](57)
-            var f = 0
-            while (f < 57) {
-              val lo = f * n / 57
-              val hi = (f + 1) * n / 57
-              var e = 0L
-              var i = lo
-              while (i < hi) {
-                val s = ((data(2 * i + 1) << 8) | (data(2 * i) & 0xff)).toShort.toLong
-                e += s * s
-                i += 1
-              }
-              energy(f) = e
-              f += 1
-            }
-            var hash = 0L
-            f = 0
-            while (f < 56) {
-              if (energy(f + 1) > energy(f)) hash |= 1L << f
-              f += 1
-            }
-            AudioFingerprint(id, n.toLong, hash)
-          } finally in.close()
-        }
+  def audioFingerprints(assets: DataFrame): Dataset[AudioFingerprint] =
+    perAsset(assets, mediaType = false) { (_, id, _, payload) =>
+      val s = AudioCodec.monoPcm16(id, payload)._2
+      val n = s.length
+      require(n >= 57, s"asset $id: need >= 57 samples for 57 envelope frames, got $n")
+      val energy = Array.tabulate(57) { f =>
+        var e = 0L
+        var i = f * n / 57
+        while (i < (f + 1) * n / 57) { e += s(i).toLong * s(i); i += 1 }
+        e
       }
-  }
+      var hash = 0L
+      var f = 0
+      while (f < 56) {
+        if (energy(f + 1) > energy(f)) hash |= 1L << f
+        f += 1
+      }
+      Some(AudioFingerprint(id, n.toLong, hash))
+    }
 
   /** Deterministic REAL video fixture: assembles actual RIFF/AVI
     * (MJPEG-in-AVI — `vids`/`MJPG` stream, `00dc` frame chunks) bytes
@@ -1398,35 +1141,15 @@ object Multimodal {
     * container layout (hdrl/avih/strl/strh/strf, movi, even-padded
     * chunks) follows the AVI RIFF spec, so any standard demuxer reads it.
     */
-  def synthMjpegVideos(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"))
-      .as[Long]
-      .mapPartitions { ids =>
-        val codec = new ImageCodec
-        ids.map { id =>
-          val w = (1 + (id % 13)).toInt
-          val h = (1 + (id % 11)).toInt
-          val nFrames = (1 + (id % 3)).toInt
-          val frames = (0 until nFrames).map { f =>
-            val v = ((id * 31 + f * 17) % 256).toInt
-            val img = new java.awt.image.BufferedImage(
-              w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-            val raster = img.getRaster
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) { raster.setSample(x, y, 0, v); x += 1 }
-              y += 1
-            }
-            codec.encodeJpeg(img)
-          }
-          (id, "video/x-msvideo", Avi.build(frames, w, h, fps = 10))
-        }
+  def synthMjpegVideos(df: DataFrame, idCol: String): DataFrame =
+    perId(df, idCol) { (codec, id) =>
+      val (w, h) = ((1 + id % 13).toInt, (1 + id % 11).toInt)
+      val frames = (0 until (1 + id % 3).toInt).map { f =>
+        val v = ((id * 31 + f * 17) % 256).toInt
+        codec.encodeJpeg(filled(w, h, BufferedImage.TYPE_BYTE_GRAY)((_, _) => v))
       }
-      .toDF("asset_id", "media_type", "payload")
-  }
+      ("video/x-msvideo", Avi.build(frames, w, h, fps = 10))
+    }
 
   /** REAL video demux + frame decode: walks the RIFF chunk tree of an AVI
     * payload (no fixed offsets — chunk headers + even-padding rule, `movi`
@@ -1437,34 +1160,18 @@ object Multimodal {
     */
   def demuxVideoFrames(assets: DataFrame, everyNth: Int): Dataset[DecodedFrame] = {
     require(everyNth > 0, "everyNth must be positive")
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets
-      .select(col("asset_id").cast("long"), col("media_type"), col("payload"))
-      .as[(Long, String, Array[Byte])]
-      .mapPartitions { rows =>
-        val codec = new ImageCodec
-        rows.flatMap { case (id, mt, payload) =>
-          val (declared, ranges) = Avi.frameRanges(payload, s"asset $id")
-          require(
-            declared == ranges.length,
-            s"asset $id: avih declares $declared frames, movi holds ${ranges.length}")
-          ranges.zipWithIndex
-            .filter { case (_, f) => f % everyNth == 0 }
-            .map { case ((off, len), f) =>
-              val img = codec.decode(java.util.Arrays.copyOfRange(payload, off, off + len), s"asset $id frame $f")
-              val raster = img.getRaster
-              var sum = 0L
-              var y = 0
-              while (y < img.getHeight) {
-                var x = 0
-                while (x < img.getWidth) { sum += raster.getSample(x, y, 0); x += 1 }
-                y += 1
-              }
-              DecodedFrame(id, mt, f, ranges.length, img.getWidth, img.getHeight, sum)
-            }
+    perAsset(assets, mediaType = true) { (codec, id, mt, payload) =>
+      val (declared, ranges) = Avi.frameRanges(payload, s"asset $id")
+      require(
+        declared == ranges.length,
+        s"asset $id: avih declares $declared frames, movi holds ${ranges.length}")
+      ranges.zipWithIndex
+        .filter { case (_, f) => f % everyNth == 0 }
+        .map { case ((off, len), f) =>
+          val img = codec.decode(java.util.Arrays.copyOfRange(payload, off, off + len), s"asset $id frame $f")
+          DecodedFrame(id, mt, f, ranges.length, img.getWidth, img.getHeight, band0Sum(img))
         }
-      }
+    }
   }
 
   /** Shot-boundary (scene-cut) detection over REAL demuxed + decoded
@@ -1527,6 +1234,30 @@ object Multimodal {
       val baos = new java.io.ByteArrayOutputStream()
       AudioSystem.write(ais, AudioFileFormat.Type.WAVE, baos)
       baos.toByteArray
+    }
+
+    /** The mono PCM-16 LE contract every audio kernel holds: a WAV payload
+      * (> 44 bytes) of 16-bit little-endian mono samples, read whole and
+      * returned beside its format. Anything else fails naming the asset.
+      */
+    def monoPcm16(id: Long, payload: Array[Byte]): (AudioFormat, Array[Short]) = {
+      require(payload != null && payload.length > 44, s"asset $id: not a WAV payload")
+      val in =
+        try openWav(payload)
+        catch {
+          case e: UnsupportedAudioFileException =>
+            throw new IllegalArgumentException(s"asset $id: not a WAV payload", e)
+        }
+      try {
+        val fmt = in.getFormat
+        require(
+          fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian && fmt.getChannels == 1,
+          s"asset $id: expected mono PCM-16 LE, got $fmt")
+        val data = in.readAllBytes()
+        val samples = new Array[Short](data.length / 2)
+        java.nio.ByteBuffer.wrap(data).order(java.nio.ByteOrder.LITTLE_ENDIAN).asShortBuffer.get(samples)
+        (fmt, samples)
+      } finally in.close()
     }
 
     def openWav(payload: Array[Byte]): AudioInputStream = {
@@ -1740,7 +1471,7 @@ object Multimodal {
     private lazy val gifReader = ImageIO.getImageReadersByFormatName("gif").next()
     private lazy val gifWriter = ImageIO.getImageWritersByFormatName("gif").next()
 
-    def decode(payload: Array[Byte], ctx: String): java.awt.image.BufferedImage = {
+    def decode(payload: Array[Byte], ctx: String): BufferedImage = {
       require(payload != null && payload.length >= 2, s"$ctx: empty payload")
       val reader =
         if ((payload(0) & 0xff) == 0x89 && payload(1) == 'P'.toByte) pngReader
@@ -1763,7 +1494,7 @@ object Multimodal {
       }
     }
 
-    def encode(img: java.awt.image.BufferedImage, bmp: Boolean): Array[Byte] = {
+    def encode(img: BufferedImage, bmp: Boolean): Array[Byte] = {
       val w = if (bmp) bmpWriter else pngWriter
       val baos = new java.io.ByteArrayOutputStream()
       val ios = new MemoryCacheImageOutputStream(baos)
@@ -1782,7 +1513,7 @@ object Multimodal {
       * which constant-color images round-trip exactly (DC-only blocks
       * quantize losslessly; see [[Multimodal.synthJpegImages]]).
       */
-    def encodeJpeg(img: java.awt.image.BufferedImage): Array[Byte] = {
+    def encodeJpeg(img: BufferedImage): Array[Byte] = {
       val param = jpegWriter.getDefaultWriteParam
       param.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
       param.setCompressionQuality(1.0f)
@@ -1804,7 +1535,7 @@ object Multimodal {
       * Frames should be `TYPE_BYTE_INDEXED` so indices are stored verbatim
       * (non-indexed input is dithered through a web palette — lossy).
       */
-    def encodeGif(frames: Seq[java.awt.image.BufferedImage]): Array[Byte] = {
+    def encodeGif(frames: Seq[BufferedImage]): Array[Byte] = {
       require(frames.nonEmpty, "encodeGif: no frames")
       val baos = new java.io.ByteArrayOutputStream()
       val ios = new MemoryCacheImageOutputStream(baos)
@@ -1832,7 +1563,7 @@ object Multimodal {
         payload: Array[Byte],
         ctx: String,
         everyNth: Int
-    ): Seq[(Int, Int, java.awt.image.BufferedImage)] = {
+    ): Seq[(Int, Int, BufferedImage)] = {
       require(payload != null && payload.length >= 6, s"$ctx: empty payload")
       require(
         payload(0) == 'G'.toByte && payload(1) == 'I'.toByte && payload(2) == 'F'.toByte,
@@ -1851,24 +1582,67 @@ object Multimodal {
 
   private object ImageCodec {
     /** Identity 256-level gray palette: index i ↦ rgb(i,i,i), so GIF's
-      * lossless index coding round-trips gray values exactly.
+      * lossless index coding round-trips gray values exactly. One instance
+      * per JVM, shared read-only by every indexed frame.
       */
-    def grayPalette: java.awt.image.IndexColorModel = {
+    lazy val grayPalette: java.awt.image.IndexColorModel = {
       val g = Array.tabulate[Byte](256)(i => i.toByte)
       new java.awt.image.IndexColorModel(8, 256, g, g, g)
     }
   }
 
+  /** A `w`×`h` image of `imgType` with every band of pixel (x, y) set to
+    * `pixel(x, y)` — the one raster fill behind every synthesized image,
+    * GIF frame and MJPEG frame. Indexed images take the identity
+    * [[ImageCodec.grayPalette]], so a palette index IS its gray value.
+    */
+  private def filled(w: Int, h: Int, imgType: Int)(pixel: (Int, Int) => Int): BufferedImage = {
+    val img =
+      if (imgType == BufferedImage.TYPE_BYTE_INDEXED) new BufferedImage(w, h, imgType, ImageCodec.grayPalette)
+      else new BufferedImage(w, h, imgType)
+    val raster = img.getRaster
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        val v = pixel(x, y)
+        var b = 0
+        while (b < raster.getNumBands) { raster.setSample(x, y, b, v); b += 1 }
+        x += 1
+      }
+      y += 1
+    }
+    img
+  }
+
+  /** Σ of the band-0 raster samples of the whole image. Raster samples (not
+    * `getRGB`) on purpose: `getRGB` routes gray images through a
+    * linear-gray→sRGB color transform and would corrupt the raw values.
+    */
+  private def band0Sum(img: BufferedImage): Long = {
+    val raster = img.getRaster
+    var sum = 0L
+    var y = 0
+    while (y < img.getHeight) {
+      var x = 0
+      while (x < img.getWidth) { sum += raster.getSample(x, y, 0); x += 1 }
+      y += 1
+    }
+    sum
+  }
+
+  /** `x` rounded half-up to 6 decimals, the scale the DuckDB twins round to. */
+  private def round6(x: Double): Double =
+    java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+
   /** STUB fallback for NON-IMAGE payloads (the JDK ships no audio/video
     * codec): deterministic dims from a byte checksum.
     */
-  private final class ByteDimsCodec extends Serializable {
-    def decodeDims(payload: Array[Byte]): (Int, Int) = {
-      if (payload == null || payload.isEmpty) return (0, 0)
-      var a = 0; var b = 0
-      var i = 0
-      while (i < payload.length) { a = (a + (payload(i) & 0xff)) % 16; b = (b ^ (payload(i) & 0xff)) % 16; i += 1 }
-      ((a + 1) * 64, ((b & 0xf) + 1) * 64)
-    }
+  private def byteDims(payload: Array[Byte]): (Int, Int) = {
+    if (payload == null || payload.isEmpty) return (0, 0)
+    var a = 0; var b = 0
+    var i = 0
+    while (i < payload.length) { a = (a + (payload(i) & 0xff)) % 16; b = (b ^ (payload(i) & 0xff)) % 16; i += 1 }
+    ((a + 1) * 64, ((b & 0xf) + 1) * 64)
   }
 }

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.PlanOps.freeCheckpoint
 
 /** Text-analysis operators for training-data curation (north-star
   * extensions, SURVEY.md §7.5) — generalizes the reference's keyword tagger
@@ -167,18 +168,13 @@ object TextStats {
     * once per row; the convenience single-Column forms re-run the replace
     * chains per reference once CollapseProject inlines them (measured
     * 3.9s → map-speed at sf0.1 for the corpus_filter query).
-    */
-  def profileDF(df: DataFrame, idCol: Column, textCol: Column): DataFrame =
-    profileTail(profileStage(df, idCol, textCol) { p =>
-      StopwordLexicons.map { case (lang, lex) => langScoreFrom(p, lex).as(s"s_$lang") }
-    })
-
-  /** [[profileDF]] with the lexicon scores computed by the native
-    * `graft_occ_counts` expression ([[graft.GraftExtensions]] required —
-    * every graft entry point registers it). Identical values; the win is
-    * that a pushed-down filter predicate duplicating the score tree (the
-    * optimizer substitutes projections into the predicate) duplicates one
-    * allocation-free byte scan instead of 16 replace-and-measure copies.
+    *
+    * The lexicon scores come from the native `graft_occ_counts` expression
+    * ([[graft.GraftExtensions]] required — every graft entry point
+    * registers it): a pushed-down filter predicate duplicating the score
+    * tree (the optimizer substitutes projections into the predicate)
+    * duplicates one allocation-free byte scan instead of 16
+    * replace-and-measure copies.
     */
   def profileNativeDF(df: DataFrame, idCol: Column, textCol: Column): DataFrame = {
     val terms = StopwordLexicons.flatMap(_._2)
@@ -451,10 +447,6 @@ object TextStats {
     require(k > 0, "k must be positive")
     val spark = df.sparkSession
     val sep = "\u0001"
-    def freeCheckpoint(d: DataFrame): Unit =
-      d.queryExecution.analyzed
-        .collectFirst { case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd }
-        .foreach(_.unpersist(blocking = false))
     var corpus = df
       .select(idCol.as("doc_id"), split(trim(textCol), "\\s+").as("toks"))
       .localCheckpoint()

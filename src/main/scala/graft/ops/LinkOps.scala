@@ -10,13 +10,6 @@ import org.apache.spark.sql.functions._
   */
 object LinkOps {
 
-  /** J1/J3: left lookup join against a small dimension, broadcast.
-    * (chicago/permit_cleaning.py:762-767; crosswalk joins
-    * legacy_permits/2023/format_legacy_2023.R:40-43).
-    */
-  def lookupLeft(df: DataFrame, dim: DataFrame, cond: Column): DataFrame =
-    df.join(broadcast(dim), cond, "left")
-
   /** J3 with fallback: left join then `coalesce(mapped, original)` —
     * crosswalk PIN remap (2023/format_legacy_2023.R:40-43).
     */

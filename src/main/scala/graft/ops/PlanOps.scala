@@ -37,4 +37,13 @@ object PlanOps {
     */
   def fence(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(df.rdd, df.schema)
+
+  /** Release a localCheckpoint'ed frame's persisted blocks. The blocks are
+    * RDD-level persists (not CacheManager entries), so `Dataset.unpersist`
+    * cannot reach them — the handle is the LogicalRDD node's rdd.
+    */
+  def freeCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed
+      .collectFirst { case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd }
+      .foreach(_.unpersist(blocking = false))
 }

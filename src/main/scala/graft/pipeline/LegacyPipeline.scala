@@ -136,33 +136,6 @@ object LegacyPipeline {
     )
   }
 
-  def finalize(
-      df: DataFrame,
-      universe: DataFrame,
-      requiredCols: Seq[String] =
-        Seq("pin", "permit_no", "issue_date", "amount", "address", "applicant", "notes")
-  ): (DataFrame, DataFrame) = splitFinal(flagFinal(df, universe, requiredCols))
-
-  /** Post-upload QC (verify_legacy_uploads.R:6-34): distinct uploaded PINs
-    * anti-joined against the warehouse universe, tagged (year, tab) for the
-    * rbind'd report (:42-93). The reference inlines the pins as a VALUES CTE
-    * to push the probe to Athena — Spark expresses it directly as a
-    * broadcast anti-join.
-    */
-  def findMissingPins(
-      uploaded: DataFrame,
-      universe: DataFrame,
-      year: String,
-      tab: String
-  ): DataFrame =
-    LinkOps
-      .antiMembership(
-        uploaded.select(col("pin").as("meta_pin")).distinct(),
-        universe.select(col("pin").as("u_pin")),
-        col("meta_pin") === col("u_pin")
-      )
-      .select(col("meta_pin"), lit(year).as("year"), lit(tab).as("tab"))
-
   /** Multi-year QC in one pass (verify_legacy_uploads.R:42-93): the
     * reference probes the SAME upload against each assessment year's
     * universe slice separately (vw_pin_universe is year-partitioned; the
@@ -170,7 +143,9 @@ object LegacyPipeline {
     * Instead of re-running the upload chain once per year, the uploaded
     * pins are crossed with the probed years (a `bands`-style explode) and
     * ONE broadcast anti-join on (pin, year) against the year-tagged
-    * universe resolves every (year, tab) result set in a single scan.
+    * universe resolves every (year, tab) result set in a single scan. (The
+    * reference inlines the pins as a VALUES CTE to push each probe to
+    * Athena, verify_legacy_uploads.R:6-34.)
     *
     * @param universeByYear (pin, year) — each year's universe slice
     */

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ext.{Classify, Curation, Dedup, Multimodal, Ranking, Similarity, Sketches, Stats, TextStats}
+import graft.ext.{BucketedIndex, Classify, Curation, Dedup, Multimodal, Ranking, Similarity, Sketches, Stats, TextStats}
 import graft.ops.{TemporalOps, ZOrderOps}
 import graft.streaming.Sessionize
 
@@ -297,13 +297,13 @@ private[queries] object QMultimodal {
       }
       // fresh PASS per run (the fixture index builds once, bench re-runs
       // the query): watermark back to zero, per-run sweep sink
-      Multimodal.resetQuarantineSweep(s, tbl)
+      Multimodal.HammingLayout.resetSweep(s, tbl)
       val sink = Scratch.dir("quar_sweep", dir)
       Scratch.reset(sink)
       // each tick writes its pairs to the sink, commits the watermark
       // AFTER the write (at-least-once — see the operator doc) and returns
       // the state it committed, so progress needs no read-back
-      var (swept, total) = Multimodal.quarantineWatermark(s, tbl)
+      var (swept, total) = BucketedIndex.quarantineWatermark(s, tbl)
       var wrote = false
       while (swept < total) {
         val st = Multimodal.sweepHammingQuarantine(
@@ -347,7 +347,7 @@ private[queries] object QMultimodal {
         sweep = Some(() => Multimodal.sweepHammingQuarantine(
           s, tbl, incoming, "frame_key", "dhash",
           maxHamming = 8, maxBucketsPerTick = 16, sink = sink))))
-      Multimodal.resetQuarantineSweep(s, tbl)
+      Multimodal.HammingLayout.resetSweep(s, tbl)
       val recs = scala.collection.mutable.ListBuffer[(Long, String, Long, Long, String)]()
       var tick = 1L
       var continue = true

@@ -136,7 +136,7 @@ class PlanAuditSpec extends SparkSpecBase {
     // site anywhere fails the build until a human re-adjudicates it here.
     val adjudicated = Map(
       // j7 bucketed-join dim sides, PIN-universe semi/anti joins, lookup remap
-      "ops/LinkOps.scala" -> 5,
+      "ops/LinkOps.scala" -> 4,
       // one-row totals scalar
       "ops/SkewOps.scala" -> 1,
       // bounded cohort anchors (flag-gated), one-row max-date, dow baseline
@@ -582,7 +582,7 @@ class PlanAuditSpec extends SparkSpecBase {
     // low cap so the tiny audit corpus genuinely quarantines buckets
     Multimodal.persistImageIndex(
       corpus, "asset_id", "dhash", "graft_img_sweep_audit", buckets = 8, maxBucket = 2)
-    Multimodal.quarantineImageIndex(
+    Multimodal.quarantineHammingIndex(
       spark, "graft_img_sweep_audit", corpus, "asset_id", "dhash", buckets = 8, maxBucket = 2)
     Multimodal.deleteFromImageIndex(
       spark, "graft_img_sweep_audit",

@@ -130,6 +130,17 @@ class QueryHygieneSpec extends SparkSpecBase {
     assert(found.isEmpty, s"StreamQ.scala drives streams itself: $found")
   }
 
+  test("Multimodal's media operators are kernels over its two partition loops") {
+    // every decode operator is a per-asset kernel over `perAsset` and every
+    // fixture generator a per-id kernel over `perId`; a third `.mapPartitions`
+    // is a hand-copied select/encoder/codec prologue growing back
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/ext/Multimodal.scala")), "UTF-8")
+    assert(src.contains("def perAsset") && src.contains("def perId"), "the scan must see the two loops")
+    val loops = "\\.mapPartitions\\b".r.findAllIn(src).size
+    assert(loops <= 2, s"Multimodal.scala has $loops .mapPartitions calls; write a kernel over perAsset/perId")
+  }
+
   test("stream statefulness observation matches the pin on both classes (plan-derived floors)") {
     // Bench derives each stream entry's floor from the EXECUTED plan's
     // state operators (StreamHarness.stopRecording). This drives one

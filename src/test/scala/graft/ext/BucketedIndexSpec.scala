@@ -28,7 +28,7 @@ class BucketedIndexSpec extends SparkSpecBase {
 
   /** The corpus ids among the members of the next tick's bucket slice. */
   private def nextTickIds(tbl: String): Seq[Long] = {
-    val (lo, total) = Multimodal.quarantineWatermark(spark, tbl)
+    val (lo, total) = BucketedIndex.quarantineWatermark(spark, tbl)
     Multimodal.HammingLayout
       .sweepMembers(spark, tbl, lo, math.min(lo + 4, total))
       .select("corpus_id").distinct().as[Long].collect().sorted.toSeq
@@ -45,7 +45,7 @@ class BucketedIndexSpec extends SparkSpecBase {
       StructType(Seq(StructField("swept_through", LongType), StructField("quar_buckets", LongType))))
       .write.mode("overwrite").insertInto(wmT)
     spark.catalog.refreshTable(wmT)
-    assert(Multimodal.quarantineWatermark(spark, tbl) == ((beyond, beyond + 10)))
+    assert(BucketedIndex.quarantineWatermark(spark, tbl) == ((beyond, beyond + 10)))
     val sink = tempDir("bispec_wm") + "/t"
     intercept[IllegalStateException] {
       Multimodal.sweepHammingQuarantine(
@@ -53,7 +53,7 @@ class BucketedIndexSpec extends SparkSpecBase {
         maxHamming = 8, maxBucketsPerTick = 1, sink = sink)
     }
     assert(!new java.io.File(sink).exists, "the failed tick must write nothing")
-    assert(Multimodal.quarantineWatermark(spark, tbl) == ((beyond, beyond + 10)),
+    assert(BucketedIndex.quarantineWatermark(spark, tbl) == ((beyond, beyond + 10)),
       "the failed tick must not advance the watermark")
   }
 
@@ -66,7 +66,7 @@ class BucketedIndexSpec extends SparkSpecBase {
     Multimodal.quarantineHammingIndex(
       spark, tbl, ((21L to 32L).map(_ -> far) ++ (51L to 70L).map(_ -> small)).toDF("asset_id", "fp"),
       "asset_id", "fp", buckets = 4, maxBucket = 10)
-    assert(Multimodal.quarantineWatermark(spark, tbl) == ((0L, 8L)))
+    assert(BucketedIndex.quarantineWatermark(spark, tbl) == ((0L, 8L)))
     assert(nextTickIds(tbl) == (51L to 70L), "the re-quarantined content must rank fresh")
     // compaction capture: regrow the stored (empty) side past the cap with
     // a 25-member cluster; compact-at-cap moves it into the quarantine,
@@ -74,7 +74,7 @@ class BucketedIndexSpec extends SparkSpecBase {
     Multimodal.appendHammingIndex(
       (81L to 105L).map(_ -> 7L).toDF("asset_id", "fp"), "asset_id", "fp", tbl, buckets = 4)
     Multimodal.compactHammingIndex(spark, tbl, buckets = 4, maxBucket = 10)
-    assert(Multimodal.quarantineWatermark(spark, tbl) == ((0L, 12L)))
+    assert(BucketedIndex.quarantineWatermark(spark, tbl) == ((0L, 12L)))
     assert(nextTickIds(tbl) == (81L to 105L), "the compaction capture must rank fresh")
   }
 
@@ -100,7 +100,7 @@ class BucketedIndexSpec extends SparkSpecBase {
       rows.filter { case (b, v, id) => slice((b, v)) && id != 3L && id != 25L }.sorted
     }
     val sink = tempDir("bispec_ticks") + "/t"
-    val (start, total) = Multimodal.quarantineWatermark(spark, tbl)
+    val (start, total) = BucketedIndex.quarantineWatermark(spark, tbl)
     assert(start == 0L && total == 12L)
     var lo = start
     var ticks = 0
@@ -117,7 +117,7 @@ class BucketedIndexSpec extends SparkSpecBase {
       val committed = Multimodal.sweepHammingQuarantine(
         spark, tbl, Seq((100L, 42L)).toDF("asset_id", "fp"), "asset_id", "fp",
         maxHamming = 8, maxBucketsPerTick = 5, sink = sink)
-      assert(committed == ((hi, total)) && Multimodal.quarantineWatermark(spark, tbl) == committed,
+      assert(committed == ((hi, total)) && BucketedIndex.quarantineWatermark(spark, tbl) == committed,
         "the tick returns the watermark it committed")
       lo = committed._1
       ticks += 1

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.SparkSpecBase
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multimodal plumbing (SURVEY.md §7.5 — decode STUBBED, plumbing real). */
@@ -198,12 +199,57 @@ class MultimodalSpec extends SparkSpecBase {
   }
 
   test("image decode fails loudly on truncated payloads") {
-    val good = Multimodal.synthImages(Seq(4L).toDF("doc_id"), "doc_id")
+    def truncated(synth: (DataFrame, String) => DataFrame, mt: String): DataFrame = {
+      val good = synth(Seq(4L).toDF("doc_id"), "doc_id")
+        .collect().head.getAs[Array[Byte]]("payload")
+      val cut = java.util.Arrays.copyOfRange(good, 0, 8) // magic survives, body gone
+      Seq((4L, mt, cut)).toDF("asset_id", "media_type", "payload")
+    }
+    val png = truncated(Multimodal.synthImages, "image/png")
+    val gif = truncated(Multimodal.synthGifAnimations, "image/gif")
+    val avi = truncated(Multimodal.synthMjpegVideos, "video/x-msvideo")
+    val ops: Seq[(String, DataFrame, DataFrame => DataFrame)] = Seq(
+      ("decodePartitioned", png, d => Multimodal.decodePartitioned(d).toDF()),
+      ("decodeImages", png, d => Multimodal.decodeImages(d).toDF()),
+      ("imageSharpness", png, d => Multimodal.imageSharpness(d).toDF()),
+      ("imageExposure", png, d => Multimodal.imageExposure(d).toDF()),
+      ("imageHistogram", png, d => Multimodal.imageHistogram(d, 4).toDF()),
+      ("resizeImages", png, d => Multimodal.resizeImages(d, 4)),
+      ("dHashImages", png, d => Multimodal.dHashImages(d).toDF()),
+      ("decodeFrames", gif, d => Multimodal.decodeFrames(d, 1).toDF()),
+      ("dHashFrames", gif, d => Multimodal.dHashFrames(d, 1).toDF()),
+      ("demuxVideoFrames", avi, d => Multimodal.demuxVideoFrames(d, 1).toDF()))
+    for ((name, df, op) <- ops)
+      withClue(s"$name: ") {
+        intercept[org.apache.spark.SparkException] {
+          op(df).collect()
+        }
+      }
+  }
+
+  test("audio operators reject non-WAV, stereo and 8-bit payloads, naming the asset") {
+    import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
+    def wav(bits: Int, channels: Int): Array[Byte] = {
+      val fmt = new AudioFormat(8000f, bits, channels, true, false)
+      val pcm = new Array[Byte](100 * fmt.getFrameSize)
+      val out = new java.io.ByteArrayOutputStream()
+      AudioSystem.write(
+        new AudioInputStream(new java.io.ByteArrayInputStream(pcm), fmt, 100L),
+        AudioFileFormat.Type.WAVE, out)
+      out.toByteArray
+    }
+    val png = Multimodal.synthImages(Seq(4L).toDF("doc_id"), "doc_id")
       .collect().head.getAs[Array[Byte]]("payload")
-    val truncated = java.util.Arrays.copyOfRange(good, 0, 8) // magic survives, body gone
-    val df = Seq((4L, "image/png", truncated)).toDF("asset_id", "media_type", "payload")
-    intercept[org.apache.spark.SparkException] {
-      Multimodal.decodeImages(df).collect()
+    val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "decodeAudio" -> (d => Multimodal.decodeAudio(d).toDF()),
+      "audioSilence" -> (d => Multimodal.audioSilence(d, 100, 30000).toDF()),
+      "audioFrameFeatures" -> (d => Multimodal.audioFrameFeatures(d).toDF()),
+      "audioFingerprints" -> (d => Multimodal.audioFingerprints(d).toDF()))
+    for ((id, payload) <- Seq(71L -> png, 72L -> wav(16, 2), 73L -> wav(8, 1)); (name, op) <- ops) {
+      val df = Seq((id, "audio/wav", payload)).toDF("asset_id", "media_type", "payload")
+      val e = intercept[org.apache.spark.SparkException](op(df).collect())
+      val msg = e.getMessage + Option(e.getCause).map(_.getMessage).getOrElse("")
+      assert(msg.contains(s"asset $id:"), s"$name did not name asset $id: $msg")
     }
   }
 
@@ -618,7 +664,7 @@ class MultimodalSpec extends SparkSpecBase {
     Multimodal.persistHammingIndex(corpus, "asset_id", "fp", tbl, buckets = 4, maxBucket = 10)
     Multimodal.quarantineHammingIndex(
       spark, tbl, corpus, "asset_id", "fp", buckets = 4, maxBucket = 10)
-    assert(Multimodal.quarantineWatermark(spark, tbl) == ((0L, 8L)),
+    assert(BucketedIndex.quarantineWatermark(spark, tbl) == ((0L, 8L)),
       "two 4-band hot clusters quarantine eight buckets")
     def pairsOf(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
@@ -644,14 +690,14 @@ class MultimodalSpec extends SparkSpecBase {
     // bound is real, not cosmetic
     val t1 = sweepTick()
     assert(t1 == (1L to 15L).map((100L, _)), s"tick 1 must sweep only the 15-member cluster: $t1")
-    assert(Multimodal.quarantineWatermark(spark, tbl) == ((4L, 8L)))
+    assert(BucketedIndex.quarantineWatermark(spark, tbl) == ((4L, 8L)))
     // tick 2 drains the rest; a third tick sweeps nothing and leaves the
     // watermark closed
     val t2 = sweepTick()
     assert(t2 == (21L to 32L).map((101L, _)), s"tick 2 must sweep the 12-member cluster: $t2")
-    assert(Multimodal.quarantineWatermark(spark, tbl) == ((8L, 8L)))
+    assert(BucketedIndex.quarantineWatermark(spark, tbl) == ((8L, 8L)))
     assert(sweepTick().isEmpty, "a closed watermark sweeps nothing")
-    assert(Multimodal.quarantineWatermark(spark, tbl) == ((8L, 8L)))
+    assert(BucketedIndex.quarantineWatermark(spark, tbl) == ((8L, 8L)))
     // the contract the whole mechanism exists for: capped-probe ∪ sweep
     // ≡ uncapped-probe
     val uncapped = s"hamspec_sweep_unc_${System.nanoTime()}"
@@ -661,8 +707,8 @@ class MultimodalSpec extends SparkSpecBase {
     assert((probed ++ t1 ++ t2).sorted == want,
       "capped probe plus completed sweep must equal the uncapped probe")
     // a new pass re-opens the same quarantine for the next probe batch
-    Multimodal.resetQuarantineSweep(spark, tbl)
-    assert(Multimodal.quarantineWatermark(spark, tbl) == ((0L, 8L)))
+    Multimodal.HammingLayout.resetSweep(spark, tbl)
+    assert(BucketedIndex.quarantineWatermark(spark, tbl) == ((0L, 8L)))
   }
 
   test("quarantine sweep respects tombstones; compact capture keeps regrown drops sweepable") {
@@ -681,8 +727,8 @@ class MultimodalSpec extends SparkSpecBase {
     Multimodal.deleteFromHammingIndex(
       spark, tbl, Seq(3L, 7L).toDF("id"), col("id"))
     def sweepAll() = {
-      Multimodal.resetQuarantineSweep(spark, tbl)
-      val (_, total) = Multimodal.quarantineWatermark(spark, tbl)
+      Multimodal.HammingLayout.resetSweep(spark, tbl)
+      val (_, total) = BucketedIndex.quarantineWatermark(spark, tbl)
       val sink = tempDir("hamspec_sweeptomb") + "/all"
       (1L to (total + 3) / 4).foreach(_ => Multimodal.sweepHammingQuarantine(
         spark, tbl, incoming, "asset_id", "fp",
@@ -702,7 +748,7 @@ class MultimodalSpec extends SparkSpecBase {
     Multimodal.appendHammingIndex(
       (51L to 62L).map(i => (i, small)).toDF("asset_id", "fp"), "asset_id", "fp", tbl, buckets = 4)
     Multimodal.compactHammingIndex(spark, tbl, buckets = 4, maxBucket = 10)
-    assert(Multimodal.quarantineWatermark(spark, tbl)._1 == 0L,
+    assert(BucketedIndex.quarantineWatermark(spark, tbl)._1 == 0L,
       "compact capture must reset the sweep watermark")
     assert(
       Multimodal.probeHammingIndex(spark, tbl, incoming, "asset_id", "fp", maxHamming = 8)
@@ -721,7 +767,7 @@ class MultimodalSpec extends SparkSpecBase {
     Multimodal.persistHammingIndex(corpus, "asset_id", "fp", tbl, buckets = 4, maxBucket = 10)
     Multimodal.quarantineHammingIndex(
       spark, tbl, corpus, "asset_id", "fp", buckets = 4, maxBucket = 10)
-    assert(Multimodal.quarantineWatermark(spark, tbl) == ((0L, 4L)))
+    assert(BucketedIndex.quarantineWatermark(spark, tbl) == ((0L, 4L)))
     // a sink path that is an existing FILE: the tick dies mid-write, before
     // its pairs are durable
     val bad = tempDir("hamspec_sweepfail") + "/sink.notadir"
@@ -731,7 +777,7 @@ class MultimodalSpec extends SparkSpecBase {
         spark, tbl, incoming, "asset_id", "fp",
         maxHamming = 8, maxBucketsPerTick = 4, sink = bad)
     }
-    assert(Multimodal.quarantineWatermark(spark, tbl) == ((0L, 4L)),
+    assert(BucketedIndex.quarantineWatermark(spark, tbl) == ((0L, 4L)),
       "a tick that died before its output was durable must NOT advance the watermark")
     // the retry covers the SAME bucket range and recovers every pair — the
     // at-least-once contract (the old advance-before-execute shape skipped
@@ -740,7 +786,7 @@ class MultimodalSpec extends SparkSpecBase {
     Multimodal.sweepHammingQuarantine(
       spark, tbl, incoming, "asset_id", "fp",
       maxHamming = 8, maxBucketsPerTick = 4, sink = good)
-    assert(Multimodal.quarantineWatermark(spark, tbl) == ((4L, 4L)))
+    assert(BucketedIndex.quarantineWatermark(spark, tbl) == ((4L, 4L)))
     val got = spark.read.parquet(good)
       .select("corpus_id").as[Long].collect().sorted.toSeq
     assert(got == (1L to 12L), s"the retried tick must recover the full bucket range: $got")
