@@ -98,18 +98,32 @@ object EngineIO {
     * write lands under this JVM's own roots, where a failed job's partial
     * output is simply deleted.
     *
-    * Also sets `spark.sql.legacy.parquet.nanosAsLong` (the `events`
-    * fixture's TIMESTAMP(NANOS) column reads as long nanos, see
-    * [[graft.queries.Fixtures.events]]) at session build rather than from
-    * a query: the conf is part of every [[graft.Memo]] key, so a query
+    * Also sets `spark.sql.legacy.parquet.nanosAsLong` at session build
+    * rather than from a query: the `events` fixture now ships
+    * `TIMESTAMP_MICROS`, but [[graft.queries.Fixtures.events]] still reads
+    * a nanosecond encoding as long nanos if a fixture refresh brings it
+    * back, and the conf is part of every [[graft.Memo]] key, so a query
     * that set it mid-session made each memo built before it a miss.
     * Sessions cloned with `newSession` inherit it.
+    *
+    * And sizes Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, a static conf read once per
+    * JVM; Spark's default is 100) to hold the working set of plan shapes.
+    * Spark keys the cache on the calling thread's class loader, so in a
+    * local session the driver and the task threads each compile their
+    * own copy of a whole-stage class. The first append → delete → probe
+    * → census cycle over an LSH and an IVF-PQ index with its compaction
+    * compiles 94 classes beyond those the two index builds compiled, so
+    * with 100 entries every cycle evicted what the next one needed and
+    * recompiled 30–60 classes. 2,000 leaves headroom for the cache's
+    * 4-way segmented LRU, which evicts per segment.
     */
   def configure(b: SparkSession.Builder): SparkSession.Builder = {
     val base = b
       .config("spark.sql.warehouse.dir", warehouseDir)
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
     localDir.fold(base)(d => base.config("spark.local.dir", d))
   }
 

@@ -18,6 +18,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *     ([[graft.functions.ArrayDot]]) — the per-candidate-pair hot loop
   *     under every similarity ranking; bit-identical to the HOF fold it
   *     replaces.
+  *   - `graft_param(bigint constant)` → the same value as a parameter of
+  *     the generated code ([[graft.functions.LongParam]]), so the index
+  *     era stamps compile once per plan shape.
   *
   * Everything else in the engine is deliberately built-in column algebra;
   * an entry earns a place here only with a measured win over the best
@@ -121,6 +124,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         ),
         (children: Seq[Expression]) =>
           graft.functions.SortedIntersectCount(children(0), children(1))
+      )
+    )
+    ext.injectFunction(
+      (
+        new FunctionIdentifier("graft_param"),
+        new ExpressionInfo(
+          classOf[graft.functions.LongParam].getName,
+          "graft_param"
+        ),
+        graft.functions.LongParam.build _
       )
     )
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.functions.LongParam
 import graft.sources.Sources
 
 /** The persisted-index LIFECYCLE, written once for every bucketed index
@@ -65,7 +66,7 @@ object BucketedIndex {
       val s = rows.sparkSession
       s.sql(s"DROP TABLE IF EXISTS `${tombTable(table)}`")
       resetVersions(s, table)
-      Sources.writeBucketed(rows.withColumn("seq", lit(era)), table, buckets, keys.head, keys.tail: _*)
+      Sources.writeBucketed(rows.withColumn("seq", LongParam.col(era)), table, buckets, keys.head, keys.tail: _*)
     }
 
     /** MAINTENANCE — append `rows` to the serving version at `era`, under
@@ -73,7 +74,7 @@ object BucketedIndex {
       */
     def append(rows: DataFrame, table: String, buckets: Int, era: Long): Unit =
       Sources.appendBucketed(
-        rows.withColumn("seq", lit(era)),
+        rows.withColumn("seq", LongParam.col(era)),
         servingTable(rows.sparkSession, table), buckets, keys.head, keys.tail: _*)
 
     /** MAINTENANCE — retract the ids in `ids` as of `era`: one tombstone
@@ -83,7 +84,7 @@ object BucketedIndex {
     def delete(s: SparkSession, table: String, ids: DataFrame, idCol: Column, era: Long): Unit = {
       Sources.dropStaleLocation(s, tombTable(table))
       ids
-        .select(idCol.cast("long").as(idName), lit(era).as("tomb_seq"))
+        .select(idCol.cast("long").as(idName), LongParam.col(era).as("tomb_seq"))
         .distinct()
         .write
         .mode("append")
@@ -159,7 +160,7 @@ object BucketedIndex {
       * persist stored), bucketed on the same keys, as a fresh sweep pass.
       */
     def quarantine(s: SparkSession, table: String, rows: DataFrame, buckets: Int, era: Long): Unit =
-      writeQuarantine(s, table, buckets, staged = false, rows.withColumn("seq", lit(era)))
+      writeQuarantine(s, table, buckets, staged = false, rows.withColumn("seq", LongParam.col(era)))
 
     /** The ONE writer of `<table>_quar` (layout-time quarantine and
       * compaction capture alike). Each stored row carries its bucket's
@@ -224,7 +225,9 @@ object BucketedIndex {
     * anchored (independently restarted maintenance JVMs still order at
     * takedown timescales) and monotonic within the JVM (probe → append →
     * delete inside one micro-batch orders even under a frozen clock). Era
-    * values never reach query results — only their order matters.
+    * values never reach query results — only their order matters. Every
+    * stamp is written as a [[LongParam]], so a maintenance action's
+    * generated code is the same at every era and compiles once.
     */
   private val eraCounter = new java.util.concurrent.atomic.AtomicLong(0L)
   def nextEra(): Long =
@@ -245,7 +248,7 @@ object BucketedIndex {
     val maxEra = healed
       .agg(coalesce(max(col("seq")), lit(0L)))
       .collect()(0).getLong(0)
-    healed.withColumn("seq", lit(maxEra))
+    healed.withColumn("seq", LongParam.col(maxEra))
   }
 
   /** Retire tombstone entries recorded BEFORE `horizon`, keeping the

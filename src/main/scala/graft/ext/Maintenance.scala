@@ -36,10 +36,16 @@ object Maintenance {
     * census), so an append-heavy loop regrows quarantined buckets and
     * probe cost degrades until a compact/rebuild re-caps — this signal
     * is how the policy notices, instead of an operator reading
-    * SCALING.md. All table-derived, aggregation-only (the bucket census
-    * groups on the table's own bucket keys, so the scan is
-    * exchange-free; no collect). The tombstone side is its own tiny
-    * aggregate cross-joined in (both sides are one row).
+    * SCALING.md. All table-derived and aggregation-only (no collect).
+    *
+    * The id, era, tombstone and sweep-watermark counts are ONE pass: the
+    * serving scan (one id row and one era row per stored row), the
+    * tombstone rows and the watermark's two values are tagged by kind and
+    * unioned, deduplicated on (kind, value) and rolled up to one row —
+    * one distinct group, so no Expand, and no join. The bucket census is
+    * its own aggregate, planned only for a capped layout: it groups on
+    * the table's own bucket keys, so its scan is exchange-free, and its
+    * one row is cross-joined in.
     *
     * The bucket census counts STORED rows (layout grain — what a probe's
     * join touches), not tombstone-filtered live rows: retraction load is
@@ -62,15 +68,36 @@ object Maintenance {
       bucketCap: Int = 0
   ): DataFrame = {
     val idx = s.table(BucketedIndex.servingTable(s, table))
-    val base = idx.agg(
-      countDistinct(col(idColName)).as("index_docs"),
-      countDistinct(col("seq")).as("append_eras"))
-    val tombT = BucketedIndex.tombTable(table)
-    val tomb =
-      if (s.catalog.tableExists(tombT))
-        s.table(tombT).agg(count(lit(1)).as("tomb_entries"))
-      else s.range(1).select(lit(0L).as("tomb_entries"))
-    val capped =
+    def tagged(df: DataFrame, kinds: (Int, Column)*): DataFrame =
+      df.select(explode(array(kinds.map { case (k, v) =>
+        struct(lit(k).as("k"), v.as("v"))
+      }: _*)).as("t")).select("t.k", "t.v")
+    // the sweep watermark of a capped layout's persisted quarantine
+    // ([[Multimodal.quarantineHammingIndex]]): how far the bounded
+    // recovery sweep has progressed, and how many quarantined buckets
+    // remain unswept — the policy's `sweep` pressure signal, read from a
+    // one-row table, absent (zeros) for indexes without a quarantine
+    val sides = Seq(
+      Some(tagged(idx, IdKind -> col(idColName), EraKind -> col("seq"))),
+      Some(BucketedIndex.tombTable(table)).filter(s.catalog.tableExists)
+        .map(t => tagged(s.table(t), TombKind -> lit(null).cast("long"))),
+      Some(BucketedIndex.quarWmTable(table)).filter(s.catalog.tableExists)
+        .map(t => tagged(s.table(t), SweptKind -> col("swept_through"),
+          QuarKind -> col("quar_buckets")))).flatten
+    def distinctOf(k: Int): Column =
+      coalesce(sum(when(col("k") === k && col("v").isNotNull, 1L)), lit(0L))
+    def valueOf(k: Int): Column =
+      coalesce(max(when(col("k") === k, col("v"))).cast("long"), lit(0L))
+    val counts = sides.reduce(_.unionByName(_))
+      .groupBy("k", "v")
+      .agg(count(lit(1)).as("n"))
+      .agg(
+        distinctOf(IdKind).as("index_docs"),
+        coalesce(sum(when(col("k") === TombKind, col("n"))), lit(0L)).as("tomb_entries"),
+        distinctOf(EraKind).as("append_eras"),
+        valueOf(SweptKind).as("swept_through"),
+        (valueOf(QuarKind) - valueOf(SweptKind)).as("quar_unswept"))
+    val withCapped =
       if (bucketKeys.nonEmpty && bucketCap > 0) {
         val perBucket = idx
           .groupBy(bucketKeys.map(col): _*)
@@ -84,31 +111,9 @@ object Maintenance {
         // oracle bit-for-bit)
         val num: Column = col("__capped") * lit(1000000L)
         val den: Column = greatest(col("__total"), lit(1L))
-        totals.select(((num - pmod(num, den)) / den).cast("long").as("capped_ppm"))
-      } else s.range(1).select(lit(0L).as("capped_ppm"))
-    // the sweep watermark of a capped layout's persisted quarantine
-    // ([[Multimodal.quarantineHammingIndex]]): how far the bounded
-    // recovery sweep has progressed, and how many quarantined buckets
-    // remain unswept — the policy's `sweep` pressure signal. One tiny
-    // one-row table (the bucket total is snapshotted there at
-    // quarantine/reset time), zero cost for indexes without a quarantine
-    val wmT = BucketedIndex.quarWmTable(table)
-    // absent quarantine ⇒ plain literal columns, NOT a one-row crossJoin:
-    // an extra BroadcastNestedLoopJoin stage per index measurably slowed
-    // the fleet plan build (0.8 → 1.7 s for four censuses), and most
-    // indexes have no quarantine side — the join is only worth planning
-    // when there is a watermark table to read
-    val joined = base.crossJoin(tomb).crossJoin(capped)
-    val withWm =
-      if (s.catalog.tableExists(wmT))
-        joined.crossJoin(s.table(wmT).select(
-          col("swept_through"),
-          (col("quar_buckets") - col("swept_through")).as("quar_unswept")))
-      else
-        joined
-          .withColumn("swept_through", lit(0L))
-          .withColumn("quar_unswept", lit(0L))
-    withWm
+        counts.crossJoin(totals.select(((num - pmod(num, den)) / den).cast("long").as("capped_ppm")))
+      } else counts.withColumn("capped_ppm", lit(0L))
+    withCapped
       .select(
         lit(name).as("index_name"),
         col("index_docs"),
@@ -124,6 +129,13 @@ object Maintenance {
         // oracle-portable). The `janitor` decision drops them.
         lit(BucketedIndex.abandonedBuilds(s, table).size.toLong).as("stale_builds"))
   }
+
+  // [[indexCensus]]'s row kinds in its one tagged union
+  private final val IdKind = 0
+  private final val EraKind = 1
+  private final val TombKind = 2
+  private final val SweptKind = 3
+  private final val QuarKind = 4
 
   /** Physical file amplification of a bucketed index table — the
     * compaction-pressure signal [[graft.sources.Sources.tableFileCount]]

@@ -27,6 +27,39 @@ abstract class SparkSpecBase extends AnyFunSuite {
     d
   }
 
+  /** (Spark jobs started, generated classes compiled) while `f` runs.
+    * Compiles are Spark's codegen compilation count (updated in the
+    * compiling thread); jobs come from a listener, read after the
+    * listener bus drains.
+    */
+  def jobsAndCompiles(f: => Unit): (Long, Long) = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    drainListenerBus()
+    sc.addSparkListener(listener)
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    try f
+    finally {
+      drainListenerBus()
+      sc.removeSparkListener(listener)
+    }
+    (jobs.get, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+  }
+
+  /** Wait until every listener has seen every event posted so far
+    * (`listenerBus` is `private[spark]` in Scala, public in bytecode).
+    */
+  def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus): Unit
+  }
+
   def strings(df: DataFrame, colName: String): Seq[String] =
     df.select(colName).collect().toSeq.map(r => Option(r.get(0)).map(_.toString).orNull)
 

@@ -553,4 +553,81 @@ class MaintenanceSpec extends SparkSpecBase {
       Maintenance.applyMaintenancePlan(spark, bad, Map.empty, audit = false)
     }
   }
+
+  /** The census as it was formulated before the one-pass union: two
+    * `countDistinct`s over the serving scan, the tombstone count and the
+    * capped signal cross-joined in, the watermark joined when present.
+    */
+  private def twoPassCensus(
+      tbl: String, idColName: String, name: String,
+      bucketKeys: Seq[String] = Nil, bucketCap: Int = 0) = {
+    val idx = spark.table(BucketedIndex.servingTable(spark, tbl))
+    val base = idx.agg(
+      countDistinct(col(idColName)).as("index_docs"), countDistinct(col("seq")).as("append_eras"))
+    val tombT = BucketedIndex.tombTable(tbl)
+    val tomb =
+      if (spark.catalog.tableExists(tombT)) spark.table(tombT).agg(count(lit(1)).as("tomb_entries"))
+      else spark.range(1).select(lit(0L).as("tomb_entries"))
+    val capped =
+      if (bucketKeys.nonEmpty && bucketCap > 0) {
+        val totals = idx.groupBy(bucketKeys.map(col): _*).agg(count(lit(1)).as("__n")).agg(
+          coalesce(sum(when(col("__n") > bucketCap, col("__n")).otherwise(0L)), lit(0L)).as("__capped"),
+          coalesce(sum(col("__n")), lit(0L)).as("__total"))
+        val num = col("__capped") * lit(1000000L)
+        val den = greatest(col("__total"), lit(1L))
+        totals.select(((num - pmod(num, den)) / den).cast("long").as("capped_ppm"))
+      } else spark.range(1).select(lit(0L).as("capped_ppm"))
+    val wmT = BucketedIndex.quarWmTable(tbl)
+    val joined = base.crossJoin(tomb).crossJoin(capped)
+    val withWm =
+      if (spark.catalog.tableExists(wmT))
+        joined.crossJoin(spark.table(wmT).select(
+          col("swept_through"), (col("quar_buckets") - col("swept_through")).as("quar_unswept")))
+      else joined.withColumn("swept_through", lit(0L)).withColumn("quar_unswept", lit(0L))
+    withWm.select(
+      lit(name).as("index_name"), col("index_docs"), col("tomb_entries"), col("append_eras"),
+      col("capped_ppm"), col("swept_through"), col("quar_unswept"),
+      lit(BucketedIndex.abandonedBuilds(spark, tbl).size.toLong).as("stale_builds"))
+  }
+
+  test("indexCensus is one pass of at most 3 jobs and reads what the two-pass census read") {
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    def same(label: String, tbl: String, idColName: String, maxJobs: Long,
+        bucketKeys: Seq[String] = Nil, bucketCap: Int = 0): Unit = {
+      val census = Maintenance.indexCensus(spark, tbl, idColName, label, bucketKeys, bucketCap)
+      var got: Seq[org.apache.spark.sql.Row] = Nil
+      val (jobs, _) = jobsAndCompiles { got = census.collect().toSeq }
+      val want = twoPassCensus(tbl, idColName, label, bucketKeys, bucketCap).collect().toSeq
+      assert(got == want, s"$label: one-pass $got, two-pass $want")
+      assert(jobs <= maxJobs, s"$label: the census ran $jobs jobs")
+      val plan = census.queryExecution.executedPlan.toString
+      assert(!plan.contains("Expand"), s"$label: the census planned an Expand:\n$plan")
+      if (bucketCap == 0)
+        assert(!plan.contains("NestedLoopJoin"), s"$label: the census planned a join:\n$plan")
+    }
+    val lsh = s"mntspec_one_${System.nanoTime()}"
+    Dedup.persistLshIndex(docs.filter(col("doc_id") % 2 === 0), col("doc_id"), col("text"), lsh, 4)
+    same("no tombstone table", lsh, "corpus_id", 3L)
+    Dedup.deleteFromLshIndex(spark, lsh, docs.filter(col("doc_id") % 6 === 0), col("doc_id"))
+    same("tombstones", lsh, "corpus_id", 3L)
+    Dedup.appendLshIndex(docs.filter(col("doc_id") % 4 === 1), col("doc_id"), col("text"), lsh, 4)
+    Dedup.appendLshIndex(docs.filter(col("doc_id") % 4 === 3), col("doc_id"), col("text"), lsh, 4)
+    Dedup.deleteFromLshIndex(spark, lsh, docs.filter(col("doc_id") % 5 === 0), col("doc_id"))
+    same("several eras", lsh, "corpus_id", 3L)
+    // a capped banded layout, the bucket census cross-joined in
+    val capped = s"mntspec_onecap_${System.nanoTime()}"
+    val banded = (1L to 40L).map(i => ((i % 4).toInt, i % 3, i, i * 31)).toDF("band", "bv", "id", "fp")
+    Multimodal.persistHammingIndexRows(banded, capped, buckets = 2, maxBucket = 3)
+    Multimodal.appendHammingIndexRows(banded.filter(col("id") <= 10L), capped, buckets = 2)
+    same("capped layout", capped, "corpus_id", Long.MaxValue, Seq("band", "bv"), 3)
+    // a quarantined Hamming index whose sweep watermark has moved
+    val quar = s"mntspec_onewm_${System.nanoTime()}"
+    val corpus = (1L to 12L).map(i => (i, 42L)).toDF("asset_id", "fp")
+    Multimodal.persistHammingIndex(corpus, "asset_id", "fp", quar, buckets = 4, maxBucket = 10)
+    Multimodal.quarantineHammingIndex(spark, quar, corpus, "asset_id", "fp", buckets = 4, maxBucket = 10)
+    Multimodal.sweepHammingQuarantine(
+      spark, quar, Seq((100L, 42L)).toDF("asset_id", "fp"), "asset_id", "fp",
+      maxHamming = 8, maxBucketsPerTick = 3, sink = tempDir("mntspec_onewm") + "/t1")
+    same("quarantine watermark", quar, "corpus_id", 3L)
+  }
 }
